@@ -96,8 +96,11 @@ def _list_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
         arr = arr.combine_chunks()
     if arr.null_count:
         raise ValueError("null token arrays not supported")
+    values = arr.flatten()
+    if values.null_count:
+        raise ValueError("null token elements are not supported")
     offsets = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+    flat = values.to_numpy(zero_copy_only=False).astype(np.int64)
     return np.diff(offsets), flat
 
 

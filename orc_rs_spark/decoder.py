@@ -105,8 +105,10 @@ def verify_roundtrip(
     shuffle keys and metadata, not payloads — on the 100 k-row bench this
     cuts the join's shuffle from 2 x ~190 MB to ~6 MB). A corrupted decode
     escapes detection only on a 64-bit xxhash collision for its exact row
-    (~2^-64 per row; the token arrays carry no null elements, the one input
-    class where Spark's hash is lossy). ``exact=True`` keeps the original
+    (~2^-64 per row). Spark's xxhash64 skips null array elements, so hash
+    mode cannot see where they sit; it relies on the invariant that token
+    arrays hold no null elements, which ``encode_chunk`` enforces by
+    raising ValueError on any. ``exact=True`` keeps the original
     byte-for-byte array comparison for when absolute bit-identity evidence
     is required (tests pin both modes against each other on tampered data).
     """

@@ -71,14 +71,18 @@ def decode_delta_width(enc: int) -> int:
     return int(DELTA_WIDTH_TABLE[enc])
 
 
+def _check_fits(max_value: int, width: int) -> None:
+    if max_value >> width:
+        raise ValueError(f"bitpack: value {max_value} does not fit in {width} bits")
+
+
 def bitpack(values: np.ndarray, width: int) -> bytes:
     """Pack a uint64 array into ``width``-bit big-endian values (byte-padded).
 
-    PRECONDITION: every value fits in ``width`` bits — callers derive width
-    from ``bit_lengths(values).max()``. Out-of-range values are a contract
-    violation; no path masks them, so every size regime bleeds high bits
-    into neighboring lanes alike (the tiny path may also raise
-    OverflowError when the overflow outgrows the output buffer).
+    Every value must fit in ``width`` bits (callers derive width from
+    ``bit_lengths(values).max()``); one that does not raises ValueError in
+    every size regime, checked once per call against the array's max, so
+    no path can bleed high bits into neighbouring lanes.
 
     Groups of 8 values occupy exactly ``width`` output bytes; each output
     byte is assembled from at most two adjacent values with shifts — ~w
@@ -88,16 +92,23 @@ def bitpack(values: np.ndarray, width: int) -> bytes:
     """
     v = np.ascontiguousarray(values, dtype=np.uint64)
     n = v.shape[0]
-    if width == 0 or n == 0:
+    if n == 0:
         return b""
     if n <= 32:
         # tiny inputs (patch/gap entry lists, short runs): one big-int
         # accumulator beats the array kernels' per-call dispatch cost
+        xs = v.tolist()
+        _check_fits(max(xs), width)
+        if width == 0:
+            return b""
         acc = 0
-        for x in v.tolist():
+        for x in xs:
             acc = (acc << width) | x
         total = n * width
         return (acc << (-total % 8)).to_bytes((total + 7) // 8, "big")
+    _check_fits(int(v.max()), width)
+    if width == 0:
+        return b""
     if width in (8, 16, 32, 64):  # byte-aligned: one big-endian cast
         dt = {8: ">u1", 16: ">u2", 32: ">u4", 64: ">u8"}[width]
         return v.astype(dt).tobytes()

@@ -21,14 +21,20 @@ def _prewarm_workers(spark: SparkSession, cores: int) -> None:
     """One-time executor warm-up: fork every Python worker slot, import the
     package's kernel/orcfile module surface, and grow each worker's heap once.
 
-    Without this, the FIRST heavy task of every worker pays seconds of
-    serialized first-touch page zeroing (32 fresh heaps faulting at once —
-    the same effect the malloc tuning above addresses for steady state) plus
-    the package import chain; measured on the bench box the first 32-task
-    encode/ORC-write/read stage ran 3-5x its steady-state time (event-log
-    task medians 4.4 s vs 0.85 s). This is provisioning work, equivalent to
-    executor spin-up on a cluster: it runs one ``spark.range`` job, touches
-    no input data, and computes nothing that any later query reuses.
+    Workers started through ``_workerd`` no longer re-read Spark's zip
+    directories on each task, so that cost is not what prewarm saves. What
+    it still buys is the worker fork, the package import chain and the
+    heap's first-touch page zeroing. Without it the FIRST heavy task of every
+    worker pays those serially (32 fresh heaps faulting at once — the same
+    effect the malloc tuning above addresses for steady state); measured on
+    the bench box the first 32-task encode/ORC-write/read stage ran 3-5x its
+    steady-state time (event-log task medians 4.4 s vs 0.85 s). This is
+    provisioning work, equivalent to executor spin-up on a cluster: it runs
+    one ``spark.range`` job, touches no input data, and computes nothing that
+    any later query reuses. It warms the executors that exist when the
+    session starts; executors added later by dynamic allocation are never
+    warmed. The session is marked warm only when the job succeeds, so a
+    failed warm-up is retried on the next call.
 
     Opt out with ORC_RS_PREWARM=0 (e.g. single-query scripts where session
     startup dominates)."""
@@ -53,8 +59,31 @@ def _prewarm_workers(spark: SparkSession, cores: int) -> None:
     try:
         spark.range(cores, numPartitions=cores).mapInArrow(warm, "id long").count()
     except Exception:
-        pass  # warm-up must never break session creation
+        return  # warm-up must never break session creation
     spark._orc_rs_prewarmed = True
+
+
+def _workerd_conf(master: str, executor_pythonpath: str = "") -> dict:
+    """``spark.python.daemon.module`` pointing at ``orc_rs_spark._workerd``,
+    or nothing.
+
+    Set only for ``local`` masters, and only when this package was imported
+    from a directory that the daemon finds on its own path (its working
+    directory, which ``python -m`` puts first unless PYTHONSAFEPATH is set,
+    or PYTHONPATH), so the daemon can import the shim before any task ships
+    files. A package imported from a zip (``--py-files``) keeps Spark's
+    stock daemon."""
+    if master != "local" and not master.startswith("local["):
+        return {}
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not os.path.isdir(os.path.join(parent, "orc_rs_spark")):
+        return {}
+    path = [] if os.environ.get("PYTHONSAFEPATH") else [os.getcwd()]
+    for entries in (os.environ.get("PYTHONPATH", ""), executor_pythonpath):
+        path += entries.split(os.pathsep)
+    if os.path.realpath(parent) not in {os.path.realpath(p) for p in path if p}:
+        return {}
+    return {"spark.python.daemon.module": "orc_rs_spark._workerd"}
 
 
 def get_spark(
@@ -92,7 +121,9 @@ def get_spark(
         b = b.config("spark.local.dir", "/dev/shm/spark_local")
     for k, v in _MALLOC_TUNING.items():
         b = b.config(f"spark.executorEnv.{k}", v)
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    conf = _workerd_conf(master, extra_conf.get("spark.executorEnv.PYTHONPATH", ""))
+    for k, v in {**conf, **extra_conf}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     _prewarm_workers(spark, max(1, spark.sparkContext.defaultParallelism))

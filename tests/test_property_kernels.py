@@ -6,8 +6,10 @@ fixed regimes may miss.
 """
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
+from orc_rs_spark.kernels.bitpack import bitpack, bitunpack
 from orc_rs_spark.kernels.blockcomp import block_compress, block_decompress
 from orc_rs_spark.kernels.byte_rle import byte_rle_decode, byte_rle_encode
 from orc_rs_spark.kernels.fsst import fsst_decode, fsst_encode
@@ -102,3 +104,23 @@ def test_fsst_roundtrip(data, rounds):
 @given(st.binary(min_size=0, max_size=20000))
 def test_blockcomp_roundtrip(data):
     assert block_decompress(block_compress(data)) == data
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.sampled_from(["tiny", "byte-aligned", "generic"]), st.data())
+def test_bitpack_rejects_values_wider_than_width(regime, data):
+    """Every size regime packs in-range values exactly and raises on a
+    single value one bit (or more) wider than ``width``."""
+    if regime == "tiny":
+        n, width = data.draw(st.integers(1, 32)), data.draw(st.integers(1, 63))
+    elif regime == "byte-aligned":
+        n, width = data.draw(st.integers(33, 600)), data.draw(st.sampled_from([8, 16, 32]))
+    else:
+        n = data.draw(st.integers(33, 600))
+        width = data.draw(st.integers(1, 63).filter(lambda w: w not in (8, 16, 32)))
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**32 - 1)))
+    v = rng.integers(0, 1 << width, size=n, dtype=np.uint64)
+    np.testing.assert_array_equal(bitunpack(bitpack(v, width), width, n), v)
+    v[data.draw(st.integers(0, n - 1))] = data.draw(st.integers(1 << width, 2**64 - 1))
+    with pytest.raises(ValueError, match="does not fit"):
+        bitpack(v, width)
