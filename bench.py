@@ -59,26 +59,6 @@ def main() -> None:
     df = spark.read.parquet(cache_dir)
     n_values = int(df.agg(F.sum("n_tok")).collect()[0][0])
 
-    # prove codec-registry routing FROM INSIDE AN EXECUTOR TASK (round-5
-    # verdict: the official zstd write number was 30x the builder's best —
-    # this pins whether executors see the native pyarrow codec tier or the
-    # from-spec Python fallbacks in the driver-visible artifact)
-    def _probe(batches):
-        import json as _json
-
-        import pyarrow as _pa
-
-        from orc_rs_spark.kernels.blockcomp import NATIVE_CODECS
-
-        for b in batches:
-            yield _pa.RecordBatch.from_arrays(
-                [_pa.array([_json.dumps(NATIVE_CODECS, sort_keys=True)])],
-                names=["reg"],
-            )
-    native_codecs_executor = (
-        spark.range(1).mapInArrow(_probe, "reg string").collect()[0]["reg"]
-    )
-
     # warm the stack (JVM codegen, python workers, import costs) so the
     # timed queries measure steady-state throughput, not spin-up
     encode_table(df.limit(2000), repartition=False).count()
@@ -227,7 +207,6 @@ def main() -> None:
         "spark_orc_zstd_bytes": spark_zstd_bytes,
         "vs_orc_zstd": round(zstd_wire_bytes / max(1, spark_zstd_bytes), 4),
         "orc_wire_zstd_vs_zlib_bytes": round(zstd_wire_bytes / max(1, orc_wire_bytes), 4),
-        "native_codecs_executor": native_codecs_executor,
         "orc_pruned_lookup_sec": round(pruned_lookup_sec, 3),
         "orc_pruned_lookup_vs_full_read": round(
             pruned_lookup_sec / timings["q7_orc_wire_read"], 3

@@ -1,4 +1,4 @@
-"""ORC-style block compression framing + the pluggable codec registry.
+"""ORC-style block compression framing + the codec table.
 
 Wire format parity: 3-byte little-endian header = (block_length << 1) |
 is_original, i.e. 23-bit length + 1 LSB "stored uncompressed" escape so
@@ -8,26 +8,47 @@ reference's zlib codec is raw deflate with no zlib header
 (/root/reference/src/compression.rs:195-212) — mirrored here with
 ``zlib.compressobj(wbits=-15)``.
 
-Codec registry (mirrors the reference's pluggable codec table,
-/root/reference/src/compression.rs:82-148): NATIVE libraries are probed at
-import (python-snappy, lz4, zstandard, cramjam) and preferred when
-present; the from-spec pure-Python kernels (kernels/lzblocks.py,
-kernels/zstd.py, kernels/zstd_enc.py) are the always-available fallback,
-so every ORC codec tag encodes AND decodes in any environment. This
-container has no native codec libraries, so the fallbacks carry the whole
-load; on a real cluster image with `zstandard` installed the same files
-decode ~100x faster with zero code change.
+Codec table: like the reference's registry (its src/compression.rs:82-148),
+one implementation per codec and direction:
+
+- zlib: stdlib, both directions;
+- snappy: pyarrow's bundled C codec, both directions;
+- lz4: pyarrow ``lz4_raw`` encodes, system liblz4 decodes (ctypes);
+- zstd: pyarrow encodes, system libzstd decodes (ctypes);
+- lzo: the from-spec LZO1X kernel (kernels/lzo.py), both directions —
+  there is no liblzo2 to call.
+
+lz4 and zstd decode through the system libraries because ORC framing
+carries only the COMPRESSED length and pyarrow's decompress needs the
+exact output size up front; LZ4_decompress_safe and ZSTD_decompress
+return it (libzstd also takes frames without Frame_Content_Size and
+skippable frames). The libraries load on first use, so importing this
+module never fails; decoding lz4 or zstd without them raises
+OrcUnsupportedError naming the library.
 """
 
 from __future__ import annotations
 
+import ctypes
+import ctypes.util
+import functools
+import threading
 import zlib
+
+import pyarrow as pa
+
+from orc_rs_spark.kernels.lzo import lzo1x_compress, lzo1x_decompress
 
 MAX_BLOCK = (1 << 23) - 1
 # snappy/lz4/zstd blocks are capped at the declared compressionBlockSize
-# (256 KiB, writer.py postscript field 3) — also bounds the vectorized
-# matcher's working set per block
+# (256 KiB, writer.py postscript field 3)
 LZ_BLOCK = 256 * 1024
+
+# codec-appropriate defaults when the caller doesn't pick a level: zlib 6
+# (stdlib default-ish, matches the historical output bytes), zstd 3 (the
+# ORC Java writer / Spark default — level 1, pyarrow's own default, costs
+# ~4% size on token data for little speed gain at these block sizes)
+DEFAULT_LEVELS = {"zlib": 6, "zstd": 3}
 
 
 def _deflate(data: bytes, level: int = 6) -> bytes:
@@ -39,236 +60,190 @@ def _inflate(data: bytes) -> bytes:
     return zlib.decompress(data, wbits=-15)
 
 
-def _zstd_frame_content_size(data: bytes) -> int | None:
-    """Frame_Content_Size from a zstd frame header (RFC 8878 §3.1.1), or
-    None when the writer omitted it (then only streaming decode knows)."""
-    if len(data) < 6 or int.from_bytes(data[:4], "little") != 0xFD2FB528:
+_SNAPPY = pa.Codec("snappy")
+_LZ4 = pa.Codec("lz4_raw")
+
+
+@functools.cache
+def _zstd_codec(level: int) -> pa.Codec:
+    return pa.Codec("zstd", compression_level=level)
+
+
+def _snappy_decompress(data: bytes) -> bytes:
+    # a snappy block opens with its uncompressed length (LEB128 varint),
+    # the exact size pyarrow's decompress needs
+    ulen = 0
+    shift = 0
+    pos = 0
+    while True:
+        if pos >= len(data):
+            raise ValueError("snappy: truncated length preamble")
+        byte = data[pos]
+        pos += 1
+        ulen |= (byte & 0x7F) << shift
+        if not byte & 0x80:
+            break
+        shift += 7
+    return bytes(_SNAPPY.decompress(data, decompressed_size=ulen))
+
+
+def lz4_block_size(data: bytes) -> int:
+    """Exact decompressed size of one LZ4 block from a header-only walk.
+
+    LZ4 block framing does not carry the output size and ORC's 3-byte
+    block headers only carry the COMPRESSED length — this scan (skip
+    literals, sum lengths, never copy a byte) recovers it, so the liblz4
+    decoder can tell an output larger than its working buffer from a
+    corrupt block."""
+    mb = bytes(data)
+    n = len(mb)
+    pos = 0
+    out_len = 0
+    while pos < n:
+        token = mb[pos]
+        pos += 1
+        lit_len = token >> 4
+        if lit_len == 15:
+            while True:
+                if pos >= n:
+                    raise ValueError("lz4: truncated literal length")
+                b = mb[pos]
+                pos += 1
+                lit_len += b
+                if b != 255:
+                    break
+        pos += lit_len
+        if pos > n:
+            raise ValueError("lz4: truncated literals")
+        out_len += lit_len
+        if pos >= n:
+            break
+        pos += 2  # match offset (validated by the real decoder)
+        if pos > n:
+            raise ValueError("lz4: truncated offset")
+        match_len = (token & 0xF) + 4
+        if (token & 0xF) == 15:
+            while True:
+                if pos >= n:
+                    raise ValueError("lz4: truncated match length")
+                b = mb[pos]
+                pos += 1
+                match_len += b
+                if b != 255:
+                    break
+        out_len += match_len
+    return out_len
+
+
+def _bind_lz4(lib):
+    f = lib.LZ4_decompress_safe
+    f.restype = ctypes.c_int
+    f.argtypes = [ctypes.c_char_p, ctypes.c_char_p, ctypes.c_int, ctypes.c_int]
+    return (lambda src, dst, cap: f(src, dst, len(src), cap)), lz4_block_size
+
+
+def _bind_zstd(lib):
+    f = lib.ZSTD_decompress
+    f.restype = ctypes.c_size_t
+    f.argtypes = [ctypes.c_char_p, ctypes.c_size_t, ctypes.c_char_p, ctypes.c_size_t]
+    is_error = lib.ZSTD_isError
+    is_error.restype = ctypes.c_uint
+    is_error.argtypes = [ctypes.c_size_t]
+    bound = lib.ZSTD_decompressBound
+    bound.restype = ctypes.c_ulonglong
+    bound.argtypes = [ctypes.c_char_p, ctypes.c_size_t]
+
+    def call(src, dst, cap):
+        n = f(dst, cap, src, len(src))
+        return -1 if is_error(n) else n
+
+    def size(src):
+        n = bound(src, len(src))
+        if n >= (1 << 64) - 2:  # ZSTD_CONTENTSIZE_ERROR / _UNKNOWN
+            raise ValueError("zstd: libzstd rejected the frame")
+        return n
+
+    return call, size
+
+
+@functools.cache
+def _system_lib(name: str, bind):
+    """``bind(lib)`` over the system C library lib<name>, or None when it
+    is absent. Loaded on first use: find_library runs ldconfig."""
+    path = ctypes.util.find_library(name)
+    if path is None:
         return None
-    fhd = data[4]
-    fcs_flag = fhd >> 6
-    single = (fhd >> 5) & 1
-    did_size = (0, 1, 2, 4)[fhd & 3]
-    pos = 5 + (0 if single else 1) + did_size
-    if fcs_flag == 0:
-        return data[pos] if single else None
-    n = (0, 2, 4, 8)[fcs_flag]
-    v = int.from_bytes(data[pos : pos + n], "little")
-    return v + 256 if fcs_flag == 1 else v
-
-
-# codec-appropriate defaults when the caller doesn't pick a level: zlib 6
-# (stdlib default-ish, matches the historical output bytes), zstd 3 (the
-# ORC Java writer / Spark default — level 1, pyarrow's own default, costs
-# ~4% size on token data for little speed gain at these block sizes)
-DEFAULT_LEVELS = {"zlib": 6, "zstd": 3}
-
-
-def _build_registry():
-    """(encoders, decoders, native_names) — native lib when importable,
-    from-spec kernel otherwise. Import-gated exactly once. Every encoder
-    takes (data, level); codecs without a level knob ignore it."""
-    from orc_rs_spark.kernels import lzblocks
-
-    from orc_rs_spark.kernels import lzo as lzo_kernel
-
-    enc = {"zlib": lambda b, lv: _deflate(b, lv),
-           "snappy": lambda b, lv: lzblocks.snappy_compress(b),
-           "lz4": lambda b, lv: lzblocks.lz4_block_compress(b),
-           # lzo: from-spec only (no container lib bundles lzo1x; the
-           # JVM's pure-Java aircompressor is the cross-validator in
-           # tests/test_lzo.py). The REFERENCE cannot read kind-3 files
-           # at all (no decode arm in src/compression.rs for
-           # orc_proto.proto:386) — this closes that gap in both
-           # directions.
-           "lzo": lambda b, lv: lzo_kernel.lzo1x_compress(b)}
-    dec = {"zlib": lambda b: _inflate(b), "snappy": lzblocks.snappy_decompress,
-           "lz4": lzblocks.lz4_block_decompress,
-           "lzo": lzo_kernel.lzo1x_decompress}
-    native: dict[str, str] = {}
-
-    def _zstd_dec_fallback(b: bytes) -> bytes:
-        from orc_rs_spark.kernels.zstd import zstd_decompress
-
-        return zstd_decompress(b)
-
-    def _zstd_enc_fallback(b: bytes, lv: int) -> bytes:
-        # the from-spec encoder has one strategy; level is advisory only
-        from orc_rs_spark.kernels.zstd_enc import zstd_compress
-
-        return zstd_compress(b)
-
-    dec["zstd"] = _zstd_dec_fallback
-    enc["zstd"] = _zstd_enc_fallback
-
-    # pyarrow tier: Arrow bundles real C codecs (snappy, lz4_raw, zstd)
-    # and is already a hard dependency of this package, so this tier is
-    # effectively always on — ~100x the from-spec kernels' throughput.
-    # Arrow's decompress() needs the EXACT uncompressed size: snappy
-    # blocks self-describe it (varint preamble), zstd frames carry
-    # Frame_Content_Size when the writer set it (ours do; unknown-size
-    # streaming frames fall back to the from-spec decoder), LZ4 blocks
-    # carry nothing — lz4 decode stays from-spec.
     try:
-        import pyarrow as _pa
+        return bind(ctypes.CDLL(path))
+    except (OSError, AttributeError):
+        return None
 
-        if _pa.Codec.is_available("snappy"):
-            _snappy_c = _pa.Codec("snappy")
 
-            def _pa_snappy_dec(b: bytes) -> bytes:
-                ulen = 0
-                shift = 0
-                pos = 0
-                while True:
-                    if pos >= len(b):
-                        raise ValueError("snappy: truncated length preamble")
-                    byte = b[pos]
-                    pos += 1
-                    ulen |= (byte & 0x7F) << shift
-                    if not byte & 0x80:
-                        break
-                    shift += 7
-                return bytes(_snappy_c.decompress(b, decompressed_size=ulen))
+def _c_decoder(name: str, bind):
+    """Block decoder over a system library's one-shot decompress call.
 
-            enc["snappy"] = lambda b, lv: bytes(_snappy_c.compress(b))
-            dec["snappy"] = _pa_snappy_dec
-            native["snappy"] = "pyarrow"
-        if _pa.Codec.is_available("lz4_raw"):
-            _lz4_c = _pa.Codec("lz4_raw")
+    ``bind(lib)`` returns ``(call, size)``: ``call(src, dst, cap)`` is the
+    output length or < 0 on failure; ``size(src)`` is the output length
+    without decoding. Output lands in a thread-local MAX_BLOCK buffer
+    (Spark's local mode decodes on many threads of one process). A
+    failure is EITHER corruption OR an output larger than that buffer (a
+    foreign writer may declare a bigger compressionBlockSize — the 23-bit
+    header caps only the COMPRESSED chunk), so ``size`` decides, and a
+    larger output is decoded once more into an exact-size buffer."""
+    tls = threading.local()
 
-            def _pa_lz4_dec(b: bytes) -> bytes:
-                # Arrow lz4_raw demands the EXACT output size, which LZ4
-                # block framing doesn't carry — a header-only Python scan
-                # (skip literals, sum lengths) recovers it, then libarrow
-                # moves every byte at C speed. Closes the last
-                # Python-bound read path flagged in round 5.
-                size = lzblocks.lz4_block_size(b)
-                return bytes(_lz4_c.decompress(b, decompressed_size=size))
-
-            enc["lz4"] = lambda b, lv: bytes(_lz4_c.compress(b))
-            dec["lz4"] = _pa_lz4_dec
-            native["lz4"] = "pyarrow (decode via size-scan)"
-        if _pa.Codec.is_available("zstd"):
-            _zstd_c = _pa.Codec("zstd")
-            _zstd_by_level: dict[int, object] = {}
-
-            def _pa_zstd_enc(b: bytes, lv: int) -> bytes:
-                c = _zstd_by_level.get(lv)
-                if c is None:
-                    c = _zstd_by_level.setdefault(
-                        lv, _pa.Codec("zstd", compression_level=lv))
-                return bytes(c.compress(b))
-
-            def _pa_zstd_dec(b: bytes) -> bytes:
-                size = _zstd_frame_content_size(b)
-                if size is None:  # unknown-size frame: from-spec decoder
-                    return _zstd_dec_fallback(b)
-                return bytes(_zstd_c.decompress(b, decompressed_size=size))
-
-            enc["zstd"] = _pa_zstd_enc
-            dec["zstd"] = _pa_zstd_dec
-            native["zstd"] = "pyarrow"
-    except ImportError:
-        pass
-
-    try:
-        # system liblz4 via ctypes: LZ4_decompress_safe returns the ACTUAL
-        # decompressed size, so unlike Arrow's lz4_raw it needs no
-        # exact-size preamble — this drops the Python header scan entirely
-        # (272 MB/s vs 55 MB/s size-scan+Arrow vs 10 MB/s from-spec on the
-        # token/text mix; SCALE.md round-6 entry). Output capacity is the
-        # format's 8 MiB block ceiling (MAX_BLOCK); the buffer is
-        # thread-local because Spark's local mode can decode from many
-        # driver threads at once.
-        import ctypes as _ct
-        import ctypes.util as _ctu
-        import threading as _threading
-
-        _lz4_path = _ctu.find_library("lz4")
-        if _lz4_path is None:
-            raise ImportError("no system liblz4")
-        _lz4_lib = _ct.CDLL(_lz4_path)
-        _lz4_lib.LZ4_decompress_safe.restype = _ct.c_int
-        _lz4_lib.LZ4_decompress_safe.argtypes = [
-            _ct.c_char_p, _ct.c_char_p, _ct.c_int, _ct.c_int]
-        _lz4_tls = _threading.local()
-
-        def _ct_lz4_dec(b: bytes) -> bytes:
-            buf = getattr(_lz4_tls, "buf", None)
-            if buf is None:
-                buf = _lz4_tls.buf = _ct.create_string_buffer(MAX_BLOCK)
-            n = _lz4_lib.LZ4_decompress_safe(b, buf, len(b), MAX_BLOCK)
+    def decode(data: bytes) -> bytes:
+        bound = _system_lib(name, bind)
+        if bound is None:
+            raise _errors().OrcUnsupportedError(
+                f"decoding this codec needs the system library lib{name}, "
+                "which is not installed")
+        call, size = bound
+        buf = getattr(tls, "buf", None)
+        if buf is None:
+            buf = tls.buf = ctypes.create_string_buffer(MAX_BLOCK)
+        n = call(data, buf, MAX_BLOCK)
+        if n < 0:
+            need = size(data)
+            if need <= MAX_BLOCK:
+                raise ValueError(f"lib{name} rejected the block")
+            buf = ctypes.create_string_buffer(need)
+            n = call(data, buf, need)
             if n < 0:
-                # rc<0 is EITHER corruption OR output > the 8 MiB working
-                # buffer (a foreign writer may declare a bigger
-                # compressionBlockSize — the 23-bit header cap bounds the
-                # COMPRESSED chunk only). Disambiguate with the exact
-                # header-only size scan before declaring corruption.
-                size = lzblocks.lz4_block_size(b)  # raises if truncated
-                if size <= MAX_BLOCK:
-                    raise ValueError("lz4: corrupt block (liblz4 rc %d)" % n)
-                big = _ct.create_string_buffer(size)
-                n = _lz4_lib.LZ4_decompress_safe(b, big, len(b), size)
-                if n < 0:
-                    raise ValueError("lz4: corrupt block (liblz4 rc %d)" % n)
-                return _ct.string_at(big, n)
-            return _ct.string_at(buf, n)
+                raise ValueError(f"lib{name} rejected the block")
+        return ctypes.string_at(buf, n)
 
-        # self-check before trusting the symbol: round-trip one block
-        _probe = lzblocks.lz4_block_compress(b"liblz4 probe " * 30)
-        if _ct_lz4_dec(_probe) != b"liblz4 probe " * 30:
-            raise ImportError("liblz4 probe mismatch")
-        dec["lz4"] = _ct_lz4_dec
-        native["lz4"] = ("liblz4 (decode); " + native["lz4"]
-                         if "lz4" in native else "liblz4 (decode)")
-    except (ImportError, OSError, AttributeError):
-        pass
-
-    try:  # python-snappy (C bindings)
-        import snappy as _snappy  # type: ignore
-
-        enc["snappy"] = lambda b, lv: _snappy.compress(b)
-        dec["snappy"] = _snappy.decompress
-        native["snappy"] = "python-snappy"
-    except ImportError:
-        pass
-    try:  # lz4.block matches ORC's framed block format (store_size=False)
-        import lz4.block as _lz4b  # type: ignore
-
-        enc["lz4"] = lambda b, lv: _lz4b.compress(b, store_size=False)
-        dec["lz4"] = lambda b: _lz4b.decompress(b, uncompressed_size=MAX_BLOCK)
-        native["lz4"] = "lz4"
-    except ImportError:
-        pass
-    try:
-        import zstandard as _zstd  # type: ignore
-
-        _zcs: dict[int, object] = {}
-
-        def _zstd_lib_enc(b: bytes, lv: int) -> bytes:
-            c = _zcs.get(lv)
-            if c is None:
-                c = _zcs.setdefault(lv, _zstd.ZstdCompressor(
-                    level=lv, write_checksum=False, write_content_size=True))
-            return c.compress(b)
-
-        _zd = _zstd.ZstdDecompressor()
-        enc["zstd"] = _zstd_lib_enc
-        dec["zstd"] = lambda b: _zd.decompress(b, max_output_size=MAX_BLOCK)
-        native["zstd"] = "zstandard"
-    except ImportError:
-        try:  # cramjam bundles rust codecs for all three
-            import cramjam  # type: ignore
-
-            enc["zstd"] = lambda b, lv: bytes(cramjam.zstd.compress(b))
-            dec["zstd"] = lambda b: bytes(cramjam.zstd.decompress(b))
-            native["zstd"] = "cramjam"
-        except ImportError:
-            pass
-    return enc, dec, native
+    return decode
 
 
-_ENCODERS, _DECODERS, NATIVE_CODECS = _build_registry()
+# Every encoder takes (data, level); codecs without a level ignore it.
+_ENCODERS = {
+    "zlib": _deflate,
+    "snappy": lambda b, lv: bytes(_SNAPPY.compress(b)),
+    "lz4": lambda b, lv: bytes(_LZ4.compress(b)),
+    "zstd": lambda b, lv: bytes(_zstd_codec(lv).compress(b)),
+    "lzo": lambda b, lv: lzo1x_compress(b),
+}
+_DECODERS = {
+    "zlib": _inflate,
+    "snappy": _snappy_decompress,
+    "lz4": _c_decoder("lz4", _bind_lz4),
+    "zstd": _c_decoder("zstd", _bind_zstd),
+    "lzo": lzo1x_decompress,
+}
 CODECS = ("none", "zlib", "snappy", "lzo", "lz4", "zstd")
+
+
+def _errors():
+    # imported on use: orcfile's package init imports the reader, which
+    # imports this module
+    from orc_rs_spark.orcfile import errors
+
+    return errors
+
+
+def _unknown_codec(codec: str):
+    return _errors().OrcUnsupportedError(f"unknown compression codec {codec!r}")
 
 
 def block_compress(data: bytes, codec: str = "zlib", level: int | None = None,
@@ -277,19 +252,17 @@ def block_compress(data: bytes, codec: str = "zlib", level: int | None = None,
 
     ``level`` is the codec's own compression level (zlib 1-9, zstd 1-22);
     ``None`` picks the codec default (DEFAULT_LEVELS — zlib 6, zstd 3);
-    snappy/lz4 have no level knob and ignore it. ``max_block`` caps the
-    DECOMPRESSED block size below the format's 8 MiB header limit — pass
-    the file's declared compressionBlockSize when appending sections to a
-    foreign file (readers may size their buffers from that declaration).
-    All four ORC codecs have REAL encoders here (zlib via stdlib;
-    snappy/lz4 from-spec in kernels/lzblocks.py; zstd from-spec in
-    kernels/zstd_enc.py — native libraries preferred when importable);
-    any block an encoder fails to shrink falls back to the is-original
-    escape, so output never grows beyond 3 bytes per block."""
+    snappy/lz4/lzo have no level knob and ignore it. ``max_block`` caps
+    the DECOMPRESSED block size below the format's 8 MiB header limit —
+    pass the file's declared compressionBlockSize when appending sections
+    to a foreign file (readers may size their buffers from that
+    declaration). Each codec has one encoder (see the module docstring);
+    any block it fails to shrink takes the is-original escape, so output
+    never grows beyond 3 bytes per block."""
     if codec == "none":
         return data
     if codec not in _ENCODERS:
-        raise ValueError(f"codec {codec!r} unavailable in this environment")
+        raise _unknown_codec(codec)
     if level is None:
         level = DEFAULT_LEVELS.get(codec, 0)
     cap = MAX_BLOCK if codec == "zlib" else LZ_BLOCK
@@ -311,22 +284,45 @@ def block_compress(data: bytes, codec: str = "zlib", level: int | None = None,
     return b"".join(out)
 
 
-def block_decompress(data: bytes, codec: str = "zlib") -> bytes:
-    if codec == "none":
-        return data
-    if codec not in _DECODERS:
-        raise ValueError(f"codec {codec!r} unavailable in this environment")
-    decode = _DECODERS[codec]
-    out: list = []
-    pos = 0
+def iter_blocks(data, codec: str, pos: int = 0):
+    """Yield the decompressed blocks of the ORC-framed stream ``data``,
+    starting at the block boundary ``pos``. Lazy, so a positional reader
+    stops decoding once it has the bytes it needs.
+
+    A stream that ends inside a block header or a block, or a block the
+    codec cannot decode, raises OrcFormatError naming the codec (chained
+    to the decoder's own error); an unknown codec or a missing system
+    library raises OrcUnsupportedError."""
+    decode = _DECODERS.get(codec)
+    if decode is None:
+        raise _unknown_codec(codec)
     n = len(data)
     while pos < n:
+        if pos + 3 > n:
+            raise _errors().OrcFormatError(
+                f"{codec}: stream ends inside a block header ({n - pos} of 3 bytes)")
         header = int.from_bytes(data[pos : pos + 3], "little")
         pos += 3
         length = header >> 1
-        block = data[pos : pos + length]
+        block = bytes(data[pos : pos + length])
         if len(block) != length:
-            raise ValueError("block stream truncated")
-        out.append(block if header & 1 else decode(bytes(block)))
+            raise _errors().OrcFormatError(f"{codec}: compressed stream truncated")
         pos += length
-    return b"".join(out)
+        if header & 1:
+            yield block
+            continue
+        try:
+            piece = decode(block)
+        except (ValueError, OSError, zlib.error) as e:
+            errors = _errors()
+            if isinstance(e, errors.OrcError):  # a missing system library
+                raise
+            raise errors.OrcFormatError(f"{codec}: corrupt compressed block ({e})") from e
+        yield piece
+
+
+def block_decompress(data: bytes, codec: str = "zlib") -> bytes:
+    """Inverse of ``block_compress`` over a whole ORC-framed stream."""
+    if codec == "none":
+        return data
+    return b"".join(iter_blocks(data, codec))

@@ -1,10 +1,6 @@
-"""Vectorized greedy LZ77 matcher shared by the snappy / LZ4 / zstd block
-ENCODERS (kernels/lzblocks.py, kernels/zstd_enc.py).
-
-The reference decodes snappy/lz4/zstd but never encodes anything
-(/root/reference/src/compression.rs:150-212 — decode-only); this is the
-from-spec encode direction, built the same way the RLEv2 patched-base
-encoder was (spec + NumPy, no native codec libraries in this container).
+"""Vectorized greedy LZ77 matcher behind the from-spec LZO1X encoder
+(kernels/lzo.py; there is no liblzo2 to call). The other LZ-family
+codecs encode through pyarrow's C libraries (kernels/blockcomp.py).
 
 Match quality matches snappy's own heuristic: a single-entry hash table
 over 4-byte sequences, i.e. each position is matched only against the
@@ -53,9 +49,7 @@ def _vals4(arr8: np.ndarray) -> np.ndarray:
 def greedy_matches(data: bytes | np.ndarray,
                    max_offset: int,
                    max_match: int,
-                   min_match: int = 4,
-                   last_match_start_margin: int = 0,
-                   match_end_margin: int = 0):
+                   min_match: int = 4):
     """Greedy LZ77 parse of ``data``.
 
     Returns ``(positions, offsets, lengths)`` int64 arrays of the chosen,
@@ -63,17 +57,13 @@ def greedy_matches(data: bytes | np.ndarray,
     match are literals (the gaps). Constraints:
 
     - every match references ``offset <= max_offset`` back;
-    - lengths are capped at ``max_match`` (snappy's copy ops cap at 64;
-      LZ4/zstd accept longer but a cap bounds the extension rounds — a
-      long run simply becomes several adjacent copies);
-    - no match STARTS within the final ``last_match_start_margin`` bytes
-      and every match ENDS at least ``match_end_margin`` bytes before the
-      end (LZ4's end-of-block rules; zero for snappy).
+    - lengths are capped at ``max_match`` (a cap bounds the extension
+      rounds — a long run simply becomes several adjacent copies).
     """
     arr8 = np.frombuffer(data, dtype=np.uint8) if not isinstance(data, np.ndarray) else data
     n = arr8.shape[0]
     empty = (np.empty(0, np.int64),) * 3
-    if n < max(min_match + match_end_margin, last_match_start_margin) + 1 or n < 8:
+    if n < min_match + 1 or n < 8:
         return empty
 
     vals = _vals4(arr8)
@@ -92,17 +82,11 @@ def greedy_matches(data: bytes | np.ndarray,
         return empty
     p = prev[cand]
     ok = (vals[cand] == vals[p]) & (cand - p <= max_offset)
-    # a match must fit min_match bytes before the end margin
-    ok &= cand <= (n - match_end_margin) - min_match
-    # LZ4-style end rules: a match may not start too close to the end and
-    # may not run into the final literal margin.
-    if last_match_start_margin:
-        ok &= cand <= n - 1 - last_match_start_margin
+    ok &= cand <= n - min_match  # a match must fit min_match bytes
     cand, p = cand[ok], p[ok]
     if cand.size == 0:
         return empty
 
-    limit = n - match_end_margin
     offs = cand - p
 
     # --- chain collapse (round 6): candidates at CONSECUTIVE positions
@@ -125,7 +109,7 @@ def greedy_matches(data: bytes | np.ndarray,
     hpos, hp = cand[heads], p[heads]
     # extend each head far enough to serve its LAST follower's max_match
     # window; past that every follower caps at max_match anyway
-    hcap = np.minimum(limit - hpos, (cand[chain_last] - hpos) + max_match)
+    hcap = np.minimum(n - hpos, (cand[chain_last] - hpos) + max_match)
 
     # vectorized length extension, 16 bytes per round over the active
     # heads; round count is bounded by the max_match window, with a
@@ -166,7 +150,7 @@ def greedy_matches(data: bytes | np.ndarray,
 
     # propagate: member at distance d from its head runs e_head - d
     e_all = hlens[hid] - (cand - hpos[hid])
-    lens = np.minimum(np.minimum(np.int64(max_match), limit - cand), e_all)
+    lens = np.minimum(np.minimum(np.int64(max_match), n - cand), e_all)
     keep = lens >= min_match
     cand, offs, lens = cand[keep], offs[keep], lens[keep]
     if cand.size == 0:

@@ -67,7 +67,7 @@ def lzo1x_decompress(data: bytes, max_size: int | None = None) -> bytes:
 def _parse(data: bytes, max_size: int | None):
     """Shared instruction walk -> (ls, ll, mo, ml, out_len) sequence
     arrays in the literals-then-match model of
-    lzblocks.resolve_copy_sequences. Raises ValueError on any
+    resolve_copy_sequences. Raises ValueError on any
     malformation; the scalar and NumPy decoders differ only in how they
     move bytes afterwards."""
     mb = bytes(data)
@@ -207,12 +207,68 @@ def _lzo1x_decompress_scalar(data: bytes, max_size: int | None = None) -> bytes:
 
 def _lzo1x_decompress_np(data: bytes, max_size: int | None = None) -> bytes:
     """NumPy decoder: Python header walk, bulk-gather byte movement."""
-    from orc_rs_spark.kernels.lzblocks import resolve_copy_sequences
-
     ls, ll, mo, ml, out_len = _parse(data, max_size)
     if out_len == 0:
         return b""
     return resolve_copy_sequences(bytes(data), ls, ll, mo, ml, out_len)
+
+
+def resolve_copy_sequences(mb: bytes, ls: list, ll: list, mo: list, ml: list,
+                           out_len: int) -> bytes:
+    """Materialize LZ77-family output from parsed sequences, NumPy-only.
+
+    Back-end of the NumPy lzo decoder: each sequence is (literal src
+    start ``ls``, literal length ``ll``, then a back-copy of ``ml`` bytes
+    from ``mo`` back; 0 disables either part). All byte movement happens
+    in bulk gathers — literals via one fancy-indexed gather, match bytes
+    via pointer doubling over a reference array with intra-match overlap
+    chains collapsed arithmetically first."""
+    lla = np.asarray(ll, dtype=np.int64)
+    lsa = np.asarray(ls, dtype=np.int64)
+    mla = np.asarray(ml, dtype=np.int64)
+    moa = np.asarray(mo, dtype=np.int64)
+    seq_end = np.cumsum(lla + mla)
+    lit_dst = seq_end - (lla + mla)  # where each seq's literals start
+    match_dst = lit_dst + lla  # where each seq's match bytes start
+
+    src = np.frombuffer(mb, dtype=np.uint8)
+    # literals: ranges -> flat indices, one gather-scatter pair
+    tl = int(lla.sum())
+    wl = np.arange(tl, dtype=np.int64) - np.repeat(np.cumsum(lla) - lla, lla)
+    lit_src_idx = np.repeat(lsa, lla) + wl
+    lit_dst_idx = np.repeat(lit_dst, lla) + wl
+    # matches: every match byte references out position (self - offset);
+    # literals are fixpoints. Pointer doubling collapses arbitrary copy
+    # chains (including overlap/RLE chains) in log2(chain length) gathers.
+    tm = int(mla.sum())
+    wm = np.arange(tm, dtype=np.int64) - np.repeat(np.cumsum(mla) - mla, mla)
+    mpos = np.repeat(match_dst, mla) + wm
+    ref = np.arange(out_len, dtype=np.int64)
+    rep_o = np.repeat(moa, mla)
+    msrc = mpos - rep_o
+    # overlap collapse: when offset < match_len the match copies its own
+    # output (period = offset). Instead of a per-byte chain back through
+    # the match (offset-1 RLE of a full 8 MiB block = a chain the length
+    # of the block, ~23 doubling rounds), jump every overlapped byte
+    # straight to the periodic pre-image BELOW the match start in one
+    # arithmetic step: src = match_start - offset + (pos_in_match % offset).
+    # Chain depth is then bounded by the SEQUENCE count, not byte count.
+    ov = wm >= rep_o
+    if ov.any():
+        rep_md = np.repeat(match_dst, mla)
+        msrc[ov] = rep_md[ov] - rep_o[ov] + wm[ov] % rep_o[ov]
+    ref[mpos] = msrc
+    r = ref
+    while True:
+        r2 = r.take(r)
+        if np.array_equal(r2, r):
+            break
+        r = r2
+    # every out position now maps to the literal position that feeds it;
+    # litmap turns that into the source byte index
+    litmap = np.empty(out_len, dtype=np.int64)
+    litmap[lit_dst_idx] = lit_src_idx
+    return src.take(litmap.take(r)).tobytes()
 
 
 # ---------------------------------------------------------------------------
@@ -248,8 +304,8 @@ def _emit_literal_run(out: bytearray, src: memoryview, start: int, L: int,
 def lzo1x_compress(data: bytes) -> bytes:
     """Greedy from-spec LZO1X encoder (M2/M3/M4 + literal runs + EOS).
 
-    Shares the vectorized single-probe matcher with the snappy/lz4/zstd
-    encoders (lz77.greedy_matches). Inter-match literal gaps of 1-3
+    Matches come from the vectorized single-probe matcher
+    (lz77.greedy_matches). Inter-match literal gaps of 1-3
     bytes ride the previous instruction's S bits (the grammar has no
     standalone 1-3 literal run outside the first byte); longer gaps emit
     a state-0 literal run. Distances: <= 2048 & length <= 8 -> M2 (one

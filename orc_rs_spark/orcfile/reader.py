@@ -9,20 +9,21 @@ stripe-footer order, PRESENT bitmaps as boolean RLE, ints as RLEv1
 lists/maps via LENGTH streams, structs by recursion — the same reader
 matrix as /root/reference/src/column_reader/*.
 
-Decompression: zlib via stdlib; snappy/lz4/zstd through the codec
-registry (kernels/blockcomp.py) — pyarrow's bundled C codecs where block
-sizes are recoverable, the from-spec kernels (lzblocks.py, zstd.py)
-otherwise, so all four ORC block codecs decode in any environment.
+Decompression: every codec goes through the one framing decoder and
+codec table in kernels/blockcomp.py (stdlib zlib, pyarrow snappy, system
+liblz4/libzstd, from-spec lzo); ``orc_stream_decompress`` is its
+whole-stream form under the reader's name.
 """
 
 from __future__ import annotations
 
-import zlib
 from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
 
+from orc_rs_spark.kernels.blockcomp import block_decompress as orc_stream_decompress
+from orc_rs_spark.kernels.blockcomp import iter_blocks
 from orc_rs_spark.kernels.byte_rle import boolean_rle_decode, byte_rle_decode
 from orc_rs_spark.kernels.rlev1 import rlev1_decode
 from orc_rs_spark.kernels.rlev2 import rlev2_decode
@@ -85,22 +86,6 @@ def as_source(src):
     return FileSource(src)
 
 
-def _inner_decompress(block: bytes, codec: str) -> bytes:
-    """One compressed block -> bytes, through the codec REGISTRY
-    (kernels/blockcomp.py): pyarrow's bundled C codecs when the block's
-    size is recoverable (snappy preamble, zstd frame content size), the
-    from-spec kernels otherwise — a zstd ORC scan was 15x slower when
-    this called the pure-Python RFC decoder directly."""
-    if codec == "zlib":
-        return zlib.decompress(block, wbits=-15)
-    from orc_rs_spark.kernels.blockcomp import _DECODERS
-
-    dec = _DECODERS.get(codec)
-    if dec is None:
-        raise OrcUnsupportedError(f"no {codec} decoder available in this environment")
-    return dec(block)
-
-
 class RowIndexUnsupported(Exception):
     """Positional row-group decode not possible for this stripe/column;
     callers fall back to full-stripe decode (correctness preserved)."""
@@ -115,41 +100,14 @@ def decompress_from(data, codec: str, chunk_off: int, skip: int, min_bytes: int)
         return memoryview(data)[chunk_off + skip:]
     out = []
     got = 0
-    pos = chunk_off
-    n = len(data)
     need = skip + min_bytes
-    while pos < n and got < need:
-        header = int.from_bytes(data[pos : pos + 3], "little")
-        pos += 3
-        length = header >> 1
-        block = data[pos : pos + length]
-        if len(block) != length:
-            raise OrcFormatError("ORC compressed stream truncated")
-        piece = bytes(block) if header & 1 else _inner_decompress(bytes(block), codec)
-        out.append(piece)
-        got += len(piece)
-        pos += length
+    if need > 0:
+        for piece in iter_blocks(data, codec, chunk_off):
+            out.append(piece)
+            got += len(piece)
+            if got >= need:
+                break
     return memoryview(b"".join(out))[skip:]
-
-
-def orc_stream_decompress(data: bytes, codec: str) -> bytes:
-    """ORC stream framing: 3-byte LE header = (len << 1) | is_original,
-    repeated blocks (reference: /root/reference/src/compression.rs:362-382)."""
-    if codec == "none":
-        return data
-    out = []
-    pos = 0
-    n = len(data)
-    while pos < n:
-        header = int.from_bytes(data[pos : pos + 3], "little")
-        pos += 3
-        length = header >> 1
-        block = data[pos : pos + length]
-        if len(block) != length:
-            raise OrcFormatError("ORC compressed stream truncated")
-        out.append(bytes(block) if header & 1 else _inner_decompress(bytes(block), codec))
-        pos += length
-    return b"".join(out)
 
 
 @dataclass

@@ -566,12 +566,10 @@ class OrcWriter:
             from orc_rs_spark import __version__ as _v
 
             self.user_metadata["orc_rs_spark.writer"] = f"orc_rs_spark/{_v}".encode()
-        # all five codec tags have REAL encoders: zlib (stdlib raw
-        # deflate), snappy + lz4 (from-spec NumPy, kernels/lzblocks.py),
-        # zstd (from-spec frames, kernels/zstd_enc.py), lzo (from-spec
-        # LZO1X, kernels/lzo.py — round 6; the reference can't read
-        # kind 3 at all) — native codec libraries are preferred
-        # automatically when importable (kernels/blockcomp.py registry).
+        # all five codec tags have real encoders, one per codec
+        # (kernels/blockcomp.py): zlib (stdlib raw deflate), snappy, lz4
+        # and zstd (pyarrow's C codecs), lzo (from-spec LZO1X,
+        # kernels/lzo.py; the reference can't read kind 3 at all).
         self.codec_enum = {"none": 0, "zlib": 1, "snappy": 2, "lzo": 3,
                            "lz4": 4, "zstd": 5}[compression]
         self._f = open(path, "wb")

@@ -1256,13 +1256,14 @@ def q_orc_semijoin_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_orc_wire_snappy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC wire round-trip under REAL snappy compression: the writer's
-    from-spec snappy encoder (kernels/lzblocks.py snappy_compress — the
-    reference decodes snappy but never encodes, src/compression.rs:157)
-    compresses every stream block, and the stripe-parallel reader
-    decodes it back; a hash match against the SQL oracle certifies the
-    whole compressed round trip. The size win itself is pinned in
-    tests/test_lz_encoders.py and test_jvm_reads_lz_codecs (which also
-    proves Spark's JVM reader decodes these files)."""
+    snappy encoder (pyarrow's bundled google/snappy, kernels/blockcomp.py
+    — the reference decodes snappy but never encodes,
+    src/compression.rs:157) compresses every stream block, and the
+    stripe-parallel reader decodes it back; a hash match against the SQL
+    oracle certifies the whole compressed round trip. The size win
+    itself is pinned in tests/test_lz_encoders.py and
+    test_jvm_reads_lz_codecs (which also proves Spark's JVM reader
+    decodes these files)."""
     from orc_rs_spark.orcfile.spark_source import read_orc, write_orc_dir
 
     df = _pq(spark, sf_dir, "orders").select(
@@ -1304,13 +1305,11 @@ def q_orc_wire_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC wire round-trip under REAL zstd compression — the one codec
     whose write path had no oracle-gated entry through round 5 (and whose
     official bench number was anomalous). Every stream block goes through
-    the registry's zstd encoder (pyarrow's bundled libzstd when present,
-    the from-spec RFC 8878 encoder in kernels/zstd_enc.py otherwise —
-    the reference decodes zstd but never encodes, src/compression.rs:163)
-    and the stripe-parallel reader decodes it back via the
-    Frame_Content_Size-exact native path; the hash match against the SQL
-    oracle certifies the full compressed round trip in the driver-visible
-    artifact."""
+    the codec table's zstd encoder (pyarrow's bundled libzstd — the
+    reference decodes zstd but never encodes, src/compression.rs:163)
+    and the stripe-parallel reader decodes it back through the system
+    libzstd (kernels/blockcomp.py); the hash match against the SQL
+    oracle certifies the full compressed round trip."""
     from orc_rs_spark.orcfile.spark_source import read_orc, write_orc_dir
 
     df = _pq(spark, sf_dir, "lineitem").select(

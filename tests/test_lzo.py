@@ -27,7 +27,16 @@ RNG = np.random.default_rng(42)
 
 
 def _shapes():
-    return [
+    rng = np.random.default_rng(7)
+    # periodic runs (offset < match length) of periods 1..7, then literals
+    # interleaved with periodic runs so copy chains cross sequences
+    periodic = [bytes(rng.integers(0, 256, period, dtype=np.uint8)) * (40000 // period)
+                for period in (1, 2, 3, 5, 7)]
+    interleaved = b"".join(
+        bytes(rng.integers(0, 256, 17, dtype=np.uint8)) + b"xy" * 300
+        for _ in range(50)
+    )
+    return periodic + [interleaved] + [
         b"",
         b"x",
         b"ab",

@@ -14,7 +14,7 @@ import numpy as np
 import pyarrow.compute as pc
 import pytest
 
-from orc_rs_spark.orcfile import OrcFileReader, read_tail
+from orc_rs_spark.orcfile import OrcFileReader, OrcFormatError, read_tail
 
 GOLD = "/root/reference/src/test/test_files"
 
@@ -188,21 +188,29 @@ def test_distributed_orc_source(spark):
     assert got == pc.sum(local.column("int1")).as_py()
 
 
+def _one_block(block: bytes) -> bytes:
+    """``block`` behind a 3-byte ORC header marking it compressed."""
+    return (len(block) << 1).to_bytes(3, "little") + block
+
+
 def test_snappy_lz4_kernel_edge_cases():
-    """From-spec decoders: overlap copies, long literals, truncation."""
-    from orc_rs_spark.kernels.lzblocks import lz4_block_decompress, snappy_decompress
+    """Codec-table decoders on hand-built blocks: overlap copies, the LZ4
+    end-of-block rule, truncation."""
+    from orc_rs_spark.kernels.blockcomp import _DECODERS, block_decompress
 
     # snappy: literal + overlapping copy (RLE-style)
     # "ab" literal, then copy offset=2 len=8 -> "ababababab"
     payload = bytes([10]) + bytes([0b000001_00]) + b"ab" + bytes([(4 << 2) | 1 | (0 << 5), 2])
-    assert snappy_decompress(payload) == b"ab" + b"abababab"
-    # lz4: token lit=2 match=4(min) offset=2 -> "ababab" + tail literals
-    blk = bytes([0x20 | 0x0]) + b"ab" + bytes([2, 0]) + bytes([0x10]) + b"z"
-    assert lz4_block_decompress(blk) == b"ababab" + b"z"
-    with pytest.raises(ValueError):
-        snappy_decompress(bytes([200, 1]))  # truncated
-    with pytest.raises(ValueError):
-        lz4_block_decompress(bytes([0xF0]))  # truncated literal run
+    assert _DECODERS["snappy"](payload) == b"ab" + b"abababab"
+    # lz4: token lit=2 match=4(min) offset=2 -> "ababab", then 8 closing
+    # literals: the last match starts 12 bytes before the end and the
+    # last 5 bytes are literals, as the block format requires
+    blk = bytes([0x20 | 0x0]) + b"ab" + bytes([2, 0]) + bytes([0x80]) + b"01234567"
+    assert _DECODERS["lz4"](blk) == b"ababab" + b"01234567"
+    with pytest.raises(OrcFormatError, match="snappy"):
+        block_decompress(_one_block(bytes([200, 1])), "snappy")  # truncated
+    with pytest.raises(OrcFormatError, match="lz4"):
+        block_decompress(_one_block(bytes([0xF0])), "lz4")  # truncated literal run
 
 
 # ------------------------------------------------------------- ORC writer
@@ -345,21 +353,30 @@ def test_distributed_orc_sink(spark, tmp_path):
 
 
 def test_zstd_kernel_handcrafted_frame():
-    """Hand-built frame: raw block + RLE block + skippable frame handling
-    (compressed blocks are covered end-to-end by the golden/Spark tests)."""
-    from orc_rs_spark.kernels.zstd import zstd_decompress
+    """Hand-built frames: raw block + RLE block, skippable frame handling
+    and a frame without Frame_Content_Size (compressed blocks are covered
+    end-to-end by the golden/Spark tests)."""
+    from orc_rs_spark.kernels.blockcomp import _DECODERS, block_decompress
 
-    frame = (
-        (0xFD2FB528).to_bytes(4, "little")
-        + bytes([0b00100000])  # single-segment, fcs_flag=0 -> 1-byte fcs
-        + bytes([15])  # frame content size
-        + (0 | (0 << 1) | (5 << 3)).to_bytes(3, "little") + b"hello"  # raw, not last
+    blocks = (
+        (0 | (0 << 1) | (5 << 3)).to_bytes(3, "little") + b"hello"  # raw, not last
         + (1 | (1 << 1) | (10 << 3)).to_bytes(3, "little") + b"a"  # RLE, last
     )
+    magic = (0xFD2FB528).to_bytes(4, "little")
+    frame = (
+        magic
+        + bytes([0b00100000])  # single-segment, fcs_flag=0 -> 1-byte fcs
+        + bytes([15])  # frame content size
+        + blocks
+    )
     skippable = (0x184D2A50).to_bytes(4, "little") + (3).to_bytes(4, "little") + b"xyz"
-    assert zstd_decompress(skippable + frame) == b"hello" + b"a" * 10
-    with pytest.raises(ValueError, match="magic"):
-        zstd_decompress(b"\x00\x01\x02\x03\x04\x05\x06\x07")
+    assert _DECODERS["zstd"](skippable + frame) == b"hello" + b"a" * 10
+    # fcs_flag=0 without single-segment: no content size, a window
+    # descriptor byte instead (1 KiB window)
+    no_size = magic + bytes([0]) + bytes([0]) + blocks
+    assert _DECODERS["zstd"](no_size) == b"hello" + b"a" * 10
+    with pytest.raises(OrcFormatError, match="zstd"):
+        block_decompress(_one_block(b"\x00\x01\x02\x03\x04\x05\x06\x07"), "zstd")
 
 
 def test_writer_dictionary_strings(tmp_path):

@@ -195,11 +195,11 @@ def test_compact_chunks(spark):
 
 
 def test_jvm_reads_lz_codecs(spark, tmp_path):
-    """ORC files our writer compresses with the from-spec snappy/lz4/zstd
-    encoders (kernels/lzblocks.py, kernels/zstd_enc.py) must decode in
-    Spark's native JVM ORC reader — third-party proof the encode bitstreams
-    conform, plus a real size win for the LZ codecs vs the old tag-only
-    escape (compressible sorted-key data)."""
+    """ORC files our writer compresses with snappy/lz4/zstd (pyarrow's C
+    encoders behind the codec table, kernels/blockcomp.py) must decode in
+    Spark's native JVM ORC reader — proof that our block framing around
+    those bitstreams conforms, plus a real size win for the LZ codecs vs
+    storing blocks uncompressed (compressible sorted-key data)."""
     import os
 
     from orc_rs_spark.orcfile.reader import OrcFileReader
