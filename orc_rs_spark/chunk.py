@@ -32,7 +32,7 @@ from orc_rs_spark.kernels.blockcomp import block_compress, block_decompress
 from orc_rs_spark.kernels.bloom import bloom_build
 from orc_rs_spark.kernels.byte_rle import boolean_rle_decode, boolean_rle_encode
 from orc_rs_spark.kernels.select import INT_CODECS, STR_CODECS, encode_ints_auto, encode_strings_auto
-from orc_rs_spark.kernels.varint import varint_decode, varint_encode
+from orc_rs_spark.kernels.varint import uvarint, varint_decode
 
 CODEC_VERSION = "2"  # bumped: per-stream columns replaced the packed blob
 
@@ -70,10 +70,6 @@ CHUNK_ARROW_SCHEMA = pa.schema(
         ("max_val", pa.int64()),
     ]
 )
-
-
-def _uvarint(x: int) -> bytes:
-    return varint_encode(np.array([x], dtype=np.uint64))
 
 
 def _maybe_bloom(flat: np.ndarray, max_distinct: int = 1 << 16) -> bytes:
@@ -120,9 +116,9 @@ def _wrap_present(present: np.ndarray | None, payload: bytes) -> bytes:
     nulls). present=None -> length 0 -> all-valid.
     """
     if present is None:
-        return _uvarint(0) + payload
+        return uvarint(0) + payload
     pb = boolean_rle_encode(present)
-    return _uvarint(len(pb)) + pb + payload
+    return uvarint(len(pb)) + pb + payload
 
 
 def _unwrap_present(buf: bytes, n_rows: int) -> tuple[np.ndarray | None, bytes]:

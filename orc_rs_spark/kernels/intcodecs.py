@@ -25,12 +25,8 @@ import numpy as np
 
 from orc_rs_spark.kernels.bitpack import bit_lengths, bitpack, bitunpack
 from orc_rs_spark.kernels.rlev2 import rlev2_decode, rlev2_encode
-from orc_rs_spark.kernels.varint import varint_decode, varint_encode
+from orc_rs_spark.kernels.varint import uvarint, varint_decode, varint_encode
 from orc_rs_spark.kernels.zigzag import zigzag_decode, zigzag_encode
-
-
-def _uvarint(x: int) -> bytes:
-    return varint_encode(np.array([x], dtype=np.uint64))
 
 
 # ----------------------------------------------------------- frame of ref
@@ -96,7 +92,7 @@ def dict_encode(values: np.ndarray) -> bytes:
     uniq, inverse = np.unique(v, return_inverse=True)
     dict_stream = rlev2_encode(uniq, signed=True)
     idx_stream = rlev2_encode(inverse.astype(np.int64), signed=False)
-    return _uvarint(len(uniq)) + _uvarint(len(dict_stream)) + dict_stream + idx_stream
+    return uvarint(len(uniq)) + uvarint(len(dict_stream)) + dict_stream + idx_stream
 
 
 def dict_decode(buf: bytes, count: int) -> np.ndarray:

@@ -30,7 +30,7 @@ from orc_rs_spark.kernels.bitpack import (
     encode_direct_width,
     packed_size,
 )
-from orc_rs_spark.kernels.varint import varint_decode, varint_encode
+from orc_rs_spark.kernels.varint import uvarint
 from orc_rs_spark.kernels.zigzag import zigzag_decode, zigzag_encode
 
 MAX_RUN = 512  # max values per RLEv2 run (9-bit length field, L-1)
@@ -75,26 +75,14 @@ def _decode_base(raw: bytes) -> int:
     return u
 
 
-def _scalar_varint(z: int) -> bytes:
-    """LEB128 for one value already in uint64 space — pure-Python scalar
-    (byte-identical to varint_encode on a 1-element array, without the
-    ~45us of array construction the hot frame loop was paying per call)."""
-    out = bytearray()
-    while z > 0x7F:
-        out.append((z & 0x7F) | 0x80)
-        z >>= 7
-    out.append(z)
-    return bytes(out)
-
-
 def _signed_varint(x: int) -> bytes:
     # Python's arithmetic shifts make (x << 1) ^ (x >> 63) exact zigzag for
     # any int64 x, including the -2^63 wraparound case
-    return _scalar_varint((x << 1) ^ (x >> 63))
+    return uvarint((x << 1) ^ (x >> 63))
 
 
 def _unsigned_varint(x: int) -> bytes:
-    return _scalar_varint(x & 0xFFFFFFFFFFFFFFFF)
+    return uvarint(x & 0xFFFFFFFFFFFFFFFF)
 
 
 # ---------------------------------------------------------------- encoders

@@ -3,10 +3,11 @@
 The reference only *consumes* a chosen encoding (ColumnEncoding.kind
 dispatch, /root/reference/src/column_reader/mod.rs:379-396;
 /root/reference/src/proto/orc_proto.proto:148-162). Here we make the choice,
-mirroring ORC's public writer heuristics (SURVEY.md §4.3): sample run
-statistics, monotonicity, distinct ratio, and bit-width histograms of
-zigzag(v) and v-min, estimate each codec's encoded size, and pick the
-cheapest. The chosen codec id is recorded in chunk metadata exactly like
+mirroring ORC's public writer heuristics (SURVEY.md §4.3): sampled run
+statistics, monotonicity, distinct ratio and the bit widths of zigzag(v)
+and v-min prune the candidate codecs, then a trial encode of a sample
+measures each survivor and the smallest wins (``encode_ints_auto``).
+The chosen codec id is recorded in chunk metadata exactly like
 ColumnEncoding.kind.
 """
 
@@ -83,7 +84,6 @@ def int_stats(values: np.ndarray) -> dict:
     zz_w = int(bit_lengths(zigzag_encode(s)).max(initial=1)) or 1
     base = int(s.min()) if len(s) else 0
     adj = s.astype(np.uint64) - np.int64(base).astype(np.uint64) if len(s) else s.astype(np.uint64)
-    adj_bls = bit_lengths(adj)
     return {
         "n": n,
         "mean_run": len(s) / runs if runs else 1.0,
@@ -91,40 +91,8 @@ def int_stats(values: np.ndarray) -> dict:
         "distinct_ratio": len(uniq) / max(1, len(s)),
         "monotonic": bool(len(d) == 0 or np.all(d >= 0) or np.all(d <= 0)),
         "zz_width": zz_w,
-        "for_width": int(adj_bls.max(initial=1)) or 1,
-        "for_width_p90": int(np.percentile(adj_bls, 90)) if len(s) else 1,
+        "for_width": int(bit_lengths(adj).max(initial=1)) or 1,
     }
-
-
-def estimate_sizes(st: dict) -> dict[str, float]:
-    """Rough bytes-per-codec from stats (headers amortized, 512-frames)."""
-    n = st["n"]
-    est = {
-        "raw": 1 + n * (4 if st["zz_width"] <= 32 else 8),
-        "bitpack": 1 + n * st["zz_width"] / 8,
-        "for": 12 + n * st["for_width"] / 8,
-        "rlev2": n * st["for_width_p90"] / 8 + (n / 512) * 16,
-        "rlev2_rle": (n / max(1.0, st["mean_run"])) * 4,
-        "dict": st["distinct"] * 4 + n * max(1, st["distinct"].bit_length()) / 8 + 8,
-    }
-    return est
-
-
-def choose_int_codec(values: np.ndarray) -> str:
-    v = np.asarray(values, dtype=np.int64)
-    if len(v) == 0:
-        return "raw"
-    st = int_stats(v)
-    if st["monotonic"] and st["n"] >= 8:
-        return "rlev2"
-    if st["mean_run"] >= 4:
-        return "rlev2_rle"
-    if st["distinct_ratio"] <= 0.05 and st["distinct"] <= 65536:
-        est = estimate_sizes(st)
-        if est["dict"] < min(est["for"], est["bitpack"], est["rlev2"]):
-            return "dict"
-    est = estimate_sizes(st)
-    return min(("for", "bitpack", "rlev2", "raw"), key=lambda k: est[k])
 
 
 def _sample_slices(v: np.ndarray, k: int = 4, span: int = 16384) -> np.ndarray:
@@ -163,7 +131,7 @@ def encode_ints_auto(
     """Trial-based selection: encode a sample with each candidate codec,
     measure its post-block-compression size, encode the full chunk with the
     winner. Mirrors ORC's writer heuristics but with measured (not modeled)
-    costs — the estimator only prunes the candidate list.
+    costs — the sampled stats only prune the candidate list.
 
     ``boundaries`` (list-column row offsets) row-aligns RLEv2 frames — the
     decode wire format is unchanged.

@@ -25,11 +25,7 @@ import pyarrow as pa
 
 from orc_rs_spark.kernels.fsst import fsst_decode, fsst_encode
 from orc_rs_spark.kernels.rlev2 import rlev2_decode, rlev2_encode
-from orc_rs_spark.kernels.varint import varint_decode, varint_encode
-
-
-def _uvarint(x: int) -> bytes:
-    return varint_encode(np.array([x], dtype=np.uint64))
+from orc_rs_spark.kernels.varint import uvarint, varint_decode
 
 
 def arrow_string_views(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -90,7 +86,7 @@ def string_direct_encode(arr: pa.Array, use_fsst: bool = False, fsst_rounds: int
     if use_fsst:
         payload = fsst_encode(payload, rounds=fsst_rounds)
     len_stream = rlev2_encode(lengths, signed=False)
-    return _uvarint(len(len_stream)) + len_stream + payload
+    return uvarint(len(len_stream)) + len_stream + payload
 
 
 def string_direct_decode(buf: bytes, count: int, use_fsst: bool = False) -> pa.Array:
@@ -123,10 +119,10 @@ def string_dict_encode(arr: pa.Array, use_fsst: bool = False, fsst_rounds: int =
     dl_stream = rlev2_encode(d_lengths, signed=False)
     idx_stream = rlev2_encode(sorted_idx, signed=False)
     return (
-        _uvarint(len(d_lengths))
-        + _uvarint(len(dl_stream))
+        uvarint(len(d_lengths))
+        + uvarint(len(dl_stream))
         + dl_stream
-        + _uvarint(len(d_payload))
+        + uvarint(len(d_payload))
         + d_payload
         + idx_stream
     )

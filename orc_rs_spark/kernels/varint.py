@@ -29,6 +29,22 @@ def varint_encode(values: np.ndarray) -> bytes:
     return mat[valid].tobytes()  # row-major mask keeps per-value byte order
 
 
+def uvarint(x: int) -> bytes:
+    """LEB128 of one non-negative int — a pure-Python loop, byte-identical
+    to ``varint_encode`` on a 1-element array without the ~45us of array
+    construction (the RLEv2 frame loop, protobuf fields and chunk
+    headers each encode one value at a time). A negative value has no
+    unsigned encoding and raises ValueError."""
+    if x < 0:
+        raise ValueError(f"uvarint: negative value {x}")
+    out = bytearray()
+    while x > 0x7F:
+        out.append((x & 0x7F) | 0x80)
+        x >>= 7
+    out.append(x)
+    return bytes(out)
+
+
 _MAX_BYTES_128 = 19  # ceil(128 / 7)
 
 

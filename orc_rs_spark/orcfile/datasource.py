@@ -60,17 +60,15 @@ from pyspark.sql.datasource import (
 
 
 def _resolve_files(options) -> list[str]:
-    import glob as _glob
+    from orc_rs_spark.orcfile.spark_source import orc_files
 
     path = options.get("path")
     if not path:
         raise ValueError("orc_rs: a path is required (use .load(path))")
-    if os.path.isdir(path):
-        files = sorted(_glob.glob(os.path.join(path, "*.orc")))
-        if not files:
-            raise ValueError(f"orc_rs: no ORC files in {path}")
-        return files
-    return [path]
+    files = orc_files(path)
+    if not files:
+        raise ValueError(f"orc_rs: no ORC files in {path}")
+    return files
 
 
 @dataclass
@@ -182,7 +180,7 @@ class OrcRsReader(DataSourceReader):
         ]
 
     def read(self, partition: OrcStripePartition):
-        from orc_rs_spark.orcfile.reader import OrcFileReader, predicate_form
+        from orc_rs_spark.orcfile.reader import OrcFileReader
         from orc_rs_spark.orcfile.spark_source import _apply_residual, _spark_friendly
 
         if partition.stripe < 0:
@@ -203,19 +201,9 @@ class OrcRsReader(DataSourceReader):
                 if batch.num_rows:
                     yield batch
             return
-        groups = None
-        for p in self._absorbed + self._hints:
-            form = predicate_form(p)
-            if form[0] == "range":
-                g = r.prune_row_groups(partition.stripe, form[1], form[2], form[3])
-            else:
-                g = r.prune_row_groups_in(partition.stripe, form[1], form[2])
-            if g is not None:
-                groups = g if groups is None else sorted(set(groups) & set(g))
-        for col, want_null in self._null_preds:
-            g = r.prune_row_groups_null(partition.stripe, col, want_null)
-            if g is not None:
-                groups = g if groups is None else sorted(set(groups) & set(g))
+        groups = r.prune_row_groups_where(
+            partition.stripe, self._absorbed + self._hints, self._null_preds
+        )
         if groups == []:
             return
         for batch in r.read_stripe_batches(

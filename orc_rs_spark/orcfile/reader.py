@@ -9,6 +9,10 @@ stripe-footer order, PRESENT bitmaps as boolean RLE, ints as RLEv1
 lists/maps via LENGTH streams, structs by recursion — the same reader
 matrix as /root/reference/src/column_reader/*.
 
+One per-kind decoder serves whole stripes and row groups: a group read
+starts each stream at the positions of the stripe's ROW_INDEX, parsed
+once per stripe and shared with row-group pruning.
+
 Decompression: every codec goes through the one framing decoder and
 codec table in kernels/blockcomp.py (stdlib zlib, pyarrow snappy, system
 liblz4/libzstd, from-spec lzo); ``orc_stream_decompress`` is its
@@ -17,6 +21,7 @@ whole-stream form under the reader's name.
 
 from __future__ import annotations
 
+import sys
 from dataclasses import dataclass
 
 import numpy as np
@@ -24,7 +29,7 @@ import pyarrow as pa
 
 from orc_rs_spark.kernels.blockcomp import block_decompress as orc_stream_decompress
 from orc_rs_spark.kernels.blockcomp import iter_blocks
-from orc_rs_spark.kernels.byte_rle import boolean_rle_decode, byte_rle_decode
+from orc_rs_spark.kernels.byte_rle import byte_rle_decode
 from orc_rs_spark.kernels.rlev1 import rlev1_decode
 from orc_rs_spark.kernels.rlev2 import rlev2_decode
 from orc_rs_spark.kernels.varint import varint_decode_zigzag128
@@ -262,6 +267,30 @@ def _bloom_test(bloom, value, kind: str | None = None) -> bool:
     return True  # unknown type: never prune on a guess
 
 
+def _group_may_match(form: tuple, st, bloom, kind: str) -> bool:
+    """May a row group with index statistics ``st`` and bloom filter
+    ``bloom`` (either None when absent) hold a row matching one
+    normalized predicate — ("range", col, lo, hi), ("in", col, values)
+    or ("null", col, want_null)? Blooms only answer point probes."""
+    if form[0] == "null":
+        if st is None:
+            return True
+        if form[2]:
+            return st.has_null is None or st.has_null
+        return st.number_of_values is None or st.number_of_values > 0
+    if form[0] == "range":
+        _, _, lo, hi = form
+        if st is not None and not _stats_overlap(st, lo, hi):
+            return False
+        if bloom is None or lo is None or lo != hi:
+            return True
+        return _bloom_test(bloom, lo, kind)
+    values = form[2]
+    if st is not None and not any(_stats_overlap(st, v, v) for v in values):
+        return False
+    return bloom is None or any(_bloom_test(bloom, v, kind) for v in values)
+
+
 def resolve_column_path(types: list, name: str) -> int | None:
     """ORC column id for a possibly-nested path: top-level names, struct
     fields by name, list elements as ``col.item`` (or ``.element``), map
@@ -385,38 +414,125 @@ def _parse_nanos(v: np.ndarray) -> np.ndarray:
 
 
 class _StripeColumnReader:
-    """Decodes one stripe: streams are sliced by walking the stripe footer's
-    stream list in order (index region first, then data region)."""
+    """Decodes one stripe's data streams. ``read_column(col, n, g)`` reads
+    ``n`` values from the start of the column's streams (``g`` None) or
+    from row group ``g``'s recorded positions — one per-kind decoder over
+    four stream accessors (PRESENT/boolean bits, byte RLE, ints, raw
+    bytes), so a group read decompresses and decodes only the byte ranges
+    the group touches (the row-group skip the reference left as a TODO,
+    src/stripe.rs:171)."""
 
     def __init__(self, streams: dict[tuple[int, str], bytes],
-                 stripe: proto.StripeInformation,
                  sfooter: proto.StripeFooter, types: list[proto.OrcType], codec: str):
         self.types = types
         self.codec = codec
         self.encodings = sfooter.columns
         self.streams = streams
-        self.n_rows = stripe.number_of_rows
         self._dicts: dict[int, pa.Array] = {}
-        self._row_index: dict[int, list] | None = None
+        # col -> per-group {stream kind: (chunk_off, decomp_skip, *value_skips)}
+        self._group_pos: dict[int, list[dict[str, tuple]]] = {}
 
-    def _stream(self, col: int, kind: str) -> bytes | None:
+    # ------------------------------------------------------ row-group seek
+
+    def load_positions(self, index: dict[int, list], cols: list[int], n_groups: int) -> None:
+        """Parse every row-group position of the column subtrees ``cols``
+        from ``index`` (the stripe's parsed ROW_INDEX) — for EVERY entry,
+        before any group is decoded, so the group path either works for
+        the whole stripe or raises RowIndexUnsupported before a batch is
+        emitted. (Validating only entry 0 let a malformed later entry
+        fail mid-yield, and the full-stripe fallback then re-emitted rows
+        the caller had already consumed.)"""
+        for col in cols:
+            entries = index.get(col)
+            if not entries:
+                raise RowIndexUnsupported(f"column {col}: no ROW_INDEX stream")
+            if len(entries) != n_groups:
+                raise RowIndexUnsupported(
+                    f"column {col}: {len(entries)} index entries for {n_groups} row groups"
+                )
+            self._group_pos[col] = [self._positions(col, e.positions) for e in entries]
+            self.load_positions(index, self.types[col].subtypes, n_groups)
+
+    def _positions(self, col: int, flat: list[int]) -> dict[str, tuple]:
+        """Split one entry's flat position list into per-stream cursors
+        (chunk_off, decomp_skip, *value_skips) following the canonical
+        stream order; a slot-count mismatch aborts to the full-decode path."""
+        comp = self.codec != "none"
+        base = 2 if comp else 1
+        enc = self.encodings[col].kind
+        out: dict[str, tuple] = {}
+        i = 0
+        try:
+            layout = proto.stream_position_layout(self.types[col].kind, enc)
+        except ValueError as e:
+            raise RowIndexUnsupported(str(e)) from None
+        for kindname, extra in layout:
+            if (col, kindname) not in self.streams:
+                continue
+            slots = base + extra
+            vals = flat[i : i + slots]
+            i += slots
+            if len(vals) != slots:
+                raise RowIndexUnsupported(f"column {col}: truncated positions")
+            if comp:
+                out[kindname] = tuple(vals)
+            else:
+                out[kindname] = (vals[0], 0, *vals[1:])
+        if i != len(flat):
+            raise RowIndexUnsupported(
+                f"column {col}: {len(flat) - i} unconsumed position slots"
+            )
+        return out
+
+    # ---------------------------------------------------- stream accessors
+
+    def _skips(self, col: int, kind: str, g: int | None) -> tuple[int, int]:
+        """Value skips at row group g's position in stream (col, kind):
+        (values, 0) for RLE streams, (bytes, bits) for bit streams; zero
+        from a stream's start."""
+        if g is None or (col, kind) not in self.streams:
+            return 0, 0
+        s = self._group_pos[col][g][kind][2:]
+        return (int(s[0]) if s else 0), (int(s[1]) if len(s) > 1 else 0)
+
+    def _data(self, col: int, kind: str, g: int | None, min_bytes: int = 0):
+        """Decompressed bytes of stream (col, kind): the whole stream when
+        ``g`` is None, else from row group g's position, stopping once
+        ``min_bytes`` are out. An absent stream reads as empty."""
         raw = self.streams.get((col, kind))
         if raw is None:
-            return None
-        return orc_stream_decompress(raw, self.codec)
+            return b""
+        if g is None:
+            return orc_stream_decompress(raw, self.codec)
+        cpos = self._group_pos[col][g][kind]
+        return decompress_from(raw, self.codec, cpos[0], cpos[1], min_bytes)
 
-    def _present(self, col: int, n: int) -> np.ndarray | None:
-        buf = self._stream(col, "PRESENT")
-        if buf is None or n == 0:
-            return None
-        return boolean_rle_decode(np.frombuffer(buf, dtype=np.uint8), n).astype(bool)
+    def _bits(self, col: int, kind: str, n: int, g: int | None) -> np.ndarray:
+        """n booleans of a bit-packed byte-RLE stream (PRESENT, boolean DATA)."""
+        byte_skip, bit_skip = self._skips(col, kind, g)
+        need = byte_skip + (bit_skip + n + 7) // 8
+        buf = self._data(col, kind, g, need + need // 128 + 4)
+        bys = byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), need)
+        return np.unpackbits(bys[byte_skip:])[bit_skip : bit_skip + n].astype(bool)
 
-    def _ints(self, buf: bytes, n: int, col: int, signed: bool) -> np.ndarray:
-        enc = self.encodings[col].kind
-        b = np.frombuffer(buf, dtype=np.uint8)
-        if enc in ("DIRECT_V2", "DICTIONARY_V2"):
-            return rlev2_decode(b, n, signed=signed)
-        return rlev1_decode(b, n, signed=signed)
+    def _bytes(self, col: int, n: int, g: int | None) -> np.ndarray:
+        """n values of the byte-RLE DATA stream (byte columns, union tags)."""
+        skip = self._skips(col, "DATA", g)[0]
+        need = skip + n
+        buf = self._data(col, "DATA", g, need + need // 128 + 4)
+        return byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), need)[skip:]
+
+    def _ints(self, col: int, kind: str, n: int, g: int | None, signed: bool) -> np.ndarray:
+        """n integers of stream (col, kind): RLEv2 under the *_V2
+        encodings, RLEv1 (Hive 0.11) otherwise."""
+        skip = self._skips(col, kind, g)[0]
+        total = skip + n
+        b = np.frombuffer(self._data(col, kind, g, total * 11 + 32), dtype=np.uint8)
+        if self.encodings[col].kind in ("DIRECT_V2", "DICTIONARY_V2"):
+            vals = rlev2_decode(b, total, signed=signed)
+        else:
+            vals = rlev1_decode(b, total, signed=signed)
+        return vals[skip:]
 
     def _decimal_dense(self, buf, n_dense: int, scales: np.ndarray,
                        t: proto.OrcType) -> pa.Array:
@@ -475,9 +591,8 @@ class _StripeColumnReader:
         """Stripe-global string dictionary (materialized once per column)."""
         if col not in self._dicts:
             dict_size = self.encodings[col].dictionary_size
-            dbuf = self._stream(col, "DICTIONARY_DATA") or b""
-            lbuf = self._stream(col, "LENGTH")
-            dlen = self._ints(lbuf, dict_size, col, signed=False)
+            dbuf = self._data(col, "DICTIONARY_DATA", None)
+            dlen = self._ints(col, "LENGTH", dict_size, None, signed=False)
             doffsets = np.concatenate(([0], np.cumsum(dlen))).astype(np.int64)
             self._dicts[col] = pa.Array.from_buffers(
                 pa.string(), dict_size,
@@ -485,218 +600,32 @@ class _StripeColumnReader:
             )
         return self._dicts[col]
 
-    # ------------------------------------------- positional (row-group) path
+    # ------------------------------------------------------------- decode
 
-    def row_index(self) -> dict[int, list]:
-        """col -> RowIndexEntry list, from this stripe's ROW_INDEX streams
-        (the index the reference parses at src/stripe.rs:129-168 and never
-        uses — TODO at :171; here it drives actual skipping)."""
-        if self._row_index is None:
-            out: dict[int, list] = {}
-            for (col, kind), raw in self.streams.items():
-                if kind == "ROW_INDEX":
-                    out[col] = proto.parse_row_index(orc_stream_decompress(raw, self.codec))
-            self._row_index = out
-        return self._row_index
-
-    def _positions(self, col: int, flat: list[int]) -> dict[str, tuple]:
-        """Split one entry's flat position list into per-stream cursors
-        (chunk_off, decomp_skip, *value_skips) following the canonical
-        stream order; a slot-count mismatch aborts to the full-decode path."""
-        comp = self.codec != "none"
-        base = 2 if comp else 1
-        enc = self.encodings[col].kind
-        out: dict[str, tuple] = {}
-        i = 0
-        try:
-            layout = proto.stream_position_layout(self.types[col].kind, enc)
-        except ValueError as e:
-            raise RowIndexUnsupported(str(e)) from None
-        for kindname, extra in layout:
-            if (col, kindname) not in self.streams:
-                continue
-            slots = base + extra
-            vals = flat[i : i + slots]
-            i += slots
-            if len(vals) != slots:
-                raise RowIndexUnsupported(f"column {col}: truncated positions")
-            if comp:
-                out[kindname] = tuple(vals)
-            else:
-                out[kindname] = (vals[0], 0, *vals[1:])
-        if i != len(flat):
-            raise RowIndexUnsupported(
-                f"column {col}: {len(flat) - i} unconsumed position slots"
-            )
-        return out
-
-    def _stream_at(self, col: int, kind: str, cpos: tuple, min_bytes: int):
-        raw = self.streams.get((col, kind))
-        if raw is None:
-            raise RowIndexUnsupported(f"column {col}: stream {kind} missing")
-        if self.codec == "none":
-            return memoryview(raw)[cpos[0]:]
-        return decompress_from(raw, self.codec, cpos[0], cpos[1], min_bytes)
-
-    def _bits_at(self, col: int, skind: str, nbits: int, pm: dict) -> np.ndarray:
-        chunk_off, dskip, byte_skip, bit_skip = pm[skind][:4]
-        need_bytes = int(byte_skip) + (int(bit_skip) + nbits + 7) // 8
-        buf = self._stream_at(col, skind, (chunk_off, dskip),
-                              need_bytes + need_bytes // 128 + 4)
-        bys = byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), need_bytes)
-        bits = np.unpackbits(bys[int(byte_skip):])
-        return bits[int(bit_skip) : int(bit_skip) + nbits]
-
-    def _ints_at(self, col: int, skind: str, n: int, pm: dict, signed: bool) -> np.ndarray:
-        cpos = pm[skind]
-        vskip = int(cpos[2]) if len(cpos) > 2 else 0
-        total = vskip + n
-        buf = self._stream_at(col, skind, cpos, total * 11 + 32)
-        b = np.frombuffer(buf, dtype=np.uint8)
-        enc = self.encodings[col].kind
-        if enc in ("DIRECT_V2", "DICTIONARY_V2"):
-            vals = rlev2_decode(b, total, signed=signed)
-        else:
-            vals = rlev1_decode(b, total, signed=signed)
-        return vals[vskip:]
-
-    def read_column_group(self, col: int, n: int, index: dict, g: int) -> pa.Array:
-        """Decode ``n`` of this column's values starting at row group ``g``
-        using recorded positions — only the byte ranges the group touches
-        are decompressed and decoded (the row-group skip the reference
-        left as a TODO, src/stripe.rs:171)."""
+    def read_column(self, col: int, n: int, g: int | None = None) -> pa.Array:
+        """``n`` values of column ``col`` from its streams' start, or from
+        row group ``g`` (positions loaded by ``load_positions``)."""
         t = self.types[col]
         kind = t.kind
-        entries = index.get(col)
-        if not entries or g >= len(entries):
-            raise RowIndexUnsupported(f"column {col}: no index entry for group {g}")
-        pm = self._positions(col, entries[g].positions)
         present = None
-        if "PRESENT" in pm:
-            present = self._bits_at(col, "PRESENT", n, pm).astype(bool)
-        n_dense = int(present.sum()) if present is not None else n
-
-        if kind == "union":
-            # TAG stream is byte RLE (same position contract as a byte
-            # column: chunk offset, decompressed skip, value skip); each
-            # child's own index entry locates its values for this group
-            cpos = pm["DATA"]
-            vskip = int(cpos[2]) if len(cpos) > 2 else 0
-            need = vskip + n_dense
-            buf = self._stream_at(col, "DATA", cpos, need + need // 128 + 4)
-            tags = byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), need)[vskip:].astype(np.int8)
-            counts = np.bincount(tags, minlength=len(t.subtypes))
-            children = [
-                self.read_column_group(sub, int(counts[ci]), index, g)
-                for ci, sub in enumerate(t.subtypes)
-            ]
-            offsets = np.zeros(n_dense, dtype=np.int32)
-            for ci in range(len(t.subtypes)):
-                sel = tags == ci
-                offsets[sel] = np.arange(int(counts[ci]), dtype=np.int32)
-            if present is not None:
-                raise ValueError("nullable union columns not supported")
-            return pa.UnionArray.from_dense(pa.array(tags), pa.array(offsets), children)
-
-        if kind == "struct":
-            children = [self.read_column_group(sub, n_dense, index, g) for sub in t.subtypes]
-            dense = pa.StructArray.from_arrays(children, names=t.field_names)
-            return _scatter(dense, present)
-        if kind in ("list", "map"):
-            lengths = self._ints_at(col, "LENGTH", n_dense, pm, signed=False)
-            n_child = int(lengths.sum())
-            offsets = pa.array(np.concatenate(([0], np.cumsum(lengths))).astype(np.int32))
-            if kind == "list":
-                child = self.read_column_group(t.subtypes[0], n_child, index, g)
-                dense = pa.ListArray.from_arrays(offsets, child)
-            else:
-                keys = self.read_column_group(t.subtypes[0], n_child, index, g)
-                vals = self.read_column_group(t.subtypes[1], n_child, index, g)
-                dense = pa.MapArray.from_arrays(offsets, keys, vals)
-            return _scatter(dense, present)
-        if kind == "boolean":
-            bits = self._bits_at(col, "DATA", n_dense, pm).astype(bool)
-            return _scatter(pa.array(bits), present)
-        if kind == "byte":
-            cpos = pm["DATA"]
-            vskip = int(cpos[2])
-            need = vskip + n_dense
-            buf = self._stream_at(col, "DATA", cpos, need + need // 128 + 4)
-            vals = byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), need)[vskip:]
-            return _scatter(pa.array(vals.astype(np.int8)), present)
-        if kind in ("short", "int", "long", "date"):
-            vals = self._ints_at(col, "DATA", n_dense, pm, signed=True)
-            if kind == "short":
-                arr = pa.array(vals.astype(np.int16))
-            elif kind == "int":
-                arr = pa.array(vals.astype(np.int32))
-            elif kind == "date":
-                arr = pa.array(vals.astype(np.int32)).cast(pa.date32())
-            else:
-                arr = pa.array(vals)
-            return _scatter(arr, present)
-        if kind in ("float", "double"):
-            isz = 4 if kind == "float" else 8
-            buf = self._stream_at(col, "DATA", pm["DATA"], n_dense * isz)
-            vals = np.frombuffer(buf, dtype="<f4" if kind == "float" else "<f8",
-                                 count=n_dense)
-            return _scatter(pa.array(vals), present)
-        if kind in ("string", "varchar", "char", "binary"):
-            out_type = pa.binary() if kind == "binary" else pa.string()
-            if self.encodings[col].kind in ("DICTIONARY", "DICTIONARY_V2"):
-                dictionary = self._dict_array(col)
-                idx = self._ints_at(col, "DATA", n_dense, pm, signed=False)
-                dense = dictionary.take(pa.array(idx))
-                if kind == "binary":
-                    dense = dense.cast(pa.binary())
-                return _scatter(dense, present)
-            lengths = self._ints_at(col, "LENGTH", n_dense, pm, signed=False)
-            total = int(lengths.sum())
-            data = self._stream_at(col, "DATA", pm["DATA"], total)
-            offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int32)
-            dense = pa.Array.from_buffers(
-                out_type, n_dense,
-                [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(bytes(data[:total]))],
-            )
-            return _scatter(dense, present)
-        if kind in ("timestamp", "timestamp_instant"):
-            secs = self._ints_at(col, "DATA", n_dense, pm, signed=True)
-            nanos = _parse_nanos(self._ints_at(col, "SECONDARY", n_dense, pm, signed=False))
-            abs_secs = secs + TS_BASE_SECONDS
-            epoch = abs_secs * 1_000_000_000
-            neg = (abs_secs < 0) & (nanos != 0)
-            epoch = epoch + nanos - np.where(neg, 1_000_000_000, 0)
-            arr = pa.array(epoch).cast(
-                pa.timestamp("ns", tz="UTC" if kind == "timestamp_instant" else None)
-            )
-            return _scatter(arr, present)
-        if kind == "decimal":
-            buf = self._stream_at(col, "DATA", pm["DATA"], 19 * n_dense + 32)
-            scales = self._ints_at(col, "SECONDARY", n_dense, pm, signed=True)
-            return _scatter(self._decimal_dense(buf, n_dense, scales, t), present)
-        raise RowIndexUnsupported(f"ORC kind {kind!r} has no positional decode")
-
-    def read_column(self, col: int, n: int) -> pa.Array:
-        t = self.types[col]
-        kind = t.kind
-        present = self._present(col, n)
+        if n and (col, "PRESENT") in self.streams:
+            present = self._bits(col, "PRESENT", n, g)
         n_dense = int(present.sum()) if present is not None else n
 
         if kind == "struct":
-            children = [self.read_column(sub, n_dense) for sub in t.subtypes]
+            children = [self.read_column(sub, n_dense, g) for sub in t.subtypes]
             dense = pa.StructArray.from_arrays(children, names=t.field_names)
             return _scatter(dense, present)
 
         if kind == "union":
             # ORC union (R13 — present but never wired in the reference,
             # /root/reference/src/column_reader/mod.rs:265): DIRECT byte-RLE
-            # TAG stream; each child stream holds only its rows, in order
-            tags = byte_rle_decode(
-                np.frombuffer(self._stream(col, "DATA"), dtype=np.uint8), n_dense
-            ).astype(np.int8)
+            # TAG stream; each child stream holds only its rows, in order,
+            # and a group read seeks each child through its own index entry
+            tags = self._bytes(col, n_dense, g).astype(np.int8)
             counts = np.bincount(tags, minlength=len(t.subtypes))
             children = [
-                self.read_column(sub, int(counts[ci])) for ci, sub in enumerate(t.subtypes)
+                self.read_column(sub, int(counts[ci]), g) for ci, sub in enumerate(t.subtypes)
             ]
             # dense-union offsets: running index within each child
             offsets = np.zeros(n_dense, dtype=np.int32)
@@ -711,29 +640,24 @@ class _StripeColumnReader:
             return dense
 
         if kind in ("list", "map"):
-            lbuf = self._stream(col, "LENGTH")
-            lengths = self._ints(lbuf, n_dense, col, signed=False)
+            lengths = self._ints(col, "LENGTH", n_dense, g, signed=False)
             n_child = int(lengths.sum())
             offsets = pa.array(np.concatenate(([0], np.cumsum(lengths))).astype(np.int32))
             if kind == "list":
-                child = self.read_column(t.subtypes[0], n_child)
+                child = self.read_column(t.subtypes[0], n_child, g)
                 dense = pa.ListArray.from_arrays(offsets, child)
             else:
-                keys = self.read_column(t.subtypes[0], n_child)
-                vals = self.read_column(t.subtypes[1], n_child)
+                keys = self.read_column(t.subtypes[0], n_child, g)
+                vals = self.read_column(t.subtypes[1], n_child, g)
                 dense = pa.MapArray.from_arrays(offsets, keys, vals)
             return _scatter(dense, present)
 
-        data = self._stream(col, "DATA")
-
         if kind == "boolean":
-            vals = boolean_rle_decode(np.frombuffer(data, dtype=np.uint8), n_dense).astype(bool)
-            return _scatter(pa.array(vals), present)
+            return _scatter(pa.array(self._bits(col, "DATA", n_dense, g)), present)
         if kind == "byte":
-            vals = byte_rle_decode(np.frombuffer(data, dtype=np.uint8), n_dense)
-            return _scatter(pa.array(vals.astype(np.int8)), present)
+            return _scatter(pa.array(self._bytes(col, n_dense, g).astype(np.int8)), present)
         if kind in ("short", "int", "long", "date"):
-            vals = self._ints(data, n_dense, col, signed=True)
+            vals = self._ints(col, "DATA", n_dense, g, signed=True)
             if kind == "short":
                 arr = pa.array(vals.astype(np.int16))
             elif kind == "int":
@@ -743,32 +667,31 @@ class _StripeColumnReader:
             else:
                 arr = pa.array(vals)
             return _scatter(arr, present)
-        if kind == "float":
-            return _scatter(pa.array(np.frombuffer(data, dtype="<f4")[:n_dense]), present)
-        if kind == "double":
-            return _scatter(pa.array(np.frombuffer(data, dtype="<f8")[:n_dense]), present)
+        if kind in ("float", "double"):
+            dtype = np.dtype("<f4" if kind == "float" else "<f8")
+            data = self._data(col, "DATA", g, n_dense * dtype.itemsize)
+            return _scatter(pa.array(np.frombuffer(data, dtype=dtype, count=n_dense)), present)
         if kind in ("string", "varchar", "char", "binary"):
-            enc = self.encodings[col].kind
             out_type = pa.binary() if kind == "binary" else pa.string()
-            if enc in ("DICTIONARY", "DICTIONARY_V2"):
+            if self.encodings[col].kind in ("DICTIONARY", "DICTIONARY_V2"):
                 dictionary = self._dict_array(col)
-                idx = self._ints(data, n_dense, col, signed=False)
+                idx = self._ints(col, "DATA", n_dense, g, signed=False)
                 dense = dictionary.take(pa.array(idx))
                 if kind == "binary":
                     dense = dense.cast(pa.binary())
                 return _scatter(dense, present)
-            lbuf = self._stream(col, "LENGTH")
-            lengths = self._ints(lbuf, n_dense, col, signed=False)
+            lengths = self._ints(col, "LENGTH", n_dense, g, signed=False)
             offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int32)
+            total = int(offsets[-1])
+            data = memoryview(self._data(col, "DATA", g, total))[:total]
             dense = pa.Array.from_buffers(
                 out_type, n_dense,
-                [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data or b"")],
+                [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)],
             )
             return _scatter(dense, present)
         if kind in ("timestamp", "timestamp_instant"):
-            secs = self._ints(data, n_dense, col, signed=True)
-            sbuf = self._stream(col, "SECONDARY")
-            nanos = _parse_nanos(self._ints(sbuf, n_dense, col, signed=False))
+            secs = self._ints(col, "DATA", n_dense, g, signed=True)
+            nanos = _parse_nanos(self._ints(col, "SECONDARY", n_dense, g, signed=False))
             # JVM convention (calibrated against Spark's ORC writer): the
             # seconds stream is trunc-toward-zero, nanos are the positive
             # fraction; pre-1970 (ABSOLUTE seconds < 0) values with nanos
@@ -781,8 +704,8 @@ class _StripeColumnReader:
             arr = pa.array(epoch).cast(pa.timestamp("ns", tz="UTC" if kind == "timestamp_instant" else None))
             return _scatter(arr, present)
         if kind == "decimal":
-            sbuf = self._stream(col, "SECONDARY")
-            scales = self._ints(sbuf, n_dense, col, signed=True)
+            data = self._data(col, "DATA", g, 19 * n_dense + 32)
+            scales = self._ints(col, "SECONDARY", n_dense, g, signed=True)
             return _scatter(self._decimal_dense(data, n_dense, scales, t), present)
         raise OrcUnsupportedError(f"unsupported ORC type {kind!r} (column {col})")
 
@@ -813,27 +736,29 @@ class OrcFileReader:
             self._column_subtree(sub, out)
 
     def _open_stripe(self, i: int, columns: list[str] | None = None):
-        """Open one stripe, reading ONLY the selected columns' stream byte
-        ranges (coalesced) — column pruning at the I/O level, the byte-range
-        analogue of the reference's per-stream range readers
+        """Open one stripe, reading ONLY the selected columns' data-stream
+        byte ranges (coalesced) — column pruning at the I/O level, the
+        byte-range analogue of the reference's per-stream range readers
         (src/compression.rs:39-56, src/io_utils.rs:237-281). A full-schema
-        read stays one contiguous range."""
+        read stays one contiguous range. The index region is not read
+        here: group reads take the parsed index from ``_read_index_region``."""
         stripe = self.tail.footer.stripes[i]
-        body_len = stripe.index_length + stripe.data_length
+        data_off = stripe.offset + stripe.index_length
         sfooter = proto.StripeFooter.parse(
             orc_stream_decompress(
-                self.source.read_at(stripe.offset + body_len, stripe.footer_length),
+                self.source.read_at(data_off + stripe.data_length, stripe.footer_length),
                 self.codec,
             )
         )
-        # stream layout: (offset-in-stripe, length) in footer order
+        # data-stream layout: (offset-in-data-region, length) in footer order
         spans = []
-        pos = 0
+        pos = -stripe.index_length
         for s in sfooter.streams:
-            spans.append((s, pos, s.length))
+            if pos >= 0:
+                spans.append((s, pos, s.length))
             pos += s.length
         if columns is None:
-            raw = self.source.read_at(stripe.offset, body_len)
+            raw = self.source.read_at(data_off, stripe.data_length)
             streams = {
                 (s.column, s.kind): raw[off : off + ln] for s, off, ln in spans
             }
@@ -851,7 +776,7 @@ class OrcFileReader:
                 else:
                     ranges.append([off, ln])
             blobs = {
-                (lo, ln): self.source.read_at(stripe.offset + lo, ln)
+                (lo, ln): self.source.read_at(data_off + lo, ln)
                 for lo, ln in ranges
             }
             streams = {}
@@ -861,7 +786,7 @@ class OrcFileReader:
                         streams[(s.column, s.kind)] = blob[off - lo : off - lo + ln]
                         break
         return (
-            _StripeColumnReader(streams, stripe, sfooter, self.tail.footer.types, self.codec),
+            _StripeColumnReader(streams, sfooter, self.tail.footer.types, self.codec),
             stripe,
         )
 
@@ -882,122 +807,78 @@ class OrcFileReader:
             [pa.array([], type=schema.field(n).type) for n in names], names=names
         )
 
-    def _check_group_support(self, reader, index, col: int, n_groups: int) -> None:
-        """Dry-run the position parse over a column subtree — for EVERY
-        index entry, not just the first — so the group path either works
-        for the whole stripe or falls back before any batch is emitted.
-        (Validating only entry 0 let a malformed later entry raise
-        RowIndexUnsupported mid-yield, and the full-stripe fallback then
-        re-emitted rows the caller had already consumed.)"""
-        t = self.tail.footer.types[col]
-        entries = index.get(col)
-        if not entries:
-            raise RowIndexUnsupported(f"column {col}: no ROW_INDEX stream")
-        if len(entries) != n_groups:
-            raise RowIndexUnsupported(
-                f"column {col}: {len(entries)} index entries for {n_groups} row groups"
-            )
-        for e in entries:
-            reader._positions(col, e.positions)
-        for sub in t.subtypes:
-            self._check_group_support(reader, index, sub, n_groups)
-
-    def _decode_group_runs(self, reader, stripe, names, subs, sel: list[int],
-                           groups_per_batch: int):
-        """Yield one RecordBatch per run of ≤ groups_per_batch consecutive
-        selected row groups, decoded positionally."""
-        stride = self.tail.footer.row_index_stride
-        n_rows = stripe.number_of_rows
-        index = reader.row_index()
-        if not index:
-            raise RowIndexUnsupported("stripe has no ROW_INDEX streams")
-        n_groups = -(-n_rows // stride)
-        for sub in subs:
-            self._check_group_support(reader, index, sub, n_groups)
-        for g0, glen in _runs(sel):
-            for s in range(g0, g0 + glen, groups_per_batch):
-                cnt = min(groups_per_batch, g0 + glen - s)
-                n = min(cnt * stride, n_rows - s * stride)
-                arrays = [reader.read_column_group(sub, n, index, s) for sub in subs]
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    def read_stripe(self, i: int, columns: list[str] | None = None,
-                    row_groups: list[int] | None = None) -> pa.RecordBatch:
-        """Decode one stripe. ``columns`` projects at the STREAM level:
-        unselected columns' streams are never decompressed or decoded (the
-        wire analogue of the chunk format's stream pruning). ``row_groups``
-        restricts decode to those row-index groups — positional decode when
-        the file carries a usable ROW_INDEX, full-decode-and-slice fallback
-        otherwise (same rows either way)."""
-        reader, stripe = self._open_stripe(i, columns)
-        names, subs = self._select(columns)
-        n_rows = stripe.number_of_rows
-        if row_groups is None:
-            arrays = [reader.read_column(sub, n_rows) for sub in subs]
-            return pa.RecordBatch.from_arrays(arrays, names=names)
+    def _group_ids(self, i: int, row_groups) -> list[int]:
+        """Sorted distinct row-group ids, each checked against stripe i."""
         stride = self.tail.footer.row_index_stride
         if stride <= 0:
             raise OrcBoundsError("row_groups given but the file has no rowIndexStride")
-        n_groups = -(-n_rows // stride)
+        n_groups = -(-self.tail.footer.stripes[i].number_of_rows // stride)
         sel = sorted({int(g) for g in row_groups})
-        if any(g < 0 or g >= n_groups for g in sel):
-            raise OrcBoundsError(f"row group out of range (stripe {i} has {n_groups})")
-        if not sel:
-            return self._empty_batch(names)
-        try:
-            batches = list(self._decode_group_runs(reader, stripe, names, subs, sel, n_groups))
-        except RowIndexUnsupported:
-            full = pa.Table.from_arrays(
-                [reader.read_column(sub, n_rows) for sub in subs], names=names
+        bad = [g for g in sel if g < 0 or g >= n_groups]
+        if bad:
+            raise OrcBoundsError(
+                f"row groups {bad} out of range (stripe {i} has {n_groups})"
             )
-            batches = [
-                full.slice(g0 * stride, min(glen * stride, n_rows - g0 * stride))
-                for g0, glen in _runs(sel)
-            ]
-            batches = [b for t in batches for b in t.to_batches()]
-        tbl = pa.Table.from_batches(batches)
-        return tbl.combine_chunks().to_batches()[0]
+        return sel
+
+    def read_stripe(self, i: int, columns: list[str] | None = None,
+                    row_groups: list[int] | None = None) -> pa.RecordBatch:
+        """Decode one stripe into one batch: ``read_stripe_batches`` with
+        no batch bound, gathered. ``columns`` projects at the STREAM
+        level: unselected columns' streams are never read or decoded (the
+        wire analogue of the chunk format's stream pruning).
+        ``row_groups`` restricts decode to those row-index groups."""
+        names, _subs = self._select(columns)
+        batches = list(self.read_stripe_batches(i, columns, sys.maxsize, row_groups))
+        if not batches:
+            return self._empty_batch(names)
+        if len(batches) == 1:
+            return batches[0]
+        return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
 
     def read_stripe_batches(self, i: int, columns: list[str] | None = None,
                             batch_rows: int = 65536,
                             row_groups: list[int] | None = None):
         """Iterate one stripe as RecordBatches of ≤ ~batch_rows rows (the
         reference's bounded-batch pull loop, src/reader.rs:17-27 applied
-        at row-group granularity). Selective reads (row_groups set) decode
-        positionally so memory is bounded by the covering groups; a FULL
-        read decodes the stripe in one pass per column and slices — the
-        per-group position parsing and restarted partial decompressions
-        are pure overhead when every group is wanted anyway, and memory is
-        already bounded by the stripe (the format's sizing unit)."""
-        stride = self.tail.footer.row_index_stride
-        if row_groups is not None and stride <= 0:
-            raise OrcBoundsError("row_groups given but the file has no rowIndexStride")
+        at row-group granularity). ``row_groups`` (ids validated up front,
+        OrcBoundsError when out of range or the file has no stride)
+        decodes those groups positionally through the stripe's cached
+        index parse, so memory is bounded by the covering groups; when
+        the index cannot locate every group the stripe is decoded whole
+        and sliced (same rows either way). A FULL read decodes the stripe
+        in one pass per column and slices — per-group position parsing
+        and restarted partial decompressions are pure overhead when every
+        group is wanted anyway, and memory is already bounded by the
+        stripe (the format's sizing unit)."""
+        sel = None if row_groups is None else self._group_ids(i, row_groups)
+        if sel == []:
+            return
         reader, stripe = self._open_stripe(i, columns)
         names, subs = self._select(columns)
         n_rows = stripe.number_of_rows
-        if row_groups is not None and stride > 0 and stripe.index_length > 0:
-            n_groups = -(-n_rows // stride)
-            sel = sorted({int(g) for g in row_groups})
-            if not sel:
-                return
-            gpb = max(1, batch_rows // stride)
+        stride = self.tail.footer.row_index_stride
+        if sel is not None:
             try:
-                yield from self._decode_group_runs(reader, stripe, names, subs, sel, gpb)
-                return
+                reader.load_positions(self._read_index_region(i)[0], subs, -(-n_rows // stride))
             except RowIndexUnsupported:
                 pass
+            else:
+                per_batch = max(1, batch_rows // stride)
+                for g0, glen in _runs(sel):
+                    for g in range(g0, g0 + glen, per_batch):
+                        n = min(min(per_batch, g0 + glen - g) * stride, n_rows - g * stride)
+                        arrays = [reader.read_column(sub, n, g) for sub in subs]
+                        yield pa.RecordBatch.from_arrays(arrays, names=names)
+                return
         full = pa.Table.from_arrays(
             [reader.read_column(sub, n_rows) for sub in subs], names=names
         )
-        if row_groups is not None and stride > 0:
-            sel = sorted({int(g) for g in row_groups})
-            parts = [
+        if sel is not None:
+            full = pa.concat_tables([
                 full.slice(g0 * stride, min(glen * stride, n_rows - g0 * stride))
                 for g0, glen in _runs(sel)
-            ]
-            if not parts:
-                return
-            full = pa.concat_tables(parts)
+            ])
         yield from full.to_batches(max_chunksize=batch_rows)
 
     def _read_index_region(self, i: int):
@@ -1056,111 +937,54 @@ class OrcFileReader:
 
     def prune_row_groups(self, i: int, column: str, lo, hi) -> list[int] | None:
         """Row-group ids in stripe i whose [min, max] for ``column``
-        overlaps [lo, hi]; None when the file carries no usable index
-        (caller decodes everything). Point predicates (lo == hi)
-        additionally probe the column's bloom filters when present —
-        stats keep a group whose RANGE covers the value, the bloom drops
-        it unless the value was (probably) actually written."""
-        stride = self.tail.footer.row_index_stride
-        if stride <= 0:
-            return None
-        stripe = self.tail.footer.stripes[i]
-        n_groups = -(-stripe.number_of_rows // stride)
-        col_id = resolve_column_path(self.tail.footer.types, column)
-        if col_id is None:
-            return None
-        try:
-            rows, blooms = self._read_index_region(i)
-        except ValueError:
-            return None
-        entries = rows.get(col_id)
-        if not entries or len(entries) != n_groups:
-            return None
-        keep = [
-            g for g, e in enumerate(entries)
-            if e.statistics is None or _stats_overlap(e.statistics, lo, hi)
-        ]
-        col_blooms = blooms.get(col_id)
-        if lo is not None and lo == hi and col_blooms is not None and len(col_blooms) == n_groups:
-            kind = self.tail.footer.types[col_id].kind
-            keep = [
-                g for g in keep
-                if col_blooms[g] is None or _bloom_test(col_blooms[g], lo, kind)
-            ]
-        return keep
+        overlaps [lo, hi] — ``prune_row_groups_where`` for one range."""
+        return self.prune_row_groups_where(i, [(column, lo, hi)])
 
-    def prune_row_groups_in(self, i: int, column: str, values) -> list[int] | None:
-        """IN-list variant of ``prune_row_groups``: row-group ids whose
-        stats/blooms admit ANY of ``values`` (OR semantics — the pruning
-        shape of a semi-join pushdown: collect a small dimension's keys,
-        probe them all against one parse of the stripe's index). The
-        index region is read once for the whole list."""
+    def prune_row_groups_where(self, i: int, predicates=(), null_preds=()) -> list[int] | None:
+        """Row-group ids in stripe i that MAY satisfy every predicate, from
+        one parse of the stripe's index; None when no predicate column has
+        a usable index (caller decodes everything).
+
+        ``predicates`` are scan predicates (``predicate_form``):
+        ``(column, lo, hi)`` keeps groups whose [min, max] overlaps the
+        range, and a point range (lo == hi) also probes the column's
+        bloom filters — stats keep a group whose RANGE covers the value,
+        the bloom drops it unless the value was (probably) written.
+        ``(column, values)`` is an IN-list: a group stays when its
+        stats/blooms admit ANY value (the semi-join pushdown shape); an
+        empty list proves every group away. ``null_preds`` are
+        ``(column, want_null)`` IS NULL / IS NOT NULL tests: hasNull=False
+        proves a group holds no NULL, numberOfValues == 0 proves it holds
+        nothing but NULLs."""
+        tests = [predicate_form(p) for p in predicates]
+        tests += [("null", col, want_null) for col, want_null in null_preds]
         stride = self.tail.footer.row_index_stride
-        if stride <= 0:
+        if stride <= 0 or not tests:
             return None
-        vals = list(values)
-        if not vals:
+        if any(form[0] == "in" and not form[2] for form in tests):
             return []
-        stripe = self.tail.footer.stripes[i]
-        n_groups = -(-stripe.number_of_rows // stride)
-        col_id = resolve_column_path(self.tail.footer.types, column)
-        if col_id is None:
-            return None
+        n_groups = -(-self.tail.footer.stripes[i].number_of_rows // stride)
+        types = self.tail.footer.types
         try:
             rows, blooms = self._read_index_region(i)
         except ValueError:
             return None
-        entries = rows.get(col_id)
-        if not entries or len(entries) != n_groups:
-            return None
-        keep = [
-            g for g, e in enumerate(entries)
-            if e.statistics is None
-            or any(_stats_overlap(e.statistics, v, v) for v in vals)
-        ]
-        col_blooms = blooms.get(col_id)
-        if col_blooms is not None and len(col_blooms) == n_groups:
-            kind = self.tail.footer.types[col_id].kind
-            keep = [
-                g for g in keep
-                if col_blooms[g] is None
-                or any(_bloom_test(col_blooms[g], v, kind) for v in vals)
-            ]
-        return keep
-
-    def prune_row_groups_null(self, i: int, column: str, want_null: bool) -> list[int] | None:
-        """Row-group ids that MAY hold a NULL (``want_null=True``, an
-        IS NULL predicate) or a non-NULL (``want_null=False``,
-        IS NOT NULL) for ``column``. ORC group statistics carry both
-        signals: hasNull=False proves no NULLs, numberOfValues==0 proves
-        nothing BUT NULLs. None when no usable index exists."""
-        stride = self.tail.footer.row_index_stride
-        if stride <= 0:
-            return None
-        stripe = self.tail.footer.stripes[i]
-        n_groups = -(-stripe.number_of_rows // stride)
-        col_id = resolve_column_path(self.tail.footer.types, column)
-        if col_id is None:
-            return None
-        try:
-            rows, _blooms = self._read_index_region(i)
-        except ValueError:
-            return None
-        entries = rows.get(col_id)
-        if not entries or len(entries) != n_groups:
-            return None
-        keep = []
-        for g, e in enumerate(entries):
-            st = e.statistics
-            if st is None:
-                keep.append(g)
-            elif want_null:
-                if st.has_null is None or st.has_null:
-                    keep.append(g)
-            else:
-                if st.number_of_values is None or st.number_of_values > 0:
-                    keep.append(g)
-        return keep
+        keep: set[int] | None = None
+        for form in tests:
+            col_id = resolve_column_path(types, form[1])
+            entries = rows.get(col_id)
+            if not entries or len(entries) != n_groups:
+                continue  # no usable index for this column: it prunes nothing
+            col_blooms = blooms.get(col_id)
+            if col_blooms is None or len(col_blooms) != n_groups:
+                col_blooms = [None] * n_groups
+            kind = types[col_id].kind
+            hit = {
+                g for g, e in enumerate(entries)
+                if _group_may_match(form, e.statistics, col_blooms[g], kind)
+            }
+            keep = hit if keep is None else keep & hit
+        return None if keep is None else sorted(keep)
 
     def arrow_schema(self) -> pa.Schema:
         """Arrow schema from the footer type tree (metadata only)."""

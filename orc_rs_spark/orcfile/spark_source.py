@@ -21,6 +21,7 @@ from orc_rs_spark.orcfile.reader import (
     prune_stripes_stats,
     read_stripe_statistics,
     read_tail,
+    schema_signature,
 )
 
 
@@ -171,6 +172,19 @@ def scan_partitions(n_work: int, default_parallelism: int) -> int:
     return max(1, min(n_work, 4 * max(1, default_parallelism)))
 
 
+def orc_files(path: str | list[str]) -> list[str]:
+    """A file path, a directory (its ``*.orc`` part files, sorted) or a
+    list of files -> the scan's file list."""
+    import glob
+    import os
+
+    if not isinstance(path, str):
+        return list(path)
+    if os.path.isdir(path):
+        return sorted(glob.glob(os.path.join(path, "*.orc")))
+    return [path]
+
+
 def _pairs_from_plan(batches) -> Iterator[tuple]:
     """(file, stripe) pairs from a distributed-plan (path, stripe)
     DataFrame's Arrow batches — shared by read_orc / read_orc_evolve."""
@@ -187,15 +201,6 @@ def _pairs_from_ids(batches, work: list) -> Iterator[tuple]:
             yield work[int(i)]
 
 
-def _schema_sig(tail) -> tuple:
-    """Mixed-schema gate signature — delegates to the shared
-    reader.schema_signature (one source of truth with merge's
-    compatibility check)."""
-    from orc_rs_spark.orcfile.reader import schema_signature
-
-    return schema_signature(tail)
-
-
 def _plan_file(f: str, predicates: list[tuple] | None) -> tuple[str, tuple, list[int]]:
     """Plan one file: (path, schema signature, surviving stripe ids).
     ONE tail read; when predicates are set, ONE Metadata read/parse covers
@@ -206,7 +211,7 @@ def _plan_file(f: str, predicates: list[tuple] | None) -> tuple[str, tuple, list
         keep = prune_stripes_stats(tail, stats, predicates)
     else:
         keep = list(range(len(tail.footer.stripes)))
-    return f, _schema_sig(tail), keep
+    return f, schema_signature(tail), keep
 
 
 # planning fans out to a Spark job above this file count; below it, a
@@ -241,14 +246,17 @@ def _plan_scan_threaded(files, predicates,
     return work
 
 
-def _plan_scan_distributed(spark, files, predicates, sig0: tuple, sig_file: str) -> DataFrame:
+def _plan_scan_distributed(spark, files, predicates, sig0: tuple | None, sig_file: str,
+                           require_uniform: bool = True) -> DataFrame:
     """(path, stripe) plan DataFrame from a Spark job over the file list —
     the driver never opens a data file and never collects the plan: tasks
     read their files' tails + Metadata, prune stripes for every predicate
     in one pass, validate the schema signature against file 0's (failing
     fast with both file names), and the resulting plan rows flow straight
     into the decode stage. At 10^6 part files / 10^7 stripes nothing
-    scales with the table on the driver except the path list itself."""
+    scales with the table on the driver except the path list itself.
+    ``require_uniform=False`` skips the schema gate, as in
+    ``_plan_scan_threaded``."""
     n_tasks = scan_partitions(len(files), spark.sparkContext.defaultParallelism)
     paths_df = spark.createDataFrame(
         [(f,) for f in files], "path string"
@@ -258,7 +266,7 @@ def _plan_scan_distributed(spark, files, predicates, sig0: tuple, sig_file: str)
         for b in batches:
             for f in b.column("path").to_pylist():
                 _f, sig, keep = _plan_file(f, predicates)
-                if sig != sig0:
+                if require_uniform and sig != sig0:
                     raise ValueError(
                         f"ORC schema mismatch in one scan: {f} differs from {sig_file}"
                     )
@@ -306,16 +314,7 @@ def read_orc(
     (SQL semantics: NULL never matches), so only matching rows cross
     into the JVM — requires every predicate column to be in ``columns``
     when a projection is given."""
-    import glob as _glob
-    import os
-
-    if isinstance(path, str):
-        if os.path.isdir(path):
-            files = sorted(_glob.glob(os.path.join(path, "*.orc")))
-        else:
-            files = [path]
-    else:
-        files = list(path)
+    files = orc_files(path)
     if not files:
         raise ValueError("read_orc: no ORC files found")
     predicates: list[tuple] | None = None
@@ -349,18 +348,9 @@ def read_orc(
             if f not in readers:
                 readers[f] = OrcFileReader(f)
             r = readers[f]
-            groups = None
-            if predicates:
-                for p in predicates:
-                    form = predicate_form(p)
-                    if form[0] == "range":
-                        g = r.prune_row_groups(int(i), form[1], form[2], form[3])
-                    else:
-                        g = r.prune_row_groups_in(int(i), form[1], form[2])
-                    if g is not None:
-                        groups = g if groups is None else sorted(set(groups) & set(g))
-                if groups == []:
-                    continue  # every row group proven out of range
+            groups = r.prune_row_groups_where(int(i), predicates or ())
+            if groups == []:
+                continue  # every row group proven out of range
             for batch in r.read_stripe_batches(
                 int(i), columns, batch_rows=batch_rows, row_groups=groups
             ):
@@ -371,7 +361,7 @@ def read_orc(
 
     if len(files) > DISTRIBUTED_PLAN_THRESHOLD:
         stripe_df = _plan_scan_distributed(
-            spark, files, predicates, _schema_sig(tail0), files[0]
+            spark, files, predicates, schema_signature(tail0), files[0]
         ).repartition(4 * max(1, par))
 
         def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -642,16 +632,7 @@ def read_orc_evolve(
     column decode unpruned (their rows carry NULL there, and NULL never
     satisfies a range predicate — the caller's row-level re-filter
     drops them)."""
-    import glob as _glob
-    import os
-
-    if isinstance(path, str):
-        if os.path.isdir(path):
-            files = sorted(_glob.glob(os.path.join(path, "*.orc")))
-        else:
-            files = [path]
-    else:
-        files = list(path)
+    files = orc_files(path)
     if not files:
         raise ValueError("read_orc_evolve: no ORC files found")
     predicates: list[tuple] | None = None
@@ -664,29 +645,15 @@ def read_orc_evolve(
         target_schema, ddl = _finish_evolve_target(per_file, columns)
     else:
         target_schema, ddl = evolve_target(files, columns)
-    target_names = list(target_schema.names)
 
     par = spark.sparkContext.defaultParallelism
     if distributed:
-        # plan job: no schema gate (evolution replaces it — every file's
-        # compatibility was just proven via the union), stripes pruned
-        # per predicate where the column exists
-        n_tasks = scan_partitions(len(files), par)
-        paths_df = spark.createDataFrame([(f,) for f in files], "path string").repartition(n_tasks)
+        # no schema gate: evolution replaces it — every file's
+        # compatibility was just proven via the union
+        stripe_df = _plan_scan_distributed(
+            spark, files, predicates, None, files[0], require_uniform=False
+        ).repartition(4 * max(1, par))
 
-        def plan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for b in batches:
-                for f in b.column("path").to_pylist():
-                    _f, _sig, keep = _plan_file(f, predicates)
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([f] * len(keep), type=pa.string()),
-                         pa.array(keep, type=pa.int64())],
-                        names=["path", "stripe"],
-                    )
-
-        stripe_df = paths_df.mapInArrow(plan, "path string, stripe bigint").repartition(
-            4 * max(1, par)
-        )
     def _decode_stream(pairs) -> Iterator[pa.RecordBatch]:
         readers: dict[str, OrcFileReader] = {}
         for f, i in pairs:
@@ -762,22 +729,9 @@ def evolve_decode_stripe(r: OrcFileReader, i: int, target_schema: pa.Schema,
 
     have = set(r.tail.footer.types[0].field_names)
     cols = [c for c in target_names if c in have]
-    groups = None
-    if predicates or null_preds:
-        for p in predicates or []:
-            form = predicate_form(p)
-            if form[0] == "range":
-                g = r.prune_row_groups(i, form[1], form[2], form[3])
-            else:
-                g = r.prune_row_groups_in(i, form[1], form[2])
-            if g is not None:
-                groups = g if groups is None else sorted(set(groups) & set(g))
-        for col, want_null in null_preds or []:
-            g = r.prune_row_groups_null(i, col, want_null)
-            if g is not None:
-                groups = g if groups is None else sorted(set(groups) & set(g))
-        if groups == []:
-            return
+    groups = r.prune_row_groups_where(i, predicates or (), null_preds or ())
+    if groups == []:
+        return
     if not cols:
         # the file predates EVERY requested column: emit typed all-null
         # batches, one per batch_rows rows
@@ -804,16 +758,7 @@ def count_rows(path: str | list[str], spark: SparkSession | None = None) -> int:
     per-file read latency; above it (pass ``spark``) a Spark job reads
     tails in tasks and the driver receives one partial sum per task —
     nothing on the driver scales with the table but the path list."""
-    import glob as _glob
-    import os
-
-    if isinstance(path, str):
-        if os.path.isdir(path):
-            files = sorted(_glob.glob(os.path.join(path, "*.orc")))
-        else:
-            files = [path]
-    else:
-        files = list(path)
+    files = orc_files(path)
     if not files:
         raise ValueError("count_rows: no ORC files found")
     if spark is not None and len(files) > DISTRIBUTED_PLAN_THRESHOLD:
@@ -944,9 +889,7 @@ def stats_aggregate(path: str | list[str], aggs: list[tuple[str, str | None]],
     per task. Every answer is exact or the call raises
     (OrcUnsupportedError) — never a silent approximation; sums come from
     the writer's exact Python-int accumulation (writer.py _stats_body)."""
-    import glob as _glob
     import json
-    import os
 
     for op, col in aggs:
         if op not in _STATS_AGG_OPS and op != "avg":
@@ -970,13 +913,7 @@ def stats_aggregate(path: str | list[str], aggs: list[tuple[str, str | None]],
                 res[f"avg({col})"] = (res[f"sum({col})"] / cnt) if cnt else None
         keep = {(f"{op}({col})" if col else "count(*)") for op, col in aggs}
         return {k: v for k, v in res.items() if k in keep}
-    if isinstance(path, str):
-        if os.path.isdir(path):
-            files = sorted(_glob.glob(os.path.join(path, "*.orc")))
-        else:
-            files = [path]
-    else:
-        files = list(path)
+    files = orc_files(path)
     if not files:
         raise ValueError("stats_aggregate: no ORC files found")
     if spark is not None and len(files) > DISTRIBUTED_PLAN_THRESHOLD:

@@ -31,45 +31,34 @@ import pyarrow.compute as pc
 from orc_rs_spark.kernels.blockcomp import LZ_BLOCK, block_compress
 from orc_rs_spark.kernels.byte_rle import boolean_rle_encode, byte_rle_encode
 from orc_rs_spark.kernels.rlev2 import rlev2_encode
+from orc_rs_spark.kernels.varint import uvarint
 from orc_rs_spark.orcfile import proto
 from orc_rs_spark.orcfile.reader import TS_BASE_SECONDS
 
 # ------------------------------------------------------- protobuf encoder
 
 
-def _uvarint(x: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = x & 0x7F
-        x >>= 7
-        if x:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _field_varint(num: int, val: int) -> bytes:
-    return _uvarint(num << 3) + _uvarint(val)
+    return uvarint(num << 3) + uvarint(val)
 
 
 def _field_bytes(num: int, payload: bytes) -> bytes:
-    return _uvarint((num << 3) | 2) + _uvarint(len(payload)) + payload
+    return uvarint((num << 3) | 2) + uvarint(len(payload)) + payload
 
 
 def _field_packed(num: int, vals: list[int]) -> bytes:
-    body = b"".join(_uvarint(v) for v in vals)
+    body = b"".join(uvarint(v) for v in vals)
     return _field_bytes(num, body)
 
 
 def _field_sint(num: int, v: int) -> bytes:
     """sint64 field: zigzag varint."""
     u = (v << 1) if v >= 0 else ((-v) << 1) - 1
-    return _uvarint(num << 3) + _uvarint(u)
+    return uvarint(num << 3) + uvarint(u)
 
 
 def _field_double(num: int, v: float) -> bytes:
-    return _uvarint((num << 3) | 1) + _struct.pack("<d", v)
+    return uvarint((num << 3) | 1) + _struct.pack("<d", v)
 
 
 _INT_STAT_KINDS = ("byte", "short", "int", "long")

@@ -14,7 +14,7 @@ from orc_rs_spark.kernels.bitpack import (
     closest_delta_width,
     closest_direct_width,
 )
-from orc_rs_spark.kernels.varint import varint_decode, varint_encode
+from orc_rs_spark.kernels.varint import uvarint, varint_decode, varint_encode
 from orc_rs_spark.kernels.zigzag import zigzag_decode, zigzag_encode
 
 RNG = np.random.default_rng(42)
@@ -50,6 +50,18 @@ def test_varint_roundtrip():
     dec, used = varint_decode(buf, len(v))
     assert used == len(buf)
     np.testing.assert_array_equal(dec, v)
+
+
+def test_scalar_uvarint_matches_array_encoder():
+    """The one scalar LEB128 encoder writes the array encoder's bytes and
+    refuses a negative value (it has no unsigned encoding)."""
+    vals = [0, 1, 127, 128, 16383, 16384, 2**32, 2**63, 2**64 - 1]
+    vals += RNG.integers(0, 2**64 - 1, size=200, dtype=np.uint64).tolist()
+    for x in vals:
+        assert uvarint(x) == varint_encode(np.array([x], dtype=np.uint64)), x
+    for x in (-1, -(2**63)):
+        with pytest.raises(ValueError, match="negative"):
+            uvarint(x)
 
 
 def test_varint_truncation_raises():

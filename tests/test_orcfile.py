@@ -769,22 +769,54 @@ def test_row_group_decode_equals_slices(indexed_orc):
     assert got.column("k").to_pylist() == exp2.column("k").to_pylist()
 
 
-def test_row_group_decode_is_positional_not_fallback(indexed_orc):
-    """The group path must actually use positions (a silent fallback would
+def _positional_only(monkeypatch):
+    """Make the full-decode fallback fail loudly: from here on every column
+    must be read through row-group positions (a silent fallback would
     still produce right answers but decode the whole stripe)."""
-    import pyarrow as pa
+    from orc_rs_spark.orcfile import reader as reader_mod
 
+    real = reader_mod._StripeColumnReader.read_column
+
+    def positional(self, col, n, g=None):
+        assert g is not None, f"column {col} fell back to a full-stripe decode"
+        return real(self, col, n, g)
+
+    monkeypatch.setattr(reader_mod._StripeColumnReader, "read_column", positional)
+
+
+def test_row_group_decode_is_positional_not_fallback(indexed_orc, monkeypatch):
+    """The group path must actually use positions."""
     r = OrcFileReader(indexed_orc)
-    reader, stripe = r._open_stripe(0)
-    names, subs = r._select(None)
-    index = reader.row_index()
-    stride = r.tail.footer.row_index_stride
-    n_groups = -(-stripe.number_of_rows // stride)
-    for sub in subs:
-        r._check_group_support(reader, index, sub, n_groups)  # raises on fallback path
-    batches = list(r._decode_group_runs(reader, stripe, names, subs, [5], 1))
+    _positional_only(monkeypatch)
+    batches = list(r.read_stripe_batches(0, batch_rows=1000, row_groups=[5]))
     assert len(batches) == 1 and batches[0].num_rows == 1000
     assert batches[0].column(0).to_pylist() == list(range(5000, 6000))
+    assert r.read_stripe(0, row_groups=[5]).equals(batches[0])
+
+
+@pytest.fixture(scope="module")
+def five_group_orc(tmp_path_factory):
+    import pyarrow as pa
+
+    from orc_rs_spark.orcfile.writer import write_orc
+
+    p = str(tmp_path_factory.mktemp("gids") / "five_groups.orc")
+    write_orc(pa.table({"k": pa.array(np.arange(5000, dtype=np.int64))}), p,
+              compression="zlib", stripe_rows=5000, row_index_stride=1000)
+    return p
+
+
+@pytest.mark.parametrize("entry", ["read_stripe", "read_stripe_batches"])
+@pytest.mark.parametrize("groups", [[-1], [4, 7], [5], [999]])
+def test_row_group_ids_validated(five_group_orc, entry, groups):
+    """Both entry points reject a group id outside the stripe — no silent
+    wrap (-1 read as group 4), duplicate (group 4 yielded twice) or empty
+    read."""
+    from orc_rs_spark.orcfile import OrcBoundsError
+
+    r = OrcFileReader(five_group_orc)
+    with pytest.raises(OrcBoundsError, match="out of range"):
+        list(getattr(r, entry)(0, row_groups=groups))
 
 
 def test_prune_row_groups_minmax(indexed_orc):
@@ -822,26 +854,57 @@ def test_read_stripe_batches_bounded(indexed_orc):
     "TestVectorOrcFile.testZstd.0.12.orc", "demo-12-zlib.orc",
     "demo-11-zlib.orc", "nulls-at-end-snappy.orc", "orc-file-11-format.orc",
 ])
-def test_golden_row_index_positional_decode(name):
+def test_golden_row_index_positional_decode(name, monkeypatch):
     """Group-by-group positional decode of JVM-written files equals the
     full decode — validates our position semantics (compressed chunk
     offsets, RLE run skips, PRESENT bit offsets) against the Java writer."""
-    import pyarrow as pa
+    _assert_groups_match_full_decode(f"{GOLD}/{name}", monkeypatch)
 
-    r = OrcFileReader(f"{GOLD}/{name}")
-    reader, stripe = r._open_stripe(0)
-    names, subs = r._select(None)
-    index = reader.row_index()
+
+def _assert_groups_match_full_decode(path, monkeypatch):
+    """``read_stripe(0, row_groups=[g])`` equals the full decode's slice for
+    every group g of stripe 0, each decoded through its positions."""
+    r = OrcFileReader(path)
     stride = r.tail.footer.row_index_stride
-    n_groups = -(-stripe.number_of_rows // stride)
-    for sub in subs:
-        r._check_group_support(reader, index, sub, n_groups)
-    got = pa.Table.from_batches(
-        list(r._decode_group_runs(reader, stripe, names, subs, list(range(n_groups)), 1))
+    n_groups = -(-r.tail.footer.stripes[0].number_of_rows // stride)
+    full = r.read_stripe(0)
+    with monkeypatch.context() as m:
+        _positional_only(m)
+        for g in range(n_groups):
+            got = r.read_stripe(0, row_groups=[g])
+            want = full.slice(g * stride, stride)
+            for c in full.schema.names:
+                assert got.column(c).to_pylist() == want.column(c).to_pylist(), (path, g, c)
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("codec", ["none", "zlib", "snappy", "lz4", "zstd"])
+def test_jvm_written_row_index_positional_decode(spark, codec, tmp_path, monkeypatch):
+    """Spark's JVM writer with a 1,000-row index stride: every row group
+    of its file decodes positionally to the full decode's slice — nulls,
+    dictionary and direct strings, array<int>, decimal and timestamp."""
+    import glob
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    df = spark.range(5000).selectExpr(
+        "id",
+        "IF(id % 7 = 0, NULL, id * 31) AS maybe",
+        "CONCAT('cat', CAST(id % 5 AS STRING)) AS low_card",
+        "IF(id % 11 = 0, NULL, SHA1(CAST(id AS STRING))) AS direct",
+        "IF(id % 13 = 0, NULL, SEQUENCE(0, CAST(id % 4 AS INT))) AS arr",
+        "CAST(id * 7 AS DECIMAL(12, 3)) / 8 AS dec",
+        "TIMESTAMP_SECONDS(1600000000 + id * 37) AS ts",
     )
-    full = pa.Table.from_batches([r.read_stripe(0)])
-    for c in full.column_names:
-        assert got.column(c).to_pylist() == full.column(c).to_pylist(), (name, c)
+    out = str(tmp_path / f"jvm_{codec}")
+    (df.coalesce(1).write.option("compression", codec)
+     .option("orc.row.index.stride", "1000").orc(out))
+    [path] = glob.glob(f"{out}/*.orc")
+    r = OrcFileReader(path)
+    assert r.tail.footer.row_index_stride == 1000
+    assert len(r.tail.footer.stripes) == 1
+    encodings = {e.kind for e in r._open_stripe(0)[0].encodings}
+    assert {"DICTIONARY_V2", "DIRECT_V2"} <= encodings
+    _assert_groups_match_full_decode(path, monkeypatch)
 
 
 @pytest.mark.spark
@@ -1493,19 +1556,27 @@ def test_index_region_cached_per_stripe(indexed_orc, monkeypatch):
     assert calls == [0]
 
 
-def test_group_support_validates_every_entry(indexed_orc):
-    """_check_group_support must reject an index whose entry count doesn't
-    cover the stripe's row groups BEFORE any batch is yielded (a mid-yield
-    fallback would duplicate rows)."""
-    from orc_rs_spark.orcfile.reader import RowIndexUnsupported
+def test_group_support_validates_every_entry(indexed_orc, monkeypatch):
+    """An index whose entry count doesn't cover the stripe's row groups
+    must send the read to the full-decode fallback BEFORE any batch is
+    yielded (a mid-yield fallback would duplicate rows)."""
+    import pyarrow as pa
 
     r = OrcFileReader(indexed_orc)
-    reader, stripe = r._open_stripe(0)
-    index = reader.row_index()
-    names, subs = r._select(None)
-    with pytest.raises(RowIndexUnsupported, match="index entries"):
-        for sub in subs:
-            r._check_group_support(reader, index, sub, n_groups=9999)
+    full = r.read_stripe(0)
+    rows, blooms = r._read_index_region(0)
+    # the last column's index loses its final entry
+    last = max(rows)
+    r._index_cache[0] = ({**rows, last: rows[last][:-1]}, blooms)
+    got = pa.Table.from_batches(list(
+        r.read_stripe_batches(0, batch_rows=1000, row_groups=list(range(20)))
+    ))
+    assert got.num_rows == 20000
+    assert got.equals(pa.Table.from_batches([full]))
+    with monkeypatch.context() as m:
+        _positional_only(m)
+        with pytest.raises(AssertionError, match="fell back"):
+            r.read_stripe(0, row_groups=[19])
 
 
 def test_stats_overlap_type_mismatch_keeps_everything(indexed_orc):
@@ -1601,7 +1672,7 @@ def _union_table(n: int) -> "pa.Table":
     return pa.table({"k": pa.array(range(n), type=pa.int64()), "u": u})
 
 
-def test_union_positional_group_decode(tmp_path):
+def test_union_positional_group_decode(tmp_path, monkeypatch):
     """Round-3's last RowIndexUnsupported gap: union columns now decode
     positionally — TAG stream via the byte-RLE position contract, each
     child sought through its own index entry. Every group must equal the
@@ -1618,19 +1689,8 @@ def test_union_positional_group_decode(tmp_path):
     write_orc(tbl, p, compression="zlib", stripe_rows=6000, row_index_stride=1000)
     r = OrcFileReader(p)
     assert r.tail.footer.stripes[0].index_length > 0
-    full = r.read_stripe(0)
-    stride = 1000
-    for g in range(6):
-        got = r.read_stripe(0, row_groups=[g])
-        want = pa.Table.from_batches([full]).slice(g * stride, stride)
-        assert got.column("u").to_pylist() == want.column("u").to_pylist(), f"group {g}"
-        assert got.column("k").to_pylist() == want.column("k").to_pylist()
-    # positional path actually used (not the full-decode fallback)
-    reader, stripe = r._open_stripe(0)
-    names, subs = r._select(None)
-    index = reader.row_index()
-    for sub in subs:
-        r._check_group_support(reader, index, sub, n_groups=6)
+    # every group positionally (not the full-decode fallback) == the slice
+    _assert_groups_match_full_decode(p, monkeypatch)
     # bounded-batch reads agree too, across both stripes
     got_all = pa.Table.from_batches(
         [b for i in range(2) for b in r.read_stripe_batches(i, batch_rows=1500)]

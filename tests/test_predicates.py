@@ -57,7 +57,7 @@ def test_in_list_prunes_row_groups_with_blooms(tmp_path):
     hits = []
     scanned = 0
     for s in range(4):
-        groups = r.prune_row_groups_in(s, "u", present + [absent])
+        groups = r.prune_row_groups_where(s, [("u", present + [absent])])
         assert groups is not None
         scanned += len(groups)
         if not groups:
@@ -69,7 +69,7 @@ def test_in_list_prunes_row_groups_with_blooms(tmp_path):
     # blooms must have dropped most groups: 16 groups total, 2 real hits
     assert scanned <= 6
     # empty list prunes everything
-    assert r.prune_row_groups_in(0, "u", []) == []
+    assert r.prune_row_groups_where(0, [("u", [])]) == []
 
 
 @pytest.mark.spark
@@ -119,9 +119,9 @@ def test_null_group_pruning(tmp_path):
     p = str(tmp_path / "nulls.orc")
     write_orc(t, p, stripe_rows=n, row_index_stride=500)
     r = OrcFileReader(p)
-    not_null = r.prune_row_groups_null(0, "v", want_null=False)
+    not_null = r.prune_row_groups_where(0, null_preds=[("v", False)])
     assert not_null == list(range(1, 8))  # group 0 proven all-NULL
-    is_null = r.prune_row_groups_null(0, "v", want_null=True)
+    is_null = r.prune_row_groups_where(0, null_preds=[("v", True)])
     assert is_null == [0]  # groups 1..7 proven null-free
     # decode the kept groups and check exact row recovery
     b = r.read_stripe(0, row_groups=not_null)
