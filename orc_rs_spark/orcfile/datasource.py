@@ -58,6 +58,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from orc_rs_spark.orcfile.writer import write_task_file
+
 
 def _resolve_files(options) -> list[str]:
     from orc_rs_spark.orcfile.spark_source import orc_files
@@ -229,51 +231,21 @@ class OrcRsReader(DataSourceReader):
 
 
 class _WriteOptions:
-    """Shared option parsing for the batch and streaming writers."""
+    """Shared option parsing for the batch and streaming writers: the
+    output path, and the OrcWriter keyword arguments each task writes
+    its file with."""
 
     def __init__(self, options):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("orc_rs: a path is required (use .save(path))")
-        self.compression = options.get("compression", "zlib")
-        self.stripe_rows = int(options.get("stripe_rows", 65536))
-        self.row_index_stride = int(options.get("row_index_stride", 10000))
         blooms = options.get("bloom_columns")
-        self.bloom_columns = blooms.split(",") if blooms else None
-
-
-def _write_task_tmp(iterator: Iterator[pa.RecordBatch], tmp: str,
-                    opts: _WriteOptions) -> int | None:
-    """Stream a task's batches into ``tmp``; returns the row count, or
-    None when the partition was empty (no file created). The temp file
-    is removed on ANY failure — including a failed footer write in
-    close(), which would otherwise orphan a .tmp no abort() message
-    could reach."""
-    from orc_rs_spark.orcfile.writer import OrcWriter
-
-    writer: OrcWriter | None = None
-    try:
-        for b in iterator:
-            if b.num_rows == 0:
-                continue
-            if writer is None:
-                writer = OrcWriter(
-                    tmp, b.schema, compression=opts.compression,
-                    stripe_rows=opts.stripe_rows,
-                    row_index_stride=opts.row_index_stride,
-                    bloom_columns=opts.bloom_columns,
-                )
-            writer.write_batch(b)
-        if writer is None:
-            return None
-        writer.close()
-        return writer.num_rows
-    except BaseException:
-        if writer is not None:
-            writer.abort()
-        if os.path.exists(tmp):
-            os.remove(tmp)
-        raise
+        self.writer_kwargs = {
+            "compression": options.get("compression", "zlib"),
+            "stripe_rows": int(options.get("stripe_rows", 65536)),
+            "row_index_stride": int(options.get("row_index_stride", 10000)),
+            "bloom_columns": blooms.split(",") if blooms else None,
+        }
 
 
 def _task_ids() -> tuple[int, int]:
@@ -313,7 +285,7 @@ class OrcRsWriter(DataSourceArrowWriter):
             self.opts.path, f"part-{self.job_token}-{pid:05d}.orc"
         )
         tmp = f"{final}.{attempt}.tmp"
-        rows = _write_task_tmp(iterator, tmp, self.opts)
+        rows = write_task_file(iterator, tmp, **self.opts.writer_kwargs)
         if rows is None:
             return OrcWriteMessage(None, None, 0)
         return OrcWriteMessage(tmp, final, rows)
@@ -389,7 +361,7 @@ class OrcRsStreamWriter(DataSourceStreamArrowWriter):
         tmp = os.path.join(
             self.opts.path,
             f".stream-q{self.query_token}-{pid:05d}.{attempt}.tmp")
-        rows = _write_task_tmp(iterator, tmp, self.opts)
+        rows = write_task_file(iterator, tmp, **self.opts.writer_kwargs)
         if rows is None:
             return OrcWriteMessage(None, None, 0)
         # final name is assigned at COMMIT time (it needs the batch id)

@@ -20,8 +20,9 @@ What must be rebuilt (cheap, metadata-only):
     so the merged section is the concatenation of the sources'
     decompressed bodies in stripe order — statistics survive the merge
     byte-exact and stripe/row-group pruning keeps working,
-  - the file-level column statistics (merged min/max/counts),
-  - footer + postscript.
+  - the file-level column statistics (counts, min/max and sums folded
+    by the writer's ``combine_stats``),
+  - footer + postscript (the writer's ``write_file_tail``).
 
 What must match across inputs (validated, refused otherwise):
   - the full type tree (kind/subtypes/field names/precision/scale/
@@ -33,6 +34,7 @@ What must match across inputs (validated, refused otherwise):
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 from orc_rs_spark.orcfile import proto
@@ -45,91 +47,55 @@ from orc_rs_spark.orcfile.reader import (
     schema_signature,
 )
 from orc_rs_spark.orcfile.writer import (
+    _CODEC_ENUM,
     _INT_STAT_KINDS,
-    _KIND,
     _STR_STAT_KINDS,
-    _field_bytes,
-    _field_packed,
-    _field_varint,
     _stats_body,
+    combine_stats,
+    write_file_tail,
 )
-from orc_rs_spark.kernels.blockcomp import block_compress
 
 _COPY_CHUNK = 8 << 20  # stripes stream through in 8 MiB slices
-
-# round 6: lzo joined block_compress (kernels/lzo.py), so merge can frame
-# rebuilt tail sections for kind-3 files too
-_CODEC_ENUM = {"none": 0, "zlib": 1, "snappy": 2, "lzo": 3, "lz4": 4, "zstd": 5}
 
 _type_sig = schema_signature
 
 
-def _type_message(t: proto.OrcType) -> bytes:
-    """Re-serialize one parsed footer type node (inverse of
-    proto.OrcType.parse; field numbers per the ORC spec Type message)."""
-    msg = _field_varint(1, _KIND[t.kind])
-    if t.subtypes:
-        msg += _field_packed(2, t.subtypes)
-    for name in t.field_names:
-        msg += _field_bytes(3, name.encode())
-    if t.maximum_length:
-        msg += _field_varint(4, t.maximum_length)
-    if t.kind == "decimal":
-        msg += _field_varint(5, t.precision) + _field_varint(6, t.scale)
-    return msg
-
-
-def _stat_bounds(st: proto.ColumnStatistics, kind: str):
+def _stats_part(st: proto.ColumnStatistics | None, kind: str) -> tuple | None:
+    """One input footer's column statistics as combine_stats takes them:
+    ``(n_values, has_null, min, max, sum)``, None when the input carries
+    no (or partial) counts for the column."""
+    if st is None or st.number_of_values is None or st.has_null is None:
+        return None
+    lo = hi = sm = None
     if kind in _INT_STAT_KINDS:
-        return st.int_min, st.int_max
-    if kind in ("float", "double"):
-        return st.double_min, st.double_max
-    if kind in _STR_STAT_KINDS:
-        return st.string_min, st.string_max
-    if kind == "date":
-        return st.date_min, st.date_max
-    if kind in ("timestamp", "timestamp_instant"):
-        return st.ts_min, st.ts_max
-    return None, None
+        lo, hi, sm = st.int_min, st.int_max, st.int_sum
+    elif kind in ("float", "double"):
+        lo, hi, sm = st.double_min, st.double_max, st.double_sum
+    elif kind in _STR_STAT_KINDS:
+        lo, hi = st.string_min, st.string_max
+    elif kind == "date":
+        lo, hi = st.date_min, st.date_max
+    elif kind in ("timestamp", "timestamp_instant"):
+        lo, hi = st.ts_min, st.ts_max
+    elif kind == "boolean":
+        sm = st.true_count
+    return st.number_of_values, st.has_null, lo, hi, sm
 
 
 def _merge_file_stats(tails: list[OrcTail]) -> list[bytes]:
-    """Merged file-level ColumnStatistics bodies, one per column.
-
-    Counts sum, has_null ORs, min/max combine per column kind; a bound
-    missing in ANY input makes the merged bound unknown (omitted), which
-    readers treat as "may contain anything" — pruning stays sound."""
-    types = tails[0].footer.types
+    """Merged file-level ColumnStatistics bodies, one per column, through
+    the writer's combine_stats. An input with no (or partial) counts for a
+    column makes that column's merged statistics an EMPTY message: every
+    field is optional and absent == unknown, where affirmative counts
+    would LIE about its rows (e.g. hasNull=false over data with nulls)."""
+    per_file = [tail.footer.statistics for tail in tails]
     out = []
-    for col, t in enumerate(types):
-        n_values, has_null = 0, False
-        mn = mx = None
-        bounds_known = counts_known = True
-        for tail in tails:
-            stats = tail.footer.statistics
-            st = stats[col] if col < len(stats) else None
-            if st is None or st.number_of_values is None or st.has_null is None:
-                # an input carries no (or partial) stats for this column:
-                # affirmative merged counts would LIE about its rows (e.g.
-                # hasNull=false over data that does contain nulls), so the
-                # merged footer gets an EMPTY ColumnStatistics message —
-                # every field is optional and absent == unknown
-                counts_known = False
-            else:
-                n_values += st.number_of_values
-                has_null = has_null or st.has_null
-            lo, hi = _stat_bounds(st, t.kind) if st is not None else (None, None)
-            if lo is None or hi is None:
-                bounds_known = False
-                continue
-            mn = lo if mn is None else min(mn, lo)
-            mx = hi if mx is None else max(mx, hi)
-        if not counts_known:
-            out.append(b"")
-            continue
-        if not bounds_known:
-            mn = mx = None
-        out.append(_stats_body(n_values, has_null, t.kind, mn, mx))
+    for col, t in enumerate(tails[0].footer.types):
+        merged = combine_stats(
+            _stats_part(stats[col] if col < len(stats) else None, t.kind)
+            for stats in per_file
+        )
+        out.append(b"" if merged is None else _stats_body(t.kind, *merged))
     return out
 
 
@@ -195,8 +161,7 @@ def _merge_orc_files_to(paths: list[str], out_path: str) -> int:
     if ps0.compression not in _CODEC_ENUM:
         raise OrcFormatError(f"merge_orc_files: unknown codec {ps0.compression!r}")
 
-    stripe_infos: list[dict] = []
-    num_rows = 0
+    stripe_infos: list[proto.StripeInformation] = []
     with open(out_path, "wb") as out:
         out.write(b"ORC")
         pos = 3
@@ -209,16 +174,8 @@ def _merge_orc_files_to(paths: list[str], out_path: str) -> int:
                     n = min(_COPY_CHUNK, length - copied)
                     out.write(src.read_at(si.offset + copied, n))
                     copied += n
-                stripe_infos.append({
-                    "offset": pos,
-                    "index_length": si.index_length,
-                    "data_length": si.data_length,
-                    "footer_length": si.footer_length,
-                    "number_of_rows": si.number_of_rows,
-                })
+                stripe_infos.append(dataclasses.replace(si, offset=pos))
                 pos += length
-                num_rows += si.number_of_rows
-        content_length = pos
 
         # Metadata: concatenation of the sources' StripeStatistics lists
         # is valid protobuf for the merged Metadata message IF every input
@@ -232,28 +189,6 @@ def _merge_orc_files_to(paths: list[str], out_path: str) -> int:
             len(proto.decode_fields(b).get(1, [])) == len(t.footer.stripes)
             for b, t in zip(bodies, tails)
         )
-        metadata = b"".join(bodies) if aligned else b""
-        if metadata:
-            metadata = (
-                block_compress(metadata, ps0.compression,
-                               max_block=ps0.compression_block_size)
-                if ps0.compression != "none" else metadata
-            )
-            out.write(metadata)
-
-        footer = _field_varint(1, 3)  # headerLength: the 3-byte magic
-        footer += _field_varint(2, content_length)
-        for si in stripe_infos:
-            body = (
-                _field_varint(1, si["offset"])
-                + _field_varint(2, si["index_length"])
-                + _field_varint(3, si["data_length"])
-                + _field_varint(4, si["footer_length"])
-                + _field_varint(5, si["number_of_rows"])
-            )
-            footer += _field_bytes(3, body)
-        for t in tails[0].footer.types:
-            footer += _field_bytes(4, _type_message(t))
         # carry user metadata through the merge (ORC Java's
         # OrcFile.mergeFiles preserves it): union of every input's KV
         # pairs, first file wins on a conflicting key
@@ -261,32 +196,12 @@ def _merge_orc_files_to(paths: list[str], out_path: str) -> int:
         for t in tails:
             for k, v in (t.footer.metadata or {}).items():
                 merged_md.setdefault(k, v)
-        for k, v in merged_md.items():
-            footer += _field_bytes(5, _field_bytes(1, k.encode("utf-8")) + _field_bytes(2, bytes(v)))
-        footer += _field_varint(6, num_rows)
-        for body in _merge_file_stats(tails):
-            footer += _field_bytes(7, body)
-        footer += _field_varint(8, stride0)
-        footer += _field_varint(9, 1)  # writer: ORC C++ code slot (non-Java)
-        footer_comp = (
-            block_compress(footer, ps0.compression,
-                           max_block=ps0.compression_block_size)
-            if ps0.compression != "none" else footer
+        write_file_tail(
+            out, stripe_infos, tails[0].footer.types, merged_md,
+            _merge_file_stats(tails), b"".join(bodies) if aligned else b"",
+            stride0, ps0.compression, ps0.compression_block_size,
         )
-        out.write(footer_comp)
-
-        ps = _field_varint(1, len(footer_comp))
-        ps += _field_varint(2, _CODEC_ENUM[ps0.compression])
-        ps += _field_varint(3, ps0.compression_block_size)
-        ps += _field_packed(4, [0, 12])
-        ps += _field_varint(5, len(metadata))
-        ps += _field_varint(6, 6)  # writerVersion
-        ps += _field_bytes(8000, b"ORC")
-        if len(ps) > 255:
-            raise OrcFormatError("merged postscript too long")
-        out.write(ps)
-        out.write(bytes([len(ps)]))
-    return num_rows
+    return sum(si.number_of_rows for si in stripe_infos)
 
 
 def plan_compaction(sizes: list[tuple[str, int]], target_bytes: int) -> list[list[str]]:

@@ -407,7 +407,7 @@ def write_orc_dir(
     from pyspark import TaskContext
     from pyspark.sql import functions as F
 
-    from orc_rs_spark.orcfile.writer import OrcWriter
+    from orc_rs_spark.orcfile.writer import write_task_file
 
     os.makedirs(out_dir, exist_ok=True)
 
@@ -423,31 +423,20 @@ def write_orc_dir(
         # *.orc), and duplicate successful attempts last-win with
         # identical content (the encode is deterministic per partition).
         tmp = f"{final}.inprogress-{attempt}"
-        writer: OrcWriter | None = None
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            if writer is None:
-                # partition id only — NOT the attempt id: the task-commit
-                # last-win protocol relies on duplicate successful
-                # attempts producing byte-identical files, and an
-                # attempt-stamped footer would make which-attempt-won a
-                # visible race
-                lineage = dict(user_metadata or {})
-                lineage.setdefault("orc_rs_spark.partition", str(pid).encode())
-                writer = OrcWriter(
-                    tmp, b.schema,
-                    compression=compression, stripe_rows=stripe_rows,
-                    row_index_stride=row_index_stride, bloom_columns=bloom_columns,
-                    user_metadata=lineage, compression_level=compression_level,
-                )
-            writer.write_batch(b)
-        n = 0
-        if writer is not None:
-            writer.close()
-            n = writer.num_rows
+        # partition id only — NOT the attempt id: the task-commit last-win
+        # protocol relies on duplicate successful attempts producing
+        # byte-identical files, and an attempt-stamped footer would make
+        # which-attempt-won a visible race
+        lineage = dict(user_metadata or {})
+        lineage.setdefault("orc_rs_spark.partition", str(pid).encode())
+        n = write_task_file(
+            batches, tmp, compression=compression, stripe_rows=stripe_rows,
+            row_index_stride=row_index_stride, bloom_columns=bloom_columns,
+            user_metadata=lineage, compression_level=compression_level,
+        )
+        if n is not None:
             os.replace(tmp, final)
-        yield pa.RecordBatch.from_arrays([pa.array([n], type=pa.int64())], names=["n_rows"])
+        yield pa.RecordBatch.from_arrays([pa.array([n or 0], type=pa.int64())], names=["n_rows"])
 
     out = df.mapInArrow(sink, "n_rows bigint").agg(F.sum("n_rows").alias("n")).collect()
     return int(out[0]["n"] or 0)

@@ -11,28 +11,33 @@ Encoding choices (all DIRECT_V2-era): ints/dates through RLEv2, strings
 and binary direct (RLEv2 LENGTH + payload) or sorted DICTIONARY_V2,
 boolean/byte RLE, raw-LE floats, timestamps as base-2015 seconds + nano
 SECONDARY with ORC's trailing-zero suppression, decimals as unbounded
-zigzag varints + RLEv2 scale stream. Files carry ROW_INDEX row groups
-(default stride 10000) with positions + per-group statistics at every
-nesting level, optional per-group bloom filters, a Metadata section of
-per-stripe statistics, and footer min/max (row_index_stride=0 restores
-the plain layout). Streams are individually block-framed when
-compression is zlib.
+zigzag varints + RLEv2 scale stream. Every stripe is encoded one way, as
+row groups (default stride 10000) whose value streams restart at group
+boundaries; ROW_INDEX streams record each group's positions + statistics
+at every nesting level, with optional per-group bloom filters.
+row_index_stride=0 makes the whole stripe one group and writes no
+ROW_INDEX. Files carry a Metadata section of per-stripe statistics and
+footer min/max/sum; ``write_file_tail`` writes that tail for this writer
+and for merge.py. Streams are individually block-framed when compressed.
 """
 
 from __future__ import annotations
 
+import os
 import re
 import struct as _struct
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from orc_rs_spark.kernels.blockcomp import LZ_BLOCK, block_compress
-from orc_rs_spark.kernels.byte_rle import boolean_rle_encode, byte_rle_encode
+from orc_rs_spark.kernels.byte_rle import byte_rle_encode
 from orc_rs_spark.kernels.rlev2 import rlev2_encode
 from orc_rs_spark.kernels.varint import uvarint
 from orc_rs_spark.orcfile import proto
+from orc_rs_spark.orcfile.errors import OrcFormatError
 from orc_rs_spark.orcfile.reader import TS_BASE_SECONDS
 
 # ------------------------------------------------------- protobuf encoder
@@ -61,6 +66,23 @@ def _field_double(num: int, v: float) -> bytes:
     return uvarint((num << 3) | 1) + _struct.pack("<d", v)
 
 
+# ------------------------------------------------- wire enums (proto.py)
+
+_KIND = {v: k for k, v in proto.TYPE_KINDS.items()}
+_STREAM_ENUM = {v: k for k, v in proto.STREAM_KINDS.items()}
+_CODEC_ENUM = {v: k for k, v in proto.COMPRESSION_KINDS.items()}
+_ENCODING_ENUM = {v: k for k, v in proto.ENCODING_KINDS.items()}
+
+_PRESENT, _DATA, _LENGTH, _DICTIONARY_DATA, _SECONDARY, _ROW_INDEX, _BLOOM_UTF8 = (
+    _STREAM_ENUM[k] for k in ("PRESENT", "DATA", "LENGTH", "DICTIONARY_DATA",
+                              "SECONDARY", "ROW_INDEX", "BLOOM_FILTER_UTF8")
+)
+_DIRECT, _DIRECT_V2, _DICTIONARY_V2 = (
+    _ENCODING_ENUM[k] for k in ("DIRECT", "DIRECT_V2", "DICTIONARY_V2")
+)
+
+# ------------------------------------------------------------ statistics
+
 _INT_STAT_KINDS = ("byte", "short", "int", "long")
 _STR_STAT_KINDS = ("string", "varchar", "char")
 
@@ -68,7 +90,7 @@ _STR_STAT_KINDS = ("string", "varchar", "char")
 _I64_MAX = (1 << 63) - 1
 
 
-def _stats_body(n_values: int, has_null: bool, kind: str | None = None,
+def _stats_body(kind: str, n_values: int, has_null: bool,
                 mn=None, mx=None, sm=None) -> bytes:
     """ColumnStatistics protobuf body (counts + typed min/max/sum when
     given). Date bounds arrive as epoch days, timestamp bounds as UTC
@@ -109,20 +131,33 @@ def _stats_body(n_values: int, has_null: bool, kind: str | None = None,
     return body
 
 
+def combine_stats(parts: Iterable[tuple | None]) -> tuple | None:
+    """Fold one column's ``(n_values, has_null, min, max, sum)`` statistics:
+    row groups into a stripe, stripes into the writer's footer, input
+    footers into a merged footer. Counts add and has_null ORs; a part of
+    None (counts unknown) makes the result None. A part with no values is
+    neutral for the bounds and the sum; a part that has values but lacks a
+    bound (or the sum) makes the combined bounds (or sum) unknown — None,
+    which readers treat as "may contain anything"."""
+    n_values, has_null = 0, False
+    lows, highs, sums = [], [], []
+    for part in parts:
+        if part is None:
+            return None
+        n, hn, mn, mx, sm = part
+        n_values += n
+        has_null = has_null or hn
+        if n:
+            lows.append(mn)
+            highs.append(mx)
+            sums.append(sm)
+    bounded = bool(lows) and None not in lows and None not in highs
+    return (n_values, has_null,
+            min(lows) if bounded else None, max(highs) if bounded else None,
+            sum(sums) if sums and None not in sums else None)
+
+
 # ------------------------------------------------------------ type tree
-
-_KIND = {
-    "boolean": 0, "byte": 1, "short": 2, "int": 3, "long": 4, "float": 5,
-    "double": 6, "string": 7, "binary": 8, "timestamp": 9, "list": 10,
-    "map": 11, "struct": 12, "union": 13, "decimal": 14, "date": 15,
-    "varchar": 16, "char": 17,
-}
-
-_STREAM_ENUM = {
-    "PRESENT": 0, "DATA": 1, "LENGTH": 2, "DICTIONARY_DATA": 3,
-    "SECONDARY": 5, "ROW_INDEX": 6,
-}
-_STREAM_NAME = {v: k for k, v in _STREAM_ENUM.items()}
 
 
 def _arrow_to_orc_kind(t: pa.DataType) -> str:
@@ -165,7 +200,7 @@ def _arrow_to_orc_kind(t: pa.DataType) -> str:
     raise TypeError(f"no ORC mapping for arrow type {t}")
 
 
-def _flatten_types(schema_or_type, out: list, field_meta=None) -> int:
+def _flatten_types(schema_or_type, out: list[proto.OrcType], field_meta=None) -> int:
     """Pre-order walk assigning ORC column ids; returns this node's id.
 
     A string field may carry Arrow field metadata ``orc_type`` of
@@ -173,11 +208,11 @@ def _flatten_types(schema_or_type, out: list, field_meta=None) -> int:
     (maximum_length carried per the reference, src/schema.rs:185-200)."""
     my_id = len(out)
     if isinstance(schema_or_type, pa.Schema):
-        node = {"kind": "struct", "names": list(schema_or_type.names), "subtypes": [],
-                "type": None}
+        node = proto.OrcType(kind="struct", subtypes=[], field_names=list(schema_or_type.names),
+                             maximum_length=0, precision=0, scale=0)
         out.append(node)
         for f in schema_or_type:
-            node["subtypes"].append(_flatten_types(f.type, out, f.metadata))
+            node.subtypes.append(_flatten_types(f.type, out, f.metadata))
         return my_id
     t = schema_or_type
     kind = _arrow_to_orc_kind(t)
@@ -189,34 +224,37 @@ def _flatten_types(schema_or_type, out: list, field_meta=None) -> int:
             raise ValueError(f"orc_type metadata {spec!r} requires a string field")
         kind = m.group(1)
         max_length = int(m.group(2))
-    node = {"kind": kind, "names": [], "subtypes": [], "type": t,
-            "max_length": max_length}
+    is_decimal = kind == "decimal"
+    node = proto.OrcType(kind=kind, subtypes=[], field_names=[], maximum_length=max_length,
+                         precision=t.precision if is_decimal else 0,
+                         scale=t.scale if is_decimal else 0)
     out.append(node)
     if kind == "struct":
-        node["names"] = [t.field(i).name for i in range(t.num_fields)]
+        node.field_names = [t.field(i).name for i in range(t.num_fields)]
         for i in range(t.num_fields):
-            node["subtypes"].append(_flatten_types(t.field(i).type, out, t.field(i).metadata))
+            node.subtypes.append(_flatten_types(t.field(i).type, out, t.field(i).metadata))
     elif kind == "union":
         for i in range(t.num_fields):
-            node["subtypes"].append(_flatten_types(t.field(i).type, out))
+            node.subtypes.append(_flatten_types(t.field(i).type, out))
     elif kind == "list":
-        node["subtypes"].append(_flatten_types(t.value_type, out))
+        node.subtypes.append(_flatten_types(t.value_type, out))
     elif kind == "map":
-        node["subtypes"].append(_flatten_types(t.key_type, out))
-        node["subtypes"].append(_flatten_types(t.item_type, out))
+        node.subtypes.append(_flatten_types(t.key_type, out))
+        node.subtypes.append(_flatten_types(t.item_type, out))
     return my_id
 
 
-def _type_message(node: dict) -> bytes:
-    msg = _field_varint(1, _KIND[node["kind"]])
-    if node["subtypes"]:
-        msg += _field_packed(2, node["subtypes"])
-    for name in node["names"]:
+def _type_message(t: proto.OrcType) -> bytes:
+    """Serialize one footer Type message (inverse of proto.OrcType.parse),
+    for this writer's nodes and a parsed footer's alike."""
+    msg = _field_varint(1, _KIND[t.kind])
+    if t.subtypes:
+        msg += _field_packed(2, t.subtypes)
+    for name in t.field_names:
         msg += _field_bytes(3, name.encode())
-    if node.get("max_length"):
-        msg += _field_varint(4, node["max_length"])
-    t = node["type"]
-    if t is not None and pa.types.is_decimal(t):
+    if t.maximum_length:
+        msg += _field_varint(4, t.maximum_length)
+    if t.kind == "decimal":
         msg += _field_varint(5, t.precision) + _field_varint(6, t.scale)
     return msg
 
@@ -259,27 +297,27 @@ def _format_nanos(nanos: np.ndarray) -> np.ndarray:
     return np.where(n == 0, 0, enc)
 
 
-def _walk_dense(types: list[dict], col: int, arr, out: dict[int, pa.Array]) -> None:
+def _walk_dense(types: list[proto.OrcType], col: int, arr, out: dict[int, pa.Array]) -> None:
     """Collect each column id's array (nested children reached by the same
-    recursion write_column uses) — pass 1 of the indexed stripe encode."""
+    recursion write_column uses) — pass 1 of the stripe encode."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     out[col] = arr
     node = types[col]
-    kind = node["kind"]
+    kind = node.kind
     dense = arr.drop_null() if arr.null_count else arr
     if kind == "struct":
-        for i, sub in enumerate(node["subtypes"]):
+        for i, sub in enumerate(node.subtypes):
             _walk_dense(types, sub, dense.field(i), out)
     elif kind == "list":
-        _walk_dense(types, node["subtypes"][0], dense.flatten(), out)
+        _walk_dense(types, node.subtypes[0], dense.flatten(), out)
     elif kind == "map":
-        _walk_dense(types, node["subtypes"][0], dense.keys, out)
-        _walk_dense(types, node["subtypes"][1], dense.items, out)
+        _walk_dense(types, node.subtypes[0], dense.keys, out)
+        _walk_dense(types, node.subtypes[1], dense.items, out)
     elif kind == "union":
         tags = np.asarray(dense.type_codes)
         offsets = np.asarray(dense.offsets)
-        for ci, sub in enumerate(node["subtypes"]):
+        for ci, sub in enumerate(node.subtypes):
             child = dense.field(ci).take(pa.array(offsets[tags == ci]))
             _walk_dense(types, sub, child, out)
 
@@ -290,41 +328,31 @@ def _dictionary_streams(sorted_dict: pa.Array) -> list[tuple[int, bytes]]:
     dlens = np.diff(obuf)
     dbody = sorted_dict.buffers()[2]
     return [
-        (3, dbody.to_pybytes()[: int(obuf[-1])] if dbody else b""),
-        (2, rlev2_encode(dlens, signed=False, strict_orc=True)),
+        (_DICTIONARY_DATA, dbody.to_pybytes()[: int(obuf[-1])] if dbody else b""),
+        (_LENGTH, rlev2_encode(dlens, signed=False, strict_orc=True)),
     ]
 
 
-class _Bits:
-    """Deferred boolean stream payload: raw bits, packed/encoded by the
-    indexed assembler so bit offsets at row-group boundaries are exact."""
-
-    __slots__ = ("bits",)
-
-    def __init__(self, bits: np.ndarray):
-        self.bits = np.asarray(bits, dtype=bool)
-
-
 class _StripeWriter:
-    def __init__(self, types: list[dict], codec: str,
-                 forced_strings: dict[int, pa.Array | None] | None = None,
-                 force_present: frozenset | set = frozenset(),
-                 defer_bits: bool = False,
-                 emit_dict_streams: bool = True,
-                 codec_level: int | None = None):
+    """Encodes one row group: every stream's raw (uncompressed) bytes, with
+    boolean streams kept as unpacked bits so the stripe assembler can pack
+    them continuously across groups. The stripe-wide choices come from
+    pass 1: each string column's sorted dictionary (None = direct) in
+    ``forced_strings``, and the columns that need a PRESENT stream."""
+
+    def __init__(self, types: list[proto.OrcType],
+                 forced_strings: dict[int, pa.Array | None],
+                 force_present: frozenset | set):
         self.types = types
-        self.codec = codec
-        self.codec_level = codec_level
         self.forced_strings = forced_strings
         self.force_present = force_present
-        self.defer_bits = defer_bits
-        self.emit_dict_streams = emit_dict_streams
-        self.streams: list[tuple[int, int, object]] = []  # (column, kind_enum, bytes|_Bits)
+        # (column, kind_enum, raw bytes | bool ndarray of bits)
+        self.streams: list[tuple[int, int, bytes | np.ndarray]] = []
         self.encodings: dict[int, tuple[int, int]] = {}  # col -> (kind_enum, dict_size)
         self.stats: dict[int, tuple[int, bool]] = {}  # col -> (n_values, has_null)
-        # col -> (min, max) captured during encode (indexed mode): ints as
-        # ints, dates as epoch days, timestamps as UTC millis, strings as
-        # str — EVERY level of nesting, so list children prune too
+        # col -> (min, max) captured during encode: ints as ints, dates as
+        # epoch days, timestamps as UTC millis, strings as str — EVERY
+        # level of nesting, so list children prune too
         self.minmax: dict[int, tuple] = {}
         # col -> exact non-null sum (Python int for int kinds — never
         # wraps; float for float/double; true count for boolean), feeding
@@ -332,41 +360,31 @@ class _StripeWriter:
         # what metadata-only SUM/COUNT_IF pushdown reads back
         self.sums: dict[int, int | float] = {}
 
-    def _emit(self, col: int, kind_enum: int, raw: bytes):
-        # every compressed chunk's DECOMPRESSED size is capped at the
-        # postscript's declared compressionBlockSize (LZ_BLOCK) — readers
-        # may size decode buffers from that declaration, so zlib must not
-        # chunk at the 8 MiB header limit (round-5 ADVICE)
-        data = (
-            block_compress(raw, self.codec, level=self.codec_level,
-                           max_block=LZ_BLOCK)
-            if self.codec != "none" else raw
-        )
-        self.streams.append((col, kind_enum, data))
+    def col_stats(self, col: int) -> tuple:
+        """``(n_values, has_null, min, max, sum)``, as combine_stats takes."""
+        return (*self.stats[col], *self.minmax.get(col, (None, None)),
+                self.sums.get(col))
 
-    def _emit_bits(self, col: int, kind_enum: int, bits: np.ndarray):
-        if self.defer_bits:
-            self.streams.append((col, kind_enum, _Bits(bits)))
-        else:
-            self._emit(col, kind_enum, boolean_rle_encode(bits))
+    def _emit(self, col: int, kind_enum: int, raw: bytes | np.ndarray):
+        self.streams.append((col, kind_enum, raw))
 
     def write_column(self, col: int, arr: pa.Array):
         node = self.types[col]
-        kind = node["kind"]
+        kind = node.kind
         if isinstance(arr, pa.ChunkedArray):
             arr = arr.combine_chunks()
         has_null = arr.null_count > 0
         self.stats[col] = (len(arr) - arr.null_count, has_null)
-        self.encodings[col] = (0, 0)  # DIRECT default
+        self.encodings[col] = (_DIRECT, 0)
         if has_null or col in self.force_present:
             present = ~np.asarray(arr.is_null().to_numpy(zero_copy_only=False))
-            self._emit_bits(col, 0, present)
+            self._emit(col, _PRESENT, present.astype(bool))
             dense = arr.drop_null()
         else:
             dense = arr
 
         if kind == "struct":
-            for i, sub in enumerate(node["subtypes"]):
+            for i, sub in enumerate(node.subtypes):
                 self.write_column(sub, dense.field(i))
             return
         if kind == "union":
@@ -375,36 +393,36 @@ class _StripeWriter:
             if has_null:
                 raise TypeError("nullable union columns not supported (reader matches)")
             tags = np.asarray(dense.type_codes)
-            self._emit(col, 1, byte_rle_encode(tags.astype(np.uint8)))
+            self._emit(col, _DATA, byte_rle_encode(tags.astype(np.uint8)))
             offsets = np.asarray(dense.offsets)
-            for ci, sub in enumerate(node["subtypes"]):
+            for ci, sub in enumerate(node.subtypes):
                 sel = tags == ci
                 child_rows = dense.field(ci).take(pa.array(offsets[sel]))
                 self.write_column(sub, child_rows)
             return
         if kind in ("list", "map"):
-            self.encodings[col] = (2, 0)  # DIRECT_V2
+            self.encodings[col] = (_DIRECT_V2, 0)
             offsets = dense.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
             lengths = np.diff(offsets)
-            self._emit(col, 2, rlev2_encode(lengths, signed=False, strict_orc=True))
+            self._emit(col, _LENGTH, rlev2_encode(lengths, signed=False, strict_orc=True))
             if kind == "list":
-                self.write_column(node["subtypes"][0], dense.flatten())
+                self.write_column(node.subtypes[0], dense.flatten())
             else:
-                self.write_column(node["subtypes"][0], dense.keys)
-                self.write_column(node["subtypes"][1], dense.items)
+                self.write_column(node.subtypes[0], dense.keys)
+                self.write_column(node.subtypes[1], dense.items)
             return
         if kind == "boolean":
             v = dense.to_numpy(zero_copy_only=False).astype(bool)
             if len(v):
                 self.sums[col] = int(v.sum())
-            self._emit_bits(col, 1, v)
+            self._emit(col, _DATA, v)
             return
         if kind == "byte":
             v = dense.to_numpy(zero_copy_only=False).astype(np.uint8)
-            self._emit(col, 1, byte_rle_encode(v))
+            self._emit(col, _DATA, byte_rle_encode(v))
             return
         if kind in ("short", "int", "long", "date"):
-            self.encodings[col] = (2, 0)
+            self.encodings[col] = (_DIRECT_V2, 0)
             if kind == "date":
                 v = dense.cast(pa.int32()).to_numpy(zero_copy_only=False).astype(np.int64)
             else:
@@ -419,14 +437,14 @@ class _StripeWriter:
                         self.sums[col] = int(v.sum())
                     else:
                         self.sums[col] = int(sum(v.tolist()))
-            self._emit(col, 1, rlev2_encode(v, signed=True, strict_orc=True))
+            self._emit(col, _DATA, rlev2_encode(v, signed=True, strict_orc=True))
             return
         if kind in ("float", "double"):
             v = dense.to_numpy(zero_copy_only=False)
             if len(v):
                 self.minmax[col] = (float(v.min()), float(v.max()))
                 self.sums[col] = float(v.astype(np.float64).sum())
-            self._emit(col, 1, v.astype("<f4" if kind == "float" else "<f8").tobytes())
+            self._emit(col, _DATA, v.astype("<f4" if kind == "float" else "<f8").tobytes())
             return
         if kind in ("string", "varchar", "char", "binary"):
             if pa.types.is_large_string(dense.type):
@@ -436,28 +454,14 @@ class _StripeWriter:
             if kind != "binary" and len(dense):
                 mm = pc.min_max(dense)
                 self.minmax[col] = (mm["min"].as_py(), mm["max"].as_py())
-            sorted_dict = None
-            if kind != "binary":
-                if self.forced_strings is not None:
-                    # stripe-global decision handed down by the indexed
-                    # assembler (must be identical for every row group)
-                    sorted_dict = self.forced_strings.get(col)
-                elif len(dense):
-                    uniq = pc.unique(dense)
-                    # ORC writer heuristic: dictionary pays when the
-                    # distinct ratio is low (Java default threshold 0.8)
-                    if len(uniq) / len(dense) <= 0.5:
-                        sorted_dict = uniq.take(pc.array_sort_indices(uniq))
+            sorted_dict = self.forced_strings.get(col)
             if sorted_dict is not None:
                 idx = pc.index_in(dense, value_set=sorted_dict)
                 idx_np = idx.to_numpy(zero_copy_only=False).astype(np.int64)
-                self.encodings[col] = (3, len(sorted_dict))  # DICTIONARY_V2
-                self._emit(col, 1, rlev2_encode(idx_np, signed=False, strict_orc=True))
-                if self.emit_dict_streams:
-                    for knum, raw in _dictionary_streams(sorted_dict):
-                        self._emit(col, knum, raw)
+                self.encodings[col] = (_DICTIONARY_V2, len(sorted_dict))
+                self._emit(col, _DATA, rlev2_encode(idx_np, signed=False, strict_orc=True))
                 return
-            self.encodings[col] = (2, 0)  # DIRECT_V2
+            self.encodings[col] = (_DIRECT_V2, 0)
             obuf = dense.buffers()[1]
             offsets = np.frombuffer(obuf, dtype=np.int32)[
                 dense.offset : dense.offset + len(dense) + 1
@@ -469,11 +473,11 @@ class _StripeWriter:
                 if payload is not None and len(dense)
                 else b""
             )
-            self._emit(col, 1, body)
-            self._emit(col, 2, rlev2_encode(lengths, signed=False, strict_orc=True))
+            self._emit(col, _DATA, body)
+            self._emit(col, _LENGTH, rlev2_encode(lengths, signed=False, strict_orc=True))
             return
         if kind == "timestamp":
-            self.encodings[col] = (2, 0)
+            self.encodings[col] = (_DIRECT_V2, 0)
             ns = dense.cast(pa.timestamp("ns")).cast(pa.int64()).to_numpy(zero_copy_only=False)
             # JVM convention, byte-calibrated against Spark's ORC writer:
             # nanos = positive fraction (floor), seconds = epoch millis
@@ -489,21 +493,96 @@ class _StripeWriter:
                 self.minmax[col] = (
                     int(ns.min()) // 1_000_000, -((-int(ns.max())) // 1_000_000)
                 )
-            self._emit(col, 1, rlev2_encode(rel, signed=True, strict_orc=True))
-            self._emit(col, 5, rlev2_encode(_format_nanos(nanos), signed=False, strict_orc=True))
+            self._emit(col, _DATA, rlev2_encode(rel, signed=True, strict_orc=True))
+            self._emit(col, _SECONDARY, rlev2_encode(_format_nanos(nanos), signed=False, strict_orc=True))
             return
         if kind == "decimal":
-            self.encodings[col] = (2, 0)
+            self.encodings[col] = (_DIRECT_V2, 0)
             t = dense.type
             words = np.frombuffer(dense.buffers()[1], dtype=np.int64).reshape(-1, 2)
             words = words[dense.offset : dense.offset + len(dense)]
             mantissas = [int(hi) << 64 | (int(lo) & 0xFFFFFFFFFFFFFFFF) for lo, hi in words]
             mantissas = [m - (1 << 128) if m >= (1 << 127) else m for m in mantissas]
-            self._emit(col, 1, _zigzag_varints(mantissas))
+            self._emit(col, _DATA, _zigzag_varints(mantissas))
             scales = np.full(len(dense), t.scale, dtype=np.int64)
-            self._emit(col, 5, rlev2_encode(scales, signed=True, strict_orc=True))
+            self._emit(col, _SECONDARY, rlev2_encode(scales, signed=True, strict_orc=True))
             return
         raise TypeError(f"ORC writer: unsupported kind {kind!r}")
+
+
+# ------------------------------------------------------------- file tail
+
+
+def _frame(raw: bytes, codec: str, block_size: int, level: int | None) -> bytes:
+    """Block-frame one stream or tail section. Every compressed chunk's
+    DECOMPRESSED size is capped at the postscript's declared
+    compressionBlockSize: readers may size decode buffers from that
+    declaration, so zlib must not chunk at the 8 MiB header limit."""
+    if codec == "none":
+        return raw
+    return block_compress(raw, codec, level=level, max_block=block_size)
+
+
+def write_file_tail(f, stripes: list[proto.StripeInformation],
+                    types: list[proto.OrcType], user_metadata: dict[str, bytes],
+                    col_stats: list[bytes], metadata: bytes, row_index_stride: int,
+                    codec: str, block_size: int, level: int | None = None) -> None:
+    """Write an ORC file's tail after its last stripe: the Metadata section,
+    the footer, the postscript and its length byte.
+
+    ``stripes`` is the stripe directory in file order; ``col_stats`` holds
+    one serialized file-level ColumnStatistics per column (b"" = unknown);
+    ``metadata`` is the uncompressed Metadata body, one StripeStatistics
+    per stripe (no section when empty). Every section is framed with
+    ``codec`` at ``block_size``, which the postscript declares."""
+    if metadata:
+        # the stripe-level pruning index prune_stripes consumes (the
+        # reference parses it at src/tail.rs:113-132 but never uses it)
+        metadata = _frame(metadata, codec, block_size, level)
+        f.write(metadata)
+
+    last = stripes[-1] if stripes else None
+    content_length = (
+        last.offset + last.index_length + last.data_length + last.footer_length
+        if last else 3
+    )
+    footer = _field_varint(1, 3)  # headerLength: the 3-byte magic
+    footer += _field_varint(2, content_length)
+    for si in stripes:
+        body = (
+            _field_varint(1, si.offset)
+            + _field_varint(2, si.index_length)
+            + _field_varint(3, si.data_length)
+            + _field_varint(4, si.footer_length)
+            + _field_varint(5, si.number_of_rows)
+        )
+        footer += _field_bytes(3, body)
+    for t in types:
+        footer += _field_bytes(4, _type_message(t))
+    for k, v in user_metadata.items():
+        footer += _field_bytes(5, _field_bytes(1, k.encode("utf-8")) + _field_bytes(2, bytes(v)))
+    footer += _field_varint(6, sum(si.number_of_rows for si in stripes))
+    for body in col_stats:
+        footer += _field_bytes(7, body)
+    footer += _field_varint(8, row_index_stride)
+    footer += _field_varint(9, 1)  # writer: ORC C++ code slot (non-Java)
+    footer = _frame(footer, codec, block_size, level)
+    f.write(footer)
+
+    ps = _field_varint(1, len(footer))
+    ps += _field_varint(2, _CODEC_ENUM[codec])
+    ps += _field_varint(3, block_size)
+    ps += _field_packed(4, [0, 12])
+    ps += _field_varint(5, len(metadata))
+    ps += _field_varint(6, 6)  # writerVersion
+    ps += _field_bytes(8000, b"ORC")
+    if len(ps) > 255:
+        raise OrcFormatError(f"postscript too long ({len(ps)} bytes)")
+    f.write(ps)
+    f.write(bytes([len(ps)]))
+
+
+# ---------------------------------------------------------------- writer
 
 
 class OrcWriter:
@@ -519,13 +598,19 @@ class OrcWriter:
                  bloom_columns: list[str] | None = None,
                  user_metadata: dict[str, bytes] | None = None,
                  compression_level: int | None = None):
+        # all five codec tags have real encoders, one per codec
+        # (kernels/blockcomp.py): zlib (stdlib raw deflate), snappy, lz4
+        # and zstd (pyarrow's C codecs), lzo (from-spec LZO1X,
+        # kernels/lzo.py; the reference can't read kind 3 at all).
+        if compression not in _CODEC_ENUM:
+            raise ValueError(f"unknown ORC compression {compression!r}")
         self.schema = schema
         self.compression = compression
         # None = the codec's default (blockcomp.DEFAULT_LEVELS: zlib 6,
         # zstd 3); snappy/lz4 have no level knob
         self.compression_level = compression_level
         self.stripe_rows = stripe_rows
-        self.types: list[dict] = []
+        self.types: list[proto.OrcType] = []
         _flatten_types(schema, self.types)
         # opt-in per-row-group bloom filters (Java's orc.bloom.filter.columns
         # analogue); resolved to top-level column ids — int/date/string
@@ -536,11 +621,11 @@ class OrcWriter:
                 raise ValueError("bloom_columns requires a row index stride")
             root = self.types[0]
             for name in bloom_columns:
-                if name not in root["names"]:
+                if name not in root.field_names:
                     raise ValueError(f"bloom column {name!r} not in schema")
-                pos = root["names"].index(name)
-                sub = root["subtypes"][pos]
-                kind = self.types[sub]["kind"]
+                pos = root.field_names.index(name)
+                sub = root.subtypes[pos]
+                kind = self.types[sub].kind
                 if kind not in ("byte", "short", "int", "long", "date",
                                 "float", "double", "string", "varchar", "char"):
                     raise ValueError(f"bloom filters unsupported for {kind} column {name!r}")
@@ -555,24 +640,14 @@ class OrcWriter:
             from orc_rs_spark import __version__ as _v
 
             self.user_metadata["orc_rs_spark.writer"] = f"orc_rs_spark/{_v}".encode()
-        # all five codec tags have real encoders, one per codec
-        # (kernels/blockcomp.py): zlib (stdlib raw deflate), snappy, lz4
-        # and zstd (pyarrow's C codecs), lzo (from-spec LZO1X,
-        # kernels/lzo.py; the reference can't read kind 3 at all).
-        self.codec_enum = {"none": 0, "zlib": 1, "snappy": 2, "lzo": 3,
-                           "lz4": 4, "zstd": 5}[compression]
         self._f = open(path, "wb")
         self._f.write(b"ORC")
         self._pos = 3
-        self._stripe_infos: list[dict] = []
-        self._total_values = [0] * len(self.types)
-        self._any_null = [False] * len(self.types)
-        # per-stripe serialized ColumnStatistics (Metadata section) and
-        # file-level min/max accumulators for the footer statistics
-        self._stripe_stats: list[list[bytes]] = []
-        self._col_min: list = [None] * len(self.types)
-        self._col_max: list = [None] * len(self.types)
-        self._col_sum: list = [None] * len(self.types)
+        self._stripe_infos: list[proto.StripeInformation] = []
+        # per-stripe StripeStatistics bodies (the Metadata section) and the
+        # file-level statistics folded over stripes (the footer's)
+        self._stripe_stats: list[bytes] = []
+        self._file_stats: list[tuple] = [(0, False, None, None, None)] * len(self.types)
         self.num_rows = 0
         self._buf: list[pa.RecordBatch] = []
         self._buf_rows = 0
@@ -615,86 +690,32 @@ class OrcWriter:
         self._buf_rows = rest.num_rows
         return tbl.slice(0, n)
 
+    def _compress(self, raw: bytes) -> bytes:
+        return _frame(raw, self.compression, LZ_BLOCK, self.compression_level)
+
+    def _write_stream(self, sfooter: bytearray, col: int, kind_enum: int, data: bytes) -> int:
+        """Append one stream to the file and its entry to the stripe footer;
+        returns its length."""
+        self._f.write(data)
+        self._pos += len(data)
+        sfooter += _field_bytes(
+            1, _field_varint(1, kind_enum) + _field_varint(2, col) + _field_varint(3, len(data))
+        )
+        return len(data)
+
     def _flush_stripe(self, tbl: pa.Table) -> None:
-        if tbl.num_rows == 0:
-            return
-        if self.row_index_stride > 0:
-            self._flush_stripe_indexed(tbl)
-        else:
-            self._flush_stripe_plain(tbl)
-
-    def _write_stripe_tail(self, tbl, offset, index_len, data_len, sfooter_streams,
-                           encodings, stats, stripe_stats) -> None:
-        """Common stripe epilogue: footer, directory entry, accumulators."""
-        sfooter = sfooter_streams
-        for col in range(len(self.types)):
-            enc, dsize = encodings.get(col, (0, 0))
-            body = _field_varint(1, enc)
-            if dsize:
-                body += _field_varint(2, dsize)
-            sfooter += _field_bytes(2, body)
-        sfooter += _field_bytes(3, b"UTC")
-        sfooter_comp = (
-            block_compress(sfooter, self.compression,
-                           level=self.compression_level, max_block=LZ_BLOCK)
-            if self.compression != "none" else sfooter
-        )
-        self._f.write(sfooter_comp)
-        self._pos += len(sfooter_comp)
-        for col in range(len(self.types)):
-            nv, hn = stats.get(col, (tbl.num_rows, False))
-            self._total_values[col] += nv
-            self._any_null[col] = self._any_null[col] or hn
-        self._stripe_stats.append(stripe_stats)
-        self._stripe_infos.append(
-            {"offset": offset, "index_length": index_len, "data_length": data_len,
-             "footer_length": len(sfooter_comp), "number_of_rows": tbl.num_rows}
-        )
-        self.num_rows += tbl.num_rows
-
-    def _flush_stripe_plain(self, tbl: pa.Table) -> None:
-        sw = _StripeWriter(self.types, self.compression,
-                           codec_level=self.compression_level)
-        sw.stats[0] = (tbl.num_rows, False)
-        for i, sub in enumerate(self.types[0]["subtypes"]):
-            sw.write_column(sub, tbl.column(i))
-        offset = self._pos
-        data_len = 0
-        sfooter = b""
-        for col, kind_enum, data in sw.streams:
-            self._f.write(data)
-            self._pos += len(data)
-            data_len += len(data)
-            sfooter += _field_bytes(
-                1, _field_varint(1, kind_enum) + _field_varint(2, col) + _field_varint(3, len(data))
-            )
-        stripe_stats = []
-        for col in range(len(self.types)):
-            nv, hn = sw.stats.get(col, (tbl.num_rows, False))
-            mn, mx = sw.minmax.get(col, (None, None))
-            sm = sw.sums.get(col)
-            self._accumulate_file_stats(col, mn, mx, sm)
-            stripe_stats.append(
-                _stats_body(nv, hn, self.types[col]["kind"], mn, mx, sm))
-        self._write_stripe_tail(tbl, offset, 0, data_len, sfooter, sw.encodings,
-                                sw.stats, stripe_stats)
-
-    def _accumulate_file_stats(self, col: int, mn, mx, sm) -> None:
-        if mn is not None:
-            self._col_min[col] = mn if self._col_min[col] is None else min(self._col_min[col], mn)
-            self._col_max[col] = mx if self._col_max[col] is None else max(self._col_max[col], mx)
-        if sm is not None:
-            self._col_sum[col] = sm if self._col_sum[col] is None else self._col_sum[col] + sm
-
-    def _flush_stripe_indexed(self, tbl: pa.Table) -> None:
-        """Stripe with ROW_INDEX streams: every row group's streams start at
-        recorded positions. Value streams restart their runs and compression
-        blocks at group boundaries (positions are then plain offsets);
-        bit-packed boolean streams stay CONTINUOUS — group positions carry
-        the in-byte bit offset, exactly like the Java writer — so unindexed
-        readers decode the stripe unchanged."""
-        stride = self.row_index_stride
+        """Write one stripe as row groups of ``row_index_stride`` rows (one
+        group spanning the stripe when the stride is 0, with no ROW_INDEX).
+        Value streams restart their runs and compression blocks at group
+        boundaries, so a group's positions are plain offsets; bit-packed
+        boolean streams stay CONTINUOUS — group positions carry the in-byte
+        bit offset, exactly like the Java writer — so unindexed readers
+        decode the stripe unchanged."""
         n = tbl.num_rows
+        if n == 0:
+            return
+        indexed = self.row_index_stride > 0
+        stride = self.row_index_stride if indexed else n
         types = self.types
         comp = self.compression != "none"
         groups = [(s, min(stride, n - s)) for s in range(0, n, stride)]
@@ -703,38 +724,35 @@ class OrcWriter:
         # which columns need a PRESENT stream, and each string column's
         # dictionary-vs-direct decision (with its stripe-global dictionary)
         dense_cols: dict[int, pa.Array] = {}
-        for i, sub in enumerate(types[0]["subtypes"]):
+        for i, sub in enumerate(types[0].subtypes):
             _walk_dense(types, sub, tbl.column(i), dense_cols)
         force_present = frozenset(c for c, a in dense_cols.items() if a.null_count > 0)
         forced: dict[int, pa.Array | None] = {}
         for c, a in dense_cols.items():
-            if types[c]["kind"] in _STR_STAT_KINDS:
+            if types[c].kind in _STR_STAT_KINDS:
                 d = a.drop_null() if a.null_count else a
                 if pa.types.is_large_string(d.type):
                     d = d.cast(pa.string())
                 forced[c] = None
                 if len(d):
                     uniq = pc.unique(d)
+                    # ORC writer heuristic: dictionary pays when the
+                    # distinct ratio is low (Java default threshold 0.8)
                     if len(uniq) / len(d) <= 0.5:
                         forced[c] = uniq.take(pc.array_sort_indices(uniq))
 
-        # ---- pass 2: encode each row group with restarted runs
+        # ---- pass 2: encode each row group with restarted runs; group
+        # statistics come from the encode, for every column at every
+        # nesting level (list children get real pruning statistics)
         chunk_lists: dict[tuple[int, int], list] = {}
         order: list[tuple[int, int]] = []
-        group_counts: dict[int, list[tuple[int, bool]]] = {}
-        # per-group (min, max) captured DURING encode for every column at
-        # every nesting level (int/date/ts/float/string leaves) — list
-        # children get real pruning statistics, not counts-only entries
-        group_mm: dict[int, list[tuple]] = {}
-        group_sums: dict[int, list] = {}
+        group_stats: list[list[tuple]] = [[] for _ in types]
         encodings: dict[int, tuple[int, int]] = {}
         for g, (s, ln) in enumerate(groups):
-            mw = _StripeWriter(types, "none", forced_strings=forced,
-                               force_present=force_present, defer_bits=True,
-                               emit_dict_streams=False)
+            mw = _StripeWriter(types, forced, force_present)
             mw.stats[0] = (ln, False)
             gt = tbl.slice(s, ln)
-            for i, sub in enumerate(types[0]["subtypes"]):
+            for i, sub in enumerate(types[0].subtypes):
                 mw.write_column(sub, gt.column(i))
             keys = [(c, k) for c, k, _ in mw.streams]
             if g == 0:
@@ -747,258 +765,163 @@ class OrcWriter:
             for c, k, payload in mw.streams:
                 chunk_lists[(c, k)].append(payload)
             for c in range(len(types)):
-                group_counts.setdefault(c, []).append(mw.stats[c])
-            for c, mm in mw.minmax.items():
-                group_mm.setdefault(c, [(None, None)] * len(groups))[g] = mm
-            for c, gs in mw.sums.items():
-                group_sums.setdefault(c, [None] * len(groups))[g] = gs
+                group_stats[c].append(mw.col_stats(c))
 
-        # ---- assemble data streams + positions
+        # ---- assemble data streams + each group's start position
         stream_bytes: dict[tuple[int, int], bytes] = {}
         stream_positions: dict[tuple[int, int], list[list[int]]] = {}
         for key in order:
             chunks = chunk_lists[key]
-            if isinstance(chunks[0], _Bits):
+            bit_offsets = None
+            if isinstance(chunks[0], np.ndarray):
                 # continuous bit stream; byte-RLE runs + compression blocks
                 # restart at each group's covering byte, positions carry
                 # (pending-bytes=0, bit-in-byte) like the Java writer
-                bit_counts = [len(c.bits) for c in chunks]
-                bounds_bits = np.concatenate(([0], np.cumsum(bit_counts))).astype(np.int64)
-                allbits = (
-                    np.concatenate([c.bits for c in chunks])
-                    if len(chunks) > 1 else chunks[0].bits
-                )
-                bytestream = np.packbits(allbits)
+                bounds_bits = np.cumsum([0] + [len(c) for c in chunks]).astype(np.int64)
+                bytestream = np.packbits(np.concatenate(chunks))
                 seg_starts = [int(b // 8) for b in bounds_bits[:-1]] + [len(bytestream)]
-                enc_parts, offs, off = [], [], 0
-                for g in range(len(chunks)):
-                    lo, hi = seg_starts[g], seg_starts[g + 1]
-                    raw = byte_rle_encode(bytestream[lo:hi]) if hi > lo else b""
-                    enc = block_compress(raw, self.compression, level=self.compression_level, max_block=LZ_BLOCK) if comp else raw
-                    offs.append(off)
-                    off += len(enc)
-                    enc_parts.append(enc)
-                stream_bytes[key] = b"".join(enc_parts)
-                stream_positions[key] = [
-                    ([offs[g], 0] if comp else [offs[g]]) + [0, int(bounds_bits[g] % 8)]
-                    for g in range(len(chunks))
+                chunks = [
+                    byte_rle_encode(bytestream[lo:hi]) if hi > lo else b""
+                    for lo, hi in zip(seg_starts, seg_starts[1:])
                 ]
-            else:
-                enc_parts, offs, off = [], [], 0
-                for raw in chunks:
-                    enc = block_compress(raw, self.compression, level=self.compression_level, max_block=LZ_BLOCK) if comp else raw
-                    offs.append(off)
-                    off += len(enc)
-                    enc_parts.append(enc)
-                stream_bytes[key] = b"".join(enc_parts)
-                stream_positions[key] = [
-                    [offs[g], 0] if comp else [offs[g]] for g in range(len(chunks))
-                ]
+                bit_offsets = bounds_bits % 8
+            parts, positions, off = [], [], 0
+            for g, raw in enumerate(chunks):
+                enc = self._compress(raw)
+                p = [off, 0] if comp else [off]
+                if bit_offsets is not None:
+                    p += [0, int(bit_offsets[g])]
+                positions.append(p)
+                off += len(enc)
+                parts.append(enc)
+            stream_bytes[key] = b"".join(parts)
+            stream_positions[key] = positions
 
         # stripe-global dictionary streams (no positions)
-        dict_streams: list[tuple[int, int, bytes]] = []
-        for c, d in forced.items():
-            if d is not None:
-                for knum, raw in _dictionary_streams(d):
-                    data = block_compress(raw, self.compression, level=self.compression_level, max_block=LZ_BLOCK) if comp else raw
-                    dict_streams.append((c, knum, data))
+        dict_streams = [
+            (c, knum, self._compress(raw))
+            for c, d in forced.items() if d is not None
+            for knum, raw in _dictionary_streams(d)
+        ]
 
-        # ---- ROW_INDEX streams: one per column, one entry per group
+        # ---- ROW_INDEX streams (stride > 0): one per column, one entry
+        # per group
         index_streams: list[tuple[int, bytes]] = []
-        for col in range(len(types)):
-            enc_kind, _dsize = encodings.get(col, (0, 0))
-            enc_name = "DICTIONARY_V2" if enc_kind == 3 else "DIRECT_V2"
-            layout = proto.stream_position_layout(types[col]["kind"], enc_name)
-            entries = b""
-            for g in range(len(groups)):
-                slots: list[int] = []
-                for kindname, extra in layout:
-                    key = (col, _STREAM_ENUM[kindname])
-                    if key not in stream_bytes:
-                        continue
-                    p = list(stream_positions[key][g])
-                    want = (2 if comp else 1) + extra
-                    p += [0] * (want - len(p))
-                    if len(p) != want:
-                        raise AssertionError(f"position width for col {col} {kindname}")
-                    slots += p
-                nv, hn = group_counts[col][g]
-                mn, mx = group_mm.get(col, [(None, None)] * len(groups))[g]
-                gsm = group_sums.get(col, [None] * len(groups))[g]
-                stats = _stats_body(nv, hn, types[col]["kind"], mn, mx, gsm)
-                entry = (_field_packed(1, slots) if slots else b"") + _field_bytes(2, stats)
-                entries += _field_bytes(1, entry)
-            index_streams.append(
-                (col, block_compress(entries, self.compression,
-                                level=self.compression_level, max_block=LZ_BLOCK)
-                 if comp else entries)
-            )
+        if indexed:
+            for col in range(len(types)):
+                enc_name = proto.ENCODING_KINDS[encodings.get(col, (_DIRECT, 0))[0]]
+                layout = proto.stream_position_layout(types[col].kind, enc_name)
+                entries = b""
+                for g in range(len(groups)):
+                    slots: list[int] = []
+                    for kindname, extra in layout:
+                        key = (col, _STREAM_ENUM[kindname])
+                        if key not in stream_bytes:
+                            continue
+                        p = list(stream_positions[key][g])
+                        want = (2 if comp else 1) + extra
+                        p += [0] * (want - len(p))
+                        if len(p) != want:
+                            raise AssertionError(f"position width for col {col} {kindname}")
+                        slots += p
+                    stats = _stats_body(types[col].kind, *group_stats[col][g])
+                    entry = (_field_packed(1, slots) if slots else b"") + _field_bytes(2, stats)
+                    entries += _field_bytes(1, entry)
+                index_streams.append((col, self._compress(entries)))
 
-        # ---- bloom filter streams (opt-in): one BLOOM_FILTER_UTF8 per
-        # chosen column, one filter per row group, Java hash contracts
-        # (bytecode-verified: signed-shift Thomas Wang for ints,
-        # Murmur3 hash64 seed 104729 for utf8)
-        bloom_streams: dict[int, bytes] = {}
-        if self.bloom_cols:
-            from orc_rs_spark.kernels.orc_bloom import (
-                OrcBloom,
-                optimal_bits,
-                optimal_k,
-            )
-
-            m = optimal_bits(stride)
-            kh = optimal_k(stride, m)
-            for col, pos_i in self.bloom_cols.items():
-                kind = types[col]["kind"]
-                body = b""
-                for (s, ln) in groups:
-                    sl = tbl.column(pos_i).slice(s, ln)
-                    if isinstance(sl, pa.ChunkedArray):
-                        sl = sl.combine_chunks()
-                    dense = sl.drop_null() if sl.null_count else sl
-                    bf = OrcBloom(m, kh)
-                    if kind in ("byte", "short", "int", "long", "date"):
-                        if kind == "date":
-                            dense = dense.cast(pa.int32())
-                        vals = dense.to_numpy(zero_copy_only=False).astype(np.int64)
-                        bf.add_longs(vals)
-                    elif kind in ("float", "double"):
-                        bf.add_doubles(dense.to_numpy(zero_copy_only=False))
-                    else:
-                        # hash straight from the Arrow offsets/payload
-                        # buffers — no per-value python objects, one
-                        # slice copy (for the 7-byte tail-gather slack)
-                        from orc_rs_spark.kernels.strings import arrow_string_views
-
-                        starts, lengths, data = arrow_string_views(dense)
-                        begin = int(starts[0]) if len(starts) else 0
-                        end = int(starts[-1] + lengths[-1]) if len(starts) else 0
-                        buf = np.zeros(end - begin + 7, dtype=np.uint8)
-                        buf[: end - begin] = data[begin:end]
-                        bf.add_string_parts(buf, starts - begin, lengths)
-                    body += _field_bytes(1, bf.to_proto_body())
-                bloom_streams[col] = (
-                    block_compress(body, self.compression,
-                                   level=self.compression_level, max_block=LZ_BLOCK)
-                    if comp else body
-                )
+        bloom_streams = self._bloom_streams(tbl, groups)
 
         # ---- physical layout: index region (ROW_INDEX then the column's
-        # bloom, matching the Java writer's interleaving), data region,
-        # stripe footer
+        # bloom, matching the Java writer's interleaving), data region
+        # (stripe-global dictionaries last), stripe footer
         offset = self._pos
+        sfooter = bytearray()
         index_len = 0
-        sfooter = b""
         for col, data in index_streams:
-            self._f.write(data)
-            self._pos += len(data)
-            index_len += len(data)
-            sfooter += _field_bytes(
-                1, _field_varint(1, 6) + _field_varint(2, col) + _field_varint(3, len(data))
-            )
-            bl = bloom_streams.get(col)
-            if bl is not None:
-                self._f.write(bl)
-                self._pos += len(bl)
-                index_len += len(bl)
-                sfooter += _field_bytes(
-                    1, _field_varint(1, 8) + _field_varint(2, col) + _field_varint(3, len(bl))
-                )
+            index_len += self._write_stream(sfooter, col, _ROW_INDEX, data)
+            if col in bloom_streams:
+                index_len += self._write_stream(sfooter, col, _BLOOM_UTF8, bloom_streams[col])
         data_len = 0
         for col, kind_enum, data in (
             [(c, k, stream_bytes[(c, k)]) for c, k in order] + dict_streams
         ):
-            self._f.write(data)
-            self._pos += len(data)
-            data_len += len(data)
-            sfooter += _field_bytes(
-                1, _field_varint(1, kind_enum) + _field_varint(2, col) + _field_varint(3, len(data))
-            )
-
-        # stripe-level statistics (Metadata section) + file-level min/max
-        stripe_stats = []
-        stats_map = {}
+            data_len += self._write_stream(sfooter, col, kind_enum, data)
         for col in range(len(types)):
-            nv = sum(v for v, _ in group_counts[col])
-            hn = any(h for _, h in group_counts[col])
-            stats_map[col] = (nv, hn)
-            mns = [m for m, _ in group_mm.get(col, []) if m is not None]
-            mxs = [m for _, m in group_mm.get(col, []) if m is not None]
-            sms = [x for x in group_sums.get(col, []) if x is not None]
-            sm = sum(sms) if sms else None
-            mn = min(mns) if mns else None
-            mx = max(mxs) if mxs else None
-            self._accumulate_file_stats(col, mn, mx, sm)
-            stripe_stats.append(_stats_body(nv, hn, types[col]["kind"], mn, mx, sm))
-        self._write_stripe_tail(tbl, offset, index_len, data_len, sfooter,
-                                encodings, stats_map, stripe_stats)
+            enc, dsize = encodings.get(col, (_DIRECT, 0))
+            body = _field_varint(1, enc)
+            if dsize:
+                body += _field_varint(2, dsize)
+            sfooter += _field_bytes(2, body)
+        sfooter += _field_bytes(3, b"UTC")
+        sfooter_comp = self._compress(bytes(sfooter))
+        self._f.write(sfooter_comp)
+        self._pos += len(sfooter_comp)
+
+        # stripe-level statistics (Metadata section) + the file-level fold
+        stripe_stats = b""
+        for col in range(len(types)):
+            st = combine_stats(group_stats[col])
+            self._file_stats[col] = combine_stats([self._file_stats[col], st])
+            stripe_stats += _field_bytes(1, _stats_body(types[col].kind, *st))
+        self._stripe_stats.append(stripe_stats)
+        self._stripe_infos.append(proto.StripeInformation(
+            offset, index_len, data_len, len(sfooter_comp), n))
+        self.num_rows += n
+
+    def _bloom_streams(self, tbl: pa.Table, groups: list[tuple[int, int]]) -> dict[int, bytes]:
+        """Bloom filter streams (opt-in): one BLOOM_FILTER_UTF8 per chosen
+        column, one filter per row group, Java hash contracts
+        (bytecode-verified: signed-shift Thomas Wang for ints, Murmur3
+        hash64 seed 104729 for utf8)."""
+        if not self.bloom_cols:
+            return {}
+        from orc_rs_spark.kernels.orc_bloom import OrcBloom, optimal_bits, optimal_k
+        from orc_rs_spark.kernels.strings import arrow_string_views
+
+        m = optimal_bits(self.row_index_stride)
+        kh = optimal_k(self.row_index_stride, m)
+        out: dict[int, bytes] = {}
+        for col, pos_i in self.bloom_cols.items():
+            kind = self.types[col].kind
+            body = b""
+            for (s, ln) in groups:
+                sl = tbl.column(pos_i).slice(s, ln)
+                if isinstance(sl, pa.ChunkedArray):
+                    sl = sl.combine_chunks()
+                dense = sl.drop_null() if sl.null_count else sl
+                bf = OrcBloom(m, kh)
+                if kind in ("byte", "short", "int", "long", "date"):
+                    if kind == "date":
+                        dense = dense.cast(pa.int32())
+                    vals = dense.to_numpy(zero_copy_only=False).astype(np.int64)
+                    bf.add_longs(vals)
+                elif kind in ("float", "double"):
+                    bf.add_doubles(dense.to_numpy(zero_copy_only=False))
+                else:
+                    # hash straight from the Arrow offsets/payload
+                    # buffers — no per-value python objects, one
+                    # slice copy (for the 7-byte tail-gather slack)
+                    starts, lengths, data = arrow_string_views(dense)
+                    begin = int(starts[0]) if len(starts) else 0
+                    end = int(starts[-1] + lengths[-1]) if len(starts) else 0
+                    buf = np.zeros(end - begin + 7, dtype=np.uint8)
+                    buf[: end - begin] = data[begin:end]
+                    bf.add_string_parts(buf, starts - begin, lengths)
+                body += _field_bytes(1, bf.to_proto_body())
+            out[col] = self._compress(body)
+        return out
 
     def close(self) -> None:
         if self._closed:
             return
         if self._buf_rows:
             self._flush_stripe(self._take(self._buf_rows))
-        content_length = self._pos
-
-        # Metadata section: per-stripe ColumnStatistics — the stripe-level
-        # pruning index prune_stripes consumes (the reference parses it at
-        # src/tail.rs:113-132 but never uses it; we use it)
-        metadata = b""
-        if self._stripe_stats:
-            for per_col in self._stripe_stats:
-                ss = b"".join(_field_bytes(1, body) for body in per_col)
-                metadata += _field_bytes(1, ss)
-            metadata = (
-                block_compress(metadata, self.compression,
-                               level=self.compression_level, max_block=LZ_BLOCK)
-                if self.compression != "none" else metadata
-            )
-            self._f.write(metadata)
-
-        footer = _field_varint(1, 3)  # headerLength
-        footer += _field_varint(2, content_length)
-        for si in self._stripe_infos:
-            body = (
-                _field_varint(1, si["offset"])
-                + _field_varint(2, si["index_length"])
-                + _field_varint(3, si["data_length"])
-                + _field_varint(4, si["footer_length"])
-                + _field_varint(5, si["number_of_rows"])
-            )
-            footer += _field_bytes(3, body)
-        for node in self.types:
-            footer += _field_bytes(4, _type_message(node))
-        for k, v in self.user_metadata.items():
-            item = _field_bytes(1, k.encode("utf-8")) + _field_bytes(2, bytes(v))
-            footer += _field_bytes(5, item)
-        footer += _field_varint(6, self.num_rows)
-        for col in range(len(self.types)):
-            footer += _field_bytes(
-                7,
-                _stats_body(self._total_values[col], self._any_null[col],
-                            self.types[col]["kind"], self._col_min[col],
-                            self._col_max[col], self._col_sum[col]),
-            )
-        footer += _field_varint(8, self.row_index_stride)
-        footer += _field_varint(9, 1)  # writer: ORC C++ code slot (non-Java)
-        footer_comp = (
-            block_compress(footer, self.compression,
-                           level=self.compression_level, max_block=LZ_BLOCK)
-            if self.compression != "none" else footer
+        write_file_tail(
+            self._f, self._stripe_infos, self.types, self.user_metadata,
+            [_stats_body(t.kind, *st) for t, st in zip(self.types, self._file_stats)],
+            b"".join(_field_bytes(1, ss) for ss in self._stripe_stats),
+            self.row_index_stride, self.compression, LZ_BLOCK, self.compression_level,
         )
-        self._f.write(footer_comp)
-
-        ps = _field_varint(1, len(footer_comp))
-        ps += _field_varint(2, self.codec_enum)
-        ps += _field_varint(3, LZ_BLOCK)
-        ps += _field_packed(4, [0, 12])
-        ps += _field_varint(5, len(metadata))
-        ps += _field_varint(6, 6)  # writerVersion
-        ps += _field_bytes(8000, b"ORC")
-        if len(ps) > 255:
-            raise ValueError("postscript too long")
-        self._f.write(ps)
-        self._f.write(bytes([len(ps)]))
         self._f.close()
         self._closed = True
 
@@ -1016,3 +939,31 @@ def write_orc(table: pa.Table | pa.RecordBatch, path: str, compression: str = "z
                   user_metadata=user_metadata, compression_level=compression_level)
     w.write_table(table)
     w.close()
+
+
+def write_task_file(batches: Iterator[pa.RecordBatch], path: str,
+                    **writer_kwargs) -> int | None:
+    """Stream one task's batches into an ORC file at ``path``, opened as
+    ``OrcWriter(path, schema, **writer_kwargs)`` on the first non-empty
+    batch. Returns the row count, or None when every batch was empty (no
+    file is created). The file is removed on ANY failure — including a
+    failed footer write in close(), which would otherwise orphan a partial
+    file no abort() could reach."""
+    writer: OrcWriter | None = None
+    try:
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            if writer is None:
+                writer = OrcWriter(path, b.schema, **writer_kwargs)
+            writer.write_batch(b)
+        if writer is None:
+            return None
+        writer.close()
+        return writer.num_rows
+    except BaseException:
+        if writer is not None:
+            writer.abort()
+        if os.path.exists(path):
+            os.remove(path)
+        raise

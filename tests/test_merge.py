@@ -312,6 +312,59 @@ def test_merge_file_stats_honest_when_input_statless():
     assert (parsed.int_min, parsed.int_max) == (-4, 9)
 
 
+def test_combine_stats_unknown_and_neutral_parts():
+    """The one statistics fold behind stripe, footer and merged-footer
+    statistics: a part with no values is neutral, a part with values but
+    no bound (or sum) makes that field unknown, unknown counts poison all."""
+    from orc_rs_spark.orcfile.writer import combine_stats
+
+    a = (5, False, 1, 9, 20)
+    assert combine_stats([a, (3, True, -4, 2, -1)]) == (8, True, -4, 9, 19)
+    assert combine_stats([a, (0, True, None, None, None)]) == (5, True, 1, 9, 20)
+    assert combine_stats([a, (3, False, -4, 2, None)]) == (8, False, -4, 9, None)
+    assert combine_stats([a, (3, False, None, None, 7)]) == (8, False, None, None, 27)
+    assert combine_stats([a, None]) is None
+    assert combine_stats([]) == (0, False, None, None, None)
+
+
+@pytest.mark.spark
+def test_merged_footer_keeps_sums_and_bounds(spark, tmp_path):
+    """Footer-only aggregates answer the same before and after
+    merge_orc_files and compact_orc_dir: merged footers keep the int and
+    double sums and the boolean true count, and an input whose column has
+    no values (all null) leaves the merged bounds known."""
+    import os
+
+    from orc_rs_spark.orcfile.merge import compact_orc_dir
+    from orc_rs_spark.orcfile.spark_source import stats_aggregate
+
+    n = 1000
+    parts = tmp_path / "parts"
+    os.makedirs(parts)
+    full = pa.table({
+        "x": pa.array(np.arange(n, dtype=np.int64)),
+        "f": pa.array(np.full(n, 0.5)),
+        "b": pa.array(np.arange(n) % 2 == 0),
+    })
+    nulls = pa.table({c: pa.nulls(n, full.schema.field(c).type) for c in full.column_names})
+    paths = [str(parts / f"part-{i}.orc") for i in range(3)]
+    for p, t in zip(paths, (full, full, nulls)):
+        write_orc(t, p, stripe_rows=400)
+    aggs = [("sum", "x"), ("sum", "f"), ("sum", "b"), ("min", "x"), ("max", "x"),
+            ("min", "f"), ("max", "f"), ("count", "x"), ("count_star", None)]
+    want = stats_aggregate(paths, aggs)
+    assert (want["sum(x)"], want["sum(f)"], want["sum(b)"]) == (999000, 1000.0, 1000)
+    assert (want["min(x)"], want["max(x)"], want["count(x)"]) == (0, 999, 2000)
+
+    merged = str(tmp_path / "merged.orc")
+    assert merge_orc_files(paths, merged) == 3 * n
+    assert stats_aggregate(merged, aggs) == want
+    compacted = str(tmp_path / "compacted")
+    assert compact_orc_dir(spark, str(parts), compacted, target_bytes=1 << 30) == 3 * n
+    assert len(os.listdir(compacted)) == 1
+    assert stats_aggregate(compacted, aggs) == want
+
+
 def test_merge_property_random_splits(tmp_path):
     """Property: for random (table, split points, stripe size), merging
     the parts reproduces the concatenation exactly and count_rows agrees

@@ -333,6 +333,47 @@ def test_writer_timestamp_convention_matches_spark(spark, tmp_path):
 
 
 @pytest.mark.spark
+@pytest.mark.parametrize("codec", ["none", "zlib", "snappy", "lzo", "lz4", "zstd"])
+def test_stride0_layout_read_by_both_readers(spark, codec, tmp_path):
+    """row_index_stride=0 writes every stripe as one row group with no
+    ROW_INDEX: several stripes of every kind (nulls, dictionary and direct
+    strings, list/map/struct, decimal, timestamp, date, boolean, byte)
+    read back as the input by our reader and by Spark's JVM reader. The
+    union column goes to a second file that only our reader reads: Spark
+    has no union type."""
+    import pyarrow as pa
+
+    from orc_rs_spark.orcfile.writer import write_orc
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    tbl = _writer_table()
+    n = tbl.num_rows
+    tbl = tbl.append_column("direct", pa.array(
+        [None if i % 9 == 0 else f"direct-{i * 7919 % 100003}" for i in range(n)]))
+    tbl = tbl.append_column("ts", pa.array(
+        [None if i % 5 == 0 else 1_600_000_000_123_456 + i * 37_000_001 for i in range(n)],
+        type=pa.timestamp("us")))
+    path = str(tmp_path / f"stride0_{codec}.orc")
+    write_orc(tbl, path, compression=codec, stripe_rows=300, row_index_stride=0)
+    r = OrcFileReader(path)
+    assert r.tail.footer.row_index_stride == 0
+    assert len(r.tail.footer.stripes) == 4
+    assert all(si.index_length == 0 for si in r.tail.footer.stripes)
+    encodings = {e.kind for e in r._open_stripe(0)[0].encodings}
+    assert {"DICTIONARY_V2", "DIRECT_V2"} <= encodings
+    assert r.read_all().cast(tbl.schema).combine_chunks().equals(tbl.combine_chunks())
+    got = spark.read.orc(path).toArrow()
+    assert got.cast(tbl.schema).combine_chunks().equals(tbl.combine_chunks())
+
+    utbl = _union_table(900)
+    upath = str(tmp_path / f"stride0_union_{codec}.orc")
+    write_orc(utbl, upath, compression=codec, stripe_rows=400, row_index_stride=0)
+    ur = OrcFileReader(upath)
+    assert [si.index_length for si in ur.tail.footer.stripes] == [0, 0, 0]
+    assert ur.read_all().to_pylist() == utbl.to_pylist()
+
+
+@pytest.mark.spark
 def test_distributed_orc_sink(spark, tmp_path):
     """Partition-parallel ORC write; Spark's native reader reads the dir."""
     from orc_rs_spark.orcfile.spark_source import write_orc_dir
