@@ -34,7 +34,10 @@ from orc_rs_spark.kernels.byte_rle import boolean_rle_decode, boolean_rle_encode
 from orc_rs_spark.kernels.select import INT_CODECS, STR_CODECS, encode_ints_auto, encode_strings_auto
 from orc_rs_spark.kernels.varint import uvarint, varint_decode
 
-CODEC_VERSION = "2"  # bumped: per-stream columns replaced the packed blob
+# "2": per-stream columns replaced the packed blob; "3": the tokens stream
+# may be a frequency-ranked dictionary ("rankdict"). Decode dispatches on
+# each stream's codec tag, so v2 chunks still decode.
+CODEC_VERSION = "3"
 
 STREAMS = ("doc_id", "n_tok", "tokens", "source")
 STREAM_COLS = ("s_doc_id", "s_n_tok", "s_tokens", "s_source")
@@ -177,7 +180,7 @@ def encode_chunk(
     if min_val < -(1 << 31) or max_val >= (1 << 31):
         raise ValueError(
             f"token values [{min_val}, {max_val}] exceed int32; chunk format "
-            "v2 stores int32 tokens — split the column or widen the format"
+            f"v{CODEC_VERSION} stores int32 tokens — split the column or widen the format"
         )
     if len(flat) >= (1 << 31):
         raise ValueError("chunk too large: total token count must be < 2^31")
@@ -265,6 +268,19 @@ def chunk_columns_for(columns: tuple[str, ...] | None) -> list[str]:
     return need
 
 
+def _decoder(table: dict, tag: str, stream: str):
+    """The decode kernel for one stream's codec tag; an unknown tag (a
+    chunk from a newer writer, or a corrupt ``codec`` column) is a
+    ValueError naming the tag and the stream."""
+    try:
+        return table[tag][1]
+    except KeyError:
+        raise ValueError(
+            f"unknown codec {tag!r} for stream {stream} (this reader knows "
+            f"{sorted(table)}; chunk format v{CODEC_VERSION})"
+        ) from None
+
+
 def decode_chunk(row: dict, columns: tuple[str, ...] | None = None) -> pa.RecordBatch:
     """Chunk row -> RecordBatch (doc_id, tokens, n_tok, source).
 
@@ -275,6 +291,11 @@ def decode_chunk(row: dict, columns: tuple[str, ...] | None = None) -> pa.Record
     cols = tuple(columns) if columns else STREAMS
     codecs = row["codec"].split(",")
     block_tags = row["block_codec"].split(",")
+    if len(codecs) != len(STREAM_COLS) or len(block_tags) != len(STREAM_COLS):
+        raise ValueError(
+            f"chunk codec tags {row['codec']!r} / {row['block_codec']!r} do not "
+            f"name one codec per stream of {STREAM_COLS}"
+        )
     n_rows = int(row["n_rows"])
     n_values = int(row["n_values"])
 
@@ -288,14 +309,14 @@ def decode_chunk(row: dict, columns: tuple[str, ...] | None = None) -> pa.Record
     if "tokens" in cols or "n_tok" in cols:
         tok_present, len_payload = stream(1, "s_n_tok")
         n_dense = int(tok_present.sum()) if tok_present is not None else n_rows
-        lengths = INT_CODECS[codecs[1]][1](len_payload, n_dense)
+        lengths = _decoder(INT_CODECS, codecs[1], "s_n_tok")(len_payload, n_dense)
     if "doc_id" in cols:
         _, payload = stream(0, "s_doc_id")
-        out_arrays.append(STR_CODECS[codecs[0]][1](payload, n_rows))
+        out_arrays.append(_decoder(STR_CODECS, codecs[0], "s_doc_id")(payload, n_rows))
         out_names.append("doc_id")
     if "tokens" in cols:
         _, payload = stream(2, "s_tokens")
-        flat = INT_CODECS[codecs[2]][1](payload, n_values)
+        flat = _decoder(INT_CODECS, codecs[2], "s_tokens")(payload, n_values)
         offsets64 = np.concatenate(([0], np.cumsum(lengths)))
         dense_tokens = pa.ListArray.from_arrays(
             pa.array(offsets64.astype(np.int32)), pa.array(flat.astype(np.int32))
@@ -308,6 +329,7 @@ def decode_chunk(row: dict, columns: tuple[str, ...] | None = None) -> pa.Record
     if "source" in cols:
         src_present, payload = stream(3, "s_source")
         n_src = int(src_present.sum()) if src_present is not None else n_rows
-        out_arrays.append(_scatter(STR_CODECS[codecs[3]][1](payload, n_src), src_present))
+        decode_src = _decoder(STR_CODECS, codecs[3], "s_source")
+        out_arrays.append(_scatter(decode_src(payload, n_src), src_present))
         out_names.append("source")
     return pa.RecordBatch.from_arrays(out_arrays, names=out_names)

@@ -1,5 +1,5 @@
 """Standalone whole-chunk integer codecs: frame-of-reference, bit-packing,
-sorted dictionary, raw.
+sorted dictionary, frequency-ranked dictionary, raw.
 
 These are the north-star codecs absent from the reference (SURVEY.md §2.5):
 FoR and plain bit-packing as single-header chunk formats (fully vectorized,
@@ -9,13 +9,19 @@ Compression?", VLDB 2024 — PAPERS.md — which motivates keeping both and
 letting the measured-trial selector choose), sorted dictionary per the ORC
 dictionary requirement (/root/reference/src/column_reader/binary_reader.rs:154-230
 reads one; ORC spec requires sorted symbol order), and a raw little-endian
-fallback for incompressible data.
+fallback for incompressible data. The rank dictionary orders its symbols
+by descending frequency instead, so Zipf-distributed tokens get small
+ranks that fit one or two varint bytes and leave zlib a skewed byte
+stream to work on.
 
 Layout conventions (self-describing per chunk, all lengths varint):
 - for:     varint(zigzag(min)) + 1B width + bitpacked(v - min)
 - bitpack: 1B width + bitpacked(zigzag(v))
 - dict:    varint(n_dict) + varint(len(dict_stream)) + rlev2(sorted values)
            + rlev2(indices, unsigned)
+- rankdict: varint(n_dict) + varint(len(dict_stream))
+           + rlev2(values by descending frequency, ties by ascending
+             value) + varint(rank of each value)
 - raw:     1B item size (4|8) + little-endian values
 """
 
@@ -104,6 +110,64 @@ def dict_decode(buf: bytes, count: int) -> np.ndarray:
     uniq = rlev2_decode(b[used : used + dict_len], n_dict, signed=True)
     idx = rlev2_decode(b[used + dict_len :], count, signed=False)
     return uniq[idx]
+
+
+# ----------------------------------------------------------- rank dictionary
+
+# value ranges up to this wide are counted with np.bincount; wider ones
+# with np.unique (both give the same order)
+_BINCOUNT_SPAN = 1 << 20
+
+
+def _rank_table(v: np.ndarray, bincount: bool) -> tuple[np.ndarray, np.ndarray]:
+    """(distinct values by descending count then ascending value, rank of
+    each element of ``v``)."""
+    if bincount:
+        lo = v.min()
+        counts = np.bincount(v - lo)
+        uniq = np.flatnonzero(counts)
+        order = np.argsort(-counts[uniq], kind="stable")  # uniq ascends: ties by value
+        rank_of = np.empty(len(counts), dtype=np.uint32)
+        rank_of[uniq[order]] = np.arange(len(uniq), dtype=np.uint32)
+        return uniq[order] + lo, rank_of[v - lo]
+    uniq, inverse, counts = np.unique(v, return_inverse=True, return_counts=True)
+    order = np.argsort(-counts, kind="stable")
+    rank_of = np.empty(len(uniq), dtype=np.uint32)
+    rank_of[order] = np.arange(len(uniq), dtype=np.uint32)
+    return uniq[order], rank_of[inverse]
+
+
+def rankdict_encode(values: np.ndarray) -> bytes:
+    """Frequency-ranked symbol table (RLEv2) + one LEB128 rank per value."""
+    v = np.ascontiguousarray(values, dtype=np.int64)
+    if len(v) == 0:
+        return b""
+    by_rank, ranks = _rank_table(v, int(v.max()) - int(v.min()) < _BINCOUNT_SPAN)
+    dict_stream = rlev2_encode(by_rank, signed=True)
+    return uvarint(len(by_rank)) + uvarint(len(dict_stream)) + dict_stream + varint_encode(ranks)
+
+
+def rankdict_decode(buf: bytes, count: int) -> np.ndarray:
+    if count == 0:
+        return np.empty(0, dtype=np.int64)
+    b = np.frombuffer(buf, dtype=np.uint8)
+    try:
+        hdr, used = varint_decode(b, 2)
+    except ValueError as e:
+        raise ValueError(f"rankdict: header: {e}") from None
+    n_dict, dict_len = int(hdr[0]), int(hdr[1])
+    if n_dict == 0:
+        raise ValueError(f"rankdict: empty dictionary for {count} values")
+    if used + dict_len > len(b):
+        raise ValueError(f"rankdict: {dict_len}-byte dictionary runs past the {len(b)}-byte buffer")
+    try:
+        by_rank = rlev2_decode(b[used : used + dict_len], n_dict, signed=True)
+        ranks, _ = varint_decode(b[used + dict_len :], count)
+    except ValueError as e:
+        raise ValueError(f"rankdict: {e}") from None
+    if int(ranks.max()) >= n_dict:
+        raise ValueError(f"rankdict: rank {int(ranks.max())} outside the {n_dict}-entry dictionary")
+    return by_rank[ranks]
 
 
 # ----------------------------------------------------------- raw

@@ -25,6 +25,8 @@ from orc_rs_spark.kernels.intcodecs import (
     dict_encode,
     for_decode,
     for_encode,
+    rankdict_decode,
+    rankdict_encode,
     raw_decode,
     raw_encode,
 )
@@ -50,6 +52,7 @@ INT_CODECS = {
     "for": (for_encode, for_decode),
     "bitpack": (bitpack_encode, bitpack_decode),
     "dict": (dict_encode, dict_decode),
+    "rankdict": (rankdict_encode, rankdict_decode),
     "raw": (raw_encode, raw_decode),
 }
 
@@ -122,6 +125,7 @@ def candidate_int_codecs(st: dict) -> list[str]:
         cands.append("dict")
     if st["mean_run"] >= 3:
         cands.append("rlev2_rle")
+    cands.append("rankdict")  # last: a size tie keeps the older codec
     return cands
 
 

@@ -1,5 +1,5 @@
-"""Round-trip tests: byte RLE, boolean RLE, RLEv1, FoR, bitpack, dict, raw,
-block compression, FSST, string codecs.
+"""Round-trip tests: byte RLE, boolean RLE, RLEv1, FoR, bitpack, dict,
+rank dict, raw, block compression, FSST, string codecs.
 
 RLEv1 known-answer vectors come from FIXTURES.md F3 (backported from the
 reference's own tests at /root/reference/src/encoding/rlev1.rs:361-505).
@@ -24,10 +24,14 @@ from orc_rs_spark.kernels.intcodecs import (
     dict_encode,
     for_decode,
     for_encode,
+    rankdict_decode,
+    rankdict_encode,
     raw_decode,
     raw_encode,
 )
+from orc_rs_spark.kernels import intcodecs
 from orc_rs_spark.kernels.rlev1 import rlev1_decode, rlev1_encode
+from orc_rs_spark.kernels.rlev2 import rlev2_encode
 from orc_rs_spark.kernels.strings import (
     string_dict_decode,
     string_dict_encode,
@@ -116,8 +120,14 @@ INTS = {
 @pytest.mark.parametrize("name", sorted(INTS))
 @pytest.mark.parametrize(
     "enc,dec",
-    [(for_encode, for_decode), (bitpack_encode, bitpack_decode), (dict_encode, dict_decode), (raw_encode, raw_decode)],
-    ids=["for", "bitpack", "dict", "raw"],
+    [
+        (for_encode, for_decode),
+        (bitpack_encode, bitpack_decode),
+        (dict_encode, dict_decode),
+        (rankdict_encode, rankdict_decode),
+        (raw_encode, raw_decode),
+    ],
+    ids=["for", "bitpack", "dict", "rankdict", "raw"],
 )
 def test_int_codec_roundtrip(name, enc, dec):
     v = INTS[name]
@@ -132,6 +142,57 @@ def test_for_beats_bitpack_on_clustered():
 def test_dict_wins_low_distinct():
     v = INTS["low_distinct"]
     assert len(dict_encode(v)) < len(raw_encode(v)) / 4
+
+
+def test_rankdict_known_answer():
+    # 5 x3, 9 x2, then 2 and 7 once each (a count tie: the smaller value
+    # ranks first) -> dictionary [5, 9, 2, 7], ranks 0 0 1 2 0 1 3
+    v = np.array([5, 5, 9, 2, 5, 9, 7], dtype=np.int64)
+    dict_stream = rlev2_encode(np.array([5, 9, 2, 7], dtype=np.int64), signed=True)
+    want = bytes([4, len(dict_stream)]) + dict_stream + bytes([0, 0, 1, 2, 0, 1, 3])
+    assert rankdict_encode(v) == want
+    np.testing.assert_array_equal(rankdict_decode(want, len(v)), v)
+
+
+@pytest.mark.parametrize("name", ["zipf", "negative", "low_distinct", "ties"])
+def test_rankdict_count_branches_give_identical_bytes(name, monkeypatch):
+    """np.bincount (value range < 2^20) and np.unique (any range) must
+    rank the same values identically."""
+    v = {
+        "zipf": np.minimum(RNG.zipf(1.1, 50_000), 100_000).astype(np.int64),
+        "negative": RNG.integers(-500, 500, 20_000).astype(np.int64),
+        "low_distinct": INTS["low_distinct"],
+        "ties": RNG.permutation(np.repeat(np.arange(-40, 40, dtype=np.int64), 3)),
+    }[name]
+    assert int(v.max()) - int(v.min()) < intcodecs._BINCOUNT_SPAN
+    counted = rankdict_encode(v)
+    monkeypatch.setattr(intcodecs, "_BINCOUNT_SPAN", 0)  # force np.unique
+    assert rankdict_encode(v) == counted
+    np.testing.assert_array_equal(rankdict_decode(counted, len(v)), v)
+
+
+def _rankdict_parts(dict_values, ranks, n_dict=None, dict_len=None):
+    dict_stream = rlev2_encode(np.array(dict_values, dtype=np.int64), signed=True)
+    n_dict = len(dict_values) if n_dict is None else n_dict
+    dict_len = len(dict_stream) if dict_len is None else dict_len
+    return bytes([n_dict, dict_len]) + dict_stream + bytes(ranks)
+
+
+@pytest.mark.parametrize(
+    "buf,count,match",
+    [
+        (_rankdict_parts([10, 20], [0, 1, 0]), 4, "rankdict: varint stream truncated"),
+        (_rankdict_parts([10, 20], [0, 1, 0x80]), 3, "rankdict: varint stream truncated"),
+        (_rankdict_parts([10, 20], [0, 2, 1]), 3, r"rankdict: rank 2 outside the 2-entry"),
+        (_rankdict_parts([], [0, 0], n_dict=0), 2, "rankdict: empty dictionary"),
+        (_rankdict_parts([10, 20], [0, 1], dict_len=100), 2, "rankdict: 100-byte dictionary runs past"),
+        (bytes([0x85]), 1, "rankdict: header"),
+    ],
+    ids=["short-ranks", "cut-varint", "rank-too-big", "empty-dict", "dict-past-end", "cut-header"],
+)
+def test_rankdict_corrupt_input_raises(buf, count, match):
+    with pytest.raises(ValueError, match=match):
+        rankdict_decode(buf, count)
 
 
 # ------------------------------------------------------------- block comp

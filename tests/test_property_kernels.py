@@ -20,12 +20,14 @@ from orc_rs_spark.kernels.intcodecs import (
     dict_encode,
     for_decode,
     for_encode,
+    rankdict_decode,
+    rankdict_encode,
     raw_decode,
     raw_encode,
 )
 from orc_rs_spark.kernels.rlev1 import rlev1_decode, rlev1_encode
 from orc_rs_spark.kernels.rlev2 import rlev2_decode, rlev2_encode, rlev2_encode_runs
-from orc_rs_spark.kernels.varint import varint_decode, varint_encode
+from orc_rs_spark.kernels.varint import uvarint, varint_decode, varint_encode
 from orc_rs_spark.kernels.zigzag import zigzag_decode, zigzag_encode
 
 i64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
@@ -45,6 +47,21 @@ def test_varint_roundtrip(xs):
     v = np.array(xs, dtype=np.uint64)
     dec, used = varint_decode(varint_encode(v), len(v))
     np.testing.assert_array_equal(dec, v)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.integers(min_value=0, max_value=64).flatmap(
+    lambda w: st.lists(st.integers(min_value=0, max_value=(1 << w) - 1), min_size=0, max_size=40)
+))
+def test_varint_matches_scalar_at_every_width(xs):
+    """The array kernels equal the one-value ``uvarint`` loop at every value
+    width from 0 to 64 bits, and decode inverts them."""
+    v = np.array(xs, dtype=np.uint64)
+    buf = varint_encode(v)
+    assert buf == b"".join(uvarint(x) for x in xs)
+    dec, used = varint_decode(buf + b"\x01\x80", len(xs))
+    np.testing.assert_array_equal(dec, v)
+    assert used == len(buf)
 
 
 @settings(max_examples=60, deadline=None)
@@ -81,10 +98,52 @@ def test_intcodecs_roundtrip(v):
         (for_encode, for_decode),
         (bitpack_encode, bitpack_decode),
         (dict_encode, dict_decode),
+        (rankdict_encode, rankdict_decode),
         (raw_encode, raw_decode),
         (rlev1_encode, rlev1_decode),
     ):
         np.testing.assert_array_equal(dec(enc(v), len(v)), v)
+
+
+# rank dictionary inputs: vocabulary-sized ranges (the np.bincount branch),
+# negative values, the int32 extremes, and skewed repeats
+small_range = st.integers(min_value=-(2**19), max_value=2**19 - 1)
+i32_edges = st.sampled_from([-(2**31), -(2**31) + 1, -1, 0, 1, 2**31 - 2, 2**31 - 1])
+rank_arrays = st.one_of(
+    st.lists(small_range, min_size=0, max_size=300),
+    st.lists(st.one_of(i32_edges, i32), min_size=0, max_size=300),
+    st.lists(st.integers(min_value=-5, max_value=5), min_size=0, max_size=300),
+    run_arrays.map(list),
+).map(lambda x: np.array(x, dtype=np.int64))
+
+
+@settings(max_examples=120, deadline=None)
+@given(rank_arrays)
+def test_rankdict_roundtrip(v):
+    np.testing.assert_array_equal(rankdict_decode(rankdict_encode(v), len(v)), v)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["empty", "single", "all_distinct", "negative", "int32_extremes", "over_2^16_distinct", "range_over_2^20"],
+)
+def test_rankdict_roundtrip_shapes(name):
+    rng = np.random.default_rng(7)
+    v = {
+        "empty": np.array([], dtype=np.int64),
+        "single": np.array([-12345], dtype=np.int64),
+        "all_distinct": rng.permutation(5000).astype(np.int64) - 2500,
+        "negative": -rng.zipf(1.2, 4000).astype(np.int64),
+        "int32_extremes": np.array([-(2**31), 2**31 - 1] * 50 + [0], dtype=np.int64),
+        # > 2^16 distinct ranks: varints of three bytes
+        "over_2^16_distinct": rng.permutation(np.repeat(np.arange(70_000, dtype=np.int64), 2)),
+        # range > 2^20: the np.unique branch
+        "range_over_2^20": rng.choice(np.array([-(2**30), 3, 2**21, 2**30], dtype=np.int64), 3000),
+    }[name]
+    enc = rankdict_encode(v)
+    np.testing.assert_array_equal(rankdict_decode(enc, len(v)), v)
+    if len(v) == 0:
+        assert enc == b""
 
 
 @settings(max_examples=50, deadline=None)

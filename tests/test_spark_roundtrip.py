@@ -5,10 +5,15 @@ byte-for-byte array comparison; the default hash-proxy mode is pinned
 against it in test_verify_roundtrip_hash_mode_detects_tampering.
 """
 
+import base64
+import json
+import os
+
 import numpy as np
 import pyarrow as pa
 import pytest
 
+from orc_rs_spark import chunk as chunk_mod
 from orc_rs_spark.chunk import decode_chunk, encode_chunk
 from orc_rs_spark.decoder import decode_table, verify_roundtrip
 from orc_rs_spark.encoder import encode_table
@@ -61,6 +66,89 @@ def test_chunk_empty_tokens_rows():
     )
     out = decode_chunk(encode_chunk(batch, 0))
     assert out.column("tokens").to_pylist() == [[], [1, 2, 3], []]
+
+
+def _zipf_batch(n_rows: int, seed: int) -> pa.RecordBatch:
+    """Zipf(1.1) token ids over a shuffled 128k vocabulary, as LM corpora have."""
+    rng = np.random.default_rng(seed)
+    vocab = 128_256
+    lengths = rng.integers(50, 400, n_rows)
+    cdf = np.cumsum(np.arange(1, vocab + 1, dtype=np.float64) ** -1.1)
+    ranks = np.searchsorted(cdf / cdf[-1], rng.random(int(lengths.sum())), side="right")
+    flat = rng.permutation(vocab)[np.minimum(ranks, vocab - 1)].astype(np.int32)
+    offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int32)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([f"doc{i}" for i in range(n_rows)]),
+            pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat)),
+            pa.array(lengths.astype(np.int32)),
+            pa.array(["web"] * n_rows),
+        ],
+        names=["doc_id", "tokens", "n_tok", "source"],
+    )
+
+
+def test_zipf_tokens_pick_rankdict(monkeypatch):
+    """Frequency-ranked ids of Zipf tokens take one or two varint bytes
+    that zlib still shrinks; a frame of reference packs 17-bit ids it
+    cannot. The whole chunk must come out >= 25% smaller."""
+    batch = _zipf_batch(800, seed=11)
+    row = encode_chunk(batch, 0)
+    assert row["codec"].split(",")[2] == "rankdict"
+    assert decode_chunk(row).column("tokens").equals(batch.column("tokens"))
+
+    auto = chunk_mod.encode_ints_auto
+
+    def tokens_through_for(values, boundaries=None):
+        if boundaries is None:  # the lengths stream keeps its own pick
+            return auto(values)
+        return "for", chunk_mod.INT_CODECS["for"][0](values)
+
+    monkeypatch.setattr(chunk_mod, "encode_ints_auto", tokens_through_for)
+    forced = encode_chunk(batch, 0)
+    assert forced["codec"].split(",")[2] == "for"
+    assert row["enc_bytes"] <= 0.75 * forced["enc_bytes"], (row["enc_bytes"], forced["enc_bytes"])
+
+
+V2_CHUNKS = os.path.join(os.path.dirname(__file__), "data", "chunks_v2.json")
+
+
+def _v2_rows():
+    with open(V2_CHUNKS) as f:
+        cases = json.load(f)
+    for case in cases:
+        row = dict(case["row"])
+        for col in chunk_mod.STREAM_COLS + ("bloom",):
+            row[col] = base64.b64decode(row[col])
+        yield row, case["expect"]
+
+
+@pytest.mark.parametrize("i", range(4), ids=["for", "bitpack", "dict", "rlev2"])
+def test_v2_chunks_still_decode(i):
+    """Chunk rows written by the format v2 encoder (one per token codec:
+    for, bitpack, dict, rlev2; with nulls and zlib blocks) decode
+    bit-identically under the current reader."""
+    row, expect = list(_v2_rows())[i]
+    assert row["codec"].split(",")[2] == ["for", "bitpack", "dict", "rlev2"][i]
+    out = decode_chunk(row)
+    assert out.to_pydict() == expect
+    assert out.column("tokens").type == pa.list_(pa.int32())
+
+
+@pytest.mark.parametrize(
+    "codec,match",
+    [
+        ("str_direct,for,huffman,str_dict", "unknown codec 'huffman' for stream s_tokens"),
+        ("str_zstd,for,for,str_dict", "unknown codec 'str_zstd' for stream s_doc_id"),
+        ("str_direct,for,for", "do not name one codec per stream"),
+    ],
+    ids=["int-tag", "str-tag", "short-list"],
+)
+def test_decode_chunk_unknown_codec_names_stream(codec, match):
+    row, _ = next(_v2_rows())
+    row["codec"] = codec
+    with pytest.raises(ValueError, match=match):
+        decode_chunk(row)
 
 
 # ------------------------------------------------------- distributed
