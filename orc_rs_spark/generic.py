@@ -43,7 +43,7 @@ from orc_rs_spark.kernels.blockcomp import block_decompress
 from orc_rs_spark.kernels.byte_rle import boolean_rle_decode, boolean_rle_encode
 from orc_rs_spark.kernels.floats import float_decode, float_encode
 from orc_rs_spark.kernels.select import INT_CODECS, STR_CODECS, encode_ints_auto, encode_strings_auto
-from orc_rs_spark.kernels.varint import varint_decode, varint_encode
+from orc_rs_spark.kernels.varint import uvarint, varint_decode, varint_encode
 
 GENERIC_CHUNK_DDL = (
     "part_id int, n_rows bigint, schema_json string, codecs array<string>, "
@@ -139,19 +139,10 @@ def _encode_column(arr: pa.Array) -> tuple[str, bytes]:
 
 
 def _frame_bytes(present: np.ndarray | None, tag: str, payload: bytes) -> bytes:
-    parts = []
-    if present is None:
-        parts.append(varint_encode(np.array([0], dtype=np.uint64)))
-    else:
-        prle = boolean_rle_encode(present)
-        parts.append(varint_encode(np.array([len(prle)], dtype=np.uint64)))
-        parts.append(prle)
+    prle = b"" if present is None else boolean_rle_encode(present)
     tb = tag.encode()
-    parts.append(varint_encode(np.array([len(tb)], dtype=np.uint64)))
-    parts.append(tb)
-    parts.append(varint_encode(np.array([len(payload)], dtype=np.uint64)))
-    parts.append(payload)
-    return b"".join(parts)
+    return b"".join((uvarint(len(prle)), prle, uvarint(len(tb)), tb,
+                     uvarint(len(payload)), payload))
 
 
 def encode_frame(arr: pa.Array) -> bytes:
@@ -188,31 +179,33 @@ def _encode_composite(arr: pa.Array) -> tuple[str, bytes]:
     return "frame", encode_frame(arr)
 
 
-def _read_varint_py(buf: bytes, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            return result, pos
-        shift += 7
+def _frame_field(buf: bytes, pos: int, what: str) -> tuple[int, int]:
+    """(length header at ``pos``, position after the ``length`` bytes it
+    announces); a cut header or a length past the buffer is a ValueError."""
+    hdr, used = varint_decode(np.frombuffer(buf, dtype=np.uint8)[pos : pos + 10], 1)
+    pos += used
+    n = int(hdr[0])
+    if pos + n > len(buf):
+        raise ValueError(
+            f"generic frame: {what} of {n} bytes at offset {pos} runs past "
+            f"the {len(buf)}-byte buffer"
+        )
+    return n, pos
 
 
 def decode_frame(buf: bytes, pos: int, n: int, dtype: pa.DataType) -> tuple[pa.Array, int]:
     """Decode one frame at ``pos`` expecting ``n`` rows of ``dtype``."""
-    plen, pos = _read_varint_py(buf, pos)
+    plen, pos = _frame_field(buf, pos, "PRESENT stream")
     present = None
     if plen:
         present = boolean_rle_decode(np.frombuffer(buf[pos : pos + plen], dtype=np.uint8), n)
         present = present.astype(bool)
         pos += plen
     n_dense = int(present.sum()) if present is not None else n
-    tlen, pos = _read_varint_py(buf, pos)
+    tlen, pos = _frame_field(buf, pos, "tag")
     tag = buf[pos : pos + tlen].decode()
     pos += tlen
-    paylen, pos = _read_varint_py(buf, pos)
+    paylen, pos = _frame_field(buf, pos, f"{tag!r} payload")
     end = pos + paylen
     if tag.startswith("struct:"):
         fields = []
@@ -222,7 +215,7 @@ def decode_frame(buf: bytes, pos: int, n: int, dtype: pa.DataType) -> tuple[pa.A
         dense = pa.StructArray.from_arrays(fields, names=[dtype.field(i).name for i in range(dtype.num_fields)])
     elif tag.startswith(("Lst:", "Map:")):
         lc = tag.partition(":")[2]
-        llen, pos = _read_varint_py(buf, pos)
+        llen, pos = _frame_field(buf, pos, f"{tag!r} LENGTH stream")
         lengths = INT_CODECS[lc][1](np.frombuffer(buf[pos : pos + llen], dtype=np.uint8), n_dense)
         pos += llen
         offsets = pa.array(np.concatenate(([0], np.cumsum(lengths))).astype(np.int32))
@@ -261,10 +254,11 @@ def _decode_column(tag: str, payload: bytes, n: int, dtype: pa.DataType) -> pa.A
         return pa.Array.from_buffers(dtype, n, [None, pa.py_buffer(pairs.tobytes())])
     if kind == "dec2":
         lc, _, hc = rest.partition(":")
-        b = bytes(payload)
-        llen, used = _read_varint_py(b, 0)
-        lo = INT_CODECS[lc][1](np.frombuffer(b[used : used + llen], dtype=np.uint8), n)
-        hi = INT_CODECS[hc][1](np.frombuffer(b[used + llen :], dtype=np.uint8), n)
+        b = np.frombuffer(payload, dtype=np.uint8)
+        hdr, used = varint_decode(b[:10], 1)
+        llen = int(hdr[0])
+        lo = INT_CODECS[lc][1](b[used : used + llen], n)
+        hi = INT_CODECS[hc][1](b[used + llen :], n)
         pairs = np.empty((n, 2), dtype=np.int64)
         pairs[:, 0] = lo
         pairs[:, 1] = hi

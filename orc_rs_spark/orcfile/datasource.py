@@ -26,10 +26,10 @@ real encoder, see kernels/blockcomp.py), ``stripe_rows``,
 (comma-separated, write), ``batch_rows`` (read), ``evolve`` (read /
 readStream: union evolved schemas instead of refusing mixed dirs).
 
-Planning runs on the driver with the thread-pooled tail reader (the
-data source API plans inside Spark's job machinery, so the distributed
-planning job of ``read_orc`` does not apply here); reads are one task
-per (file, stripe) like every other scan in this package.
+Planning runs on the driver (``spark_source.plan_scan``, the planner
+``read_orc`` uses), and every read is ``spark_source.scan_stripes`` over
+one (file, stripe) partition — the same stripe task as every other scan
+in this package.
 """
 
 from __future__ import annotations
@@ -58,12 +58,17 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from orc_rs_spark.orcfile.spark_source import (
+    evolve_target,
+    orc_files,
+    orc_schema_ddl,
+    plan_scan,
+    scan_stripes,
+)
 from orc_rs_spark.orcfile.writer import write_task_file
 
 
 def _resolve_files(options) -> list[str]:
-    from orc_rs_spark.orcfile.spark_source import orc_files
-
     path = options.get("path")
     if not path:
         raise ValueError("orc_rs: a path is required (use .load(path))")
@@ -90,10 +95,13 @@ def _evolve_on(options) -> bool:
     return str(options.get("evolve", "false")).lower() in ("true", "1")
 
 
-def _evolve_full(options) -> "pa.Schema":
-    from orc_rs_spark.orcfile.spark_source import evolve_target
-
-    return evolve_target(_resolve_files(options))[0]
+def _evolve_read_target(files: list[str], columns: list[str], full=None) -> pa.Schema:
+    """The evolved union in the read schema's column order, the order
+    Spark takes batch columns in. ``full`` is the union of every column
+    when ``schema()`` already computed it (one union pass)."""
+    if full is None or full.names != columns:
+        full = evolve_target(files, columns)[0]
+    return pa.schema([full.field(c) for c in columns])
 
 
 class OrcRsReader(DataSourceReader):
@@ -103,20 +111,8 @@ class OrcRsReader(DataSourceReader):
         self.batch_rows = int(options.get("batch_rows", 65536))
         self.columns = [f.name for f in schema.fields]
         self.evolve = _evolve_on(options)
-        self._target = None
-        if self.evolve:
-            # evolved target schema, trimmed/ordered to the read schema
-            # (one union computation — the DataSource caches it so
-            # schema() and reader() don't each re-read every tail)
-            full = evolve_full if evolve_full is not None else _evolve_full(options)
-            missing = [c for c in self.columns if c not in full.names]
-            if missing:
-                raise ValueError(
-                    f"unknown columns {missing}; table has {sorted(full.names)}"
-                )
-            self._target = pa.schema([
-                full.field(full.names.index(c)) for c in self.columns
-            ])
+        self._target = (_evolve_read_target(self.files, self.columns, evolve_full)
+                        if self.evolve else None)
         # predicates pushed by Catalyst: absorbed (exact in-task residual)
         # vs hint-only (pruning superset; Spark re-applies the filter)
         self._absorbed: list[tuple] = []
@@ -171,63 +167,21 @@ class OrcRsReader(DataSourceReader):
         return unsupported
 
     def partitions(self):
-        from orc_rs_spark.orcfile.spark_source import _plan_scan_threaded
-
-        preds = self._absorbed + self._hints or None
         # evolve: no mixed-schema gate — compatibility was proven by the union
-        work = _plan_scan_threaded(self.files, preds,
-                                   require_uniform=not self.evolve)
+        work = plan_scan(self.files, self._absorbed + self._hints,
+                         require_uniform=not self.evolve)
         return [OrcStripePartition(f, i) for f, i in work] or [
             OrcStripePartition(self.files[0], -1)  # all stripes pruned
         ]
 
     def read(self, partition: OrcStripePartition):
-        from orc_rs_spark.orcfile.reader import OrcFileReader
-        from orc_rs_spark.orcfile.spark_source import _apply_residual, _spark_friendly
-
         if partition.stripe < 0:
             return
-        r = OrcFileReader(partition.path)
-        if self.evolve:
-            from orc_rs_spark.orcfile.spark_source import evolve_decode_stripe
-
-            for batch in evolve_decode_stripe(
-                r, partition.stripe, self._target,
-                self._absorbed + self._hints or None, self.batch_rows,
-                null_preds=self._null_preds or None,
-            ):
-                if self._absorbed:
-                    batch = _apply_residual(batch, self._absorbed)
-                if self._null_preds:
-                    batch = self._null_residual(batch)
-                if batch.num_rows:
-                    yield batch
-            return
-        groups = r.prune_row_groups_where(
-            partition.stripe, self._absorbed + self._hints, self._null_preds
+        yield from scan_stripes(
+            [(partition.path, partition.stripe)], self.columns,
+            self._absorbed + self._hints, self._null_preds,
+            residual=self._absorbed, target=self._target, batch_rows=self.batch_rows,
         )
-        if groups == []:
-            return
-        for batch in r.read_stripe_batches(
-            partition.stripe, self.columns, batch_rows=self.batch_rows,
-            row_groups=groups,
-        ):
-            if self._absorbed:
-                batch = _apply_residual(batch, self._absorbed)
-            if self._null_preds:
-                batch = self._null_residual(batch)
-            if batch.num_rows:
-                yield _spark_friendly(batch)
-
-    def _null_residual(self, batch: pa.RecordBatch) -> pa.RecordBatch:
-        import pyarrow.compute as pc
-
-        mask = None
-        for col_name, want_null in self._null_preds:
-            col = batch.column(batch.schema.get_field_index(col_name))
-            m = pc.is_null(col) if want_null else pc.is_valid(col)
-            mask = m if mask is None else pc.and_(mask, m)
-        return batch.filter(mask) if mask is not None else batch
 
 
 class _WriteOptions:
@@ -454,17 +408,8 @@ class OrcRsStreamReader(DataSourceStreamReader):
         # already materializes.
         self._seen: set[str] = set()
         self._planned_hi: str = ""
-        self._target = None
-        if self.evolve:
-            full = _evolve_full(options)
-            missing = [c for c in self.columns if c not in full.names]
-            if missing:
-                raise ValueError(
-                    f"unknown columns {missing}; table has {sorted(full.names)}"
-                )
-            self._target = pa.schema([
-                full.field(full.names.index(c)) for c in self.columns
-            ])
+        self._target = (_evolve_read_target(_resolve_files(options), self.columns)
+                        if self.evolve else None)
 
     def _names(self) -> list[str]:
         return sorted(
@@ -508,8 +453,6 @@ class OrcRsStreamReader(DataSourceStreamReader):
         return {"last": names[-1] if names else ""}
 
     def partitions(self, start: dict, end: dict):
-        from orc_rs_spark.orcfile.spark_source import _plan_scan_threaded
-
         lo, hi = start.get("last", ""), end.get("last", "")
         names = self._names()
         # record the planning glob: every listed name <= hi is accounted
@@ -521,27 +464,14 @@ class OrcRsStreamReader(DataSourceStreamReader):
         files = [os.path.join(self.path, n) for n in names if lo < n <= hi]
         if not files:
             return []
-        work = _plan_scan_threaded(files, None, require_uniform=not self.evolve)
+        work = plan_scan(files, None, require_uniform=not self.evolve)
         return [OrcStripePartition(f, i) for f, i in work]
 
     def read(self, partition: OrcStripePartition):
-        from orc_rs_spark.orcfile.reader import OrcFileReader
-        from orc_rs_spark.orcfile.spark_source import (
-            _spark_friendly,
-            evolve_decode_stripe,
+        yield from scan_stripes(
+            [(partition.path, partition.stripe)], self.columns,
+            target=self._target, batch_rows=self.batch_rows,
         )
-
-        r = OrcFileReader(partition.path)
-        if self.evolve:
-            yield from evolve_decode_stripe(
-                r, partition.stripe, self._target, None, self.batch_rows
-            )
-            return
-        for batch in r.read_stripe_batches(
-            partition.stripe, self.columns, batch_rows=self.batch_rows
-        ):
-            if batch.num_rows:
-                yield _spark_friendly(batch)
 
     def commit(self, end: dict) -> None:
         pass
@@ -556,9 +486,6 @@ class OrcRsDataSource(DataSource):
         return "orc_rs"
 
     def schema(self):
-        from orc_rs_spark.orcfile.reader import read_tail
-        from orc_rs_spark.orcfile.spark_source import _orc_type_ddl
-
         try:
             files = _resolve_files(self.options)
         except ValueError as e:
@@ -567,17 +494,10 @@ class OrcRsDataSource(DataSource):
                 "populated yet, pass an explicit .schema(...)"
             ) from None
         if _evolve_on(self.options):
-            from orc_rs_spark.orcfile.spark_source import evolve_target
-
             full, ddl = evolve_target(files)
             self._evolve_cache = full  # reused by reader(): one union pass
             return ddl
-        tail = read_tail(files[0])
-        root = tail.footer.types[0]
-        return ", ".join(
-            f"{n} {_orc_type_ddl(tail.footer.types, s, scan=True)}"
-            for n, s in zip(root.field_names, root.subtypes)
-        )
+        return orc_schema_ddl(files[0], scan=True)
 
     def reader(self, schema) -> OrcRsReader:
         return OrcRsReader(self.options, schema,

@@ -42,6 +42,7 @@ from orc_rs_spark.orcfile.errors import OrcFormatError
 from orc_rs_spark.orcfile.reader import (
     OrcTail,
     as_source,
+    map_files,
     orc_stream_decompress,
     read_tail,
     schema_signature,
@@ -239,10 +240,10 @@ def compact_orc_dir(spark, in_dir: str, out_dir: str,
 
     ``group_by_schema=True`` compacts a directory whose schema EVOLVED
     over time: files are first grouped by (schema signature,
-    compression, rowIndexStride) — one driver-side thread-pooled tail
-    read per file, the one case where planning must look past the
-    listing — and each generation compacts into its own single-schema
-    output files, which ``read_orc_evolve`` / the format's evolve mode
+    compression, rowIndexStride) — one tail read per file on the driver,
+    through ``reader.map_files``'s thread pool, the one case where
+    planning must look past the listing — and each generation compacts
+    into its own single-schema output files, which ``read_orc_evolve`` / the format's evolve mode
     then read as one table.
 
     ``name_prefix`` controls the output file names
@@ -269,18 +270,15 @@ def compact_orc_dir(spark, in_dir: str, out_dir: str,
     if not files:
         raise ValueError(f"compact_orc_dir: no ORC files in {in_dir}")
     if group_by_schema:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
-            keys = list(ex.map(
-                lambda f: (
-                    schema_signature(t := read_tail(f)),
-                    t.postscript.compression,
-                    t.postscript.compression_block_size,
-                    t.footer.row_index_stride,
-                ),
-                files,
-            ))
+        keys = map_files(
+            lambda f: (
+                schema_signature(t := read_tail(f)),
+                t.postscript.compression,
+                t.postscript.compression_block_size,
+                t.footer.row_index_stride,
+            ),
+            files,
+        )
         by_key: dict = {}
         for f, k in zip(files, keys):
             by_key.setdefault(k, []).append(f)

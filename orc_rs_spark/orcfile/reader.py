@@ -157,6 +157,16 @@ def read_tail(path) -> OrcTail:
     return OrcTail(postscript=ps, footer=footer, file_length=file_len)
 
 
+def map_files(fn, files: list) -> list:
+    """``[fn(f) for f in files]`` through a thread pool of up to 32
+    workers: per-file tail and Metadata reads are I/O-bound and release
+    the GIL, so the pool hides their latency on the driver."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=max(1, min(32, len(files)))) as ex:
+        return list(ex.map(fn, files))
+
+
 def read_stripe_statistics(path, tail: OrcTail | None = None) -> list[list[proto.ColumnStatistics]]:
     """Per-stripe column statistics from the file's Metadata section —
     the pruning index the reference parses but never uses

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from orc_rs_spark.orcfile.reader import (
     OrcFileReader,
+    map_files,
     predicate_form,
     prune_stripes_stats,
     read_stripe_statistics,
@@ -25,31 +26,35 @@ from orc_rs_spark.orcfile.reader import (
 )
 
 
-def _apply_residual(batch: pa.RecordBatch, predicates: list[tuple]) -> pa.RecordBatch:
-    """Vectorized in-task row filter for the scan's predicates (SQL
-    semantics: NULL matches nothing). Pruning keeps the superset; this
-    keeps the exact rows, so only matches cross the Python->JVM wire."""
+def _residual_filter(batch: pa.RecordBatch, predicates, null_preds) -> pa.RecordBatch:
+    """Vectorized in-task row filter: range and IN predicates (SQL
+    semantics: NULL matches neither) and ``(column, want_null)`` IS [NOT]
+    NULL tests. Pruning keeps the superset; this keeps the exact rows, so
+    only matches cross the Python->JVM wire."""
     import pyarrow.compute as pc
 
-    mask = None
+    masks = []
     for p in predicates:
         form = predicate_form(p)
-        col = batch.column(batch.schema.get_field_index(form[1]))
+        col = batch.column(form[1])
         if form[0] == "range":
             lo, hi = form[2], form[3]
-            parts = []
             if lo is not None:
-                parts.append(pc.greater_equal(col, lo))
+                masks.append(pc.fill_null(pc.greater_equal(col, lo), False))
             if hi is not None:
-                parts.append(pc.less_equal(col, hi))
-            if not parts:
-                continue  # (col, None, None): no constraint
-            m = parts[0] if len(parts) == 1 else pc.and_(parts[0], parts[1])
+                masks.append(pc.fill_null(pc.less_equal(col, hi), False))
         else:
-            m = pc.is_in(col, value_set=pa.array(form[2], type=col.type))
-        m = pc.fill_null(m, False)
-        mask = m if mask is None else pc.and_(mask, m)
-    return batch.filter(mask) if mask is not None else batch
+            masks.append(pc.fill_null(
+                pc.is_in(col, value_set=pa.array(form[2], type=col.type)), False))
+    for name, want_null in null_preds:
+        col = batch.column(name)
+        masks.append(pc.is_null(col) if want_null else pc.is_valid(col))
+    if not masks:
+        return batch
+    mask = masks[0]
+    for m in masks[1:]:
+        mask = pc.and_(mask, m)
+    return batch.filter(mask)
 
 _PA_TO_DDL = {
     pa.bool_(): "boolean",
@@ -152,13 +157,16 @@ def _orc_type_ddl(types: list, col_id: int, scan: bool = False) -> str:
     raise ValueError(f"no Spark DDL mapping for ORC kind {t.kind!r}")
 
 
-def orc_schema_ddl(path: str) -> str:
-    """Spark DDL for an ORC file's schema, from the footer alone."""
+def orc_schema_ddl(path: str, scan: bool = False, columns: list[str] | None = None) -> str:
+    """Spark DDL for an ORC file's schema, from the footer alone.
+    ``scan=True`` gives the scan's variant (see ``_orc_type_ddl``);
+    ``columns`` keeps only those top-level fields, in file order."""
     tail = read_tail(path)
     root = tail.footer.types[0]
     return ", ".join(
-        f"{name} {_orc_type_ddl(tail.footer.types, sub)}"
+        f"{name} {_orc_type_ddl(tail.footer.types, sub, scan)}"
         for name, sub in zip(root.field_names, root.subtypes)
+        if columns is None or name in columns
     )
 
 
@@ -185,22 +193,6 @@ def orc_files(path: str | list[str]) -> list[str]:
     return [path]
 
 
-def _pairs_from_plan(batches) -> Iterator[tuple]:
-    """(file, stripe) pairs from a distributed-plan (path, stripe)
-    DataFrame's Arrow batches — shared by read_orc / read_orc_evolve."""
-    for b in batches:
-        yield from zip(b.column("path").to_pylist(), b.column("stripe").to_pylist())
-
-
-def _pairs_from_ids(batches, work: list) -> Iterator[tuple]:
-    """(file, stripe) pairs by indexing the closure-carried work list with
-    a pure-JVM ``range`` DataFrame's ids — shared by read_orc /
-    read_orc_evolve small-scan paths."""
-    for b in batches:
-        for i in b.column("id").to_pylist():
-            yield work[int(i)]
-
-
 def _plan_file(f: str, predicates: list[tuple] | None) -> tuple[str, tuple, list[int]]:
     """Plan one file: (path, schema signature, surviving stripe ids).
     ONE tail read; when predicates are set, ONE Metadata read/parse covers
@@ -214,21 +206,13 @@ def _plan_file(f: str, predicates: list[tuple] | None) -> tuple[str, tuple, list
     return f, schema_signature(tail), keep
 
 
-# planning fans out to a Spark job above this file count; below it, a
-# driver-side thread pool hides the per-file tail-read latency
-DISTRIBUTED_PLAN_THRESHOLD = 512
-
-
-def _plan_scan_threaded(files, predicates,
-                        require_uniform: bool = True) -> list[tuple[str, int]]:
-    """(file, stripe) work units via a driver thread pool (I/O-bound, GIL
-    released in file reads), with mixed-schema detection on the driver.
-    ``require_uniform=False`` skips the gate for evolved scans whose
-    compatibility was already proven via the schema union."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
-        plans = list(ex.map(lambda f: _plan_file(f, predicates), files))
+def plan_scan(files, predicates, require_uniform: bool = True) -> list[tuple[str, int]]:
+    """(file, stripe) work units for a scan, planned on the driver: one
+    tail (+ one Metadata) read per file through ``map_files``, with
+    mixed-schema detection. ``require_uniform=False`` skips the gate for
+    evolved scans whose compatibility was already proven via the schema
+    union."""
+    plans = map_files(lambda f: _plan_file(f, predicates), files)
     schema_sig, sig_file = None, None
     work: list[tuple[str, int]] = []
     for f, sig, keep in plans:
@@ -246,39 +230,137 @@ def _plan_scan_threaded(files, predicates,
     return work
 
 
-def _plan_scan_distributed(spark, files, predicates, sig0: tuple | None, sig_file: str,
-                           require_uniform: bool = True) -> DataFrame:
-    """(path, stripe) plan DataFrame from a Spark job over the file list —
-    the driver never opens a data file and never collects the plan: tasks
-    read their files' tails + Metadata, prune stripes for every predicate
-    in one pass, validate the schema signature against file 0's (failing
-    fast with both file names), and the resulting plan rows flow straight
-    into the decode stage. At 10^6 part files / 10^7 stripes nothing
-    scales with the table on the driver except the path list itself.
-    ``require_uniform=False`` skips the schema gate, as in
-    ``_plan_scan_threaded``."""
-    n_tasks = scan_partitions(len(files), spark.sparkContext.defaultParallelism)
-    paths_df = spark.createDataFrame(
-        [(f,) for f in files], "path string"
-    ).repartition(n_tasks)
+def _adapt(batch: pa.RecordBatch, target: pa.Schema, path: str) -> pa.RecordBatch:
+    """One file's batch in an evolved target schema: missing fields as
+    typed NULLs, narrower numerics widened through a safe Arrow cast."""
+    import pyarrow.compute as pc
 
-    def plan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            for f in b.column("path").to_pylist():
-                _f, sig, keep = _plan_file(f, predicates)
-                if require_uniform and sig != sig0:
-                    raise ValueError(
-                        f"ORC schema mismatch in one scan: {f} differs from {sig_file}"
-                    )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([f] * len(keep), type=pa.string()),
-                        pa.array(keep, type=pa.int64()),
-                    ],
-                    names=["path", "stripe"],
+    arrays = []
+    for field in target:
+        idx = batch.schema.get_field_index(field.name)
+        if idx < 0:
+            arrays.append(pa.nulls(batch.num_rows, type=field.type))
+        elif batch.column(idx).type == field.type:
+            arrays.append(batch.column(idx))
+        else:
+            # safe=True: evolution only ever WIDENS, so a lossy cast
+            # here means the file carries a column wider than the
+            # target union — possible in the STREAMING evolve mode,
+            # whose union is fixed at stream start while later files
+            # may widen further. Fail loudly instead of silently
+            # wrapping out-of-range values (timestamps were already
+            # normalized to microseconds upstream in _spark_friendly,
+            # so no deliberate truncation happens here).
+            try:
+                arrays.append(pc.cast(batch.column(idx), field.type, safe=True))
+            except pa.ArrowInvalid as e:
+                raise ValueError(
+                    f"ORC evolve: file {path!r} column {field.name!r} "
+                    f"({batch.column(idx).type}) does not fit the scan's "
+                    f"target type {field.type} — the file widened the "
+                    "column after the stream's schema union was fixed; "
+                    "restart the stream (the union refreshes from the "
+                    "checkpoint) to pick up the wider schema"
+                ) from e
+    return pa.RecordBatch.from_arrays(arrays, names=target.names)
+
+
+def scan_stripes(work, columns: list[str] | None = None, predicates=(), null_preds=(),
+                 residual=(), target: pa.Schema | None = None,
+                 batch_rows: int = 65536) -> Iterator[pa.RecordBatch]:
+    """The one stripe task behind ``read_orc``, ``read_orc_evolve`` and
+    the ``orc_rs`` format (batch and streaming): decode (file, stripe)
+    work units as Spark-ready Arrow batches of ≤ batch_rows rows.
+
+    Per stripe: prune row groups with ``predicates`` (range / IN) and
+    ``null_preds`` (``(column, want_null)``) through the ROW_INDEX and
+    blooms, read the survivors, normalize timestamps for Spark, adapt to
+    the evolved ``target`` schema when given (a file missing a target
+    column yields typed NULLs there), then filter rows exactly by
+    ``residual`` (a subset of ``predicates``) and ``null_preds``.
+    ``columns`` projects a strict scan; an evolved scan reads the target's
+    columns that the file has."""
+    readers: dict[str, OrcFileReader] = {}
+    for f, i in work:
+        r = readers.get(f)
+        if r is None:
+            r = readers[f] = OrcFileReader(f)
+        i = int(i)
+        groups = r.prune_row_groups_where(i, predicates, null_preds)
+        if groups == []:
+            continue  # every row group proven out of range
+        cols = columns
+        if target is not None:
+            have = set(r.tail.footer.types[0].field_names)
+            cols = [c for c in target.names if c in have]
+        if target is not None and not cols:
+            # the file predates EVERY requested column: typed all-null
+            # batches, one per batch_rows rows
+            n = r.tail.footer.stripes[i].number_of_rows
+            batches = (
+                pa.RecordBatch.from_arrays(
+                    [pa.nulls(min(batch_rows, n - m), type=fld.type) for fld in target],
+                    names=target.names,
                 )
+                for m in range(0, n, batch_rows)
+            )
+        else:
+            batches = (
+                _spark_friendly(b)
+                for b in r.read_stripe_batches(i, cols, batch_rows=batch_rows, row_groups=groups)
+                if b.num_rows
+            )
+            if target is not None:
+                batches = (_adapt(b, target, r.path) for b in batches)
+        for batch in batches:
+            if residual or null_preds:
+                batch = _residual_filter(batch, residual, null_preds)
+            if batch.num_rows:
+                yield batch
 
-    return paths_df.mapInArrow(plan, "path string, stripe bigint")
+
+def _read(spark: SparkSession, name: str, path, predicate, columns, batch_rows: int,
+          ddl: str | None = None, residual: bool = False,
+          evolve: bool = False) -> DataFrame:
+    """Shared body of read_orc / read_orc_evolve: validate the predicates,
+    plan on the driver, then map ``scan_stripes`` over a pure-JVM
+    ``range`` whose ids index the closure-carried work list — no
+    python-RDD createDataFrame leg and no Exchange (one stage; contiguous
+    id ranges also keep a file's stripes on one task, so its tail and
+    Metadata reads amortize)."""
+    files = orc_files(path)
+    if not files:
+        raise ValueError(f"{name}: no ORC files found")
+    predicates: list[tuple] = []
+    if predicate is not None:
+        predicates = [predicate] if isinstance(predicate, tuple) else list(predicate)
+        forms = [predicate_form(p) for p in predicates]  # validate on the driver
+        if residual and columns is not None:
+            missing = [f[1] for f in forms if f[1] not in columns]
+            if missing:
+                raise ValueError(
+                    f"residual=True needs predicate columns {missing} in `columns`"
+                )
+    elif residual:
+        raise ValueError("residual=True without a predicate")
+    target = None
+    if evolve:
+        target, ddl = evolve_target(files, columns)
+    elif ddl is None:
+        ddl = orc_schema_ddl(files[0], scan=True, columns=columns)
+    # evolve: no mixed-schema gate — the union proved compatibility
+    work = plan_scan(files, predicates, require_uniform=not evolve)
+    exact = predicates if residual else []
+
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ids = (i for b in batches for i in b.column("id").to_pylist())
+        yield from scan_stripes(
+            (work[i] for i in ids), columns, predicates, residual=exact,
+            target=target, batch_rows=batch_rows,
+        )
+
+    n_tasks = scan_partitions(len(work), spark.sparkContext.defaultParallelism)
+    return spark.range(len(work), numPartitions=n_tasks).mapInArrow(decode, ddl)
 
 
 def read_orc(
@@ -295,10 +377,9 @@ def read_orc(
     ``path`` may be a single file, a directory of part files, or a list of
     files — all stripes across all files form ONE scan. The driver reads
     only file tails (schema comes from the footer type tree, never from
-    data), in parallel — thread pool for small scans, a distributed
-    planning job above DISTRIBUTED_PLAN_THRESHOLD files. ``predicate`` is
-    ``(column, lo, hi)`` or a LIST of such tuples (a conjunction); it
-    prunes at TWO granularities: planning drops whole stripes through each
+    data), in parallel through a thread pool, and plans every stripe.
+    ``predicate`` is ``(column, lo, hi)`` or a LIST of such tuples (a
+    conjunction); it prunes at TWO granularities: planning drops whole stripes through each
     file's Metadata statistics (read ONCE per file for all predicates),
     then each task drops row groups inside surviving stripes through the
     ROW_INDEX min/max — plus bloom probes for point ranges — the index
@@ -314,73 +395,8 @@ def read_orc(
     (SQL semantics: NULL never matches), so only matching rows cross
     into the JVM — requires every predicate column to be in ``columns``
     when a projection is given."""
-    files = orc_files(path)
-    if not files:
-        raise ValueError("read_orc: no ORC files found")
-    predicates: list[tuple] | None = None
-    if predicate is not None:
-        predicates = [predicate] if isinstance(predicate, tuple) else list(predicate)
-        for p in predicates:
-            predicate_form(p)  # validate shape up front, on the driver
-        if residual and columns is not None:
-            missing = [predicate_form(p)[1] for p in predicates
-                       if predicate_form(p)[1] not in columns]
-            if missing:
-                raise ValueError(
-                    f"residual=True needs predicate columns {missing} in `columns`"
-                )
-    elif residual:
-        raise ValueError("residual=True without a predicate")
-    tail0 = read_tail(files[0])
-    if ddl is None:
-        root = tail0.footer.types[0]
-        pairs = [
-            (n, s) for n, s in zip(root.field_names, root.subtypes)
-            if columns is None or n in columns
-        ]
-        ddl = ", ".join(
-            f"{n} {_orc_type_ddl(tail0.footer.types, s, scan=True)}" for n, s in pairs
-        )
-    par = spark.sparkContext.defaultParallelism
-    def _decode_stream(pairs) -> Iterator[pa.RecordBatch]:
-        readers: dict[str, OrcFileReader] = {}
-        for f, i in pairs:
-            if f not in readers:
-                readers[f] = OrcFileReader(f)
-            r = readers[f]
-            groups = r.prune_row_groups_where(int(i), predicates or ())
-            if groups == []:
-                continue  # every row group proven out of range
-            for batch in r.read_stripe_batches(
-                int(i), columns, batch_rows=batch_rows, row_groups=groups
-            ):
-                if residual:
-                    batch = _apply_residual(batch, predicates)
-                if batch.num_rows:
-                    yield _spark_friendly(batch)
-
-    if len(files) > DISTRIBUTED_PLAN_THRESHOLD:
-        stripe_df = _plan_scan_distributed(
-            spark, files, predicates, schema_signature(tail0), files[0]
-        ).repartition(4 * max(1, par))
-
-        def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            yield from _decode_stream(_pairs_from_plan(batches))
-
-        return stripe_df.mapInArrow(decode, ddl)
-
-    # small scans plan on the driver; the work list rides in the task
-    # closure and tasks are dealt contiguous index ranges of a pure-JVM
-    # ``range`` — no python-RDD createDataFrame leg and no Exchange at all
-    # (one stage instead of two; contiguous ranges also keep a file's
-    # stripes on one task, so the tail/Metadata reads amortize per file)
-    work = _plan_scan_threaded(files, predicates)
-    ids_df = spark.range(len(work), numPartitions=scan_partitions(len(work), par))
-
-    def decode_ids(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from _decode_stream(_pairs_from_ids(batches, work))
-
-    return ids_df.mapInArrow(decode_ids, ddl)
+    return _read(spark, "read_orc", path, predicate, columns, batch_rows,
+                 ddl=ddl, residual=residual)
 
 
 def write_orc_dir(
@@ -533,44 +549,13 @@ def _sig_arrow(sig: tuple) -> pa.DataType:
     raise ValueError(f"schema evolution unsupported for ORC kind {kind!r}")
 
 
-def _collect_fields_distributed(spark, files: list[str]) -> list[tuple[str, list]]:
-    """Distinct top-level schemas across many files via a Spark job (the
-    same shape as parquet's mergeSchema): tasks read tails and emit a
-    canonical signature string, the driver collects one example path per
-    DISTINCT signature — bounded by the number of schema versions ever
-    written, not the file count."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    n_tasks = scan_partitions(len(files), spark.sparkContext.defaultParallelism)
-    paths_df = spark.createDataFrame([(f,) for f in files], "path string").repartition(n_tasks)
-
-    def sig_of(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            paths = b.column("path").to_pylist()
-            sigs = [json.dumps(_file_fields(read_tail(f))) for f in paths]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(paths, type=pa.string()), pa.array(sigs, type=pa.string())],
-                names=["path", "sig"],
-            )
-
-    rows = (
-        paths_df.mapInArrow(sig_of, "path string, sig string")
-        .groupBy("sig").agg(F.min("path").alias("path"))
-        .collect()
-    )
-
-    def untuple(x):
-        return tuple(untuple(e) for e in x) if isinstance(x, list) else x
-
-    return [
-        (r["path"], [(n, untuple(s)) for n, s in json.loads(r["sig"])]) for r in rows
-    ]
-
-
-def _finish_evolve_target(per_file: list, columns: list[str] | None) -> tuple[pa.Schema, str]:
-    target = _merge_fields(per_file)
+def evolve_target(files: list[str], columns: list[str] | None = None) -> tuple[pa.Schema, str]:
+    """(target arrow schema, Spark DDL) for an evolved scan — the union
+    of every file's top-level fields, widened, from one tail read per
+    file on the driver; ``columns`` keeps those fields (union order) and
+    must name union fields. Shared by read_orc_evolve and the data
+    source's evolve mode."""
+    target = _merge_fields(map_files(lambda f: (f, _file_fields(read_tail(f))), files))
     if columns is not None:
         known = {n for n, _ in target}
         unknown = [c for c in columns if c not in known]
@@ -580,18 +565,6 @@ def _finish_evolve_target(per_file: list, columns: list[str] | None) -> tuple[pa
     schema = pa.schema([pa.field(n, _sig_arrow(s)) for n, s in target])
     ddl = ", ".join(f"{f.name} {_pa_ddl(f.type)}" for f in schema)
     return schema, ddl
-
-
-def evolve_target(files: list[str], columns: list[str] | None = None) -> tuple[pa.Schema, str]:
-    """(target arrow schema, Spark DDL) for an evolved scan — the union
-    of every file's top-level fields, widened, via a driver thread pool.
-    Shared by read_orc_evolve (small scans) and the data source's
-    evolve mode."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
-        per_file = list(ex.map(lambda f: (f, _file_fields(read_tail(f))), files))
-    return _finish_evolve_target(per_file, columns)
 
 
 def read_orc_evolve(
@@ -612,168 +585,26 @@ def read_orc_evolve(
     cast inside the decode task. Incompatible redefinition (e.g. int →
     string) fails at PLANNING time naming both files.
 
-    Scale shape: the schema union is computed from a distributed
-    distinct-signature job above DISTRIBUTED_PLAN_THRESHOLD files (the
-    driver collects one row per DISTINCT schema version, not per file)
-    and a tail thread pool below it; stripe planning and decode then
-    follow the same stripe-parallel path as read_orc. Predicates prune
-    as usual where the column exists; files that predate a predicate's
-    column decode unpruned (their rows carry NULL there, and NULL never
-    satisfies a range predicate — the caller's row-level re-filter
-    drops them)."""
-    files = orc_files(path)
-    if not files:
-        raise ValueError("read_orc_evolve: no ORC files found")
-    predicates: list[tuple] | None = None
-    if predicate is not None:
-        predicates = [predicate] if isinstance(predicate, tuple) else list(predicate)
-
-    distributed = len(files) > DISTRIBUTED_PLAN_THRESHOLD
-    if distributed:
-        per_file = _collect_fields_distributed(spark, files)
-        target_schema, ddl = _finish_evolve_target(per_file, columns)
-    else:
-        target_schema, ddl = evolve_target(files, columns)
-
-    par = spark.sparkContext.defaultParallelism
-    if distributed:
-        # no schema gate: evolution replaces it — every file's
-        # compatibility was just proven via the union
-        stripe_df = _plan_scan_distributed(
-            spark, files, predicates, None, files[0], require_uniform=False
-        ).repartition(4 * max(1, par))
-
-    def _decode_stream(pairs) -> Iterator[pa.RecordBatch]:
-        readers: dict[str, OrcFileReader] = {}
-        for f, i in pairs:
-            if f not in readers:
-                readers[f] = OrcFileReader(f)
-            yield from evolve_decode_stripe(
-                readers[f], int(i), target_schema, predicates, batch_rows
-            )
-
-    if distributed:
-        def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            yield from _decode_stream(_pairs_from_plan(batches))
-
-        return stripe_df.mapInArrow(decode, ddl)
-
-    # small scans: work list in the closure over a pure-JVM range — no
-    # python-RDD createDataFrame leg, no Exchange (same shape as read_orc)
-    work = _plan_scan_threaded(files, predicates, require_uniform=False)
-    ids_df = spark.range(
-        len(work), numPartitions=scan_partitions(max(1, len(work)), par)
-    )
-
-    def decode_ids(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from _decode_stream(_pairs_from_ids(batches, work))
-
-    return ids_df.mapInArrow(decode_ids, ddl)
+    The driver computes the union (``evolve_target``) and plans the
+    stripes, then decode follows the same stripe-parallel path as
+    read_orc. Predicates prune as usual where the column exists; files
+    that predate a predicate's column decode unpruned (their rows carry
+    NULL there, and NULL never satisfies a range predicate — the
+    caller's row-level re-filter drops them)."""
+    return _read(spark, "read_orc_evolve", path, predicate, columns, batch_rows,
+                 evolve=True)
 
 
-def evolve_decode_stripe(r: OrcFileReader, i: int, target_schema: pa.Schema,
-                         predicates: list[tuple] | None,
-                         batch_rows: int,
-                         null_preds: list[tuple] | None = None) -> Iterator[pa.RecordBatch]:
-    """Decode one stripe ADAPTED to an evolved target schema: missing
-    fields come back as typed NULLs, narrower numerics widen via Arrow
-    casts, predicates prune where their column exists in this file.
-    ``null_preds`` is ``[(column, want_null), ...]`` — IS [NOT] NULL
-    tests pruned through the group stats the same way (a file missing
-    the column decodes unpruned; its rows are NULL there). Shared by
-    read_orc_evolve's decode tasks and the data source's evolve mode."""
-    import pyarrow.compute as pc
-
-    target_names = list(target_schema.names)
-
-    def adapt(batch: pa.RecordBatch) -> pa.RecordBatch:
-        arrays = []
-        for field in target_schema:
-            idx = batch.schema.get_field_index(field.name)
-            if idx < 0:
-                arrays.append(pa.nulls(batch.num_rows, type=field.type))
-            elif batch.column(idx).type == field.type:
-                arrays.append(batch.column(idx))
-            else:
-                # safe=True: evolution only ever WIDENS, so a lossy cast
-                # here means the file carries a column wider than the
-                # target union — possible in the STREAMING evolve mode,
-                # whose union is fixed at stream start while later files
-                # may widen further. Fail loudly instead of silently
-                # wrapping out-of-range values (timestamps were already
-                # normalized to microseconds upstream in _spark_friendly,
-                # so no deliberate truncation happens here).
-                try:
-                    arrays.append(pc.cast(batch.column(idx), field.type, safe=True))
-                except pa.ArrowInvalid as e:
-                    raise ValueError(
-                        f"ORC evolve: file {r.path!r} column {field.name!r} "
-                        f"({batch.column(idx).type}) does not fit the scan's "
-                        f"target type {field.type} — the file widened the "
-                        "column after the stream's schema union was fixed; "
-                        "restart the stream (the union refreshes from the "
-                        "checkpoint) to pick up the wider schema"
-                    ) from e
-        return pa.RecordBatch.from_arrays(arrays, names=target_names)
-
-    have = set(r.tail.footer.types[0].field_names)
-    cols = [c for c in target_names if c in have]
-    groups = r.prune_row_groups_where(i, predicates or (), null_preds or ())
-    if groups == []:
-        return
-    if not cols:
-        # the file predates EVERY requested column: emit typed all-null
-        # batches, one per batch_rows rows
-        n = r.tail.footer.stripes[i].number_of_rows
-        while n > 0:
-            m = min(n, batch_rows)
-            yield pa.RecordBatch.from_arrays(
-                [pa.nulls(m, type=fld.type) for fld in target_schema],
-                names=target_names,
-            )
-            n -= m
-        return
-    for batch in r.read_stripe_batches(i, cols, batch_rows=batch_rows, row_groups=groups):
-        if batch.num_rows:
-            yield adapt(_spark_friendly(batch))
-
-
-def count_rows(path: str | list[str], spark: SparkSession | None = None) -> int:
+def count_rows(path: str | list[str]) -> int:
     """Exact row count from file FOOTERS alone — the 100 TB ``COUNT(*)``.
 
     An ORC footer's numberOfRows is authoritative, so counting needs one
-    tail read per file and zero stripe bytes. Below
-    DISTRIBUTED_PLAN_THRESHOLD files a driver thread pool hides the
-    per-file read latency; above it (pass ``spark``) a Spark job reads
-    tails in tasks and the driver receives one partial sum per task —
-    nothing on the driver scales with the table but the path list."""
+    tail read per file and zero stripe bytes; a driver thread pool
+    (``map_files``) hides the per-file read latency."""
     files = orc_files(path)
     if not files:
         raise ValueError("count_rows: no ORC files found")
-    if spark is not None and len(files) > DISTRIBUTED_PLAN_THRESHOLD:
-        n_tasks = scan_partitions(len(files), spark.sparkContext.defaultParallelism)
-        paths_df = spark.createDataFrame(
-            [(f,) for f in files], "path string"
-        ).repartition(n_tasks)
-
-        def counts(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for b in batches:
-                total = sum(
-                    read_tail(f).footer.number_of_rows
-                    for f in b.column("path").to_pylist()
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([total], type=pa.int64())], names=["n"]
-                )
-
-        from pyspark.sql import functions as F
-
-        out = paths_df.mapInArrow(counts, "n bigint").agg(F.sum("n").alias("n")).collect()
-        return int(out[0]["n"] or 0)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
-        return sum(ex.map(lambda f: read_tail(f).footer.number_of_rows, files))
+    return sum(map_files(lambda f: read_tail(f).footer.number_of_rows, files))
 
 
 _STATS_AGG_OPS = ("count_star", "count", "min", "max", "sum")
@@ -864,22 +695,18 @@ def _combine_stat_partials(parts: list[dict], aggs: list[tuple[str, str | None]]
     return out
 
 
-def stats_aggregate(path: str | list[str], aggs: list[tuple[str, str | None]],
-                    spark: SparkSession | None = None) -> dict:
+def stats_aggregate(path: str | list[str], aggs: list[tuple[str, str | None]]) -> dict:
     """Exact COUNT/MIN/MAX/SUM from ORC footers alone — zero stripe bytes.
 
     ``aggs`` is a list of ``(op, column)`` with op in
     {count_star, count, min, max, sum} (column None for count_star).
     Returns ``{"op(col)": value}``. The reference exposes the parsed
     statistics surface (src/reader.rs:152-159); this turns it into the
-    100 TB metadata-only aggregate: one ~16 KiB tail read per file —
-    below DISTRIBUTED_PLAN_THRESHOLD files through a driver thread pool,
-    above it (pass ``spark``) as a Spark job shipping one JSON partial
-    per task. Every answer is exact or the call raises
-    (OrcUnsupportedError) — never a silent approximation; sums come from
-    the writer's exact Python-int accumulation (writer.py _stats_body)."""
-    import json
-
+    100 TB metadata-only aggregate: one ~16 KiB tail read per file
+    through a driver thread pool (``map_files``). Every answer is exact
+    or the call raises (OrcUnsupportedError) — never a silent
+    approximation; sums come from the writer's exact Python-int
+    accumulation (writer.py _stats_body)."""
     for op, col in aggs:
         if op not in _STATS_AGG_OPS and op != "avg":
             raise ValueError(f"stats_aggregate: unknown op {op!r}")
@@ -895,7 +722,7 @@ def stats_aggregate(path: str | list[str], aggs: list[tuple[str, str | None]],
             for piece in (("sum", col), ("count", col)):
                 if piece not in base:
                     base.append(piece)
-        res = stats_aggregate(path, base, spark)
+        res = stats_aggregate(path, base)
         for op, col in aggs:
             if op == "avg":
                 cnt = res[f"count({col})"]
@@ -905,45 +732,4 @@ def stats_aggregate(path: str | list[str], aggs: list[tuple[str, str | None]],
     files = orc_files(path)
     if not files:
         raise ValueError("stats_aggregate: no ORC files found")
-    if spark is not None and len(files) > DISTRIBUTED_PLAN_THRESHOLD:
-        n_tasks = scan_partitions(len(files), spark.sparkContext.defaultParallelism)
-        paths_df = spark.createDataFrame([(f,) for f in files], "path string").repartition(n_tasks)
-
-        def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            import datetime as _dt
-
-            for b in batches:
-                fs = b.column("path").to_pylist()
-                if not fs:
-                    continue
-                merged = _combine_stat_partials(
-                    [_file_stat_partial(f, aggs) for f in fs], aggs)
-                # explicit type TAG for date values — a string column's
-                # min/max can itself look like '2024-01-15' (or be a
-                # non-ISO 10-char value), so shape-sniffing the JSON on
-                # the driver would corrupt or crash string aggregates
-                tagged = {
-                    k: ({"__date__": v.isoformat()}
-                        if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime)
-                        else v)
-                    for k, v in merged.items()
-                }
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([json.dumps(tagged)])], names=["j"])
-
-        rows = paths_df.mapInArrow(partials, "j string").collect()
-        import datetime
-
-        parts = []
-        for r in rows:
-            p = json.loads(r["j"])
-            for k, v in p.items():
-                if isinstance(v, dict) and "__date__" in v:
-                    p[k] = datetime.date.fromisoformat(v["__date__"])
-            parts.append(p)
-        return _combine_stat_partials(parts, aggs)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
-        parts = list(ex.map(lambda f: _file_stat_partial(f, aggs), files))
-    return _combine_stat_partials(parts, aggs)
+    return _combine_stat_partials(map_files(lambda f: _file_stat_partial(f, aggs), files), aggs)

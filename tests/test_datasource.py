@@ -272,6 +272,10 @@ def test_evolve_option(registered, tmp_path):
     assert back.where("extra IS NULL").count() == 1000
     got = back.where(F.col("k") == 1500).collect()
     assert len(got) == 1 and got[0]["extra"] == "e1500"
+    # a declared read schema keeps its own column order
+    got = (spark.read.format("orc_rs").option("evolve", "true")
+           .schema("extra string, k bigint").load(out).where("k = 1500").collect())
+    assert [tuple(r) for r in got] == [("e1500", 1500)]
     # strict mode still refuses the mixed directory
     with pytest.raises(Exception, match="schema mismatch"):
         spark.read.format("orc_rs").load(out).count()

@@ -116,22 +116,20 @@ def test_evolve_refuses_narrowing_cast(tmp_path):
     import pyarrow as pa
     import pytest as _pytest
 
-    from orc_rs_spark.orcfile.reader import OrcFileReader
-    from orc_rs_spark.orcfile.spark_source import evolve_decode_stripe
+    from orc_rs_spark.orcfile.spark_source import scan_stripes
     from orc_rs_spark.orcfile.writer import write_orc
 
     wide = pa.table({"k": pa.array([1, 2, 2**40], pa.int64())})
     p = str(tmp_path / "wide.orc")
     write_orc(wide, p)
     narrow_target = pa.schema([pa.field("k", pa.int32())])
-    r = OrcFileReader(p)
     with _pytest.raises(ValueError, match="does not fit the scan's target type"):
-        list(evolve_decode_stripe(r, 0, narrow_target, None, 65536))
+        list(scan_stripes([(p, 0)], target=narrow_target))
     # in-range values still adapt fine through the safe cast
     ok = pa.table({"k": pa.array([1, 2, 3], pa.int64())})
     p2 = str(tmp_path / "ok.orc")
     write_orc(ok, p2)
     got = pa.Table.from_batches(
-        list(evolve_decode_stripe(OrcFileReader(p2), 0, narrow_target, None, 65536)))
+        list(scan_stripes([(p2, 0)], target=narrow_target)))
     assert got.column("k").to_pylist() == [1, 2, 3]
     assert got.schema.field("k").type == pa.int32()

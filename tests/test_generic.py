@@ -164,6 +164,26 @@ def test_decimal38_two_word_mantissa():
     assert out.equals(arr)
 
 
+def test_cut_nested_frame_raises_value_error():
+    """A nested frame cut at ANY byte is a ValueError — never an
+    IndexError from a header read past the end."""
+    from decimal import Decimal
+
+    from orc_rs_spark.generic import decode_frame, encode_frame
+
+    arr = pa.array(
+        [{"l": ["a", None], "m": [("k", 1)], "d": Decimal("1e20")}, None,
+         {"l": None, "m": [], "d": None}] * 3,
+        type=pa.struct([("l", pa.list_(pa.string())), ("m", pa.map_(pa.string(), pa.int64())),
+                        ("d", pa.decimal128(38, 2))]),
+    )
+    buf = encode_frame(arr)
+    assert decode_frame(buf, 0, len(arr), arr.type)[0].equals(arr)
+    for cut in range(len(buf)):
+        with pytest.raises(ValueError):
+            decode_frame(buf[:cut], 0, len(arr), arr.type)
+
+
 @given(
     st.lists(
         st.one_of(

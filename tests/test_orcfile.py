@@ -1554,30 +1554,41 @@ def test_scan_planning_single_pass(tmp_path, spark, monkeypatch):
     assert sorted(stats) == sorted(files)
 
 
-def test_scan_planning_distributed_path(tmp_path, spark, monkeypatch):
-    """Above the file-count threshold, planning fans out as a Spark job;
-    results (rows AND mixed-schema rejection) match the driver path."""
+@pytest.mark.spark
+def test_scan_above_old_distributed_threshold(tmp_path, spark):
+    """520 one-stripe files (more than the 512 at which planning used to
+    fan out to a Spark job): the driver plans every scan, and read_orc,
+    read_orc_evolve, count_rows and stats_aggregate all answer exactly."""
     import pyarrow as pa
 
-    from orc_rs_spark.orcfile import spark_source as src_mod
+    from orc_rs_spark.orcfile.spark_source import (
+        count_rows,
+        read_orc,
+        read_orc_evolve,
+        stats_aggregate,
+    )
     from orc_rs_spark.orcfile.writer import write_orc
 
-    files = []
-    for i in range(5):
-        tbl = pa.table({"a": pa.array(np.arange(i * 10, i * 10 + 10, dtype=np.int64))})
-        p = str(tmp_path / f"p{i}.orc")
-        write_orc(tbl, p, compression="zlib")
-        files.append(p)
-    monkeypatch.setattr(src_mod, "DISTRIBUTED_PLAN_THRESHOLD", 2)
-    df = src_mod.read_orc(spark, files, predicate=("a", 12, 33))
-    got = sorted(r["a"] for r in df.filter("a BETWEEN 12 AND 33").collect())
-    assert got == list(range(12, 34))
-    # mixed schema still rejected with file names (raised inside the
-    # distributed planning task, surfaced through the Spark job)
-    other = str(tmp_path / "mixed.orc")
-    write_orc(pa.table({"z": pa.array([1.5])}), other, compression="zlib")
-    with pytest.raises(Exception, match="schema mismatch"):
-        src_mod.read_orc(spark, files + [other]).collect()
+    d = tmp_path / "many"
+    d.mkdir()
+    for i in range(520):
+        write_orc(pa.table({"k": pa.array([2 * i, 2 * i + 1], pa.int32())}),
+                  str(d / f"part-{i:04d}.orc"), compression="zlib")
+    got = read_orc(spark, str(d), predicate=("k", 100, 109), residual=True).collect()
+    assert sorted(r["k"] for r in got) == list(range(100, 110))
+    assert count_rows(str(d)) == 1040
+    assert stats_aggregate(str(d), [("count_star", None), ("min", "k"), ("max", "k"),
+                                    ("sum", "k")]) == {
+        "count(*)": 1040, "min(k)": 0, "max(k)": 1039, "sum(k)": sum(range(1040)),
+    }
+    # a second generation widens k and adds a column
+    new = str(tmp_path / "gen2.orc")
+    write_orc(pa.table({"k": pa.array([5000], pa.int64()), "extra": pa.array(["e"])}), new)
+    files = sorted(str(p) for p in d.iterdir()) + [new]
+    df = read_orc_evolve(spark, files, predicate=("k", 1038, 6000))
+    assert [f.dataType.simpleString() for f in df.schema.fields] == ["bigint", "string"]
+    rows = sorted((r["k"], r["extra"]) for r in df.filter("k >= 1038").collect())
+    assert rows == [(1038, None), (1039, None), (5000, "e")]
 
 
 def test_index_region_cached_per_stripe(indexed_orc, monkeypatch):

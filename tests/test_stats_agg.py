@@ -168,60 +168,3 @@ def test_stats_aggregate_avg(tmp_path):
     os.makedirs(p3)
     write_orc(t3, os.path.join(p3, "c.orc"))
     assert stats_aggregate(p3, [("avg", "k")])["avg(k)"] is None
-
-
-def test_stats_aggregate_distributed_path(spark, tmp_path):
-    """Above DISTRIBUTED_PLAN_THRESHOLD files the aggregate runs as a
-    Spark job shipping one JSON partial per task — same answers as the
-    driver thread pool, nothing driver-side scales with the file count
-    but the path list."""
-    import orc_rs_spark.orcfile.spark_source as ss
-
-    tables = []
-    for i in range(8):
-        t = pa.table({
-            "k": pa.array([i * 10 + j for j in range(5)], pa.int64()),
-            "d": pa.array([datetime.date(2020, 1, 1 + i)] * 5),
-        })
-        tables.append(t)
-        write_orc(t, str(tmp_path / f"part-{i:03d}.orc"))
-    aggs = [("count_star", None), ("min", "k"), ("max", "k"), ("sum", "k"),
-            ("avg", "k"), ("min", "d"), ("max", "d")]
-    want = stats_aggregate(str(tmp_path), aggs)  # thread-pool reference
-    # force the distributed branch with a tiny threshold
-    orig = ss.DISTRIBUTED_PLAN_THRESHOLD
-    ss.DISTRIBUTED_PLAN_THRESHOLD = 4
-    try:
-        got = stats_aggregate(str(tmp_path), aggs, spark=spark)
-    finally:
-        ss.DISTRIBUTED_PLAN_THRESHOLD = orig
-    assert got == want
-    assert got["count(*)"] == 40 and got["sum(k)"] == sum(r for t in tables
-                                                         for r in t.column("k").to_pylist())
-    assert got["min(d)"] == datetime.date(2020, 1, 1)
-    assert got["max(d)"] == datetime.date(2020, 1, 8)
-
-
-def test_distributed_stats_string_mins_that_look_like_dates(spark, tmp_path):
-    """A STRING column whose min/max are date-shaped (or 10-char dashed
-    IDs) must come back as strings from the distributed path — the JSON
-    partials carry an explicit date tag, never shape-sniffing."""
-    import orc_rs_spark.orcfile.spark_source as ss
-
-    t1 = pa.table({"s": pa.array(["2024-01-15", "2024-13-45", "zzz"]),
-                   "d": pa.array([datetime.date(2020, 5, 5)] * 3)})
-    t2 = pa.table({"s": pa.array(["1999-09-09", "aa-bb-ccdd"]),
-                   "d": pa.array([datetime.date(2021, 6, 6)] * 2)})
-    write_orc(t1, str(tmp_path / "a.orc"))
-    write_orc(t2, str(tmp_path / "b.orc"))
-    aggs = [("min", "s"), ("max", "s"), ("min", "d"), ("max", "d")]
-    orig = ss.DISTRIBUTED_PLAN_THRESHOLD
-    ss.DISTRIBUTED_PLAN_THRESHOLD = 1
-    try:
-        got = stats_aggregate(str(tmp_path), aggs, spark=spark)
-    finally:
-        ss.DISTRIBUTED_PLAN_THRESHOLD = orig
-    assert got["min(s)"] == "1999-09-09" and isinstance(got["min(s)"], str)
-    assert got["max(s)"] == "zzz"
-    assert got["min(d)"] == datetime.date(2020, 5, 5)
-    assert got["max(d)"] == datetime.date(2021, 6, 6)
