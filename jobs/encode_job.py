@@ -14,6 +14,11 @@ On a real cluster, add `--master yarn|k8s://...` and Iceberg catalog confs
 (see orc_rs_spark.session.iceberg_conf); `--input` then takes
 `catalog.db.table` with `--format iceberg`.
 
+`--chunks-dir` and `--checkpoint-dir` take any path Spark writes: a plain
+path resolves against `fs.defaultFS` (HDFS on YARN), a URI names its
+filesystem (`hdfs://`, `s3a://`, `abfs://`, `file:`). The driver reads the
+lineage and writes the checkpoint through the same Hadoop FileSystem.
+
 The job is idempotent: rerunning after a crash skips checkpointed buckets
 (partition-exact resume) and prints the same summary JSON.
 """

@@ -116,10 +116,11 @@ def encode_table(
         tbl = pa.Table.from_batches(blist)
         if has_part_key:
             # explicit bucket id (pipeline resume unit) rides along as the
-            # chunk's part_id — stable across cluster sizes. Range
-            # partitioning is approximate, so a partition may span bucket
-            # boundaries: split on them so every chunk is single-bucket
-            # (resume exactness depends on it).
+            # chunk's part_id — stable across cluster sizes. encode_job
+            # gives each bucket its own partition, but another caller's
+            # partitioning may put several buckets in one: split on their
+            # bounds so every chunk is single-bucket (resume exactness
+            # depends on it).
             keys = tbl.column("part_key").to_numpy()
             bounds = np.flatnonzero(np.diff(keys)) + 1
             starts = np.concatenate(([0], bounds, [len(keys)]))

@@ -64,6 +64,7 @@ from orc_rs_spark.orcfile.spark_source import (
     orc_schema_ddl,
     plan_scan,
     scan_stripes,
+    scan_work,
 )
 from orc_rs_spark.orcfile.writer import write_task_file
 
@@ -100,7 +101,7 @@ def _evolve_read_target(files: list[str], columns: list[str], full=None) -> pa.S
     Spark takes batch columns in. ``full`` is the union of every column
     when ``schema()`` already computed it (one union pass)."""
     if full is None or full.names != columns:
-        full = evolve_target(files, columns)[0]
+        full = evolve_target(plan_scan(files, None), columns)[0]
     return pa.schema([full.field(c) for c in columns])
 
 
@@ -168,7 +169,7 @@ class OrcRsReader(DataSourceReader):
 
     def partitions(self):
         # evolve: no mixed-schema gate — compatibility was proven by the union
-        work = plan_scan(self.files, self._absorbed + self._hints,
+        work = scan_work(plan_scan(self.files, self._absorbed + self._hints),
                          require_uniform=not self.evolve)
         return [OrcStripePartition(f, i) for f, i in work] or [
             OrcStripePartition(self.files[0], -1)  # all stripes pruned
@@ -464,7 +465,7 @@ class OrcRsStreamReader(DataSourceStreamReader):
         files = [os.path.join(self.path, n) for n in names if lo < n <= hi]
         if not files:
             return []
-        work = plan_scan(files, None, require_uniform=not self.evolve)
+        work = scan_work(plan_scan(files, None), require_uniform=not self.evolve)
         return [OrcStripePartition(f, i) for f, i in work]
 
     def read(self, partition: OrcStripePartition):
@@ -494,7 +495,7 @@ class OrcRsDataSource(DataSource):
                 "populated yet, pass an explicit .schema(...)"
             ) from None
         if _evolve_on(self.options):
-            full, ddl = evolve_target(files)
+            full, ddl = evolve_target(plan_scan(files, None))
             self._evolve_cache = full  # reused by reader(): one union pass
             return ddl
         return orc_schema_ddl(files[0], scan=True)

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from orc_rs_spark.orcfile.reader import (
     OrcFileReader,
+    OrcTail,
     map_files,
     predicate_form,
     prune_stripes_stats,
@@ -157,11 +158,13 @@ def _orc_type_ddl(types: list, col_id: int, scan: bool = False) -> str:
     raise ValueError(f"no Spark DDL mapping for ORC kind {t.kind!r}")
 
 
-def orc_schema_ddl(path: str, scan: bool = False, columns: list[str] | None = None) -> str:
-    """Spark DDL for an ORC file's schema, from the footer alone.
-    ``scan=True`` gives the scan's variant (see ``_orc_type_ddl``);
-    ``columns`` keeps only those top-level fields, in file order."""
-    tail = read_tail(path)
+def orc_schema_ddl(source: str | OrcTail, scan: bool = False,
+                   columns: list[str] | None = None) -> str:
+    """Spark DDL for an ORC file's schema, from the footer alone: ``source``
+    is the file's path or its already-read tail. ``scan=True`` gives the
+    scan's variant (see ``_orc_type_ddl``); ``columns`` keeps only those
+    top-level fields, in file order."""
+    tail = read_tail(source) if isinstance(source, str) else source
     root = tail.footer.types[0]
     return ", ".join(
         f"{name} {_orc_type_ddl(tail.footer.types, sub, scan)}"
@@ -193,8 +196,8 @@ def orc_files(path: str | list[str]) -> list[str]:
     return [path]
 
 
-def _plan_file(f: str, predicates: list[tuple] | None) -> tuple[str, tuple, list[int]]:
-    """Plan one file: (path, schema signature, surviving stripe ids).
+def _plan_file(f: str, predicates: list[tuple] | None) -> tuple[str, OrcTail, list[int]]:
+    """Plan one file: (path, tail, surviving stripe ids).
     ONE tail read; when predicates are set, ONE Metadata read/parse covers
     every predicate (prune_stripes_stats), instead of one per column."""
     tail = read_tail(f)
@@ -203,19 +206,27 @@ def _plan_file(f: str, predicates: list[tuple] | None) -> tuple[str, tuple, list
         keep = prune_stripes_stats(tail, stats, predicates)
     else:
         keep = list(range(len(tail.footer.stripes)))
-    return f, schema_signature(tail), keep
+    return f, tail, keep
 
 
-def plan_scan(files, predicates, require_uniform: bool = True) -> list[tuple[str, int]]:
-    """(file, stripe) work units for a scan, planned on the driver: one
-    tail (+ one Metadata) read per file through ``map_files``, with
+def plan_scan(files, predicates) -> list[tuple[str, OrcTail, list[int]]]:
+    """Plan a scan on the driver: (path, tail, surviving stripe ids) per
+    file, from one tail (+ one Metadata) read per file through
+    ``map_files``. The planned tails also give the scan's DDL
+    (``orc_schema_ddl``) or evolved union (``evolve_target``);
+    ``scan_work`` turns the plan into work units."""
+    return map_files(lambda f: _plan_file(f, predicates), files)
+
+
+def scan_work(plans, require_uniform: bool = True) -> list[tuple[str, int]]:
+    """(file, stripe) work units of a ``plan_scan`` plan, with
     mixed-schema detection. ``require_uniform=False`` skips the gate for
     evolved scans whose compatibility was already proven via the schema
     union."""
-    plans = map_files(lambda f: _plan_file(f, predicates), files)
     schema_sig, sig_file = None, None
     work: list[tuple[str, int]] = []
-    for f, sig, keep in plans:
+    for f, tail, keep in plans:
+        sig = schema_signature(tail)
         # one scan = one schema: a mixed-schema directory must fail HERE
         # with file names, not mid-task with an opaque Arrow type error
         if not require_uniform:
@@ -278,8 +289,8 @@ def scan_stripes(work, columns: list[str] | None = None, predicates=(), null_pre
     the evolved ``target`` schema when given (a file missing a target
     column yields typed NULLs there), then filter rows exactly by
     ``residual`` (a subset of ``predicates``) and ``null_preds``.
-    ``columns`` projects a strict scan; an evolved scan reads the target's
-    columns that the file has."""
+    ``columns`` projects a strict scan, in that order; an evolved scan
+    reads the target's columns that the file has."""
     readers: dict[str, OrcFileReader] = {}
     for f, i in work:
         r = readers.get(f)
@@ -313,6 +324,8 @@ def scan_stripes(work, columns: list[str] | None = None, predicates=(), null_pre
             if target is not None:
                 batches = (_adapt(b, target, r.path) for b in batches)
         for batch in batches:
+            if target is None and columns is not None and batch.schema.names != columns:
+                batch = batch.select(columns)  # Spark takes columns by position
             if residual or null_preds:
                 batch = _residual_filter(batch, residual, null_preds)
             if batch.num_rows:
@@ -343,13 +356,21 @@ def _read(spark: SparkSession, name: str, path, predicate, columns, batch_rows: 
                 )
     elif residual:
         raise ValueError("residual=True without a predicate")
+    plans = plan_scan(files, predicates)
     target = None
     if evolve:
-        target, ddl = evolve_target(files, columns)
+        target, ddl = evolve_target(plans, columns)
     elif ddl is None:
-        ddl = orc_schema_ddl(files[0], scan=True, columns=columns)
+        if columns is not None:
+            # read_orc returns the file's column order, like its DDL
+            names = plans[0][1].footer.types[0].field_names
+            unknown = [c for c in columns if c not in names]
+            if unknown:
+                raise ValueError(f"{name}: unknown columns {unknown}; {files[0]} has {names}")
+            columns = [n for n in names if n in columns]
+        ddl = orc_schema_ddl(plans[0][1], scan=True, columns=columns)
     # evolve: no mixed-schema gate — the union proved compatibility
-    work = plan_scan(files, predicates, require_uniform=not evolve)
+    work = scan_work(plans, require_uniform=not evolve)
     exact = predicates if residual else []
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -549,13 +570,13 @@ def _sig_arrow(sig: tuple) -> pa.DataType:
     raise ValueError(f"schema evolution unsupported for ORC kind {kind!r}")
 
 
-def evolve_target(files: list[str], columns: list[str] | None = None) -> tuple[pa.Schema, str]:
+def evolve_target(plans, columns: list[str] | None = None) -> tuple[pa.Schema, str]:
     """(target arrow schema, Spark DDL) for an evolved scan — the union
-    of every file's top-level fields, widened, from one tail read per
-    file on the driver; ``columns`` keeps those fields (union order) and
+    of every file's top-level fields, widened, from the tails of a
+    ``plan_scan`` plan; ``columns`` keeps those fields (union order) and
     must name union fields. Shared by read_orc_evolve and the data
     source's evolve mode."""
-    target = _merge_fields(map_files(lambda f: (f, _file_fields(read_tail(f))), files))
+    target = _merge_fields([(f, _file_fields(tail)) for f, tail, _ in plans])
     if columns is not None:
         known = {n for n, _ in target}
         unknown = [c for c in columns if c not in known]

@@ -31,7 +31,6 @@ def encode_stream(
     ``available_now=True`` drains everything currently in ``input_dir`` and
     stops — the batch-catchup mode; False runs continuously.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     reader = spark.readStream.schema(TOKEN_DDL)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -44,9 +43,13 @@ def encode_stream(
 
         chunks = encode_table(batch_df, repartition=False, block_codec=block_codec)
         # micro-batch id as the chunk partition: a replayed batch overwrites
-        # exactly its own directory -> exactly-once output
+        # exactly its own directory -> exactly-once output (dynamic
+        # overwrite per write, so the session's setting is left alone)
         chunks = chunks.withColumn("part_id", F.lit(int(batch_id)).cast("int"))
-        chunks.write.partitionBy("part_id").mode("overwrite").parquet(chunks_dir)
+        (
+            chunks.write.partitionBy("part_id").mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic").parquet(chunks_dir)
+        )
 
     writer = (
         stream.writeStream.foreachBatch(sink)

@@ -92,6 +92,22 @@ def test_projection_via_schema(registered, tmp_path):
     assert only.count() == 2000
 
 
+def test_declared_schema_column_order(registered, tmp_path):
+    """A declared read schema in another column order than the files'
+    reads back in the declared order (Spark takes batch columns by
+    position, so file order would swap values or fail on the types)."""
+    spark = registered
+    out = str(tmp_path / "dsorder")
+    df = _write(spark, out, n=2000, parts=2)
+    back = spark.read.format("orc_rs").schema("s string, u bigint, k bigint").load(out)
+    assert back.columns == ["s", "u", "k"]
+    got = sorted(tuple(r) for r in back.where("k < 50").collect())
+    exp = sorted(tuple(r) for r in df.select("s", "u", "k").where("k < 50").collect())
+    assert got == exp and len(got) == 50
+    pair = spark.read.format("orc_rs").schema("u bigint, k bigint").load(out)
+    assert pair.where("k = 7").collect()[0]["u"] == (7 * 2654435761) % 100000
+
+
 def test_sql_over_registered_format(registered, tmp_path):
     spark = registered
     out = str(tmp_path / "dssql")

@@ -1555,6 +1555,39 @@ def test_scan_planning_single_pass(tmp_path, spark, monkeypatch):
 
 
 @pytest.mark.spark
+def test_scan_planning_one_tail_read_per_file(tmp_path, spark, monkeypatch):
+    """read_orc without a DDL and read_orc_evolve take the DDL and the
+    evolved union from the planning pass's tails: one tail read per file."""
+    import pyarrow as pa
+
+    from orc_rs_spark.orcfile import spark_source as src_mod
+    from orc_rs_spark.orcfile.writer import write_orc
+
+    files = []
+    for i in range(4):
+        cols = {"a": pa.array(np.arange(i * 10, i * 10 + 10), pa.int32() if i < 2 else pa.int64())}
+        if i >= 2:
+            cols["b"] = pa.array([f"b{i}"] * 10)
+        p = str(tmp_path / f"part-{i}.orc")
+        write_orc(pa.table(cols), p, compression="zlib")
+        files.append(p)
+
+    tails = []
+    real_tail = src_mod.read_tail
+    monkeypatch.setattr(src_mod, "read_tail", lambda f: (tails.append(f), real_tail(f))[1])
+    strict = src_mod.read_orc(spark, files[:2], predicate=("a", 5, 14), columns=["a"])
+    assert len(tails) == 2
+    assert sorted(r["a"] for r in strict.filter("a BETWEEN 5 AND 14").collect()) == list(range(5, 15))
+    with pytest.raises(ValueError, match="unknown columns"):
+        src_mod.read_orc(spark, files[:2], columns=["a", "nope"])
+    tails.clear()
+    evolved = src_mod.read_orc_evolve(spark, files)
+    assert len(tails) == len(files)
+    assert [f.dataType.simpleString() for f in evolved.schema.fields] == ["bigint", "string"]
+    assert evolved.count() == 40
+
+
+@pytest.mark.spark
 def test_scan_above_old_distributed_threshold(tmp_path, spark):
     """520 one-stripe files (more than the 512 at which planning used to
     fan out to a Spark job): the driver plans every scan, and read_orc,

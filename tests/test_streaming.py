@@ -51,6 +51,20 @@ def test_streaming_encode_available_now(spark, tmp_path):
 
 
 @pytest.mark.spark
+def test_streaming_encode_leaves_session_overwrite_mode(spark, tmp_path):
+    """Dynamic partition overwrite is a per-write option of the sink: the
+    session's partitionOverwriteMode is the same after the stream."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")  # the default, whatever ran before
+    inp = str(tmp_path / "in")
+    _write_files(inp, 1, 200, seed0=7)
+    q = encode_stream(spark, inp, str(tmp_path / "chunks"), str(tmp_path / "cp"))
+    q.awaitTermination(120)
+    assert spark.read.parquet(str(tmp_path / "chunks")).count() >= 1
+    assert spark.conf.get(key).lower() == "static"
+
+
+@pytest.mark.spark
 def test_streaming_stateful_dedup(spark, tmp_path):
     from orc_rs_spark.streaming import streaming_dedup
 
