@@ -24,6 +24,7 @@ block-compressed (ORC-style zlib framing) when that wins.
 from __future__ import annotations
 
 import hashlib
+import zlib
 
 import numpy as np
 import pyarrow as pa
@@ -35,9 +36,11 @@ from orc_rs_spark.kernels.select import INT_CODECS, STR_CODECS, encode_ints_auto
 from orc_rs_spark.kernels.varint import uvarint, varint_decode
 
 # "2": per-stream columns replaced the packed blob; "3": the tokens stream
-# may be a frequency-ranked dictionary ("rankdict"). Decode dispatches on
-# each stream's codec tag, so v2 chunks still decode.
-CODEC_VERSION = "3"
+# may be a frequency-ranked dictionary ("rankdict"); "4": its ranks are
+# written as byte planes ("rankplanes"), and zlib blocks may be
+# Huffman-only. Decode dispatches on each stream's codec tag, so v2 and v3
+# chunks still decode.
+CODEC_VERSION = "4"
 
 STREAMS = ("doc_id", "n_tok", "tokens", "source")
 STREAM_COLS = ("s_doc_id", "s_n_tok", "s_tokens", "s_source")
@@ -143,14 +146,33 @@ def _scatter(dense: pa.Array, present: np.ndarray | None) -> pa.Array:
     return dense.take(pa.array(idx, mask=~present))
 
 
+# _maybe_block prices both deflate strategies on this many slices of this
+# many bytes, spread over the stream (its head may be a dictionary)
+_PROBE_SLICES = 4
+_PROBE_SPAN = 16 * 1024
+_STRATEGIES = (zlib.Z_DEFAULT_STRATEGY, zlib.Z_HUFFMAN_ONLY)
+
+
 def _maybe_block(data: bytes, block_codec: str) -> tuple[bytes, str]:
     if block_codec == "none" or len(data) < 64:
         return data, "none"
-    # level 7, kept deliberately after a controlled r3 re-measure: dropping
-    # to 6 saves ~6% encode wall but costs 0.1-0.7% bytes, and the
-    # <=Spark-ORC size gate fails at level 6 on small tables (1.007) while
-    # holding at 7 (0.989-0.999). The bytes gate wins the tradeoff.
-    comp = block_compress(data, block_codec, level=7)
+    # level 7 holds size_vs_spark_orc below 1.0 on small tables (at level
+    # 6 one read 1.007). zlib blocks also pick their deflate strategy per
+    # stream: LZ matching pays on runs and repeated strings, but on rank
+    # planes it costs bytes that Huffman-only coding keeps (and ~3x the
+    # CPU), and which one wins is measured, not assumed
+    if block_codec != "zlib":
+        comp = block_compress(data, block_codec, level=7)
+    elif len(data) <= _PROBE_SLICES * _PROBE_SPAN:
+        comp = min((block_compress(data, "zlib", 7, strategy=st) for st in _STRATEGIES), key=len)
+    else:
+        n, k = len(data), _PROBE_SLICES
+        probe = b"".join(
+            data[start : start + _PROBE_SPAN]
+            for start in (n * (2 * i + 1) // (2 * k) - _PROBE_SPAN // 2 for i in range(k))
+        )
+        strategy = min(_STRATEGIES, key=lambda st: len(block_compress(probe, "zlib", 7, strategy=st)))
+        comp = block_compress(data, "zlib", 7, strategy=strategy)
     if len(comp) < len(data):
         return comp, block_codec
     return data, "none"
@@ -211,11 +233,9 @@ def encode_chunk(
         comp, tag = _maybe_block(_wrap_present(present, raw), block_codec)
         streams.append(comp)
         block_tags.append(tag)
-    orig_bytes = (
-        sum(len(x) for x in (doc_id.buffers() + source.buffers()) if x is not None)
-        + flat.nbytes
-        + lengths.nbytes
-    )
+    # Array.nbytes counts only this slice's part of buffers it may share
+    # with its neighbours, so the figure does not depend on batching
+    orig_bytes = doc_id.nbytes + source.nbytes + flat.nbytes + lengths.nbytes
     h = hashlib.sha1()
     h.update(CODEC_VERSION.encode())
     h.update(str(part_id).encode())

@@ -51,8 +51,8 @@ LZ_BLOCK = 256 * 1024
 DEFAULT_LEVELS = {"zlib": 6, "zstd": 3}
 
 
-def _deflate(data: bytes, level: int = 6) -> bytes:
-    c = zlib.compressobj(level, zlib.DEFLATED, -15)
+def _deflate(data: bytes, level: int = 6, strategy: int = zlib.Z_DEFAULT_STRATEGY) -> bytes:
+    c = zlib.compressobj(level, zlib.DEFLATED, -15, 8, strategy)
     return c.compress(data) + c.flush()
 
 
@@ -247,16 +247,22 @@ def _unknown_codec(codec: str):
 
 
 def block_compress(data: bytes, codec: str = "zlib", level: int | None = None,
-                   max_block: int | None = None) -> bytes:
+                   max_block: int | None = None,
+                   strategy: int = zlib.Z_DEFAULT_STRATEGY) -> bytes:
     """Frame ``data`` into compressed blocks; keeps originals when smaller.
 
     ``level`` is the codec's own compression level (zlib 1-9, zstd 1-22);
     ``None`` picks the codec default (DEFAULT_LEVELS — zlib 6, zstd 3);
-    snappy/lz4/lzo have no level knob and ignore it. ``max_block`` caps
-    the DECOMPRESSED block size below the format's 8 MiB header limit —
-    pass the file's declared compressionBlockSize when appending sections
-    to a foreign file (readers may size their buffers from that
-    declaration). Each codec has one encoder (see the module docstring);
+    snappy/lz4/lzo have no level knob and ignore it. ``strategy`` is
+    zlib's deflate strategy: ``zlib.Z_HUFFMAN_ONLY`` skips the LZ match
+    search and only Huffman-codes the bytes, which is smaller and ~3x
+    cheaper on streams whose repeats are single bytes, not strings (see
+    ``chunk._maybe_block``). Its output is plain raw deflate, so the
+    block still reads as ``zlib``; other codecs reject a strategy.
+    ``max_block`` caps the DECOMPRESSED block size below the format's
+    8 MiB header limit — pass the file's declared compressionBlockSize
+    when appending sections to a foreign file (readers may size their
+    buffers from that declaration). Each codec has one encoder (see the module docstring);
     any block it fails to shrink takes the is-original escape, so output
     never grows beyond 3 bytes per block."""
     if codec == "none":
@@ -269,6 +275,10 @@ def block_compress(data: bytes, codec: str = "zlib", level: int | None = None,
     if max_block is not None:
         cap = min(cap, max_block)
     encode = _ENCODERS[codec]
+    if strategy != zlib.Z_DEFAULT_STRATEGY:
+        if codec != "zlib":
+            raise ValueError(f"a deflate strategy applies to zlib blocks, not {codec!r}")
+        encode = functools.partial(_deflate, strategy=strategy)
     out: list = []
     for i in range(0, len(data), cap):
         block = data[i : i + cap]

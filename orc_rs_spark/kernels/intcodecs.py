@@ -12,16 +12,26 @@ reads one; ORC spec requires sorted symbol order), and a raw little-endian
 fallback for incompressible data. The rank dictionary orders its symbols
 by descending frequency instead, so Zipf-distributed tokens get small
 ranks that fit one or two varint bytes and leave zlib a skewed byte
-stream to work on.
+stream to work on; writing those bytes as planes lets zlib's Huffman
+stage code them close to the ranks' zero-order entropy.
 
 Layout conventions (self-describing per chunk, all lengths varint):
 - for:     varint(zigzag(min)) + 1B width + bitpacked(v - min)
 - bitpack: 1B width + bitpacked(zigzag(v))
 - dict:    varint(n_dict) + varint(len(dict_stream)) + rlev2(sorted values)
            + rlev2(indices, unsigned)
-- rankdict: varint(n_dict) + varint(len(dict_stream))
+- rankplanes: varint(n_dict) + varint(len(dict_stream))
            + rlev2(values by descending frequency, ties by ascending
-             value) + varint(rank of each value)
+             value) + the ranks' LEB128 bytes as planes: plane 0 holds
+             byte 0 of every rank (its low 7 bits + continuation flag),
+             plane 1 byte 1 of every rank >= 128, and so on. Each byte
+             position gets its own run of bytes, so the block
+             compressor's Huffman stage sees each position's statistics
+             apart (the control/data split of Stream VByte, Lemire et
+             al. 2018); both directions are a few whole-array ops per
+             plane.
+- rankdict (decode only, chunk format v3): the same header and
+           dictionary + varint(rank of each value), in value order
 - raw:     1B item size (4|8) + little-endian values
 """
 
@@ -137,36 +147,97 @@ def _rank_table(v: np.ndarray, bincount: bool) -> tuple[np.ndarray, np.ndarray]:
     return uniq[order], rank_of[inverse]
 
 
-def rankdict_encode(values: np.ndarray) -> bytes:
-    """Frequency-ranked symbol table (RLEv2) + one LEB128 rank per value."""
+def rankplanes_encode(values: np.ndarray) -> bytes:
+    """Frequency-ranked symbol table (RLEv2), then the ranks' LEB128 bytes
+    as planes: the first byte of every rank, then the second byte of every
+    rank >= 128, and so on."""
     v = np.ascontiguousarray(values, dtype=np.int64)
     if len(v) == 0:
         return b""
     by_rank, ranks = _rank_table(v, int(v.max()) - int(v.min()) < _BINCOUNT_SPAN)
     dict_stream = rlev2_encode(by_rank, signed=True)
-    return uvarint(len(by_rank)) + uvarint(len(dict_stream)) + dict_stream + varint_encode(ranks)
+    planes = []
+    s = ranks
+    while len(s):
+        # low 7 bits, plus the continuation bit exactly when s >= 0x80
+        planes.append((s | np.minimum(s, 0x80)).astype(np.uint8))
+        s = s[s >= 0x80] >> 7
+    return (
+        uvarint(len(by_rank)) + uvarint(len(dict_stream)) + dict_stream
+        + np.concatenate(planes).tobytes()
+    )
 
 
-def rankdict_decode(buf: bytes, count: int) -> np.ndarray:
-    if count == 0:
-        return np.empty(0, dtype=np.int64)
-    b = np.frombuffer(buf, dtype=np.uint8)
+def _rank_dictionary(b: np.ndarray, count: int, codec: str) -> tuple[np.ndarray, int]:
+    """(values by rank, offset of the rank bytes): the header and RLEv2
+    dictionary that ``rankdict`` and ``rankplanes`` share. Corrupt input
+    raises ValueError naming ``codec``."""
     try:
         hdr, used = varint_decode(b, 2)
     except ValueError as e:
-        raise ValueError(f"rankdict: header: {e}") from None
+        raise ValueError(f"{codec}: header: {e}") from None
     n_dict, dict_len = int(hdr[0]), int(hdr[1])
     if n_dict == 0:
-        raise ValueError(f"rankdict: empty dictionary for {count} values")
+        raise ValueError(f"{codec}: empty dictionary for {count} values")
     if used + dict_len > len(b):
-        raise ValueError(f"rankdict: {dict_len}-byte dictionary runs past the {len(b)}-byte buffer")
+        raise ValueError(f"{codec}: {dict_len}-byte dictionary runs past the {len(b)}-byte buffer")
     try:
         by_rank = rlev2_decode(b[used : used + dict_len], n_dict, signed=True)
-        ranks, _ = varint_decode(b[used + dict_len :], count)
+    except ValueError as e:
+        raise ValueError(f"{codec}: {e}") from None
+    return by_rank, used + dict_len
+
+
+def _check_ranks(ranks: np.ndarray, n_dict: int, codec: str) -> None:
+    if int(ranks.max()) >= n_dict:
+        raise ValueError(f"{codec}: rank {int(ranks.max())} outside the {n_dict}-entry dictionary")
+
+
+def rankplanes_decode(buf: bytes, count: int) -> np.ndarray:
+    if count == 0:
+        return np.empty(0, dtype=np.int64)
+    b = np.frombuffer(buf, dtype=np.uint8)
+    by_rank, pos = _rank_dictionary(b, count, "rankplanes")
+    n_dict = len(by_rank)
+    # a rank below n_dict has at most this many bytes
+    max_planes = max(1, ((n_dict - 1).bit_length() + 6) // 7)
+    dt = np.uint32 if max_planes <= 4 else np.uint64
+    plane = b[pos : pos + count]
+    if len(plane) < count:
+        raise ValueError(f"rankplanes: plane 0 holds {len(plane)} of its {count} bytes")
+    ranks = (plane & np.uint8(0x7F)).astype(dt)
+    pos += count
+    live = np.flatnonzero(plane >= 0x80)  # the ranks that go on to the next plane
+    for j in range(1, max_planes):
+        if not len(live):
+            break
+        plane = b[pos : pos + len(live)]
+        if len(plane) < len(live):
+            raise ValueError(f"rankplanes: plane {j} holds {len(plane)} of its {len(live)} bytes")
+        ranks[live] |= (plane & np.uint8(0x7F)).astype(dt) << dt(7 * j)
+        pos += len(live)
+        live = live[plane >= 0x80]
+    if len(live):
+        raise ValueError(
+            f"rankplanes: a rank runs past {max_planes} bytes, outside the {n_dict}-entry dictionary")
+    if pos != len(b):
+        raise ValueError(f"rankplanes: {len(b) - pos} bytes follow the last plane")
+    _check_ranks(ranks, n_dict, "rankplanes")
+    return by_rank[ranks]
+
+
+def rankdict_decode(buf: bytes, count: int) -> np.ndarray:
+    """Chunk format v3's rank codec: the same dictionary, then one LEB128
+    varint per rank in value order. Decode only; ``rankplanes`` encodes."""
+    if count == 0:
+        return np.empty(0, dtype=np.int64)
+    b = np.frombuffer(buf, dtype=np.uint8)
+    by_rank, pos = _rank_dictionary(b, count, "rankdict")
+    try:
+        ranks, _ = varint_decode(b[pos:], count)
     except ValueError as e:
         raise ValueError(f"rankdict: {e}") from None
-    if int(ranks.max()) >= n_dict:
-        raise ValueError(f"rankdict: rank {int(ranks.max())} outside the {n_dict}-entry dictionary")
+    _check_ranks(ranks, len(by_rank), "rankdict")
     return by_rank[ranks]
 
 

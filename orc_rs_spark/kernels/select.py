@@ -26,7 +26,8 @@ from orc_rs_spark.kernels.intcodecs import (
     for_decode,
     for_encode,
     rankdict_decode,
-    rankdict_encode,
+    rankplanes_decode,
+    rankplanes_encode,
     raw_decode,
     raw_encode,
 )
@@ -52,7 +53,8 @@ INT_CODECS = {
     "for": (for_encode, for_decode),
     "bitpack": (bitpack_encode, bitpack_decode),
     "dict": (dict_encode, dict_decode),
-    "rankdict": (rankdict_encode, rankdict_decode),
+    "rankdict": (None, rankdict_decode),  # chunk format v3: decode only
+    "rankplanes": (rankplanes_encode, rankplanes_decode),
     "raw": (raw_encode, raw_decode),
 }
 
@@ -125,7 +127,7 @@ def candidate_int_codecs(st: dict) -> list[str]:
         cands.append("dict")
     if st["mean_run"] >= 3:
         cands.append("rlev2_rle")
-    cands.append("rankdict")  # last: a size tie keeps the older codec
+    cands.append("rankplanes")  # last: a size tie keeps the older codec
     return cands
 
 

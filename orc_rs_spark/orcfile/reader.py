@@ -22,6 +22,7 @@ whole-stream form under the reader's name.
 from __future__ import annotations
 
 import sys
+from collections import OrderedDict
 from dataclasses import dataclass
 
 import numpy as np
@@ -720,6 +721,19 @@ class _StripeColumnReader:
         raise OrcUnsupportedError(f"unsupported ORC type {kind!r} (column {col})")
 
 
+# bytes of stripe footers and index regions (as stored) one reader keeps
+# parsed; a lookup file's whole index fits, so random point reads parse
+# each stripe's metadata once
+_STRIPE_META_BYTES = 8 << 20
+
+
+@dataclass
+class _StripeMeta:
+    footer: proto.StripeFooter
+    index: tuple | None = None  # (row_index, bloom_index) once parsed
+    nbytes: int = 0  # stored bytes charged against _STRIPE_META_BYTES
+
+
 class OrcFileReader:
     """Reads a whole ORC file (or selected stripes) into pyarrow batches.
 
@@ -733,12 +747,13 @@ class OrcFileReader:
         self.path = getattr(self.source, "path", "<source>")
         self.tail = read_tail(self.source)
         self.codec = self.tail.postscript.compression
-        # parsed (row_index, blooms) per stripe: a conjunctive scan probes
-        # the same stripe once per predicate, and without this each probe
-        # would range-read + decompress + proto-parse the index region
-        # again. Bounded (tasks walk a handful of stripes at a time).
-        self._index_cache: dict[int, tuple] = {}
-        self._index_cache_cap = 8
+        # parsed stripe footers and (row_index, blooms) per stripe, least
+        # recently used first: a conjunctive scan probes the same stripe
+        # once per predicate, and point lookups come back to a file's
+        # stripes at random, so each stripe's footer and index region are
+        # read and parsed once while they fit _STRIPE_META_BYTES
+        self._stripe_meta: OrderedDict[int, _StripeMeta] = OrderedDict()
+        self._stripe_meta_bytes = 0
 
     def _column_subtree(self, col: int, out: set[int]) -> None:
         out.add(col)
@@ -754,12 +769,7 @@ class OrcFileReader:
         here: group reads take the parsed index from ``_read_index_region``."""
         stripe = self.tail.footer.stripes[i]
         data_off = stripe.offset + stripe.index_length
-        sfooter = proto.StripeFooter.parse(
-            orc_stream_decompress(
-                self.source.read_at(data_off + stripe.data_length, stripe.footer_length),
-                self.codec,
-            )
-        )
+        sfooter = self._stripe_entry(i).footer
         # data-stream layout: (offset-in-data-region, length) in footer order
         spans = []
         pos = -stripe.index_length
@@ -891,28 +901,48 @@ class OrcFileReader:
             ])
         yield from full.to_batches(max_chunksize=batch_rows)
 
+    def _stripe_entry(self, i: int) -> _StripeMeta:
+        """Stripe i's cached metadata, its footer read and parsed on first
+        use; the entry becomes the most recently used."""
+        entry = self._stripe_meta.get(i)
+        if entry is not None:
+            self._stripe_meta.move_to_end(i)
+            return entry
+        stripe = self.tail.footer.stripes[i]
+        raw = self.source.read_at(
+            stripe.offset + stripe.index_length + stripe.data_length, stripe.footer_length
+        )
+        entry = _StripeMeta(proto.StripeFooter.parse(orc_stream_decompress(raw, self.codec)))
+        self._stripe_meta[i] = entry
+        self._charge(entry, stripe.footer_length)
+        return entry
+
+    def _charge(self, entry: _StripeMeta, nbytes: int) -> None:
+        """Count ``nbytes`` more against the cache, then drop the least
+        recently used entries until it fits (never the newest one)."""
+        entry.nbytes += nbytes
+        self._stripe_meta_bytes += nbytes
+        while self._stripe_meta_bytes > _STRIPE_META_BYTES and len(self._stripe_meta) > 1:
+            _, old = self._stripe_meta.popitem(last=False)
+            self._stripe_meta_bytes -= old.nbytes
+
     def _read_index_region(self, i: int):
         """(row_index, bloom_index) for stripe i from the index region
-        alone — no data bytes touched. Parsed results are cached per
-        stripe (see __init__) so conjunctive predicates pay one read."""
-        if i in self._index_cache:
-            return self._index_cache[i]
-        out = self._read_index_region_uncached(i)
-        if len(self._index_cache) >= self._index_cache_cap:
-            self._index_cache.pop(next(iter(self._index_cache)))
-        self._index_cache[i] = out
-        return out
-
-    def _read_index_region_uncached(self, i: int):
+        alone — no data bytes touched. Parsed once per stripe while it
+        stays cached (see __init__), with the stripe's footer."""
         stripe = self.tail.footer.stripes[i]
         if stripe.index_length == 0:
             return {}, {}
+        entry = self._stripe_entry(i)
+        if entry.index is None:
+            entry.index = self._read_index_region_uncached(i)
+            self._charge(entry, stripe.index_length)
+        return entry.index
+
+    def _read_index_region_uncached(self, i: int):
+        stripe = self.tail.footer.stripes[i]
+        sfooter = self._stripe_entry(i).footer
         idx = self.source.read_at(stripe.offset, stripe.index_length)
-        sf_raw = self.source.read_at(
-            stripe.offset + stripe.index_length + stripe.data_length,
-            stripe.footer_length,
-        )
-        sfooter = proto.StripeFooter.parse(orc_stream_decompress(sf_raw, self.codec))
         rows: dict[int, list[proto.RowIndexEntry]] = {}
         blooms: dict[int, list] = {}
         pos = 0

@@ -1,9 +1,12 @@
 """Round-trip tests: byte RLE, boolean RLE, RLEv1, FoR, bitpack, dict,
-rank dict, raw, block compression, FSST, string codecs.
+rank dict (v3 decode and rank planes), raw, block compression, FSST,
+string codecs.
 
 RLEv1 known-answer vectors come from FIXTURES.md F3 (backported from the
 reference's own tests at /root/reference/src/encoding/rlev1.rs:361-505).
 """
+
+import zlib
 
 import numpy as np
 import pyarrow as pa
@@ -25,13 +28,15 @@ from orc_rs_spark.kernels.intcodecs import (
     for_decode,
     for_encode,
     rankdict_decode,
-    rankdict_encode,
+    rankplanes_decode,
+    rankplanes_encode,
     raw_decode,
     raw_encode,
 )
 from orc_rs_spark.kernels import intcodecs
 from orc_rs_spark.kernels.rlev1 import rlev1_decode, rlev1_encode
 from orc_rs_spark.kernels.rlev2 import rlev2_encode
+from orc_rs_spark.kernels.varint import uvarint, varint_encode
 from orc_rs_spark.kernels.strings import (
     string_dict_decode,
     string_dict_encode,
@@ -40,6 +45,19 @@ from orc_rs_spark.kernels.strings import (
 )
 
 RNG = np.random.default_rng(42)
+
+
+def rankdict_encode(values: np.ndarray) -> bytes:
+    """The chunk format v3 ``rankdict`` layout, which the library now only
+    decodes: header, the RLEv2 dictionary by rank, then one LEB128 varint
+    per rank in value order."""
+    v = np.asarray(values, dtype=np.int64)
+    if len(v) == 0:
+        return b""
+    bincount = int(v.max()) - int(v.min()) < intcodecs._BINCOUNT_SPAN
+    by_rank, ranks = intcodecs._rank_table(v, bincount)
+    dict_stream = rlev2_encode(by_rank, signed=True)
+    return uvarint(len(by_rank)) + uvarint(len(dict_stream)) + dict_stream + varint_encode(ranks)
 
 
 # ------------------------------------------------------------- byte RLE
@@ -125,9 +143,10 @@ INTS = {
         (bitpack_encode, bitpack_decode),
         (dict_encode, dict_decode),
         (rankdict_encode, rankdict_decode),
+        (rankplanes_encode, rankplanes_decode),
         (raw_encode, raw_decode),
     ],
-    ids=["for", "bitpack", "dict", "rankdict", "raw"],
+    ids=["for", "bitpack", "dict", "rankdict", "rankplanes", "raw"],
 )
 def test_int_codec_roundtrip(name, enc, dec):
     v = INTS[name]
@@ -195,6 +214,67 @@ def test_rankdict_corrupt_input_raises(buf, count, match):
         rankdict_decode(buf, count)
 
 
+def test_rankplanes_known_answer():
+    # the dictionary and ranks of test_rankdict_known_answer: every rank
+    # is < 128, so plane 0 is the whole rank stream
+    v = np.array([5, 5, 9, 2, 5, 9, 7], dtype=np.int64)
+    dict_stream = rlev2_encode(np.array([5, 9, 2, 7], dtype=np.int64), signed=True)
+    want = bytes([4, len(dict_stream)]) + dict_stream + bytes([0, 0, 1, 2, 0, 1, 3])
+    assert rankplanes_encode(v) == want
+    np.testing.assert_array_equal(rankplanes_decode(want, len(v)), v)
+
+
+def test_rankplanes_second_plane_known_answer():
+    # 131 distinct values, one each: rank = position in ascending order.
+    # Plane 0 holds every rank's low 7 bits + continuation flag; plane 1
+    # the second byte of ranks 130, 128 and 129, in value order
+    v = np.concatenate(([130], np.arange(130))).astype(np.int64)
+    dict_stream = rlev2_encode(np.arange(131, dtype=np.int64), signed=True)
+    plane0 = bytes([0x82]) + bytes(range(128)) + bytes([0x80, 0x81])
+    want = uvarint(131) + uvarint(len(dict_stream)) + dict_stream + plane0 + bytes([1, 1, 1])
+    assert rankplanes_encode(v) == want
+    np.testing.assert_array_equal(rankplanes_decode(want, len(v)), v)
+
+
+def _rankplanes_parts(dict_values, planes, n_dict=None, dict_len=None):
+    dict_stream = rlev2_encode(np.array(dict_values, dtype=np.int64), signed=True)
+    n_dict = len(dict_values) if n_dict is None else n_dict
+    dict_len = len(dict_stream) if dict_len is None else dict_len
+    return uvarint(n_dict) + uvarint(dict_len) + dict_stream + bytes(planes)
+
+
+_DICT_200 = list(range(1000, 1200))
+
+
+@pytest.mark.parametrize(
+    "buf,count,match",
+    [
+        (_rankplanes_parts([10, 20], [0, 1, 0]), 4, "rankplanes: plane 0 holds 3 of its 4 bytes"),
+        (_rankplanes_parts(_DICT_200, [0x85, 0x10]), 2, "rankplanes: plane 1 holds 0 of its 1 bytes"),
+        (_rankplanes_parts(_DICT_200, [0x85, 0xC7, 0x01]), 2, "rankplanes: plane 1 holds 1 of its 2 bytes"),
+        (_rankplanes_parts([10, 20], [0, 2, 1]), 3, r"rankplanes: rank 2 outside the 2-entry"),
+        (_rankplanes_parts(_DICT_200, [0x85, 0x02]), 1, r"rankplanes: rank 261 outside the 200-entry"),
+        (_rankplanes_parts(_DICT_200, [0x85, 0x81, 0x01]), 1, "rankplanes: a rank runs past 2 bytes"),
+        (_rankplanes_parts([10, 20], [0x80, 0x01]), 1, "rankplanes: a rank runs past 1 bytes"),
+        (_rankplanes_parts([10, 20], [0, 1, 1]), 2, "rankplanes: 1 bytes follow the last plane"),
+        (_rankplanes_parts([], [0, 0], n_dict=0), 2, "rankplanes: empty dictionary"),
+        (_rankplanes_parts([10, 20], [0, 1], dict_len=100), 2, "rankplanes: 100-byte dictionary runs past"),
+        (bytes([0x85]), 1, "rankplanes: header"),
+        (bytes([0x02, 0x85]), 1, "rankplanes: header"),
+    ],
+    ids=[
+        "short-plane0", "missing-plane1", "short-plane1", "rank-too-big", "2-byte-rank-too-big",
+        "3rd-plane", "2nd-plane-for-2-entries", "trailing", "empty-dict", "dict-past-end",
+        "cut-header", "one-header-varint",
+    ],
+)
+def test_rankplanes_corrupt_input_raises(buf, count, match):
+    """Corrupt rank planes raise ValueError naming the codec, never an
+    IndexError or a silent wrong decode."""
+    with pytest.raises(ValueError, match=match):
+        rankplanes_decode(buf, count)
+
+
 # ------------------------------------------------------------- block comp
 
 
@@ -214,6 +294,20 @@ def test_block_compress_incompressible_escape():
 
 def test_block_compress_empty():
     assert block_decompress(block_compress(b"")) == b""
+
+
+def test_block_compress_huffman_only_is_plain_zlib():
+    """A Huffman-only block differs from the default strategy's bytes but
+    reads back through the ordinary zlib decoder."""
+    data = bytes(np.minimum(RNG.zipf(1.3, 50_000), 255).astype(np.uint8))
+    huff = block_compress(data, "zlib", level=7, strategy=zlib.Z_HUFFMAN_ONLY)
+    assert huff != block_compress(data, "zlib", level=7)
+    assert block_decompress(huff, "zlib") == data
+
+
+def test_block_compress_strategy_is_zlib_only():
+    with pytest.raises(ValueError, match="deflate strategy applies to zlib blocks, not 'zstd'"):
+        block_compress(b"x" * 100, "zstd", strategy=zlib.Z_HUFFMAN_ONLY)
 
 
 # ------------------------------------------------------------- FSST

@@ -1641,6 +1641,124 @@ def test_index_region_cached_per_stripe(indexed_orc, monkeypatch):
     assert calls == [0]
 
 
+def test_point_reads_parse_stripe_metadata_once(tmp_path):
+    """Random point reads (row-group pruning, then a read of the surviving
+    group) over a 16-stripe file read each visited stripe's footer and
+    index region once, however often the lookups come back to it."""
+    from collections import Counter
+
+    import pyarrow as pa
+
+    from orc_rs_spark.orcfile.reader import FileSource
+    from orc_rs_spark.orcfile.writer import write_orc
+
+    n, per_stripe = 16 * 1500, 1500
+    table = pa.table({
+        "doc_id": pa.array([f"doc-{i:08d}" for i in range(n)]),
+        "v": pa.array(np.arange(n, dtype=np.int64) * 3),
+    })
+    path = str(tmp_path / "lookups.orc")
+    write_orc(table, path, stripe_rows=per_stripe, row_index_stride=500, bloom_columns=["doc_id"])
+
+    class CountingSource(FileSource):
+        def __init__(self, p):
+            super().__init__(p)
+            self.reads = []
+
+        def read_at(self, offset, length):
+            self.reads.append((offset, length))
+            return super().read_at(offset, length)
+
+    src = CountingSource(path)
+    r = OrcFileReader(src)
+    stripes = r.tail.footer.stripes
+    assert len(stripes) == 16
+    footer_at = {s.offset + s.index_length + s.data_length: i for i, s in enumerate(stripes)}
+    index_at = {(s.offset, s.index_length): i for i, s in enumerate(stripes)}
+    visited = Counter()
+    for k in np.random.default_rng(5).integers(0, n, 200):
+        i, doc = int(k) // per_stripe, f"doc-{int(k):08d}"
+        groups = r.prune_row_groups(i, "doc_id", doc, doc)
+        assert groups == [int(k) % per_stripe // 500]
+        batch = r.read_stripe(i, row_groups=groups)
+        assert batch.column("v").to_pylist()[batch.column("doc_id").to_pylist().index(doc)] == 3 * k
+        visited[i] += 1
+    footer_reads = Counter(footer_at[off] for off, _ in src.reads if off in footer_at)
+    index_reads = Counter(index_at[key] for key in src.reads if key in index_at)
+    assert max(visited.values()) > 1
+    assert footer_reads == index_reads == Counter(dict.fromkeys(visited, 1))
+
+
+def _rlev1_stripe_file(path: str) -> None:
+    """One hand-built stripe of a nullable bigint column ``x`` in Hive 0.11
+    form: DIRECT (RLEv1) DATA, a PRESENT stream, stride 6, uncompressed.
+    Rows: 2, 3, NULL, 6, 7, 11 | 7, 7, 7, NULL, 7, 7."""
+    import pyarrow as pa
+
+    from orc_rs_spark.kernels.byte_rle import boolean_rle_encode
+    from orc_rs_spark.kernels.rlev1 import rlev1_encode
+    from orc_rs_spark.orcfile import proto
+    from orc_rs_spark.orcfile.writer import (
+        _STREAM_ENUM, _field_bytes, _field_packed, _field_varint, _flatten_types,
+        write_file_tail,
+    )
+
+    present = np.array([1, 1, 0, 1, 1, 1, 1, 1, 1, 0, 1, 1], dtype=bool)
+    groups = [rlev1_encode(np.array([2, 3, 6, 7, 11]), signed=True),
+              rlev1_encode(np.array([7] * 5), signed=True)]
+    # RLEv1 per the ORC spec: 5 literals (header -5) of zigzag varints,
+    # then a run of 5 (header 5 - 3) with delta 0 of zigzag(7)
+    assert groups == [bytes([0xFB, 0x04, 0x06, 0x0C, 0x0E, 0x16]), bytes([0x02, 0x00, 0x0E])]
+    present_rle = boolean_rle_encode(present)
+    # bits 11011111 10110000 as one byte-RLE literal of 2 bytes
+    assert present_rle == bytes([0xFE, 0xDF, 0xB0])
+
+    def row_index(positions):
+        return b"".join(_field_bytes(1, _field_packed(1, p) if p else b"") for p in positions)
+
+    # uncompressed positions: PRESENT (byte, byte-RLE skip, bit), DATA
+    # (byte, RLE skip); group 1 starts at bit 6 and at DATA byte 6
+    streams = [
+        ("ROW_INDEX", 0, row_index([[], []])),
+        ("ROW_INDEX", 1, row_index([[0, 0, 0, 0, 0], [0, 0, 6, len(groups[0]), 0]])),
+        ("PRESENT", 1, present_rle),
+        ("DATA", 1, groups[0] + groups[1]),
+    ]
+    direct = _field_bytes(2, _field_varint(1, 0))  # ColumnEncoding DIRECT
+    sfooter = b"".join(
+        _field_bytes(1, _field_varint(1, _STREAM_ENUM[kind]) + _field_varint(2, col)
+                     + _field_varint(3, len(body)))
+        for kind, col, body in streams
+    ) + direct + direct
+    index_len = sum(len(body) for kind, _, body in streams if kind == "ROW_INDEX")
+    types: list = []
+    _flatten_types(pa.schema([("x", pa.int64())]), types)
+    with open(path, "wb") as f:
+        f.write(b"ORC")
+        for _, _, body in streams:
+            f.write(body)
+        f.write(sfooter)
+        stripe = proto.StripeInformation(3, index_len, f.tell() - 3 - index_len - len(sfooter),
+                                         len(sfooter), len(present))
+        write_file_tail(f, [stripe], types, {}, [b"", b""], b"", 6, "none", 256 * 1024)
+
+
+def test_rlev1_stripe_whole_and_positional(tmp_path, monkeypatch):
+    """RLEv1 (Hive 0.11 DIRECT) ints with nulls decode whole-stripe and
+    per row group from a stripe built by hand, so this path is tested
+    without golden files."""
+    path = str(tmp_path / "rlev1.orc")
+    _rlev1_stripe_file(path)
+    r = OrcFileReader(path)
+    assert r.tail.footer.row_index_stride == 6
+    want = [2, 3, None, 6, 7, 11, 7, 7, 7, None, 7, 7]
+    assert r.read_stripe(0).column("x").to_pylist() == want
+    _positional_only(monkeypatch)
+    assert r.read_stripe(0, row_groups=[1]).column("x").to_pylist() == want[6:]
+    assert r.read_stripe(0, row_groups=[0]).column("x").to_pylist() == want[:6]
+    assert r.read_stripe(0, row_groups=[0, 1]).column("x").to_pylist() == want
+
+
 def test_group_support_validates_every_entry(indexed_orc, monkeypatch):
     """An index whose entry count doesn't cover the stripe's row groups
     must send the read to the full-decode fallback BEFORE any batch is
@@ -1652,7 +1770,7 @@ def test_group_support_validates_every_entry(indexed_orc, monkeypatch):
     rows, blooms = r._read_index_region(0)
     # the last column's index loses its final entry
     last = max(rows)
-    r._index_cache[0] = ({**rows, last: rows[last][:-1]}, blooms)
+    r._stripe_meta[0].index = ({**rows, last: rows[last][:-1]}, blooms)
     got = pa.Table.from_batches(list(
         r.read_stripe_batches(0, batch_rows=1000, row_groups=list(range(20)))
     ))

@@ -21,7 +21,8 @@ from orc_rs_spark.kernels.intcodecs import (
     for_decode,
     for_encode,
     rankdict_decode,
-    rankdict_encode,
+    rankplanes_decode,
+    rankplanes_encode,
     raw_decode,
     raw_encode,
 )
@@ -29,6 +30,7 @@ from orc_rs_spark.kernels.rlev1 import rlev1_decode, rlev1_encode
 from orc_rs_spark.kernels.rlev2 import rlev2_decode, rlev2_encode, rlev2_encode_runs
 from orc_rs_spark.kernels.varint import uvarint, varint_decode, varint_encode
 from orc_rs_spark.kernels.zigzag import zigzag_decode, zigzag_encode
+from tests.test_codecs import rankdict_encode
 
 i64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
 i32 = st.integers(min_value=-(2**31), max_value=2**31 - 1)
@@ -99,6 +101,7 @@ def test_intcodecs_roundtrip(v):
         (bitpack_encode, bitpack_decode),
         (dict_encode, dict_decode),
         (rankdict_encode, rankdict_decode),
+        (rankplanes_encode, rankplanes_decode),
         (raw_encode, raw_decode),
         (rlev1_encode, rlev1_decode),
     ):
@@ -121,6 +124,43 @@ rank_arrays = st.one_of(
 @given(rank_arrays)
 def test_rankdict_roundtrip(v):
     np.testing.assert_array_equal(rankdict_decode(rankdict_encode(v), len(v)), v)
+
+
+@settings(max_examples=120, deadline=None)
+@given(rank_arrays)
+def test_rankplanes_roundtrip(v):
+    enc = rankplanes_encode(v)
+    np.testing.assert_array_equal(rankplanes_decode(enc, len(v)), v)
+
+
+@st.composite
+def plane_boundary_arrays(draw):
+    """Values whose largest rank sits on a plane boundary (0, 127, 128,
+    16383, 16384, ...), from a 1-entry dictionary up to one of more than
+    2^14 entries, with repeats that reorder the ranks."""
+    n_dict = draw(st.sampled_from([1, 2, 127, 128, 129, 16383, 16384, 16385, 20000]))
+    base = draw(st.integers(min_value=-(2**40), max_value=2**40))
+    step = draw(st.sampled_from([1, 3, 1 << 20]))
+    values = base + np.arange(n_dict, dtype=np.int64) * step
+    extra = draw(st.lists(st.integers(min_value=0, max_value=n_dict - 1), max_size=60))
+    seed = draw(st.integers(min_value=0, max_value=2**32 - 1))
+    v = np.concatenate([values, values[np.array(extra, dtype=np.int64)]])
+    return np.random.default_rng(seed).permutation(v)
+
+
+@settings(max_examples=40, deadline=None)
+@given(plane_boundary_arrays())
+def test_rankplanes_roundtrip_plane_boundaries(v):
+    enc = rankplanes_encode(v)
+    np.testing.assert_array_equal(rankplanes_decode(enc, len(v)), v)
+
+
+def test_rankplanes_three_byte_ranks():
+    """2^21 distinct values: the largest rank, 2^21 - 1, fills three planes."""
+    v = np.random.default_rng(8).permutation(1 << 21).astype(np.int64) * 5 - 7
+    v = np.concatenate([v, v[:1000]])  # repeats rank the first 1000 values first
+    enc = rankplanes_encode(v)
+    np.testing.assert_array_equal(rankplanes_decode(enc, len(v)), v)
 
 
 @pytest.mark.parametrize(

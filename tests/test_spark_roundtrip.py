@@ -8,6 +8,7 @@ against it in test_verify_roundtrip_hash_mode_detects_tampering.
 import base64
 import json
 import os
+import zlib
 
 import numpy as np
 import pyarrow as pa
@@ -18,6 +19,8 @@ from orc_rs_spark.chunk import decode_chunk, encode_chunk
 from orc_rs_spark.decoder import decode_table, verify_roundtrip
 from orc_rs_spark.encoder import encode_table
 from orc_rs_spark.fixtures import token_table, token_df
+from orc_rs_spark.kernels.blockcomp import block_compress, block_decompress
+from orc_rs_spark.kernels.intcodecs import rankplanes_encode
 
 
 # ------------------------------------------------------- local (no Spark)
@@ -88,13 +91,13 @@ def _zipf_batch(n_rows: int, seed: int) -> pa.RecordBatch:
     )
 
 
-def test_zipf_tokens_pick_rankdict(monkeypatch):
+def test_zipf_tokens_pick_rankplanes(monkeypatch):
     """Frequency-ranked ids of Zipf tokens take one or two varint bytes
     that zlib still shrinks; a frame of reference packs 17-bit ids it
     cannot. The whole chunk must come out >= 25% smaller."""
     batch = _zipf_batch(800, seed=11)
     row = encode_chunk(batch, 0)
-    assert row["codec"].split(",")[2] == "rankdict"
+    assert row["codec"].split(",")[2] == "rankplanes"
     assert decode_chunk(row).column("tokens").equals(batch.column("tokens"))
 
     auto = chunk_mod.encode_ints_auto
@@ -110,11 +113,83 @@ def test_zipf_tokens_pick_rankdict(monkeypatch):
     assert row["enc_bytes"] <= 0.75 * forced["enc_bytes"], (row["enc_bytes"], forced["enc_bytes"])
 
 
-V2_CHUNKS = os.path.join(os.path.dirname(__file__), "data", "chunks_v2.json")
+def test_zipf_chunk_smaller_than_v3_path():
+    """Rank planes with the deflate strategy priced per stream beat the
+    format v3 token stream (LEB128 rankdict ranks, zlib level 7)."""
+    from tests.test_codecs import rankdict_encode
+
+    batch = _zipf_batch(800, seed=11)
+    row = encode_chunk(batch, 0)
+    _, flat = chunk_mod._list_parts(batch.column("tokens"))
+    v3 = block_compress(chunk_mod._wrap_present(None, rankdict_encode(flat)), "zlib", level=7)
+    assert row["block_codec"].split(",")[2] == "zlib"
+    assert len(row["s_tokens"]) < 0.97 * len(v3), (len(row["s_tokens"]), len(v3))
 
 
-def _v2_rows():
-    with open(V2_CHUNKS) as f:
+def _zipf_planes(n: int) -> bytes:
+    return rankplanes_encode(_zipf_batch(n, seed=3).column("tokens").flatten().to_numpy())
+
+
+def _runs(n: int) -> bytes:
+    rng = np.random.default_rng(4)
+    values = rng.integers(0, 1 << 20, n // 40)
+    return np.repeat(values, rng.integers(1, 80, len(values))).astype("<i4").tobytes()[: 4 * n]
+
+
+@pytest.mark.parametrize(
+    "data,strategy,probed",
+    [
+        (_zipf_planes(60), zlib.Z_HUFFMAN_ONLY, False),  # compressed both ways
+        (_zipf_planes(600), zlib.Z_HUFFMAN_ONLY, True),  # priced on slices
+        (_runs(10_000), zlib.Z_DEFAULT_STRATEGY, False),
+        (_runs(200_000), zlib.Z_DEFAULT_STRATEGY, True),
+    ],
+    ids=["zipf-small", "zipf-probed", "runs-small", "runs-probed"],
+)
+def test_maybe_block_prices_deflate_strategy(data, strategy, probed):
+    """Huffman-only deflate wins on Zipf rank planes and LZ matching on
+    run-heavy data; either block is plain raw deflate under the zlib tag."""
+    assert probed == (len(data) > chunk_mod._PROBE_SLICES * chunk_mod._PROBE_SPAN)
+    comp, tag = chunk_mod._maybe_block(data, "zlib")
+    assert tag == "zlib"
+    assert comp == block_compress(data, "zlib", level=7, strategy=strategy)
+    other = ({zlib.Z_HUFFMAN_ONLY, zlib.Z_DEFAULT_STRATEGY} - {strategy}).pop()
+    assert len(comp) < len(block_compress(data, "zlib", level=7, strategy=other))
+    assert block_decompress(comp, "zlib") == data
+
+
+def test_orig_bytes_does_not_depend_on_batching():
+    """A slice of a larger batch and the same rows on their own report the
+    same orig_bytes (and the same streams)."""
+    rng = np.random.default_rng(9)
+    n = 1000
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([f"doc-{i:012d}" for i in range(n)]),
+            pa.array(
+                [None if i % 11 == 5 else list(rng.integers(0, 500, i % 7)) for i in range(n)],
+                type=pa.list_(pa.int32()),
+            ),
+            pa.array([None if i % 11 == 5 else i % 7 for i in range(n)], type=pa.int32()),
+            pa.array([None if i % 13 == 0 else ["web", "code"][i % 2] for i in range(n)]),
+        ],
+        names=["doc_id", "tokens", "n_tok", "source"],
+    )
+    part = batch.slice(200, 100)
+    alone = pa.RecordBatch.from_pylist(part.to_pylist(), schema=part.schema)
+    sliced_row, alone_row = encode_chunk(part, 0), encode_chunk(alone, 0)
+    assert sliced_row["orig_bytes"] == alone_row["orig_bytes"]
+    for key in chunk_mod.STREAM_COLS + ("enc_bytes",):
+        assert sliced_row[key] == alone_row[key]
+
+
+DATA_DIR = os.path.join(os.path.dirname(__file__), "data")
+V2_CHUNKS = os.path.join(DATA_DIR, "chunks_v2.json")
+V3_CHUNKS = os.path.join(DATA_DIR, "chunks_v3.json")
+
+
+def _pinned_rows(path: str = V2_CHUNKS):
+    with open(path) as f:
         cases = json.load(f)
     for case in cases:
         row = dict(case["row"])
@@ -128,8 +203,21 @@ def test_v2_chunks_still_decode(i):
     """Chunk rows written by the format v2 encoder (one per token codec:
     for, bitpack, dict, rlev2; with nulls and zlib blocks) decode
     bit-identically under the current reader."""
-    row, expect = list(_v2_rows())[i]
+    row, expect = list(_pinned_rows())[i]
     assert row["codec"].split(",")[2] == ["for", "bitpack", "dict", "rlev2"][i]
+    out = decode_chunk(row)
+    assert out.to_pydict() == expect
+    assert out.column("tokens").type == pa.list_(pa.int32())
+
+
+@pytest.mark.parametrize("i", range(2))
+def test_v3_chunks_still_decode(i):
+    """Chunk rows written by the format v3 encoder (rankdict tokens with
+    multi-byte ranks, null token and source rows, zlib blocks) decode
+    bit-identically under the current reader."""
+    row, expect = list(_pinned_rows(V3_CHUNKS))[i]
+    assert row["codec"].split(",")[2] == "rankdict"
+    assert row["block_codec"].split(",")[2] == "zlib"
     out = decode_chunk(row)
     assert out.to_pydict() == expect
     assert out.column("tokens").type == pa.list_(pa.int32())
@@ -145,7 +233,7 @@ def test_v2_chunks_still_decode(i):
     ids=["int-tag", "str-tag", "short-list"],
 )
 def test_decode_chunk_unknown_codec_names_stream(codec, match):
-    row, _ = next(_v2_rows())
+    row, _ = next(_pinned_rows())
     row["codec"] = codec
     with pytest.raises(ValueError, match=match):
         decode_chunk(row)
