@@ -66,11 +66,14 @@ def for_decode(buf: bytes, count: int) -> np.ndarray:
     if count == 0:
         return np.empty(0, dtype=np.int64)
     b = np.frombuffer(buf, dtype=np.uint8)
-    u, used = varint_decode(b, 1)
-    base = int(zigzag_decode(u)[0])
-    w = int(b[used])
-    adj = bitunpack(b[used + 1 :], w, count)
-    return (adj + np.int64(base).astype(np.uint64)).astype(np.int64)
+    try:
+        u, used = varint_decode(b, 1)
+        if used == len(b):
+            raise ValueError("stream truncated after the base")
+        adj = bitunpack(b[used + 1 :], int(b[used]), count)
+    except ValueError as e:
+        raise ValueError(f"for: {e}") from None
+    return (adj + np.int64(zigzag_decode(u)[0]).astype(np.uint64)).astype(np.int64)
 
 
 # ----------------------------------------------------------- bit packing
@@ -89,8 +92,12 @@ def bitpack_decode(buf: bytes, count: int) -> np.ndarray:
     if count == 0:
         return np.empty(0, dtype=np.int64)
     b = np.frombuffer(buf, dtype=np.uint8)
-    w = int(b[0])
-    return zigzag_decode(bitunpack(b[1:], w, count))
+    if len(b) == 0:
+        raise ValueError(f"bitpack: empty stream for {count} values")
+    try:
+        return zigzag_decode(bitunpack(b[1:], int(b[0]), count))
+    except ValueError as e:
+        raise ValueError(f"bitpack: {e}") from None
 
 
 # ----------------------------------------------------------- dictionary
@@ -257,6 +264,11 @@ def raw_decode(buf: bytes, count: int) -> np.ndarray:
     if count == 0:
         return np.empty(0, dtype=np.int64)
     b = memoryview(buf)
+    if len(b) == 0:
+        raise ValueError(f"raw: empty stream for {count} values")
     size = b[0]
-    dt = "<i4" if size == 4 else "<i8"
-    return np.frombuffer(b[1 : 1 + count * size], dtype=dt).astype(np.int64)
+    if size not in (4, 8):
+        raise ValueError(f"raw: item size {size}, not 4 or 8")
+    if len(b) < 1 + count * size:
+        raise ValueError(f"raw: {len(b) - 1} bytes hold fewer than {count} {size}-byte values")
+    return np.frombuffer(b[1 : 1 + count * size], dtype=f"<i{size}").astype(np.int64)

@@ -9,9 +9,12 @@ spec alone. Known reference bugs (direct reads num_values-2; ``& -8``
 bit-length rounding, SURVEY.md C9) are NOT reproduced; the ORC spec is the
 oracle.
 
-All per-value math is NumPy-vectorized; Python loops run only over emitted
-runs/frames (<= n/512 frames in the frame encoder; <= number of runs in the
-run-aware encoder, which the auto-selector only picks for run-dense chunks).
+One frame pass (``_encode_frames``) picks every frame's sub-mode; the two
+encoders differ only in where frames start. ``rlev2_encode`` cuts a 512
+grid or row-aligned frames; ``rlev2_encode_runs`` makes every repeat run of
+>= 3 values its own frame, which the auto-selector picks only for run-dense
+chunks. All per-value math is NumPy-vectorized; Python loops run only over
+frames and, when decoding, over run headers.
 """
 
 from __future__ import annotations
@@ -66,8 +69,9 @@ def _encode_base(base: int) -> tuple[bytes, int]:
     return u.to_bytes(bw, "big"), bw
 
 
-def _decode_base(raw: bytes) -> int:
-    bw = len(raw)
+def _decode_base(raw: bytes, bw: int) -> int:
+    # bw comes from the header, not len(raw): a cut stream's short slice
+    # decodes to junk here and fails the decoder's truncation check after
     u = int.from_bytes(raw, "big")
     sign_mask = 1 << (bw * 8 - 1)
     if u & sign_mask:
@@ -103,47 +107,41 @@ def _emit_direct(v: np.ndarray, signed: bool, out: list) -> None:
     out.append(bitpack(u, w))
 
 
-def _emit_fixed_delta(value: int, delta: int, count: int, signed: bool, out: list) -> None:
-    """Delta run with encoded width 0: base + fixed delta, no packed bits."""
-    out.append(bytes([(3 << 6) | (0 << 1) | ((count - 1) >> 8), (count - 1) & 0xFF]))
+def _emit_fixed_delta(value: int, count: int, signed: bool, out: list) -> None:
+    """Constant run (count >= 2) as a delta run of width 0: base + delta 0."""
+    out.append(bytes([(3 << 6) | ((count - 1) >> 8), (count - 1) & 0xFF]))
     out.append(_signed_varint(value) if signed else _unsigned_varint(value))
-    if count >= 2:
-        out.append(_signed_varint(delta))
+    out.append(b"\x00")
 
 
 def _emit_delta(
-    v: np.ndarray, diffs: np.ndarray, signed: bool, out: list, max_mag_width: int | None = None
+    v: np.ndarray, diffs: np.ndarray, signed: bool, out: list, max_mag_width: int
 ) -> None:
-    """Monotonic run: base + delta-base varints + bit-packed |deltas|."""
+    """Monotonic run of >= 3 values: base + delta-base varints + bit-packed
+    |deltas| (``max_mag_width``: bit length of the largest |delta| after the
+    first)."""
     n = len(v)
-    mags = np.abs(diffs).astype(np.uint64)
-    if n <= 2:
-        w = 0
-    elif max_mag_width is not None:
-        w = closest_delta_width(max_mag_width)
-    else:
-        w = closest_delta_width(int(bit_lengths(mags[1:]).max(initial=0)))
-    if w == 0 and n > 2 and not np.all(diffs == diffs[0]):
+    w = closest_delta_width(max_mag_width)
+    if w == 0 and not np.all(diffs == diffs[0]):
         w = 2  # all |deltas| after first are 0/1 but not fixed -> min packed width
     out.append(
         bytes([(3 << 6) | (encode_delta_width(w) << 1) | ((n - 1) >> 8), (n - 1) & 0xFF])
     )
     out.append(_signed_varint(int(v[0])) if signed else _unsigned_varint(int(v[0])))
-    if n >= 2:
-        out.append(_signed_varint(int(diffs[0])))
-    if n > 2 and w > 0:
-        out.append(bitpack(mags[1:], w))
+    out.append(_signed_varint(int(diffs[0])))
+    if w > 0:
+        out.append(bitpack(np.abs(diffs[1:]).astype(np.uint64), w))
 
 
 def _patched_plan(
-    n: int, base: int, adj: np.ndarray, bls: np.ndarray, w: int, min_pll: int = 0
+    n: int, base: int, adj: np.ndarray, bls: np.ndarray, w: int, min_pll: int
 ) -> tuple[int, tuple] | None:
     """Size a patched-base run at main width ``w`` WITHOUT bit-packing.
 
     Returns (total_bytes, plan) or None when the patch constraints (PLL<=31,
-    gap width<=8 bits, w+pw<=64) can't be met. ``_patched_build`` turns the
-    plan into bytes — callers size several candidate widths cheaply and
-    build only the winner.
+    gap width<=8 bits, w+pw<=64) can't be met. The frame pass sizes a
+    frame's candidate widths this way and writes only the winner's header
+    and patch list; its DATA joins the per-width batch pack.
     """
     patch_idx = np.flatnonzero(bls > w)
     if len(patch_idx) > 31:
@@ -188,107 +186,6 @@ def _patched_plan(
     return size, (n, base, w, pw, pgw, pll, cw, gaps, patches)
 
 
-def _patched_build(plan: tuple, adj: np.ndarray) -> list:
-    n, base, w, pw, pgw, pll, cw, gaps, patches = plan
-    base_bytes, bw = _encode_base(base)
-    data = adj & ((_U64_ONE << np.uint64(w)) - _U64_ONE)
-    entries = (gaps << np.uint64(pw)) | patches
-    return [
-        bytes(
-            [
-                (2 << 6) | (encode_direct_width(w) << 1) | ((n - 1) >> 8),
-                (n - 1) & 0xFF,
-                ((bw - 1) << 5) | encode_direct_width(pw),
-                ((pgw - 1) << 5) | pll,
-            ]
-        ),
-        base_bytes,
-        bitpack(data, w),
-        bitpack(entries, cw),
-    ]
-
-
-def _patched_candidate(
-    n: int, base: int, adj: np.ndarray, bls: np.ndarray, w: int, min_pll: int = 0
-) -> list | None:
-    sized = _patched_plan(n, base, adj, bls, w, min_pll)
-    return _patched_build(sized[1], adj) if sized else None
-
-
-def _try_patched(v: np.ndarray, out: list, min_pll: int = 0) -> bool:
-    """Patched-base: frame-of-reference + patch list for outliers.
-
-    Evaluates main widths at the 90/95/100th percentile bit lengths (100th =
-    zero patches = pure FoR) and keeps the smallest encoding. Returns False
-    when no candidate satisfies the constraints (caller falls back to
-    direct). Built from the ORC v1 spec — the reference never implemented
-    this mode (/root/reference/src/encoding/rlev2.rs:185-187).
-    """
-    n = len(v)
-    base = int(v.min())
-    if abs(base).bit_length() + 1 > 64:
-        return False
-    adj = v.astype(np.uint64) - np.int64(base).astype(np.uint64)  # wraparound-exact
-    bls = bit_lengths(adj)
-    widths = {
-        closest_direct_width(max(1, int(np.percentile(bls, p)))) for p in (90, 95, 100)
-    }
-    best: list | None = None
-    best_size = None
-    for w in widths:
-        cand = _patched_candidate(n, base, adj, bls, w, min_pll)
-        if cand is not None:
-            size = sum(len(p) for p in cand)
-            if best_size is None or size < best_size:
-                best, best_size = cand, size
-    if best is None:
-        return False
-    out.extend(best)
-    return True
-
-
-def _encode_frame(v: np.ndarray, signed: bool, out: list, min_pll: int = 0) -> None:
-    """Encode one frame (<=512 values) picking the cheapest sub-mode."""
-    n = len(v)
-    if n == 0:
-        return
-    vmax, vmin = int(v.max()), int(v.min())
-    if vmax == vmin:
-        u = int(_as_unsigned(v[:1], signed)[0])
-        if 3 <= n <= 10 and u.bit_length() <= 64:
-            _emit_short_repeat(vmax, n, signed, out)
-        elif n < 3:
-            _emit_direct(v, signed, out)
-        else:
-            _emit_fixed_delta(vmax, 0, n, signed, out)
-        return
-    diffs = np.diff(v)
-    # the decoder derives delta direction from the delta-base's sign, so a
-    # decreasing run whose first diff is 0 is not representable in delta mode;
-    # int64-wrapping diffs (range >= 2^63) are excluded too
-    monotonic = (vmax - vmin) < (1 << 63) and bool(
-        np.all(diffs >= 0) or (np.all(diffs <= 0) and diffs[0] != 0)
-    )
-    # cost estimates (bytes)
-    u = _as_unsigned(v, signed)
-    w_direct = closest_direct_width(int(bit_lengths(u).max(initial=1)) or 1)
-    cost_direct = 2 + packed_size(n, w_direct)
-    if monotonic and n >= 3:
-        mags = np.abs(diffs).astype(np.uint64)
-        w_delta = closest_delta_width(int(bit_lengths(mags[1:]).max(initial=0)))
-        cost_delta = 2 + 10 + 5 + packed_size(n - 2, max(w_delta, 2) if w_delta else 0)
-        if cost_delta <= cost_direct:
-            _emit_delta(v, diffs, signed, out)
-            return
-    # try patched-base only when it can beat direct
-    probe: list = []
-    if n >= 8 and _try_patched(v, probe, min_pll):
-        if sum(len(p) for p in probe) < cost_direct:
-            out.extend(probe)
-            return
-    _emit_direct(v, signed, out)
-
-
 def _frame_spans(n: int, boundaries: np.ndarray | None) -> tuple[np.ndarray, np.ndarray]:
     """Frame (start, end) arrays: fixed 512 grid, or greedy row-aligned.
 
@@ -310,10 +207,7 @@ def _frame_spans(n: int, boundaries: np.ndarray | None) -> tuple[np.ndarray, np.
             starts_list.append(nxt)
             cur = nxt
         starts = np.array(starts_list, dtype=np.int64)
-    ends = np.empty_like(starts)
-    ends[:-1] = starts[1:]
-    ends[-1] = n
-    return starts, ends
+    return starts, np.append(starts[1:], n)
 
 
 def rlev2_encode(
@@ -326,19 +220,54 @@ def rlev2_encode(
 
     Frames are a fixed 512 grid, or row-aligned when ``boundaries`` is given
     (list-column offsets — frames then respect row structure, which on
-    per-row-regime data beats the grid by ~10%). Per-frame statistics
-    (min/max, monotonicity, zigzag/FoR bit widths, delta widths) come from a
-    handful of whole-array NumPy passes using ``ufunc.reduceat``; the
-    per-frame Python loop only dispatches and emits. This is the bulk-stats
-    analogue of the SIMD work the reference left as a TODO
-    (/root/reference/src/encoding/rlev2.rs:98).
+    per-row-regime data beats the grid by ~10%).
+    """
+    v = np.ascontiguousarray(values, dtype=np.int64)
+    if len(v) == 0:
+        return b""
+    return _encode_frames(v, *_frame_spans(len(v), boundaries), signed, strict_orc)
+
+
+def rlev2_encode_runs(values: np.ndarray, signed: bool = True) -> bytes:
+    """Run-aligned RLEv2 encode for run-dense chunks.
+
+    Every exact-repeat run of >= 3 values is its own frame (cut every 512
+    values from the run's start), so the frame pass writes it as one
+    short-repeat (3-10 values) or fixed-delta run; each maximal stretch of
+    shorter runs takes the 512 grid from where it starts. Only the spans
+    differ from ``rlev2_encode``; the per-frame choice is the same.
     """
     v = np.ascontiguousarray(values, dtype=np.int64)
     n = len(v)
     if n == 0:
         return b""
+    run_starts = np.concatenate(([0], np.flatnonzero(np.diff(v)) + 1))
+    is_long = np.diff(run_starts, append=n) >= 3
+    # a span starts at every long run and at the first short run after one
+    span_starts = run_starts[is_long | np.concatenate(([True], is_long[:-1]))]
+    counts = (np.diff(span_starts, append=n) + MAX_RUN - 1) // MAX_RUN
+    first = np.cumsum(counts) - counts  # index of each span's first frame
+    starts = np.repeat(span_starts, counts) + MAX_RUN * (
+        np.arange(int(counts.sum())) - np.repeat(first, counts)
+    )
+    return _encode_frames(v, starts, np.append(starts[1:], n), signed, False)
+
+
+def _encode_frames(
+    v: np.ndarray, starts: np.ndarray, ends: np.ndarray, signed: bool, strict_orc: bool
+) -> bytes:
+    """Encode contiguous frames ``[starts[i], ends[i])`` of ``v`` (each of
+    1-512 values, together covering ``v``), picking each frame's cheapest
+    sub-mode.
+
+    Per-frame statistics (min/max, monotonicity, zigzag/FoR bit widths,
+    delta widths) come from a handful of whole-array NumPy passes using
+    ``ufunc.reduceat``; the per-frame Python loop only dispatches and emits.
+    This is the bulk-stats analogue of the SIMD work the reference left as a
+    TODO (its src/encoding/rlev2.rs:98).
+    """
+    n = len(v)
     out: list = []
-    starts, ends = _frame_spans(n, boundaries)
     k = len(starts)
     seg_lens = ends - starts
     mins = np.minimum.reduceat(v, starts)
@@ -419,26 +348,30 @@ def rlev2_encode(
     # per frame (the per-call dispatch dominated encode time)
     direct_groups: dict[int, list[tuple[int, int, int]]] = {}  # w -> [(out_idx, s, e)]
     patched_groups: dict[int, list[tuple[int, int, int]]] = {}  # w -> [(out_idx, s, e)]
-    for i in range(k):
-        s, e = int(starts[i]), int(ends[i])
+    # the loop reads Python lists: indexing NumPy arrays once per frame
+    # boxes a scalar each time, which run-aligned spans (many tiny frames)
+    # pay for on every run
+    for i, (s, e, is_const, is_mono, lo, w_direct) in enumerate(
+        zip(starts.tolist(), ends.tolist(), const.tolist(), mono.tolist(), mins.tolist(),
+            dir_w.tolist())
+    ):
         L = e - s
-        if const[i]:
+        if is_const:
             if 3 <= L <= 10:
-                _emit_short_repeat(int(mins[i]), L, signed, out)
+                _emit_short_repeat(lo, L, signed, out)
             elif L < 3:
                 _emit_direct(v[s:e], signed, out)
             else:
-                _emit_fixed_delta(int(mins[i]), 0, L, signed, out)
+                _emit_fixed_delta(lo, L, signed, out)
             continue
-        if mono[i] and L >= 3:
-            _emit_delta(v[s:e], d[s : e - 1], signed, out, max_mag_width=int(delta_w[i]))
+        if is_mono and L >= 3:
+            _emit_delta(v[s:e], d[s : e - 1], signed, out, int(delta_w[i]))
             continue
-        w_direct = int(dir_w[i])
         cost_direct = 2 + packed_size(L, w_direct)
         # patched-base plausible when FoR alone shrinks width, or when the
         # frame is big enough that trimming outliers can pay for the header
         # (wfc_all is None only when NO frame can reach here — see above)
-        if wfc_all is not None and L >= 8 and abs(int(mins[i])).bit_length() + 1 <= 64:
+        if wfc_all is not None and L >= 8 and abs(lo).bit_length() + 1 <= 64:
             wfc = int(wfc_all[i])
             seg_bls = abls[s:e]
             w90c = int(w90_all[i])
@@ -447,9 +380,7 @@ def rlev2_encode(
                 best_plan = None
                 best_size = cost_direct
                 for w in {w90c, wfc}:
-                    sized = _patched_plan(
-                        L, int(mins[i]), adj_all[s:e], seg_bls, w, 1 if strict_orc else 0
-                    )
+                    sized = _patched_plan(L, lo, adj_all[s:e], seg_bls, w, 1 if strict_orc else 0)
                     if sized is not None and sized[0] < best_size:
                         best_size, best_plan = sized
                 if best_plan is not None:
@@ -513,49 +444,6 @@ def rlev2_encode(
     return b"".join(out)
 
 
-def rlev2_encode_runs(values: np.ndarray, signed: bool = True) -> bytes:
-    """Run-aware RLEv2 encode for run-dense chunks.
-
-    Splits on exact-repeat runs: runs of 3-10 -> short-repeat, longer runs ->
-    fixed-delta-0 blocks, inter-run literals -> frame encoder. The Python
-    loop is over runs; the auto-selector picks this mode only when mean run
-    length is high, bounding iterations.
-    """
-    v = np.ascontiguousarray(values, dtype=np.int64)
-    n = len(v)
-    if n == 0:
-        return b""
-    boundaries = np.flatnonzero(np.diff(v)) + 1
-    starts = np.concatenate(([0], boundaries))
-    lengths = np.diff(np.concatenate((starts, [n])))
-    out: list = []
-    lit_start = None
-    for s, ln in zip(starts.tolist(), lengths.tolist()):
-        if ln >= 3:
-            if lit_start is not None:
-                for j in range(lit_start, s, MAX_RUN):
-                    _encode_frame(v[j : min(j + MAX_RUN, s)], signed, out)
-                lit_start = None
-            val = int(v[s])
-            if ln <= 10:
-                _emit_short_repeat(val, ln, signed, out)
-            else:
-                rem = ln
-                while rem > 0:
-                    take = min(rem, MAX_RUN)
-                    if take < 3:
-                        _emit_direct(v[s : s + take], signed, out)
-                    else:
-                        _emit_fixed_delta(val, 0, take, signed, out)
-                    rem -= take
-        elif lit_start is None:
-            lit_start = s
-    if lit_start is not None:
-        for j in range(lit_start, n, MAX_RUN):
-            _encode_frame(v[j : min(j + MAX_RUN, n)], signed, out)
-    return b"".join(out)
-
-
 # ---------------------------------------------------------------- decoder
 
 
@@ -588,91 +476,91 @@ def rlev2_decode(buf: bytes, count: int, signed: bool = True) -> np.ndarray:
     patched_frames: dict[int, list] = {}
     patch_jobs: dict[int, list] = {}  # cw -> [(frame, patch_pos, pll, pw)]
     blen = len(mb)
-    while got < count:
-        if pos >= blen:
-            raise ValueError(f"RLEv2 stream truncated at {got}/{count} values")
-        h0 = mb[pos]  # bytes indexing: plain int, no numpy-scalar boxing
-        tag = h0 >> 6
-        if tag == 0:  # short repeat
-            w = ((h0 >> 3) & 0x7) + 1
-            n = (h0 & 0x7) + 3
-            u = int.from_bytes(mb[pos + 1 : pos + 1 + w], "big")
-            if signed:
-                val = (u >> 1) ^ -(u & 1)
-            else:  # int64 wrap, matching the array path's uint64->int64 view
-                val = u - (1 << 64) if u >= (1 << 63) else u
-            out[got : got + n] = val
-            pos += 1 + w
-        elif tag == 1:  # direct
-            w = decode_direct_width((h0 >> 1) & 0x1F)
-            n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
-            pos += 2
-            nbytes = packed_size(n, w)
-            if pos + nbytes > blen:
-                raise ValueError(f"bitpacked stream truncated at {got}/{count} values")
-            direct_frames.setdefault(w, []).append((got, min(n, count - got), pos, n))
-            pos += nbytes
-        elif tag == 2:  # patched base
-            w = decode_direct_width((h0 >> 1) & 0x1F)
-            n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
-            h2, h3 = mb[pos + 2], mb[pos + 3]
-            bw = ((h2 >> 5) & 0x7) + 1
-            pw = decode_direct_width(h2 & 0x1F)
-            pgw = ((h3 >> 5) & 0x7) + 1
-            pll = h3 & 0x1F
-            pos += 4
-            base = _decode_base(mb[pos : pos + bw])
-            pos += bw
-            nbytes = packed_size(n, w)
-            data_pos = pos
-            pos += nbytes
-            frame = [got, min(n, count - got), n, data_pos, base, None, None]
-            patched_frames.setdefault(w, []).append(frame)
-            if pll:
-                if pgw + pw > 64:
-                    # width table has no entry past 64; a crafted header
-                    # (e.g. pw=64, pgw=8) must fail as malformed, not
-                    # IndexError past the 32-entry table
-                    raise ValueError("invalid patched-base header: pgw + pw > 64")
-                cw = closest_direct_width(pgw + pw)
-                patch_jobs.setdefault(cw, []).append((frame, pos, pll, pw))
-                pos += packed_size(pll, cw)
-        else:  # delta
-            w = decode_delta_width((h0 >> 1) & 0x1F)
-            n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
-            pos += 2
-            u = 0
-            shift = 0
-            while True:  # inline varint: ~40x cheaper than an array call
-                byte = mb[pos]
-                pos += 1
-                u |= (byte & 0x7F) << shift
-                if not byte & 0x80:
-                    break
-                shift += 7
-            base = ((u >> 1) ^ -(u & 1)) if signed else u
-            if n == 1:
-                out[got] = base
-            else:
+    try:
+        while got < count and pos < blen:
+            h0 = mb[pos]  # bytes indexing: plain int, no numpy-scalar boxing
+            tag = h0 >> 6
+            if tag == 0:  # short repeat
+                w = ((h0 >> 3) & 0x7) + 1
+                n = (h0 & 0x7) + 3
+                u = int.from_bytes(mb[pos + 1 : pos + 1 + w], "big")
+                if signed:
+                    val = (u >> 1) ^ -(u & 1)
+                else:  # int64 wrap, matching the array path's uint64->int64 view
+                    val = u - (1 << 64) if u >= (1 << 63) else u
+                out[got : got + n] = val
+                pos += 1 + w
+            elif tag == 1:  # direct
+                w = decode_direct_width((h0 >> 1) & 0x1F)
+                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
+                pos += 2
+                direct_frames.setdefault(w, []).append((got, min(n, count - got), pos, n))
+                pos += packed_size(n, w)
+            elif tag == 2:  # patched base
+                w = decode_direct_width((h0 >> 1) & 0x1F)
+                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
+                h2, h3 = mb[pos + 2], mb[pos + 3]
+                bw = ((h2 >> 5) & 0x7) + 1
+                pw = decode_direct_width(h2 & 0x1F)
+                pgw = ((h3 >> 5) & 0x7) + 1
+                pll = h3 & 0x1F
+                pos += 4
+                base = _decode_base(mb[pos : pos + bw], bw)
+                pos += bw
+                nbytes = packed_size(n, w)
+                data_pos = pos
+                pos += nbytes
+                frame = [got, min(n, count - got), n, data_pos, base, None, None]
+                patched_frames.setdefault(w, []).append(frame)
+                if pll:
+                    if pgw + pw > 64:
+                        # width table has no entry past 64; a crafted header
+                        # (e.g. pw=64, pgw=8) must fail as malformed, not
+                        # IndexError past the 32-entry table
+                        raise ValueError("invalid patched-base header: pgw + pw > 64")
+                    cw = closest_direct_width(pgw + pw)
+                    patch_jobs.setdefault(cw, []).append((frame, pos, pll, pw))
+                    pos += packed_size(pll, cw)
+            else:  # delta
+                w = decode_delta_width((h0 >> 1) & 0x1F)
+                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
+                pos += 2
                 u = 0
                 shift = 0
-                while True:
+                while True:  # inline varint: ~40x cheaper than an array call
                     byte = mb[pos]
                     pos += 1
                     u |= (byte & 0x7F) << shift
                     if not byte & 0x80:
                         break
                     shift += 7
-                dbase = (u >> 1) ^ -(u & 1)
-                take = min(n, count - got)
-                if w == 0:  # fixed delta: closed form, no cumsum needed
-                    out[got : got + take] = base + dbase * np.arange(take, dtype=np.int64)
+                base = ((u >> 1) ^ -(u & 1)) if signed else u
+                if n == 1:
+                    out[got] = base
                 else:
-                    # defer: unpack + cumsum happen once per width below
-                    nbytes = packed_size(n - 2, w)
-                    delta_frames.setdefault(w, []).append((got, take, n, base, dbase, pos))
-                    pos += nbytes
-        got += n
+                    u = 0
+                    shift = 0
+                    while True:
+                        byte = mb[pos]
+                        pos += 1
+                        u |= (byte & 0x7F) << shift
+                        if not byte & 0x80:
+                            break
+                        shift += 7
+                    dbase = (u >> 1) ^ -(u & 1)
+                    take = min(n, count - got)
+                    if w == 0:  # fixed delta: closed form, no cumsum needed
+                        out[got : got + take] = base + dbase * np.arange(take, dtype=np.int64)
+                    else:
+                        # defer: unpack + cumsum happen once per width below
+                        nbytes = packed_size(n - 2, w)
+                        delta_frames.setdefault(w, []).append((got, take, n, base, dbase, pos))
+                        pos += nbytes
+            got += n
+    except IndexError:  # a header or a varint cut off by the end of the buffer
+        pos = blen + 1
+    if got < count or pos > blen:  # a run (or its payload) is cut off
+        raise ValueError(f"RLEv2 stream truncated at {got}/{count} values")
     for w, frames in direct_frames.items():
         padded_vals = sum((n + 7) // 8 * 8 for _, _, _, n in frames)
         packed = np.zeros(padded_vals * w // 8, dtype=np.uint8)
@@ -782,6 +670,7 @@ def _decode_delta_group(frames: list, w: int, b: np.ndarray, out: np.ndarray) ->
             a = d_starts[i]
             out[g + 1 : g + take] = (base - frame_offs[i]) + csum[a : a + take - 1]
 
+
 def rlev2_run_modes(buf: bytes, count: int) -> dict[str, int]:
     """Tally sub-mode usage across a stream's run headers (diagnostic).
 
@@ -793,60 +682,51 @@ def rlev2_run_modes(buf: bytes, count: int) -> dict[str, int]:
     modes = {"short_repeat": 0, "direct": 0, "patched": 0, "delta": 0}
     pos, got, blen = 0, 0, len(mb)
 
-    def _trunc(got_now: int):
-        return ValueError(f"RLEv2 stream truncated at {got_now}/{count} values")
-
-    def _byte(p: int) -> int:
-        # every header byte goes through a bounds check so a mid-header
-        # truncation raises the documented ValueError, not IndexError
-        if p >= blen:
-            raise _trunc(got)
-        return mb[p]
-
     def _skip_varint(p: int) -> int:
-        while _byte(p) & 0x80:
+        while mb[p] & 0x80:
             p += 1
         return p + 1
 
-    while got < count:
-        if pos >= blen:
-            raise _trunc(got)
-        h0 = mb[pos]
-        tag = h0 >> 6
-        if tag == 0:  # short repeat
-            w = ((h0 >> 3) & 0x7) + 1
-            n = (h0 & 0x7) + 3
-            pos += 1 + w
-            modes["short_repeat"] += 1
-        elif tag == 1:  # direct
-            w = decode_direct_width((h0 >> 1) & 0x1F)
-            n = (((h0 & 1) << 8) | _byte(pos + 1)) + 1
-            pos += 2 + packed_size(n, w)
-            modes["direct"] += 1
-        elif tag == 2:  # patched base
-            w = decode_direct_width((h0 >> 1) & 0x1F)
-            n = (((h0 & 1) << 8) | _byte(pos + 1)) + 1
-            h2, h3 = _byte(pos + 2), _byte(pos + 3)
-            bw = ((h2 >> 5) & 0x7) + 1
-            pw = decode_direct_width(h2 & 0x1F)
-            pgw = ((h3 >> 5) & 0x7) + 1
-            pll = h3 & 0x1F
-            pos += 4 + bw + packed_size(n, w)
-            if pll:
-                if pgw + pw > 64:
-                    raise ValueError("invalid patched-base header: pgw + pw > 64")
-                pos += packed_size(pll, closest_direct_width(pgw + pw))
-            modes["patched"] += 1
-        else:  # delta
-            w = decode_delta_width((h0 >> 1) & 0x1F)
-            n = (((h0 & 1) << 8) | _byte(pos + 1)) + 1
-            pos = _skip_varint(pos + 2)  # base
-            if n >= 2:
-                pos = _skip_varint(pos)  # delta base
-                if n > 2 and w > 0:
-                    pos += packed_size(n - 2, w)
-            modes["delta"] += 1
-        got += n
-    if pos > blen:  # final run's payload extends past the buffer
-        raise _trunc(got)
+    try:
+        while got < count and pos < blen:
+            h0 = mb[pos]
+            tag = h0 >> 6
+            if tag == 0:  # short repeat
+                w = ((h0 >> 3) & 0x7) + 1
+                n = (h0 & 0x7) + 3
+                pos += 1 + w
+                modes["short_repeat"] += 1
+            elif tag == 1:  # direct
+                w = decode_direct_width((h0 >> 1) & 0x1F)
+                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
+                pos += 2 + packed_size(n, w)
+                modes["direct"] += 1
+            elif tag == 2:  # patched base
+                w = decode_direct_width((h0 >> 1) & 0x1F)
+                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
+                h2, h3 = mb[pos + 2], mb[pos + 3]
+                bw = ((h2 >> 5) & 0x7) + 1
+                pw = decode_direct_width(h2 & 0x1F)
+                pgw = ((h3 >> 5) & 0x7) + 1
+                pll = h3 & 0x1F
+                pos += 4 + bw + packed_size(n, w)
+                if pll:
+                    if pgw + pw > 64:
+                        raise ValueError("invalid patched-base header: pgw + pw > 64")
+                    pos += packed_size(pll, closest_direct_width(pgw + pw))
+                modes["patched"] += 1
+            else:  # delta
+                w = decode_delta_width((h0 >> 1) & 0x1F)
+                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
+                pos = _skip_varint(pos + 2)  # base
+                if n >= 2:
+                    pos = _skip_varint(pos)  # delta base
+                    if n > 2 and w > 0:
+                        pos += packed_size(n - 2, w)
+                modes["delta"] += 1
+            got += n
+    except IndexError:  # a header or a varint cut off by the end of the buffer
+        pos = blen + 1
+    if got < count or pos > blen:  # a run (or its payload) is cut off
+        raise ValueError(f"RLEv2 stream truncated at {got}/{count} values")
     return modes

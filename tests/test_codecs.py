@@ -36,6 +36,7 @@ from orc_rs_spark.kernels.intcodecs import (
 from orc_rs_spark.kernels import intcodecs
 from orc_rs_spark.kernels.rlev1 import rlev1_decode, rlev1_encode
 from orc_rs_spark.kernels.rlev2 import rlev2_encode
+from orc_rs_spark.kernels.select import INT_CODECS
 from orc_rs_spark.kernels.varint import uvarint, varint_encode
 from orc_rs_spark.kernels.strings import (
     string_dict_decode,
@@ -161,6 +162,47 @@ def test_for_beats_bitpack_on_clustered():
 def test_dict_wins_low_distinct():
     v = INTS["low_distinct"]
     assert len(dict_encode(v)) < len(raw_encode(v)) / 4
+
+
+TRUNCATION_VALUES = np.concatenate([
+    np.repeat(np.array([5, 9, 5, 700], dtype=np.int64), [20, 4, 30, 12]),
+    np.random.default_rng(7).integers(-500, 500, 300),
+    np.arange(100, dtype=np.int64) * 3,
+])
+
+
+@pytest.mark.parametrize("cut", ["0", "1", "half", "len-1"])
+@pytest.mark.parametrize("codec", sorted(INT_CODECS))
+def test_int_codec_truncated_stream_raises(codec, cut):
+    """A cut-off stream of any integer codec is a ValueError, never a
+    silent short decode or an IndexError."""
+    enc, dec = INT_CODECS[codec]
+    buf = (enc or rankdict_encode)(TRUNCATION_VALUES)
+    np.testing.assert_array_equal(dec(buf, len(TRUNCATION_VALUES)), TRUNCATION_VALUES)
+    at = {"0": 0, "1": 1, "half": len(buf) // 2, "len-1": len(buf) - 1}[cut]
+    with pytest.raises(ValueError):
+        dec(buf[:at], len(TRUNCATION_VALUES))
+
+
+@pytest.mark.parametrize(
+    "dec,buf,count,match",
+    [
+        (raw_decode, raw_encode(np.arange(10))[:5], 10, "raw: 4 bytes hold fewer than 10"),
+        (raw_decode, b"", 1, "raw: empty stream"),
+        (raw_decode, bytes([2, 0, 0]), 1, "raw: item size 2"),
+        (for_decode, b"", 10, "for: varint stream truncated"),
+        (for_decode, b"\x02", 10, "for: stream truncated after the base"),
+        (for_decode, for_encode(np.arange(100))[:-1], 100, "for: bitpacked stream truncated"),
+        (bitpack_decode, b"", 3, "bitpack: empty stream"),
+        (bitpack_decode, bitpack_encode(np.arange(100))[:-1], 100,
+         "bitpack: bitpacked stream truncated"),
+    ],
+    ids=["raw-short", "raw-empty", "raw-size", "for-empty", "for-no-width", "for-short",
+         "bitpack-empty", "bitpack-short"],
+)
+def test_header_codecs_name_themselves_on_bad_input(dec, buf, count, match):
+    with pytest.raises(ValueError, match=match):
+        dec(buf, count)
 
 
 def test_rankdict_known_answer():

@@ -191,3 +191,125 @@ def test_patched_header_width_overflow_is_valueerror():
         rlev2_run_modes(buf, 8)
     with pytest.raises(ValueError, match="patched-base header"):
         rlev2_decode(buf, 8, signed=True)
+
+
+# ------------------------------------------------- run-aligned frames
+
+
+def _max_run(v):
+    """Length of the longest run of equal neighbours in ``v``."""
+    starts = np.concatenate(([0], np.flatnonzero(np.diff(v)) + 1, [len(v)]))
+    return int(np.diff(starts).max())
+
+
+@pytest.mark.parametrize("kind", ["spiked", "monotone_noise"])
+def test_run_encoder_is_frame_encoder_without_runs(kind):
+    """With no repeat run of >= 3 values, the run-aligned spans are the 512
+    grid, so both encoders must write the same bytes."""
+    if kind == "spiked":
+        # per 512-value frame: 8-bit values, a 20-bit tier too large to
+        # patch at 8 bits, and a few 40-bit outliers
+        rng = np.random.default_rng(11)
+        n = 8 * MAX_RUN
+        v = rng.integers(0, 256, n)
+        for f in range(0, n, MAX_RUN):
+            pos = f + rng.choice(MAX_RUN, 46, replace=False)
+            v[pos[:36]] = rng.integers(2**19, 2**20, 36)
+            v[pos[36:]] = rng.integers(2**39, 2**40, 10)
+        # alternating parity: no two neighbours are equal
+        v = 2 * v + np.arange(n) % 2
+    else:
+        # strictly increasing, random steps; the last frame has 7 values
+        v = np.cumsum(np.random.default_rng(12).integers(1, 50, 8 * MAX_RUN + 7))
+    v = v.astype(np.int64)
+    assert _max_run(v) == 1
+    assert rlev2_encode_runs(v) == rlev2_encode(v)
+
+
+def test_run_encoder_gives_each_repeat_run_its_own_run():
+    """Every repeat run of >= 3 values is cut every MAX_RUN values from its
+    start; each piece of 3-10 values is one short-repeat run, each longer
+    piece one fixed-delta run. Between the repeat runs sit stretches that
+    alternate low and high values (no equal neighbours, never monotone),
+    which give neither mode."""
+    from orc_rs_spark.kernels.rlev2 import rlev2_run_modes
+
+    rng = np.random.default_rng(12)
+    run_lens = [3, 10, 11, 40, 512, 513, 514, 515, 522, 1030, 7, 2000]
+    parts = []
+    for j, ln in enumerate(run_lens):
+        m = int(rng.integers(1, 700))
+        low, high = rng.integers(0, 50, m), rng.integers(50, 100, m)
+        parts.append(np.where(np.arange(m) % 2 == 0, low, high))
+        parts.append(np.full(ln, 5000 + j))
+    v = np.concatenate(parts).astype(np.int64)
+    pieces = [p for ln in run_lens for p in [MAX_RUN] * (ln // MAX_RUN) + [ln % MAX_RUN] if p]
+    buf = rlev2_encode_runs(v)
+    modes = rlev2_run_modes(buf, len(v))
+    assert modes["short_repeat"] == sum(3 <= p <= 10 for p in pieces)
+    assert modes["delta"] == sum(p > 10 for p in pieces)
+    np.testing.assert_array_equal(rlev2_decode(buf, len(v)), v)
+
+
+def _run_span_starts(v):
+    """Reference loop for the run-aligned frame starts: each repeat run of
+    >= 3 values, then each maximal stretch of shorter runs, is cut every
+    MAX_RUN values from its own start."""
+    n, s, starts = len(v), 0, []
+    while s < n:
+        e = s
+        while e < n and v[e] == v[s]:
+            e += 1
+        if e - s < 3:  # extend over the stretch of short runs
+            e = s
+            while e < n:
+                r = e
+                while r < n and v[r] == v[e]:
+                    r += 1
+                if r - e >= 3:
+                    break
+                e = r
+        starts += range(s, e, MAX_RUN)
+        s = e
+    return np.array(starts, dtype=np.int64)
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_run_spans_match_reference_loop(seed):
+    from orc_rs_spark.kernels.rlev2 import _encode_frames
+
+    rng = np.random.default_rng(seed)
+    k = 400
+    v = np.repeat(rng.integers(0, 6, k), rng.choice([1, 1, 2, 3, 9, 11, 600], k)).astype(np.int64)
+    starts = _run_span_starts(v)
+    want = _encode_frames(v, starts, np.append(starts[1:], len(v)), True, False)
+    assert rlev2_encode_runs(v) == want
+
+
+# ------------------------------------------------------ truncated streams
+
+
+TRUNCATION_INPUTS = {
+    "constant": np.full(600, -7, dtype=np.int64),
+    "monotone": np.cumsum(np.random.default_rng(13).integers(0, 300, 700)).astype(np.int64),
+    "spiked": _spiked(700),
+    "uniform_wide": np.random.default_rng(14).integers(-(2**40), 2**40, 300).astype(np.int64),
+    "mixed_runs": np.repeat(
+        np.random.default_rng(15).integers(0, 2**20, 200),
+        np.random.default_rng(16).integers(1, 40, 200),
+    ).astype(np.int64),
+    "short_repeat": np.full(5, 300, dtype=np.int64),
+}
+
+
+@pytest.mark.parametrize("encoder", ["frames", "runs"])
+@pytest.mark.parametrize("kind", sorted(TRUNCATION_INPUTS))
+def test_truncated_stream_raises_valueerror(kind, encoder):
+    """Every proper prefix of a stream must fail with the documented
+    ValueError: never a silent short decode, never IndexError."""
+    v = TRUNCATION_INPUTS[kind]
+    buf = (rlev2_encode if encoder == "frames" else rlev2_encode_runs)(v)
+    np.testing.assert_array_equal(rlev2_decode(buf, len(v)), v)
+    for cut in range(len(buf)):
+        with pytest.raises(ValueError, match="RLEv2 stream truncated"):
+            rlev2_decode(buf[:cut], len(v))
