@@ -158,6 +158,15 @@ def bitunpack(buf: bytes | np.ndarray, width: int, count: int) -> np.ndarray:
             np.frombuffer(np.ascontiguousarray(b[:nbytes]), dtype=dt)
             .astype(np.uint64)
         )
+    if count <= 64:
+        # short runs (one row group's frames): one big-int accumulator, as
+        # in bitpack, instead of ~40 array calls whatever the count
+        nbytes = (need_bits + 7) // 8
+        acc = int.from_bytes(b[:nbytes].tobytes(), "big") >> (nbytes * 8 - need_bits)
+        mask = (1 << width) - 1
+        return np.array(
+            [(acc >> s) & mask for s in range(need_bits - width, -1, -width)], dtype=np.uint64
+        )
     if width > 56:
         # accumulator would exceed 64 bits for unaligned wide values
         nbytes = (need_bits + 7) // 8

@@ -534,7 +534,10 @@ def rlev2_decode(buf: bytes, count: int, signed: bool = True) -> np.ndarray:
                     if not byte & 0x80:
                         break
                     shift += 7
-                base = ((u >> 1) ^ -(u & 1)) if signed else u
+                if signed:
+                    base = (u >> 1) ^ -(u & 1)
+                else:  # int64 wrap, as in the short-repeat arm
+                    base = u - (1 << 64) if u >= (1 << 63) else u
                 if n == 1:
                     out[got] = base
                 else:
@@ -668,7 +671,10 @@ def _decode_delta_group(frames: list, w: int, b: np.ndarray, out: np.ndarray) ->
         out[g] = base
         if take > 1:
             a = d_starts[i]
-            out[g + 1 : g + take] = (base - frame_offs[i]) + csum[a : a + take - 1]
+            # base and the running offset are both int64; their difference
+            # wraps mod 2^64 like the cumsum it is added to
+            shift = (base - frame_offs[i] + (1 << 63)) % (1 << 64) - (1 << 63)
+            out[g + 1 : g + take] = shift + csum[a : a + take - 1]
 
 
 def rlev2_run_modes(buf: bytes, count: int) -> dict[str, int]:

@@ -10,8 +10,9 @@ lists/maps via LENGTH streams, structs by recursion — the same reader
 matrix as /root/reference/src/column_reader/*.
 
 One per-kind decoder serves whole stripes and row groups: a group read
-starts each stream at the positions of the stripe's ROW_INDEX, parsed
-once per stripe and shared with row-group pruning.
+fetches and inflates each stream only between the selected groups'
+positions, which come from the stripe's ROW_INDEX (read once per stripe
+and shared with row-group pruning) and are parsed once per stripe.
 
 Decompression: every codec goes through the one framing decoder and
 codec table in kernels/blockcomp.py (stdlib zlib, pyarrow snappy, system
@@ -97,13 +98,19 @@ class RowIndexUnsupported(Exception):
     callers fall back to full-stripe decode (correctness preserved)."""
 
 
-def decompress_from(data, codec: str, chunk_off: int, skip: int, min_bytes: int):
+def decompress_from(data, codec: str, chunk_off: int, skip: int, min_bytes: int,
+                    end: int | None = None):
     """Decompress an ORC-framed stream starting at block boundary
-    ``chunk_off``, dropping ``skip`` decompressed bytes, stopping as soon
-    as ``min_bytes`` of useful output exist — the positional read that
-    makes row-group decode cost proportional to the group, not the stripe."""
+    ``chunk_off``, dropping ``skip`` decompressed bytes — the positional
+    read behind row-group decode. With ``end`` (a block boundary, e.g. the
+    next row group's clean start) it inflates exactly the blocks in
+    ``[chunk_off, end)``; without, it stops as soon as ``min_bytes`` of
+    useful output exist (a bound for positions that end mid-block)."""
     if codec == "none":
-        return memoryview(data)[chunk_off + skip:]
+        return memoryview(data)[chunk_off + skip : end]
+    if end is not None:
+        blocks = iter_blocks(memoryview(data)[:end], codec, chunk_off)
+        return memoryview(b"".join(blocks))[skip:]
     out = []
     got = 0
     need = skip + min_bytes
@@ -425,125 +432,112 @@ def _parse_nanos(v: np.ndarray) -> np.ndarray:
 
 
 class _StripeColumnReader:
-    """Decodes one stripe's data streams. ``read_column(col, n, g)`` reads
-    ``n`` values from the start of the column's streams (``g`` None) or
-    from row group ``g``'s recorded positions — one per-kind decoder over
-    four stream accessors (PRESENT/boolean bits, byte RLE, ints, raw
-    bytes), so a group read decompresses and decodes only the byte ranges
-    the group touches (the row-group skip the reference left as a TODO,
-    src/stripe.rs:171)."""
+    """Decodes one stripe's data streams. ``read_column(col, n, groups)``
+    reads ``n`` values from the start of the column's streams (``groups``
+    None) or from the first of the consecutive row groups ``groups`` (a
+    ``range``), one per-kind decoder over four stream accessors
+    (PRESENT/boolean bits, byte RLE, ints, raw bytes) — the row-group skip
+    the reference left as a TODO (src/stripe.rs:171).
+
+    A group read seeks each stream to the group's cursor and, when the
+    cursor of ``groups.stop`` is a clean start (a block boundary with no
+    decompressed, value or bit skip, as our writer records every group),
+    inflates exactly the blocks between the two; otherwise (a mid-block
+    position, e.g. from the JVM writer, or a boolean stream whose next
+    group starts mid-byte) it inflates until a size bound of the values
+    is met. ``streams`` may hold only a byte range of each stream, starting
+    at stream offset ``bases[key]``; ``where`` names the stripe in errors."""
 
     def __init__(self, streams: dict[tuple[int, str], bytes],
-                 sfooter: proto.StripeFooter, types: list[proto.OrcType], codec: str):
+                 sfooter: proto.StripeFooter, types: list[proto.OrcType], codec: str,
+                 where: str = "", positions: dict[int, dict] | None = None,
+                 bases: dict[tuple[int, str], int] | None = None):
         self.types = types
         self.codec = codec
         self.encodings = sfooter.columns
         self.streams = streams
+        self.where = where
+        # col -> {stream kind: cursors}, see _column_cursors
+        self.positions = positions or {}
+        self.bases = bases or {}
         self._dicts: dict[int, pa.Array] = {}
-        # col -> per-group {stream kind: (chunk_off, decomp_skip, *value_skips)}
-        self._group_pos: dict[int, list[dict[str, tuple]]] = {}
 
-    # ------------------------------------------------------ row-group seek
-
-    def load_positions(self, index: dict[int, list], cols: list[int], n_groups: int) -> None:
-        """Parse every row-group position of the column subtrees ``cols``
-        from ``index`` (the stripe's parsed ROW_INDEX) — for EVERY entry,
-        before any group is decoded, so the group path either works for
-        the whole stripe or raises RowIndexUnsupported before a batch is
-        emitted. (Validating only entry 0 let a malformed later entry
-        fail mid-yield, and the full-stripe fallback then re-emitted rows
-        the caller had already consumed.)"""
-        for col in cols:
-            entries = index.get(col)
-            if not entries:
-                raise RowIndexUnsupported(f"column {col}: no ROW_INDEX stream")
-            if len(entries) != n_groups:
-                raise RowIndexUnsupported(
-                    f"column {col}: {len(entries)} index entries for {n_groups} row groups"
-                )
-            self._group_pos[col] = [self._positions(col, e.positions) for e in entries]
-            self.load_positions(index, self.types[col].subtypes, n_groups)
-
-    def _positions(self, col: int, flat: list[int]) -> dict[str, tuple]:
-        """Split one entry's flat position list into per-stream cursors
-        (chunk_off, decomp_skip, *value_skips) following the canonical
-        stream order; a slot-count mismatch aborts to the full-decode path."""
-        comp = self.codec != "none"
-        base = 2 if comp else 1
-        enc = self.encodings[col].kind
-        out: dict[str, tuple] = {}
-        i = 0
-        try:
-            layout = proto.stream_position_layout(self.types[col].kind, enc)
-        except ValueError as e:
-            raise RowIndexUnsupported(str(e)) from None
-        for kindname, extra in layout:
-            if (col, kindname) not in self.streams:
-                continue
-            slots = base + extra
-            vals = flat[i : i + slots]
-            i += slots
-            if len(vals) != slots:
-                raise RowIndexUnsupported(f"column {col}: truncated positions")
-            if comp:
-                out[kindname] = tuple(vals)
-            else:
-                out[kindname] = (vals[0], 0, *vals[1:])
-        if i != len(flat):
-            raise RowIndexUnsupported(
-                f"column {col}: {len(flat) - i} unconsumed position slots"
-            )
-        return out
+    def _corrupt(self, col: int, kind: str, msg: str) -> OrcFormatError:
+        return OrcFormatError(f"{self.where} column {col} stream {kind}: {msg}")
 
     # ---------------------------------------------------- stream accessors
 
-    def _skips(self, col: int, kind: str, g: int | None) -> tuple[int, int]:
-        """Value skips at row group g's position in stream (col, kind):
+    def _skips(self, col: int, kind: str, groups: range | None) -> tuple[int, int]:
+        """Value skips at the first group's cursor in stream (col, kind):
         (values, 0) for RLE streams, (bytes, bits) for bit streams; zero
         from a stream's start."""
-        if g is None or (col, kind) not in self.streams:
+        if groups is None or (col, kind) not in self.streams:
             return 0, 0
-        s = self._group_pos[col][g][kind][2:]
-        return (int(s[0]) if s else 0), (int(s[1]) if len(s) > 1 else 0)
+        cursor = self.positions[col][kind][groups.start]
+        return cursor[2], cursor[3]
 
-    def _data(self, col: int, kind: str, g: int | None, min_bytes: int = 0):
+    def _data(self, col: int, kind: str, groups: range | None, min_bytes: int = 0):
         """Decompressed bytes of stream (col, kind): the whole stream when
-        ``g`` is None, else from row group g's position, stopping once
-        ``min_bytes`` are out. An absent stream reads as empty."""
+        ``groups`` is None, else from the first group's cursor up to the
+        next group's clean start (or, failing that, until ``min_bytes``
+        are out). An absent stream reads as empty."""
         raw = self.streams.get((col, kind))
         if raw is None:
             return b""
-        if g is None:
+        if groups is None:
             return orc_stream_decompress(raw, self.codec)
-        cpos = self._group_pos[col][g][kind]
-        return decompress_from(raw, self.codec, cpos[0], cpos[1], min_bytes)
+        cursors = self.positions[col][kind]
+        start, end = cursors[groups.start], _clean_start(cursors[groups.stop])
+        base = self.bases.get((col, kind), 0)
+        try:
+            return decompress_from(raw, self.codec, start[0] - base, start[1], min_bytes,
+                                   None if end is None else end - base)
+        except OrcFormatError as e:
+            raise self._corrupt(col, kind, str(e)) from e
 
-    def _bits(self, col: int, kind: str, n: int, g: int | None) -> np.ndarray:
+    @staticmethod
+    def _byte_rle_bound(need: int, groups: range | None) -> int:
+        """Encoded bytes that hold ``need`` byte-RLE values: a literal
+        header per 128 values, plus one per row group, since a writer may
+        restart runs at every group."""
+        return need + need // 128 + 4 + len(groups or ())
+
+    def _bits(self, col: int, kind: str, n: int, groups: range | None) -> np.ndarray:
         """n booleans of a bit-packed byte-RLE stream (PRESENT, boolean DATA)."""
-        byte_skip, bit_skip = self._skips(col, kind, g)
+        byte_skip, bit_skip = self._skips(col, kind, groups)
         need = byte_skip + (bit_skip + n + 7) // 8
-        buf = self._data(col, kind, g, need + need // 128 + 4)
+        buf = self._data(col, kind, groups, self._byte_rle_bound(need, groups))
         bys = byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), need)
         return np.unpackbits(bys[byte_skip:])[bit_skip : bit_skip + n].astype(bool)
 
-    def _bytes(self, col: int, n: int, g: int | None) -> np.ndarray:
+    def _bytes(self, col: int, n: int, groups: range | None) -> np.ndarray:
         """n values of the byte-RLE DATA stream (byte columns, union tags)."""
-        skip = self._skips(col, "DATA", g)[0]
+        skip = self._skips(col, "DATA", groups)[0]
         need = skip + n
-        buf = self._data(col, "DATA", g, need + need // 128 + 4)
+        buf = self._data(col, "DATA", groups, self._byte_rle_bound(need, groups))
         return byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), need)[skip:]
 
-    def _ints(self, col: int, kind: str, n: int, g: int | None, signed: bool) -> np.ndarray:
+    def _ints(self, col: int, kind: str, n: int, groups: range | None,
+              signed: bool) -> np.ndarray:
         """n integers of stream (col, kind): RLEv2 under the *_V2
         encodings, RLEv1 (Hive 0.11) otherwise."""
-        skip = self._skips(col, kind, g)[0]
+        skip = self._skips(col, kind, groups)[0]
         total = skip + n
-        b = np.frombuffer(self._data(col, kind, g, total * 11 + 32), dtype=np.uint8)
-        if self.encodings[col].kind in ("DIRECT_V2", "DICTIONARY_V2"):
-            vals = rlev2_decode(b, total, signed=signed)
-        else:
-            vals = rlev1_decode(b, total, signed=signed)
+        b = np.frombuffer(self._data(col, kind, groups, total * 11 + 32), dtype=np.uint8)
+        v2 = self.encodings[col].kind in ("DIRECT_V2", "DICTIONARY_V2")
+        try:
+            vals = (rlev2_decode if v2 else rlev1_decode)(b, total, signed=signed)
+        except ValueError as e:
+            raise self._corrupt(col, kind, str(e)) from e
         return vals[skip:]
+
+    def _raw(self, col: int, kind: str, nbytes: int, groups: range | None):
+        """The first ``nbytes`` bytes of stream (col, kind) from the first
+        group's cursor (strings, floats); a shorter stream is corrupt."""
+        data = memoryview(self._data(col, kind, groups, nbytes))
+        if len(data) < nbytes:
+            raise self._corrupt(col, kind, f"{len(data)} bytes where {nbytes} are needed")
+        return data[:nbytes]
 
     def _decimal_dense(self, buf, n_dense: int, scales: np.ndarray,
                        t: proto.OrcType) -> pa.Array:
@@ -602,9 +596,9 @@ class _StripeColumnReader:
         """Stripe-global string dictionary (materialized once per column)."""
         if col not in self._dicts:
             dict_size = self.encodings[col].dictionary_size
-            dbuf = self._data(col, "DICTIONARY_DATA", None)
             dlen = self._ints(col, "LENGTH", dict_size, None, signed=False)
             doffsets = np.concatenate(([0], np.cumsum(dlen))).astype(np.int64)
+            dbuf = self._raw(col, "DICTIONARY_DATA", int(doffsets[-1]), None)
             self._dicts[col] = pa.Array.from_buffers(
                 pa.string(), dict_size,
                 [None, pa.py_buffer(doffsets.astype(np.int32).tobytes()), pa.py_buffer(dbuf)],
@@ -613,18 +607,18 @@ class _StripeColumnReader:
 
     # ------------------------------------------------------------- decode
 
-    def read_column(self, col: int, n: int, g: int | None = None) -> pa.Array:
+    def read_column(self, col: int, n: int, groups: range | None = None) -> pa.Array:
         """``n`` values of column ``col`` from its streams' start, or from
-        row group ``g`` (positions loaded by ``load_positions``)."""
+        the first of the consecutive row groups ``groups``."""
         t = self.types[col]
         kind = t.kind
         present = None
         if n and (col, "PRESENT") in self.streams:
-            present = self._bits(col, "PRESENT", n, g)
+            present = self._bits(col, "PRESENT", n, groups)
         n_dense = int(present.sum()) if present is not None else n
 
         if kind == "struct":
-            children = [self.read_column(sub, n_dense, g) for sub in t.subtypes]
+            children = [self.read_column(sub, n_dense, groups) for sub in t.subtypes]
             dense = pa.StructArray.from_arrays(children, names=t.field_names)
             return _scatter(dense, present)
 
@@ -633,10 +627,10 @@ class _StripeColumnReader:
             # /root/reference/src/column_reader/mod.rs:265): DIRECT byte-RLE
             # TAG stream; each child stream holds only its rows, in order,
             # and a group read seeks each child through its own index entry
-            tags = self._bytes(col, n_dense, g).astype(np.int8)
+            tags = self._bytes(col, n_dense, groups).astype(np.int8)
             counts = np.bincount(tags, minlength=len(t.subtypes))
             children = [
-                self.read_column(sub, int(counts[ci]), g) for ci, sub in enumerate(t.subtypes)
+                self.read_column(sub, int(counts[ci]), groups) for ci, sub in enumerate(t.subtypes)
             ]
             # dense-union offsets: running index within each child
             offsets = np.zeros(n_dense, dtype=np.int32)
@@ -651,24 +645,24 @@ class _StripeColumnReader:
             return dense
 
         if kind in ("list", "map"):
-            lengths = self._ints(col, "LENGTH", n_dense, g, signed=False)
+            lengths = self._ints(col, "LENGTH", n_dense, groups, signed=False)
             n_child = int(lengths.sum())
             offsets = pa.array(np.concatenate(([0], np.cumsum(lengths))).astype(np.int32))
             if kind == "list":
-                child = self.read_column(t.subtypes[0], n_child, g)
+                child = self.read_column(t.subtypes[0], n_child, groups)
                 dense = pa.ListArray.from_arrays(offsets, child)
             else:
-                keys = self.read_column(t.subtypes[0], n_child, g)
-                vals = self.read_column(t.subtypes[1], n_child, g)
+                keys = self.read_column(t.subtypes[0], n_child, groups)
+                vals = self.read_column(t.subtypes[1], n_child, groups)
                 dense = pa.MapArray.from_arrays(offsets, keys, vals)
             return _scatter(dense, present)
 
         if kind == "boolean":
-            return _scatter(pa.array(self._bits(col, "DATA", n_dense, g)), present)
+            return _scatter(pa.array(self._bits(col, "DATA", n_dense, groups)), present)
         if kind == "byte":
-            return _scatter(pa.array(self._bytes(col, n_dense, g).astype(np.int8)), present)
+            return _scatter(pa.array(self._bytes(col, n_dense, groups).astype(np.int8)), present)
         if kind in ("short", "int", "long", "date"):
-            vals = self._ints(col, "DATA", n_dense, g, signed=True)
+            vals = self._ints(col, "DATA", n_dense, groups, signed=True)
             if kind == "short":
                 arr = pa.array(vals.astype(np.int16))
             elif kind == "int":
@@ -680,29 +674,28 @@ class _StripeColumnReader:
             return _scatter(arr, present)
         if kind in ("float", "double"):
             dtype = np.dtype("<f4" if kind == "float" else "<f8")
-            data = self._data(col, "DATA", g, n_dense * dtype.itemsize)
-            return _scatter(pa.array(np.frombuffer(data, dtype=dtype, count=n_dense)), present)
+            data = self._raw(col, "DATA", n_dense * dtype.itemsize, groups)
+            return _scatter(pa.array(np.frombuffer(data, dtype=dtype)), present)
         if kind in ("string", "varchar", "char", "binary"):
             out_type = pa.binary() if kind == "binary" else pa.string()
             if self.encodings[col].kind in ("DICTIONARY", "DICTIONARY_V2"):
                 dictionary = self._dict_array(col)
-                idx = self._ints(col, "DATA", n_dense, g, signed=False)
+                idx = self._ints(col, "DATA", n_dense, groups, signed=False)
                 dense = dictionary.take(pa.array(idx))
                 if kind == "binary":
                     dense = dense.cast(pa.binary())
                 return _scatter(dense, present)
-            lengths = self._ints(col, "LENGTH", n_dense, g, signed=False)
+            lengths = self._ints(col, "LENGTH", n_dense, groups, signed=False)
             offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int32)
-            total = int(offsets[-1])
-            data = memoryview(self._data(col, "DATA", g, total))[:total]
+            data = self._raw(col, "DATA", int(offsets[-1]), groups)
             dense = pa.Array.from_buffers(
                 out_type, n_dense,
                 [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)],
             )
             return _scatter(dense, present)
         if kind in ("timestamp", "timestamp_instant"):
-            secs = self._ints(col, "DATA", n_dense, g, signed=True)
-            nanos = _parse_nanos(self._ints(col, "SECONDARY", n_dense, g, signed=False))
+            secs = self._ints(col, "DATA", n_dense, groups, signed=True)
+            nanos = _parse_nanos(self._ints(col, "SECONDARY", n_dense, groups, signed=False))
             # JVM convention (calibrated against Spark's ORC writer): the
             # seconds stream is trunc-toward-zero, nanos are the positive
             # fraction; pre-1970 (ABSOLUTE seconds < 0) values with nanos
@@ -715,15 +708,71 @@ class _StripeColumnReader:
             arr = pa.array(epoch).cast(pa.timestamp("ns", tz="UTC" if kind == "timestamp_instant" else None))
             return _scatter(arr, present)
         if kind == "decimal":
-            data = self._data(col, "DATA", g, 19 * n_dense + 32)
-            scales = self._ints(col, "SECONDARY", n_dense, g, signed=True)
+            data = self._data(col, "DATA", groups, 19 * n_dense + 32)
+            if np.count_nonzero(np.frombuffer(data, dtype=np.uint8) < 0x80) < n_dense:
+                raise self._corrupt(col, "DATA", f"fewer than {n_dense} decimal varints")
+            scales = self._ints(col, "SECONDARY", n_dense, groups, signed=True)
             return _scatter(self._decimal_dense(data, n_dense, scales, t), present)
         raise OrcUnsupportedError(f"unsupported ORC type {kind!r} (column {col})")
 
 
-# bytes of stripe footers and index regions (as stored) one reader keeps
-# parsed; a lookup file's whole index fits, so random point reads parse
-# each stripe's metadata once
+def _clean_start(cursor: tuple) -> int | None:
+    """The block offset of a cursor that starts a block with nothing to
+    skip (every earlier value lies in earlier blocks); None for a
+    mid-block, mid-run or mid-byte cursor."""
+    return None if cursor[1] or cursor[2] or cursor[3] else cursor[0]
+
+
+def _column_cursors(col: int, kind: str, encoding: str, entries: list | None,
+                    n_groups: int, lengths: dict, comp: bool, where: str) -> dict[str, list]:
+    """Column ``col``'s row-group cursors: {stream kind: cursors}, where
+    ``cursors[g]`` is ``(block offset, decompressed skip, value skip, bit
+    skip)`` at group g's start, and one more entry, the stream's length,
+    ends the last group. Each index entry's flat position list splits by
+    the canonical stream order (``proto.stream_position_layout``) over the
+    streams the stripe holds (``lengths``). Every entry is checked: a
+    missing index, or an entry or slot count that does not fit, raises
+    RowIndexUnsupported; a block offset past the stream's end or before
+    the previous group's start raises OrcFormatError."""
+    if not entries:
+        raise RowIndexUnsupported(f"column {col}: no ROW_INDEX stream")
+    if len(entries) != n_groups:
+        raise RowIndexUnsupported(
+            f"column {col}: {len(entries)} index entries for {n_groups} row groups"
+        )
+    try:
+        layout = proto.stream_position_layout(kind, encoding)
+    except ValueError as e:
+        raise RowIndexUnsupported(str(e)) from None
+    slots = [(k, (2 if comp else 1) + extra) for k, extra in layout if (col, k) in lengths]
+    width = sum(n for _, n in slots)
+    cursors: dict[str, list] = {k: [] for k, _ in slots}
+    for e in entries:
+        flat = e.positions
+        if len(flat) != width:
+            raise RowIndexUnsupported(f"column {col}: {len(flat)} position slots, expected {width}")
+        at = 0
+        for k, n in slots:
+            vals = tuple(flat[at : at + n]) if comp else (flat[at], 0, *flat[at + 1 : at + n])
+            cursors[k].append(vals + (0,) * (4 - len(vals)))
+            at += n
+    for k, cs in cursors.items():
+        end = lengths[(col, k)]
+        prev = 0
+        for g, c in enumerate(cs):
+            if not prev <= c[0] <= end:
+                raise OrcFormatError(
+                    f"{where} column {col} stream {k}: row group {g} starts at byte "
+                    f"{c[0]}, outside [{prev}, {end}]"
+                )
+            prev = c[0]
+        cs.append((end, 0, 0, 0))
+    return cursors
+
+
+# bytes of stripe footers and index regions (as stored, plus 8 bytes per
+# parsed position slot) one reader keeps parsed; a lookup file's whole
+# index fits, so random point reads parse each stripe's metadata once
 _STRIPE_META_BYTES = 8 << 20
 
 
@@ -731,7 +780,10 @@ _STRIPE_META_BYTES = 8 << 20
 class _StripeMeta:
     footer: proto.StripeFooter
     index: tuple | None = None  # (row_index, bloom_index) once parsed
-    nbytes: int = 0  # stored bytes charged against _STRIPE_META_BYTES
+    # col -> {stream kind: cursors} or the error a group read raises, once
+    # parsed from ``index`` (see _column_cursors)
+    positions: dict | None = None
+    nbytes: int = 0  # bytes charged against _STRIPE_META_BYTES
 
 
 class OrcFileReader:
@@ -760,16 +812,24 @@ class OrcFileReader:
         for sub in self.tail.footer.types[col].subtypes:
             self._column_subtree(sub, out)
 
-    def _open_stripe(self, i: int, columns: list[str] | None = None):
+    def _open_stripe(self, i: int, columns: list[str] | None = None,
+                     runs: list[tuple[int, int]] | None = None):
         """Open one stripe, reading ONLY the selected columns' data-stream
-        byte ranges (coalesced) — column pruning at the I/O level, the
-        byte-range analogue of the reference's per-stream range readers
-        (src/compression.rs:39-56, src/io_utils.rs:237-281). A full-schema
-        read stays one contiguous range. The index region is not read
-        here: group reads take the parsed index from ``_read_index_region``."""
+        byte ranges (coalesced when closer than 64 KiB) — column pruning
+        at the I/O level, the byte-range analogue of the reference's
+        per-stream range readers (src/compression.rs:39-56,
+        src/io_utils.rs:237-281). A full-stripe, full-schema read stays
+        one contiguous range. With ``runs`` (``(first group, count)``
+        pairs, ascending) each positioned stream is read from the first
+        run's start to the last run's end — the next group's offset when
+        that is a clean start, else the stream's end; dictionary streams
+        are read whole. Raises RowIndexUnsupported when the index cannot
+        locate the groups (the caller reads the stripe whole instead)."""
         stripe = self.tail.footer.stripes[i]
         data_off = stripe.offset + stripe.index_length
         sfooter = self._stripe_entry(i).footer
+        _names, subs = self._select(columns)
+        positions = None if runs is None else self._group_positions(i, subs)
         # data-stream layout: (offset-in-data-region, length) in footer order
         spans = []
         pos = -stripe.index_length
@@ -777,36 +837,46 @@ class OrcFileReader:
             if pos >= 0:
                 spans.append((s, pos, s.length))
             pos += s.length
-        if columns is None:
+        bases: dict[tuple[int, str], int] = {}
+        if columns is None and runs is None:
             raw = self.source.read_at(data_off, stripe.data_length)
             streams = {
                 (s.column, s.kind): raw[off : off + ln] for s, off, ln in spans
             }
         else:
-            _names, subs = self._select(columns)
             needed: set[int] = set()
             for sub in subs:
                 self._column_subtree(sub, needed)
-            picked = [(s, off, ln) for s, off, ln in spans if s.column in needed]
+            # (key, region offset, region end) of every stream range to fetch
+            picked = []
+            for s, off, ln in spans:
+                if s.column not in needed:
+                    continue
+                lo, hi = 0, ln
+                cursors = positions and positions[s.column].get(s.kind)
+                if cursors:
+                    lo = cursors[runs[0][0]][0]
+                    end = _clean_start(cursors[sum(runs[-1])])
+                    hi = ln if end is None else end
+                    bases[(s.column, s.kind)] = lo
+                picked.append(((s.column, s.kind), off + lo, off + hi))
             # coalesce ranges closer than 64 KiB: fewer, larger reads
             ranges: list[list[int]] = []
-            for _s, off, ln in sorted(picked, key=lambda t: t[1]):
-                if ranges and off - (ranges[-1][0] + ranges[-1][1]) <= 64 * 1024:
-                    ranges[-1][1] = off + ln - ranges[-1][0]
+            for _key, lo, hi in sorted(picked, key=lambda t: t[1]):
+                if ranges and lo - ranges[-1][1] <= 64 * 1024:
+                    ranges[-1][1] = max(ranges[-1][1], hi)
                 else:
-                    ranges.append([off, ln])
-            blobs = {
-                (lo, ln): self.source.read_at(data_off + lo, ln)
-                for lo, ln in ranges
-            }
+                    ranges.append([lo, hi])
+            blobs = [(lo, self.source.read_at(data_off + lo, hi - lo)) for lo, hi in ranges]
             streams = {}
-            for s, off, ln in picked:
-                for (lo, rln), blob in blobs.items():
-                    if lo <= off and off + ln <= lo + rln:
-                        streams[(s.column, s.kind)] = blob[off - lo : off - lo + ln]
+            for key, lo, hi in picked:
+                for rlo, blob in blobs:
+                    if rlo <= lo and hi <= rlo + len(blob):
+                        streams[key] = blob[lo - rlo : hi - rlo]
                         break
         return (
-            _StripeColumnReader(streams, sfooter, self.tail.footer.types, self.codec),
+            _StripeColumnReader(streams, sfooter, self.tail.footer.types, self.codec,
+                                f"{self.path} stripe {i}", positions, bases),
             stripe,
         )
 
@@ -863,34 +933,40 @@ class OrcFileReader:
         reference's bounded-batch pull loop, src/reader.rs:17-27 applied
         at row-group granularity). ``row_groups`` (ids validated up front,
         OrcBoundsError when out of range or the file has no stride)
-        decodes those groups positionally through the stripe's cached
-        index parse, so memory is bounded by the covering groups; when
-        the index cannot locate every group the stripe is decoded whole
-        and sliced (same rows either way). A FULL read decodes the stripe
-        in one pass per column and slices — per-group position parsing
-        and restarted partial decompressions are pure overhead when every
-        group is wanted anyway, and memory is already bounded by the
-        stripe (the format's sizing unit)."""
+        decodes those groups positionally: the read fetches only the
+        groups' stream ranges, and each batch of ``batch_rows // stride``
+        consecutive groups inflates only its own blocks when the next
+        group starts clean (see ``_StripeColumnReader``), from positions
+        parsed once per stripe. When the index cannot locate every group,
+        the stripe is decoded whole and sliced (same rows either way); an
+        index that contradicts its streams raises OrcFormatError. A FULL
+        read decodes the stripe in one pass per column and slices —
+        per-group seeks and restarted decompressions are pure overhead
+        when every group is wanted anyway, and memory is already bounded
+        by the stripe (the format's sizing unit)."""
         sel = None if row_groups is None else self._group_ids(i, row_groups)
         if sel == []:
             return
-        reader, stripe = self._open_stripe(i, columns)
         names, subs = self._select(columns)
-        n_rows = stripe.number_of_rows
         stride = self.tail.footer.row_index_stride
         if sel is not None:
+            runs = _runs(sel)
             try:
-                reader.load_positions(self._read_index_region(i)[0], subs, -(-n_rows // stride))
+                reader, stripe = self._open_stripe(i, columns, runs)
             except RowIndexUnsupported:
                 pass
             else:
+                n_rows = stripe.number_of_rows
                 per_batch = max(1, batch_rows // stride)
-                for g0, glen in _runs(sel):
+                for g0, glen in runs:
                     for g in range(g0, g0 + glen, per_batch):
-                        n = min(min(per_batch, g0 + glen - g) * stride, n_rows - g * stride)
-                        arrays = [reader.read_column(sub, n, g) for sub in subs]
+                        groups = range(g, min(g + per_batch, g0 + glen))
+                        n = min(len(groups) * stride, n_rows - g * stride)
+                        arrays = [reader.read_column(sub, n, groups) for sub in subs]
                         yield pa.RecordBatch.from_arrays(arrays, names=names)
                 return
+        reader, stripe = self._open_stripe(i, columns)
+        n_rows = stripe.number_of_rows
         full = pa.Table.from_arrays(
             [reader.read_column(sub, n_rows) for sub in subs], names=names
         )
@@ -900,6 +976,48 @@ class OrcFileReader:
                 for g0, glen in _runs(sel)
             ])
         yield from full.to_batches(max_chunksize=batch_rows)
+
+    def _group_positions(self, i: int, subs: list[int]) -> dict[int, dict]:
+        """Row-group cursors of the column subtrees ``subs`` in stripe i
+        (see ``_column_cursors``), parsed for every column on the stripe's
+        first group read and kept in its cached metadata at 8 bytes a
+        slot. Raises the first needed column's parse error:
+        RowIndexUnsupported (read the stripe whole) or OrcFormatError —
+        before any batch is emitted, since every entry was checked (a
+        fallback mid-yield would re-emit rows the caller already has)."""
+        entry = self._stripe_entry(i)
+        if entry.positions is None:
+            entry.positions = self._parse_row_positions(i, self._read_index_region(i)[0])
+            self._charge(entry, 32 * sum(
+                len(cursors) for p in entry.positions.values() if isinstance(p, dict)
+                for cursors in p.values()
+            ))
+        needed: set[int] = set()
+        for sub in subs:
+            self._column_subtree(sub, needed)
+        for col in sorted(needed):
+            err = entry.positions[col]
+            if isinstance(err, Exception):
+                raise type(err)(*err.args)
+        return {col: entry.positions[col] for col in needed}
+
+    def _parse_row_positions(self, i: int, rows: dict[int, list]) -> dict[int, dict | Exception]:
+        """col -> its cursors, or the error a group read of it raises, for
+        every column of stripe i from the stripe's parsed ROW_INDEX."""
+        stripe = self.tail.footer.stripes[i]
+        sfooter = self._stripe_entry(i).footer
+        n_groups = -(-stripe.number_of_rows // self.tail.footer.row_index_stride)
+        lengths = {(s.column, s.kind): s.length for s in sfooter.streams}
+        out: dict[int, dict | Exception] = {}
+        for col, t in enumerate(self.tail.footer.types):
+            try:
+                out[col] = _column_cursors(
+                    col, t.kind, sfooter.columns[col].kind, rows.get(col), n_groups,
+                    lengths, self.codec != "none", f"{self.path} stripe {i}",
+                )
+            except (RowIndexUnsupported, OrcFormatError) as e:
+                out[col] = e
+        return out
 
     def _stripe_entry(self, i: int) -> _StripeMeta:
         """Stripe i's cached metadata, its footer read and parsed on first

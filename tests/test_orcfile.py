@@ -1228,9 +1228,13 @@ def test_column_projection_prunes_io(indexed_orc):
 def test_row_group_decode_fuzz(seed, tmp_path):
     """Randomized schema/content fuzz: positional group decode must equal
     full-decode slices for every random group selection, across nulls,
-    dictionaries, floats, lists and strings."""
+    dictionaries, floats, lists and strings, under every block codec —
+    as one batch per group run and in batches that end mid-run, with runs
+    that end mid-stripe and at the stripe's last group."""
     import pyarrow as pa
 
+    from orc_rs_spark.kernels.blockcomp import CODECS
+    from orc_rs_spark.orcfile.reader import _runs
     from orc_rs_spark.orcfile.writer import write_orc
 
     rng = np.random.default_rng(seed)
@@ -1252,24 +1256,58 @@ def test_row_group_decode_fuzz(seed, tmp_path):
         "lst": pa.array([rng.integers(0, 100, int(rng.integers(0, 6))).tolist()
                          for _ in range(n)], type=pa.list_(pa.int32())),
     })
-    p = str(tmp_path / f"fuzz{seed}.orc")
-    write_orc(tbl, p, stripe_rows=n, row_index_stride=stride,
-              compression=str(rng.choice(["zlib", "none"])))
-    r = OrcFileReader(p)
-    full = pa.Table.from_batches([r.read_stripe(0)])
     n_groups = -(-n // stride)
+    selections = [
+        [1, 2],  # a run that ends mid-stripe
+        [n_groups - 2, n_groups - 1],  # a run that ends at the last group
+        [0, n_groups - 1],
+    ]
     for _ in range(4):
         k = int(rng.integers(1, n_groups + 1))
-        sel = sorted(rng.choice(n_groups, size=k, replace=False).tolist())
-        got = r.read_stripe(0, row_groups=sel)
-        from orc_rs_spark.orcfile.reader import _runs
+        selections.append(sorted(rng.choice(n_groups, size=k, replace=False).tolist()))
+    for codec in CODECS:
+        p = str(tmp_path / f"fuzz{seed}_{codec}.orc")
+        write_orc(tbl, p, stripe_rows=n, row_index_stride=stride, compression=codec)
+        r = OrcFileReader(p)
+        full = pa.Table.from_batches([r.read_stripe(0)])
+        for sel in selections:
+            exp = pa.concat_tables([
+                full.slice(g0 * stride, min(gl * stride, n - g0 * stride))
+                for g0, gl in _runs(sel)
+            ])
+            got = pa.Table.from_batches([r.read_stripe(0, row_groups=sel)])
+            split = pa.Table.from_batches(list(
+                r.read_stripe_batches(0, batch_rows=stride, row_groups=sel)
+            ))
+            assert got.num_rows == split.num_rows == exp.num_rows
+            for c in tbl.column_names:
+                want = exp.column(c).to_pylist()
+                assert got.column(c).to_pylist() == want, (seed, codec, sel, c)
+                assert split.column(c).to_pylist() == want, (seed, codec, sel, c)
 
-        parts = [full.slice(g0 * stride, min(gl * stride, n - g0 * stride))
-                 for g0, gl in _runs(sel)]
-        exp = pa.concat_tables(parts)
-        assert got.num_rows == exp.num_rows
-        for c in tbl.column_names:
-            assert got.column(c).to_pylist() == exp.column(c).to_pylist(), (seed, sel, c)
+
+def test_long_group_run_ending_mid_byte(tmp_path):
+    """A batch of many row groups whose end falls inside a PRESENT or
+    boolean byte (stride not a multiple of 8) decodes through the size
+    bound, which must allow for the byte-RLE runs our writer restarts at
+    every group."""
+    import pyarrow as pa
+
+    from orc_rs_spark.orcfile.writer import write_orc
+
+    n, stride = 3330, 333
+    rng = np.random.default_rng(1)
+    tbl = pa.table({
+        "v": pa.array([None if rng.random() < 0.3 else i for i in range(n)], pa.int64()),
+        "b": pa.array([None if rng.random() < 0.3 else bool(rng.random() < 0.5)
+                       for _ in range(n)]),
+    })
+    p = str(tmp_path / "mid_byte.orc")
+    write_orc(tbl, p, stripe_rows=n, row_index_stride=stride, compression="zlib")
+    r = OrcFileReader(p)
+    for sel in (list(range(9)), list(range(1, 9))):
+        got = r.read_stripe(0, row_groups=sel)
+        assert got.to_pydict() == tbl.slice(sel[0] * stride, len(sel) * stride).to_pydict()
 
 
 @pytest.mark.spark
@@ -1780,6 +1818,80 @@ def test_group_support_validates_every_entry(indexed_orc, monkeypatch):
         _positional_only(m)
         with pytest.raises(AssertionError, match="fell back"):
             r.read_stripe(0, row_groups=[19])
+
+
+def _plant_offset(r, col: int, g: int, offset: int) -> None:
+    """Set the block offset of column ``col``'s first positioned stream in
+    stripe 0's index entry ``g`` (DATA, for a column without nulls)."""
+    import dataclasses
+
+    rows, blooms = r._read_index_region(0)
+    entries = list(rows[col])
+    entries[g] = dataclasses.replace(entries[g], positions=[offset, *entries[g].positions[1:]])
+    r._stripe_meta[0].index = ({**rows, col: entries}, blooms)
+
+
+def _unindexed_kinds_table(n=4000):
+    import decimal
+
+    import pyarrow as pa
+
+    return pa.table({
+        "k": pa.array(np.arange(n, dtype=np.int64) * 7),
+        "s": pa.array([f"doc-{i:06d}" for i in range(n)]),  # distinct: direct
+        "f": pa.array(np.sin(np.arange(n))),
+        "d": pa.array([decimal.Decimal(i * 7) / 8 for i in range(n)], type=pa.decimal128(12, 3)),
+    })
+
+
+@pytest.mark.parametrize("codec", ["none", "zlib"])
+@pytest.mark.parametrize("where", ["before", "past"])
+def test_group_offset_outside_stream_raises(tmp_path, codec, where):
+    """An index entry whose block offset lies before the previous group's
+    start, or past its stream's end, is a corrupt file: a group read fails
+    with OrcFormatError naming the file, stripe, column and stream."""
+    import re
+
+    from orc_rs_spark.orcfile.writer import write_orc
+
+    path = str(tmp_path / f"planted_{codec}.orc")
+    write_orc(_unindexed_kinds_table(), path, compression=codec, row_index_stride=1000)
+    r = OrcFileReader(path)
+    col = r.tail.footer.types[0].subtypes[0]  # "k"
+    rows = r._read_index_region(0)[0]
+    length = next(s.length for s in r._stripe_entry(0).footer.streams
+                  if (s.column, s.kind) == (col, "DATA"))
+    offset = rows[col][1].positions[0] - 1 if where == "before" else length + 1
+    _plant_offset(r, col, 2, offset)
+    with pytest.raises(OrcFormatError,
+                       match=re.escape(f"{path} stripe 0 column {col} stream DATA")):
+        r.read_stripe(0, row_groups=[1])
+    # the full-stripe path does not use positions
+    assert r.read_stripe(0).num_rows == 4000
+
+
+@pytest.mark.parametrize("codec", ["none", "zlib"])
+@pytest.mark.parametrize("name", ["s", "f", "d", "k"])
+def test_group_data_shorter_than_claimed_raises(tmp_path, codec, name):
+    """When the next group's recorded start leaves a string, float,
+    decimal or int DATA range shorter than its values need, the group read
+    fails with OrcFormatError naming the file, stripe, column and stream,
+    never returning a short or garbage array."""
+    import re
+
+    from orc_rs_spark.orcfile.writer import write_orc
+
+    path = str(tmp_path / f"short_{codec}.orc")
+    write_orc(_unindexed_kinds_table(), path, compression=codec, row_index_stride=1000)
+    r = OrcFileReader(path)
+    root = r.tail.footer.types[0]
+    col = root.subtypes[root.field_names.index(name)]
+    rows = r._read_index_region(0)[0]
+    # group 1's DATA range becomes empty: group 2 "starts" where it starts
+    _plant_offset(r, col, 2, rows[col][1].positions[0])
+    with pytest.raises(OrcFormatError,
+                       match=re.escape(f"{path} stripe 0 column {col} stream DATA")):
+        r.read_stripe(0, columns=[name], row_groups=[1])
 
 
 def test_stats_overlap_type_mismatch_keeps_everything(indexed_orc):

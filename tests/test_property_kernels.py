@@ -205,6 +205,27 @@ def test_blockcomp_roundtrip(data):
     assert block_decompress(block_compress(data)) == data
 
 
+def test_bitunpack_small_counts_match_array_path():
+    """Every width 1..64 and count 1..64: the big-int path for short runs
+    returns what the array kernels return for the same bits (read as the
+    prefix of a longer unpack), and a buffer one byte short still raises."""
+    rng = np.random.default_rng(17)
+    for width in range(1, 65):
+        for count in range(1, 65):
+            v = rng.integers(0, 2**64 - 1, size=count, dtype=np.uint64, endpoint=True)
+            v >>= np.uint64(64 - width)
+            buf = bitpack(v, width)
+            got = bitunpack(buf, width, count)
+            assert got.dtype == np.uint64
+            np.testing.assert_array_equal(got, v)
+            padded = buf + bytes(9 * width)  # room for 72 values
+            np.testing.assert_array_equal(got, bitunpack(padded, width, 72)[:count])
+            np.testing.assert_array_equal(
+                bitunpack(np.frombuffer(buf, dtype=np.uint8), width, count), v)
+            with pytest.raises(ValueError, match="truncated"):
+                bitunpack(buf[:-1], width, count)
+
+
 @settings(max_examples=150, deadline=None)
 @given(st.sampled_from(["tiny", "byte-aligned", "generic"]), st.data())
 def test_bitpack_rejects_values_wider_than_width(regime, data):

@@ -104,6 +104,16 @@ def test_roundtrip_unsigned():
     np.testing.assert_array_equal(rlev2_decode(buf, len(v), signed=False), v)
 
 
+@pytest.mark.parametrize("n", [100, 1000, 40000])
+def test_roundtrip_unsigned_descending_wraps(n):
+    """Negative int64s in unsigned mode are their uint64 bit patterns: a
+    descending ramp becomes delta runs whose base exceeds int64, and it
+    decodes back wrapped, as the short-repeat arm always did."""
+    v = -3 * np.arange(1, n + 1, dtype=np.int64)
+    buf = rlev2_encode(v, signed=False)
+    np.testing.assert_array_equal(rlev2_decode(buf, n, signed=False), v)
+
+
 def test_empty():
     assert rlev2_encode(np.array([], dtype=np.int64)) == b""
     assert rlev2_decode(b"", 0).tolist() == []
