@@ -159,8 +159,11 @@ def _maybe_block(data: bytes, block_codec: str) -> tuple[bytes, str]:
     # level 7 holds size_vs_spark_orc below 1.0 on small tables (at level
     # 6 one read 1.007). zlib blocks also pick their deflate strategy per
     # stream: LZ matching pays on runs and repeated strings, but on rank
-    # planes it costs bytes that Huffman-only coding keeps (and ~3x the
-    # CPU), and which one wins is measured, not assumed
+    # planes it costs bytes that Huffman-only coding keeps (and ~2x the
+    # CPU), and which one wins is measured, not assumed. The LZ arm is
+    # written by libdeflate where the system has it (stdlib zlib
+    # otherwise), the Huffman-only arm by stdlib zlib, so both arms and
+    # their probes are priced by the engine that writes them
     if block_codec != "zlib":
         comp = block_compress(data, block_codec, level=7)
     elif len(data) <= _PROBE_SLICES * _PROBE_SPAN:

@@ -5,18 +5,26 @@ is_original, i.e. 23-bit length + 1 LSB "stored uncompressed" escape so
 incompressible blocks never grow (reference decode:
 /root/reference/src/compression.rs:362-382; format doc :214-239). The
 reference's zlib codec is raw deflate with no zlib header
-(/root/reference/src/compression.rs:195-212) — mirrored here with
-``zlib.compressobj(wbits=-15)``.
+(/root/reference/src/compression.rs:195-212) — mirrored here: every
+deflate writer below emits raw deflate that any inflater reads.
 
 Codec table: like the reference's registry (its src/compression.rs:82-148),
 one implementation per codec and direction:
 
-- zlib: stdlib, both directions;
+- zlib: the default (LZ) strategy at levels 1-9 encodes through the
+  system libdeflate (ctypes) where it is installed, else stdlib zlib;
+  Huffman-only and other strategies, level 0 and the -1 default encode
+  with stdlib zlib; stdlib zlib decodes;
 - snappy: pyarrow's bundled C codec, both directions;
 - lz4: pyarrow ``lz4_raw`` encodes, system liblz4 decodes (ctypes);
 - zstd: pyarrow encodes, system libzstd decodes (ctypes);
 - lzo: the from-spec LZO1X kernel (kernels/lzo.py), both directions —
   there is no liblzo2 to call.
+
+libdeflate compresses the LZ arm ~3x cheaper than stdlib zlib at the
+same level number, and its output is a little smaller. Its bytes are not
+zlib's, so zlib block bytes depend on whether libdeflate is present (the
+block tag and every reader are the same either way).
 
 lz4 and zstd decode through the system libraries because ORC framing
 carries only the COMPRESSED length and pyarrow's decompress needs the
@@ -24,7 +32,8 @@ exact output size up front; LZ4_decompress_safe and ZSTD_decompress
 return it (libzstd also takes frames without Frame_Content_Size and
 skippable frames). The libraries load on first use, so importing this
 module never fails; decoding lz4 or zstd without them raises
-OrcUnsupportedError naming the library.
+OrcUnsupportedError naming the library, and without libdeflate zlib
+encodes with stdlib zlib alone.
 """
 
 from __future__ import annotations
@@ -52,8 +61,64 @@ DEFAULT_LEVELS = {"zlib": 6, "zstd": 3}
 
 
 def _deflate(data: bytes, level: int = 6, strategy: int = zlib.Z_DEFAULT_STRATEGY) -> bytes:
+    # the LZ arm at zlib's levels 1-9 goes through libdeflate where the
+    # system has it; other strategies (libdeflate has none), level 0, the
+    # -1 default and levels zlib rejects stay on stdlib zlib
+    if strategy == zlib.Z_DEFAULT_STRATEGY and 1 <= level <= 9:
+        compress = _system_lib("deflate", _bind_deflate)
+        if compress is not None:
+            return compress(data, level)
     c = zlib.compressobj(level, zlib.DEFLATED, -15, 8, strategy)
     return c.compress(data) + c.flush()
+
+
+def _bind_deflate(lib):
+    """``compress(data, level)`` over libdeflate's one-shot raw deflate.
+
+    A compressor is not thread-safe, so each thread keeps its own per
+    level (freed with the thread); the output buffer is sized per call
+    from the compressor's bound and not kept."""
+    alloc = lib.libdeflate_alloc_compressor
+    alloc.restype = ctypes.c_void_p
+    alloc.argtypes = [ctypes.c_int]
+    free = lib.libdeflate_free_compressor
+    free.restype = None
+    free.argtypes = [ctypes.c_void_p]
+    bound = lib.libdeflate_deflate_compress_bound
+    bound.restype = ctypes.c_size_t
+    bound.argtypes = [ctypes.c_void_p, ctypes.c_size_t]
+    run = lib.libdeflate_deflate_compress
+    run.restype = ctypes.c_size_t
+    run.argtypes = [ctypes.c_void_p, ctypes.c_char_p, ctypes.c_size_t,
+                    ctypes.c_char_p, ctypes.c_size_t]
+
+    class Compressor:
+        def __init__(self, level: int):
+            self.ptr = alloc(level)
+            if not self.ptr:
+                raise MemoryError(f"libdeflate_alloc_compressor({level}) failed")
+
+        def __del__(self):
+            free(self.ptr)
+
+    tls = threading.local()
+
+    def compress(data, level: int) -> bytes:
+        per_level = getattr(tls, "compressors", None)
+        if per_level is None:
+            per_level = tls.compressors = {}
+        comp = per_level.get(level)
+        if comp is None:
+            comp = per_level[level] = Compressor(level)
+        src = data if isinstance(data, bytes) else bytes(data)
+        cap = bound(comp.ptr, len(src))
+        out = ctypes.create_string_buffer(cap)
+        n = run(comp.ptr, src, len(src), out, cap)
+        if n == 0:  # cannot happen at the bound; never emit a broken block
+            raise ValueError("libdeflate: output exceeded its own bound")
+        return ctypes.string_at(out, n)
+
+    return compress
 
 
 def _inflate(data: bytes) -> bytes:
@@ -253,12 +318,15 @@ def block_compress(data: bytes, codec: str = "zlib", level: int | None = None,
 
     ``level`` is the codec's own compression level (zlib 1-9, zstd 1-22);
     ``None`` picks the codec default (DEFAULT_LEVELS — zlib 6, zstd 3);
-    snappy/lz4/lzo have no level knob and ignore it. ``strategy`` is
-    zlib's deflate strategy: ``zlib.Z_HUFFMAN_ONLY`` skips the LZ match
-    search and only Huffman-codes the bytes, which is smaller and ~3x
-    cheaper on streams whose repeats are single bytes, not strings (see
-    ``chunk._maybe_block``). Its output is plain raw deflate, so the
-    block still reads as ``zlib``; other codecs reject a strategy.
+    snappy/lz4/lzo have no level knob and ignore it; a zlib level that
+    stdlib zlib rejects raises its ValueError whether or not libdeflate
+    is present. ``strategy`` is zlib's deflate strategy: the default
+    (LZ matching) encodes through libdeflate where it is installed;
+    ``zlib.Z_HUFFMAN_ONLY`` encodes through stdlib zlib, skips the LZ
+    match search and only Huffman-codes the bytes, which is smaller on
+    streams whose repeats are single bytes, not strings (see
+    ``chunk._maybe_block``). Both emit plain raw deflate, so the block
+    still reads as ``zlib``; other codecs reject a strategy.
     ``max_block`` caps the DECOMPRESSED block size below the format's
     8 MiB header limit — pass the file's declared compressionBlockSize
     when appending sections to a foreign file (readers may size their

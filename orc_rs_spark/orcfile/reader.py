@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import sys
 from collections import OrderedDict
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
@@ -446,12 +446,16 @@ class _StripeColumnReader:
     position, e.g. from the JVM writer, or a boolean stream whose next
     group starts mid-byte) it inflates until a size bound of the values
     is met. ``streams`` may hold only a byte range of each stream, starting
-    at stream offset ``bases[key]``; ``where`` names the stripe in errors."""
+    at stream offset ``bases[key]``; ``where`` names the stripe in errors.
+    ``dicts`` holds the stripe's decoded string dictionaries by column: a
+    column found there needs no dictionary streams, and one decoded here
+    is added to it and reported to ``on_dict(nbytes)``."""
 
     def __init__(self, streams: dict[tuple[int, str], bytes],
                  sfooter: proto.StripeFooter, types: list[proto.OrcType], codec: str,
                  where: str = "", positions: dict[int, dict] | None = None,
-                 bases: dict[tuple[int, str], int] | None = None):
+                 bases: dict[tuple[int, str], int] | None = None,
+                 dicts: dict[int, pa.Array] | None = None, on_dict=lambda nbytes: None):
         self.types = types
         self.codec = codec
         self.encodings = sfooter.columns
@@ -460,7 +464,8 @@ class _StripeColumnReader:
         # col -> {stream kind: cursors}, see _column_cursors
         self.positions = positions or {}
         self.bases = bases or {}
-        self._dicts: dict[int, pa.Array] = {}
+        self._dicts = {} if dicts is None else dicts
+        self._on_dict = on_dict
 
     def _corrupt(self, col: int, kind: str, msg: str) -> OrcFormatError:
         return OrcFormatError(f"{self.where} column {col} stream {kind}: {msg}")
@@ -598,11 +603,13 @@ class _StripeColumnReader:
             dict_size = self.encodings[col].dictionary_size
             dlen = self._ints(col, "LENGTH", dict_size, None, signed=False)
             doffsets = np.concatenate(([0], np.cumsum(dlen))).astype(np.int64)
-            dbuf = self._raw(col, "DICTIONARY_DATA", int(doffsets[-1]), None)
-            self._dicts[col] = pa.Array.from_buffers(
+            # copied: the kept dictionary must not hold the fetched range
+            dbuf = bytes(self._raw(col, "DICTIONARY_DATA", int(doffsets[-1]), None))
+            arr = self._dicts[col] = pa.Array.from_buffers(
                 pa.string(), dict_size,
                 [None, pa.py_buffer(doffsets.astype(np.int32).tobytes()), pa.py_buffer(dbuf)],
             )
+            self._on_dict(arr.nbytes)
         return self._dicts[col]
 
     # ------------------------------------------------------------- decode
@@ -774,6 +781,8 @@ def _column_cursors(col: int, kind: str, encoding: str, entries: list | None,
 # parsed position slot) one reader keeps parsed; a lookup file's whole
 # index fits, so random point reads parse each stripe's metadata once
 _STRIPE_META_BYTES = 8 << 20
+# a dictionary-encoded string column's dictionary streams
+_DICT_STREAMS = ("LENGTH", "DICTIONARY_DATA")
 
 
 @dataclass
@@ -783,6 +792,8 @@ class _StripeMeta:
     # col -> {stream kind: cursors} or the error a group read raises, once
     # parsed from ``index`` (see _column_cursors)
     positions: dict | None = None
+    # col -> decoded string dictionary, filled by the stripe's reads
+    dicts: dict = field(default_factory=dict)
     nbytes: int = 0  # bytes charged against _STRIPE_META_BYTES
 
 
@@ -823,11 +834,14 @@ class OrcFileReader:
         pairs, ascending) each positioned stream is read from the first
         run's start to the last run's end — the next group's offset when
         that is a clean start, else the stream's end; dictionary streams
-        are read whole. Raises RowIndexUnsupported when the index cannot
-        locate the groups (the caller reads the stripe whole instead)."""
+        are read whole, unless the stripe's cached metadata already holds
+        the decoded dictionary (then they are not read at all). Raises
+        RowIndexUnsupported when the index cannot locate the groups (the
+        caller reads the stripe whole instead)."""
         stripe = self.tail.footer.stripes[i]
         data_off = stripe.offset + stripe.index_length
-        sfooter = self._stripe_entry(i).footer
+        entry = self._stripe_entry(i)
+        sfooter = entry.footer
         _names, subs = self._select(columns)
         positions = None if runs is None else self._group_positions(i, subs)
         # data-stream layout: (offset-in-data-region, length) in footer order
@@ -850,7 +864,8 @@ class OrcFileReader:
             # (key, region offset, region end) of every stream range to fetch
             picked = []
             for s, off, ln in spans:
-                if s.column not in needed:
+                if s.column not in needed or (
+                        s.column in entry.dicts and s.kind in _DICT_STREAMS):
                     continue
                 lo, hi = 0, ln
                 cursors = positions and positions[s.column].get(s.kind)
@@ -874,9 +889,16 @@ class OrcFileReader:
                     if rlo <= lo and hi <= rlo + len(blob):
                         streams[key] = blob[lo - rlo : hi - rlo]
                         break
+
+        def on_dict(nbytes: int) -> None:
+            # charged only while the entry is still cached
+            if self._stripe_meta.get(i) is entry:
+                self._charge(entry, nbytes)
+
         return (
             _StripeColumnReader(streams, sfooter, self.tail.footer.types, self.codec,
-                                f"{self.path} stripe {i}", positions, bases),
+                                f"{self.path} stripe {i}", positions, bases,
+                                entry.dicts, on_dict),
             stripe,
         )
 

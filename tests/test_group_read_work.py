@@ -6,11 +6,11 @@ lookup export (lm-corpus rows from ``perfbench/workloads.py``, read only;
 
 - the block decoder inflates exactly the blocks between the group's
   recorded start and the next group's in every positioned stream, plus
-  the stripe-global dictionary streams;
+  the stripe-global dictionary streams on the stripe's first read;
 - the byte source serves no more than those stream ranges plus the gaps
   the reader's 64 KiB coalescing may bridge;
-- each stripe's row positions are parsed once, however often reads come
-  back to it.
+- each stripe's row positions are parsed, and its string dictionaries
+  decoded, once, however often reads come back to it.
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ import pytest
 
 from orc_rs_spark.kernels import blockcomp
 from orc_rs_spark.orcfile import proto
+from orc_rs_spark.orcfile import reader as reader_mod
 from orc_rs_spark.orcfile.reader import FileSource, OrcFileReader
 from orc_rs_spark.orcfile.writer import write_orc
 from perfbench.workloads import lm_corpus
@@ -108,14 +109,31 @@ def _point_reads(r):
     return [(i, g) for i in range(n_stripes) for g in (0, 3, STRIPE_ROWS // STRIDE - 1)]
 
 
+def _dict_streams(r: OrcFileReader, i: int) -> set[tuple[int, str]]:
+    """Stripe i's dictionary streams (LENGTH and DICTIONARY_DATA of its
+    dictionary-encoded columns)."""
+    sfooter = r._stripe_entry(i).footer
+    return {
+        (s.column, s.kind) for s in sfooter.streams
+        if s.kind in ("LENGTH", "DICTIONARY_DATA")
+        and sfooter.columns[s.column].kind in ("DICTIONARY", "DICTIONARY_V2")
+    }
+
+
 def test_point_read_inflates_only_its_group(lm_file, inflated):
     r = OrcFileReader(lm_file)
     with open(lm_file, "rb") as f:
         data = f.read()
+    seen = set()
     for i, g in _point_reads(r):
         stripe = r.tail.footer.stripes[i]
         data_off = stripe.offset + stripe.index_length
         ranges = _group_ranges(r, i, g)  # warms the stripe's footer and index
+        if i in seen:  # the stripe's dictionaries are decoded already
+            assert _dict_streams(r, i)
+            for key in _dict_streams(r, i):
+                del ranges[key]
+        seen.add(i)
         inflated[0] = 0
         for lo, hi in ranges.values():
             blockcomp.block_decompress(data[data_off + lo : data_off + hi], "zlib")
@@ -158,3 +176,57 @@ def test_positions_parsed_once_per_stripe(lm_file, monkeypatch):
         assert got.equals(full[i].slice(g * STRIDE, STRIDE))
         visited.add(i)
     assert parsed == Counter(dict.fromkeys(visited, 1))
+
+
+def _count_dict_decodes(monkeypatch) -> Counter:
+    """(stripe description, column) -> dictionary decodes, by spying on
+    the column reader's dictionary build."""
+    decodes = Counter()
+    real = reader_mod._StripeColumnReader._dict_array
+
+    def spy(self, col):
+        if col not in self._dicts:
+            decodes[(self.where, col)] += 1
+        return real(self, col)
+
+    monkeypatch.setattr(reader_mod._StripeColumnReader, "_dict_array", spy)
+    return decodes
+
+
+def test_dictionary_decoded_once_per_stripe(lm_file, monkeypatch):
+    """200 random group reads through one reader decode each stripe's
+    string dictionary once, fetch no dictionary stream after that, and
+    return what a fresh reader returns."""
+    n_stripes = len(OrcFileReader(lm_file).tail.footer.stripes)
+    rng = np.random.default_rng(5)
+    reads = [(int(rng.integers(0, n_stripes)), int(rng.integers(0, STRIPE_ROWS // STRIDE)))
+             for _ in range(200)]
+    want = [OrcFileReader(lm_file).read_stripe(i, row_groups=[g]) for i, g in reads]
+    decodes = _count_dict_decodes(monkeypatch)
+    src = CountingSource(lm_file)
+    r = OrcFileReader(src)
+    visited = set()
+    for (i, g), expect in zip(reads, want):
+        before = src.bytes_read
+        got = r.read_stripe(i, row_groups=[g])
+        if i in visited:
+            ranges = _group_ranges(r, i, g)
+            for key in _dict_streams(r, i):
+                del ranges[key]
+            assert src.bytes_read - before <= _coalesced_bytes(ranges.values())
+        visited.add(i)
+        assert got.equals(expect)
+    assert decodes and set(decodes.values()) == {1}
+    assert {where for where, _col in decodes} == {f"{lm_file} stripe {i}" for i in visited}
+
+
+def test_evicted_dictionary_is_decoded_again(lm_file, monkeypatch):
+    """With a metadata cache too small to keep two stripes, alternating
+    reads evict and decode the dictionaries again, and rows stay right."""
+    want = {i: OrcFileReader(lm_file).read_stripe(i, row_groups=[2]) for i in (0, 1)}
+    decodes = _count_dict_decodes(monkeypatch)
+    monkeypatch.setattr(reader_mod, "_STRIPE_META_BYTES", 1)
+    r = OrcFileReader(lm_file)
+    for i in (0, 1, 0, 1):
+        assert r.read_stripe(i, row_groups=[2]).equals(want[i])
+    assert decodes and set(decodes.values()) == {2}

@@ -8,7 +8,10 @@ the block formats' structural rules; the C decoders' oversize retry,
 the lz4 size scan it relies on, and the framing decoder's error
 contract (truncation and corrupt blocks raise OrcFormatError naming the
 codec, a missing system library raises OrcUnsupportedError) are pinned
-here. ORC-file-level interop with the JVM lives in
+here, as is the zlib encoder's libdeflate arm: every block it writes is
+raw deflate stdlib zlib inflates, without libdeflate the bytes are stdlib
+zlib's, compressors do not leak across threads, and the level contract
+holds on both paths. ORC-file-level interop with the JVM lives in
 tests/test_spark_roundtrip.py::test_jvm_reads_lz_codecs.
 """
 
@@ -17,12 +20,15 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+import threading
+import zlib
 
 import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from orc_rs_spark.kernels import blockcomp
 from orc_rs_spark.kernels.blockcomp import (
     MAX_BLOCK,
     _DECODERS,
@@ -426,3 +432,162 @@ for codec, lib in (("lz4", "liblz4"), ("zstd", "libzstd")):
 """
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     subprocess.run([sys.executable, "-c", code], cwd=root, check=True, timeout=120)
+
+
+# ---------------------------------------------------------------------------
+# zlib blocks: the LZ arm through libdeflate where the system has it
+
+
+HAVE_LIBDEFLATE = blockcomp._system_lib("deflate", blockcomp._bind_deflate) is not None
+
+
+def _drop_libdeflate(monkeypatch) -> None:
+    """Make the zlib encoder run as on a host without libdeflate."""
+    real = blockcomp._system_lib
+    monkeypatch.setattr(blockcomp, "_system_lib",
+                        lambda name, bind: None if name == "deflate" else real(name, bind))
+
+
+@pytest.fixture
+def no_libdeflate(monkeypatch):
+    _drop_libdeflate(monkeypatch)
+
+
+def _zlib_blocks(framed: bytes):
+    """(is_original, payload) of every block in an ORC-framed stream."""
+    pos = 0
+    while pos < len(framed):
+        header = int.from_bytes(framed[pos : pos + 3], "little")
+        pos += 3
+        yield bool(header & 1), framed[pos : pos + (header >> 1)]
+        pos += header >> 1
+
+
+def _stdlib_framed(data: bytes, level: int, cap: int = MAX_BLOCK) -> bytes:
+    """ORC framing over stdlib zlib's raw deflate: the bytes the zlib
+    codec wrote before libdeflate, spelled out independently."""
+    out = b""
+    for i in range(0, len(data), cap):
+        block = data[i : i + cap]
+        c = zlib.compressobj(level, zlib.DEFLATED, -15, 8, zlib.Z_DEFAULT_STRATEGY)
+        comp = c.compress(block) + c.flush()
+        if len(comp) < len(block):
+            out += (len(comp) << 1).to_bytes(3, "little") + comp
+        else:
+            out += ((len(block) << 1) | 1).to_bytes(3, "little") + block
+    return out
+
+
+def _assert_stdlib_inflates(data: bytes, framed: bytes, cap: int) -> None:
+    at = 0
+    for original, payload in _zlib_blocks(framed):
+        piece = payload if original else zlib.decompress(payload, -15)
+        assert 0 < len(piece) <= cap
+        assert piece == data[at : at + len(piece)]
+        at += len(piece)
+    assert at == len(data)
+
+
+_ZLIB_DATA = st.one_of(
+    st.binary(max_size=3000),
+    st.lists(st.tuples(st.binary(min_size=1, max_size=12), st.integers(1, 60)),
+             max_size=60).map(lambda parts: b"".join(p * k for p, k in parts)),
+)
+
+
+@settings(max_examples=80, deadline=None)
+@given(_ZLIB_DATA, st.integers(0, 9), st.sampled_from([None, 1, 7, 1000, 1 << 16]))
+def test_zlib_blocks_inflate_with_stdlib(data, level, max_block):
+    framed = block_compress(data, "zlib", level, max_block=max_block)
+    _assert_stdlib_inflates(data, framed, max_block or MAX_BLOCK)
+    assert block_decompress(framed, "zlib") == data
+
+
+@pytest.mark.parametrize("level", [1, 7])
+def test_zlib_blocks_edge_sizes(level):
+    """Empty, one byte, incompressible, and a stream one byte past
+    MAX_BLOCK (a full block and a 1-byte block) all read back through
+    stdlib inflate."""
+    big = (TEXT * (MAX_BLOCK // len(TEXT) + 1))[: MAX_BLOCK - 4096] + os.urandom(4097)
+    for data in (b"", b"q", os.urandom(300_000), big):
+        framed = block_compress(data, "zlib", level)
+        _assert_stdlib_inflates(data, framed, MAX_BLOCK)
+    assert len(list(_zlib_blocks(framed))) == 2
+
+
+@pytest.mark.parametrize("level", [0, 1, 6, 7, 9, -1])
+def test_zlib_without_libdeflate_writes_stdlib_bytes(no_libdeflate, level):
+    """Where libdeflate cannot be loaded, zlib blocks are stdlib zlib's
+    bytes exactly, block caps included."""
+    for data in (TEXT, RUNS, os.urandom(5000), TEXT * 40):
+        assert block_compress(data, "zlib", level) == _stdlib_framed(data, level)
+        assert block_compress(data, "zlib", level, max_block=4096) == _stdlib_framed(
+            data, level, 4096)
+
+
+def test_huffman_only_stays_on_stdlib():
+    """The Huffman-only arm is stdlib zlib's with or without libdeflate."""
+    c = zlib.compressobj(7, zlib.DEFLATED, -15, 8, zlib.Z_HUFFMAN_ONLY)
+    comp = c.compress(TEXT) + c.flush()
+    framed = block_compress(TEXT, "zlib", 7, strategy=zlib.Z_HUFFMAN_ONLY)
+    assert framed == (len(comp) << 1).to_bytes(3, "little") + comp
+
+
+def test_zlib_threads_get_single_thread_bytes():
+    """8 threads compressing different inputs at several levels at once
+    get the single-thread outputs (compressors are per thread)."""
+    rng = np.random.default_rng(3)
+    inputs = [rng.integers(0, 50 * (k + 1), 60_000).astype("<u4").tobytes() for k in range(8)]
+    levels = (1, 6, 7)
+    want = [[block_compress(d, "zlib", lv) for lv in levels] for d in inputs]
+    got: list = [None] * 8
+    barrier = threading.Barrier(8)
+
+    def work(k):
+        barrier.wait()
+        got[k] = [[block_compress(inputs[k], "zlib", lv) for lv in levels] for _ in range(5)]
+
+    threads = [threading.Thread(target=work, args=(k,)) for k in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    for k in range(8):
+        assert got[k] == [want[k]] * 5
+
+
+@pytest.mark.parametrize("libdeflate", [True, False])
+def test_zlib_level_contract_on_both_paths(monkeypatch, libdeflate):
+    """A level stdlib zlib rejects raises its ValueError whether or not
+    libdeflate (which takes 10-12) is present; -1 and 0 are zlib's."""
+    if not libdeflate:
+        _drop_libdeflate(monkeypatch)
+    for level in (-2, 10, 12, 100):
+        with pytest.raises(ValueError):
+            block_compress(TEXT, "zlib", level)
+    for level in (-1, 0):
+        assert block_compress(TEXT, "zlib", level) == _stdlib_framed(TEXT, level)
+
+
+@pytest.mark.skipif(not HAVE_LIBDEFLATE, reason="the system has no libdeflate")
+def test_libdeflate_shrinks_regime_mix_tokens(monkeypatch):
+    """On a regime-mix slice (perfbench/workloads.py, read only) the
+    tokens stream libdeflate writes is smaller than the stdlib-only
+    path's, with the same codec and block tags."""
+    from orc_rs_spark.chunk import encode_chunk
+    from perfbench.workloads import regime_mix
+
+    batch = regime_mix(7).slice(0, 4096).combine_chunks().to_batches()[0]
+    with_lib = encode_chunk(batch, 0)
+    _drop_libdeflate(monkeypatch)
+    stdlib = encode_chunk(batch, 0)
+    assert (with_lib["codec"], with_lib["block_codec"]) == (stdlib["codec"], stdlib["block_codec"])
+    assert len(with_lib["s_tokens"]) < len(stdlib["s_tokens"])
+    assert block_decompress(with_lib["s_tokens"], "zlib") == block_decompress(
+        stdlib["s_tokens"], "zlib")

@@ -290,18 +290,67 @@ def test_writer_timestamps_roundtrip_own_reader(tmp_path):
     assert got2.column("ts").to_pylist()[0] == np.datetime64("1970-01-01T00:00:00.999", "ns")
 
 
+# rows of one stripe, and its row groups, whose ``v`` and ``s`` streams
+# hold more than one 256 KiB compression block per group (the writer
+# compresses each group's part of a stream on its own)
+MULTIBLOCK_ROWS, MULTIBLOCK_STRIDE = 240_000, 60_000
+
+
+def _multiblock_table():
+    import pyarrow as pa
+
+    n = MULTIBLOCK_ROWS
+    rng = np.random.default_rng(17)
+    return pa.table({
+        "k": pa.array(np.arange(n, dtype=np.int64)),
+        "v": pa.array(rng.integers(0, 1 << 40, n, dtype=np.int64)),
+        "s": pa.array([f"row-{i * 7919 % 1_000_003:07d}" for i in range(n)]),
+        "c": pa.array([f"cat{i % 13}" for i in range(n)]),
+    })
+
+
 @pytest.mark.spark
-@pytest.mark.parametrize("codec", ["zlib", "none", "snappy", "zstd"])
-def test_writer_read_by_spark_native(spark, codec, tmp_path):
-    """The cross-engine proof: Spark's JVM ORC reader reads OUR files."""
+@pytest.mark.parametrize("codec, indexed", [
+    pytest.param("zlib", False, id="zlib"),
+    pytest.param("none", False, id="none"),
+    pytest.param("snappy", False, id="snappy"),
+    pytest.param("zstd", False, id="zstd"),
+    pytest.param("zlib", True, id="zlib-multiblock-pushdown"),
+])
+def test_writer_read_by_spark_native(spark, codec, indexed, tmp_path):
+    """The cross-engine proof: Spark's JVM ORC reader reads OUR files.
+    The multi-block case has the JVM seek through our row index to a row
+    group whose zlib streams span several blocks, during a pushed-down
+    filter."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     from orc_rs_spark.orcfile.writer import write_orc
 
-    tbl = _writer_table()
     path = str(tmp_path / f"for_spark_{codec}.orc")
-    write_orc(tbl, path, compression=codec, stripe_rows=300)
+    if not indexed:
+        tbl = _writer_table()
+        write_orc(tbl, path, compression=codec, stripe_rows=300)
+        got = spark.read.orc(path).toArrow()
+        assert got.cast(tbl.schema).combine_chunks().equals(tbl.combine_chunks())
+        return
+    tbl = _multiblock_table()
+    write_orc(tbl, path, compression=codec, stripe_rows=MULTIBLOCK_ROWS,
+              row_index_stride=MULTIBLOCK_STRIDE)
+    from orc_rs_spark.kernels.blockcomp import iter_blocks
+
+    reader = OrcFileReader(path)
+    assert len(reader.tail.footer.stripes) == 1
+    streams = reader._open_stripe(0)[0].streams
+    n_groups = MULTIBLOCK_ROWS // MULTIBLOCK_STRIDE
+    for key in ((2, "DATA"), (3, "DATA")):  # v, s
+        assert len(list(iter_blocks(streams[key], codec))) >= 2 * n_groups, key
+    assert (4, "DICTIONARY_DATA") in streams  # c
     got = spark.read.orc(path).toArrow()
-    assert got.cast(tbl.schema).combine_chunks().equals(tbl.combine_chunks())
+    assert got.cast(tbl.schema).sort_by("k").equals(tbl)
+    spark.conf.set("spark.sql.orc.filterPushdown", "true")
+    lo, hi = 130_500, 133_700  # inside row group 2
+    got = spark.read.orc(path).filter(f"k >= {lo} AND k < {hi}").toArrow()
+    want = tbl.filter(pc.and_(pc.greater_equal(tbl["k"], lo), pc.less(tbl["k"], hi)))
+    assert got.cast(tbl.schema).sort_by("k").equals(want)
 
 
 @pytest.mark.spark
