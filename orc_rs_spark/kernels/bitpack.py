@@ -3,15 +3,17 @@
 Wire format parity target: the bit-serial decoder at
 /root/reference/src/encoding/rlev2.rs:71-133 and the width tables at
 /root/reference/src/encoding/rlev2.rs:61-69 (Apache ORC v1 spec). The
-pack/unpack here is whole-array: value -> 64 big-endian bits via
-``np.unpackbits``, slice the low ``width`` bits, repack — the vectorized
-replacement for the reference's per-value bit loop (its own TODO at
-/root/reference/src/encoding/rlev2.rs:98 points at C++ AVX versions).
+pack/unpack here is whole-array — the vectorized replacement for the
+reference's per-value bit loop (its own TODO at
+/root/reference/src/encoding/rlev2.rs:98 points at C++ AVX versions):
+packing assembles each output byte of an 8-value group from at most two
+values, unpacking loads one unaligned 64-bit window per value lane.
 """
 
 from __future__ import annotations
 
 from bisect import bisect_left
+from math import gcd
 
 import numpy as np
 
@@ -144,7 +146,17 @@ _U64_MASKS = np.array([0] + [(1 << w) - 1 for w in range(1, 64)] + [2**64 - 1], 
 
 
 def bitunpack(buf: bytes | np.ndarray, width: int, count: int) -> np.ndarray:
-    """Unpack ``count`` ``width``-bit big-endian values -> uint64 array."""
+    """Unpack ``count`` ``width``-bit big-endian values -> uint64 array.
+
+    A buffer shorter than ``count * width`` bits raises ValueError.
+    Byte-aligned widths are one big-endian cast; ≤ 64 values go through
+    one big int. Otherwise, for widths up to 56, every value lies inside
+    one unaligned 8-byte window, because its first bit sits at most 7 bits
+    into its first byte. The bit pattern repeats every ``8 / gcd(width, 8)``
+    values, so each of those lanes is one strided ``>u8`` view of a
+    zero-padded copy of the buffer (the last window may run past the
+    caller's bytes, never past the copy), loaded in one cast; one shift per
+    lane and one mask finish it. Wider unaligned values expand to bits."""
     if width == 0 or count == 0:
         return np.zeros(count, dtype=np.uint64)
     b = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
@@ -175,24 +187,23 @@ def bitunpack(buf: bytes | np.ndarray, width: int, count: int) -> np.ndarray:
         full[:, 64 - width :] = bits
         return np.packbits(full, axis=1).view(">u8").ravel().astype(np.uint64)
     ng = (count + 7) // 8
-    gb = ng * width  # group bytes
-    if len(b) < gb:
-        pad = np.zeros(gb, dtype=np.uint8)
-        pad[: len(b)] = b[:gb] if len(b) <= gb else b[:gb]
-        g = pad.reshape(ng, width)
-    else:
-        g = np.ascontiguousarray(b[:gb]).reshape(ng, width)
-    out = np.empty((ng, 8), dtype=np.uint64)
-    mask = _U64_MASKS[width]
-    for j in range(8):
-        start_bit = j * width
-        fb, off = divmod(start_bit, 8)
-        nb = (off + width + 7) // 8
-        acc = (g[:, fb] & np.uint8(0xFF >> off)).astype(np.uint64)
-        for t in range(1, nb):
-            acc = (acc << np.uint64(8)) | g[:, fb + t]
-        acc >>= np.uint64(nb * 8 - off - width)
-        out[:, j] = acc & mask
+    gb = ng * width  # bytes of the whole 8-value groups
+    have = min(len(b), gb)
+    pad = np.empty(gb + 8, dtype=np.uint8)  # + one window past the last group
+    pad[:have] = b[:have]
+    pad[have:] = 0
+    # a period of `lanes` values fills `step` bytes; lane j's window starts
+    # at byte fb of each period, its value `off` bits into the window
+    g = gcd(width, 8)
+    lanes, step, rows = 8 // g, width // g, ng * g
+    out = np.empty((rows, lanes), dtype=np.uint64)
+    shifts = np.empty(lanes, dtype=np.uint64)
+    for j in range(lanes):
+        fb, off = divmod(j * width, 8)
+        out[:, j] = np.ndarray((rows,), dtype=">u8", buffer=pad, offset=fb, strides=(step,))
+        shifts[j] = 64 - off - width
+    out >>= shifts
+    out &= _U64_MASKS[width]
     return out.ravel()[:count]
 
 

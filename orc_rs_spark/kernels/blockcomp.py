@@ -14,7 +14,8 @@ one implementation per codec and direction:
 - zlib: the default (LZ) strategy at levels 1-9 encodes through the
   system libdeflate (ctypes) where it is installed, else stdlib zlib;
   Huffman-only and other strategies, level 0 and the -1 default encode
-  with stdlib zlib; stdlib zlib decodes;
+  with stdlib zlib; libdeflate inflates (stdlib zlib where it is missing,
+  and for a foreign block that inflates beyond MAX_BLOCK);
 - snappy: pyarrow's bundled C codec, both directions;
 - lz4: pyarrow ``lz4_raw`` encodes, system liblz4 decodes (ctypes);
 - zstd: pyarrow encodes, system libzstd decodes (ctypes);
@@ -24,16 +25,17 @@ one implementation per codec and direction:
 libdeflate compresses the LZ arm ~3x cheaper than stdlib zlib at the
 same level number, and its output is a little smaller. Its bytes are not
 zlib's, so zlib block bytes depend on whether libdeflate is present (the
-block tag and every reader are the same either way).
+block tag and every reader are the same either way). It inflates any raw
+deflate ~2-3x faster than stdlib zlib.
 
-lz4 and zstd decode through the system libraries because ORC framing
-carries only the COMPRESSED length and pyarrow's decompress needs the
-exact output size up front; LZ4_decompress_safe and ZSTD_decompress
-return it (libzstd also takes frames without Frame_Content_Size and
-skippable frames). The libraries load on first use, so importing this
-module never fails; decoding lz4 or zstd without them raises
-OrcUnsupportedError naming the library, and without libdeflate zlib
-encodes with stdlib zlib alone.
+ORC framing carries only the COMPRESSED length, and pyarrow's
+decompress needs the exact output size up front, so lz4, zstd and zlib
+decode through the system libraries' one-shot calls (``_c_decoder``),
+which report the output size (libzstd also takes frames without
+Frame_Content_Size and skippable frames). The libraries load on first
+use, so importing this module never fails; decoding lz4 or zstd without
+them raises OrcUnsupportedError naming the library, and without
+libdeflate zlib encodes and decodes with stdlib zlib alone.
 """
 
 from __future__ import annotations
@@ -44,6 +46,7 @@ import functools
 import threading
 import zlib
 
+import numpy as np
 import pyarrow as pa
 
 from orc_rs_spark.kernels.lzo import lzo1x_compress, lzo1x_decompress
@@ -72,12 +75,39 @@ def _deflate(data: bytes, level: int = 6, strategy: int = zlib.Z_DEFAULT_STRATEG
     return c.compress(data) + c.flush()
 
 
-def _bind_deflate(lib):
-    """``compress(data, level)`` over libdeflate's one-shot raw deflate.
+def _thread_handles(alloc, free):
+    """``get(*args)``: this thread's C handle from ``alloc(*args)``, one per
+    argument tuple, made on first use and freed with the thread.
+    libdeflate's compressors and decompressors are not thread-safe, and
+    Spark's local mode encodes and decodes on many threads of one process."""
 
-    A compressor is not thread-safe, so each thread keeps its own per
-    level (freed with the thread); the output buffer is sized per call
-    from the compressor's bound and not kept."""
+    class Handle:
+        def __init__(self, args):
+            self.ptr = alloc(*args)
+            if not self.ptr:
+                raise MemoryError(f"{alloc.__name__}{args} failed")
+
+        def __del__(self):
+            free(self.ptr)
+
+    tls = threading.local()
+
+    def get(*args):
+        handles = getattr(tls, "handles", None)
+        if handles is None:
+            handles = tls.handles = {}
+        handle = handles.get(args)
+        if handle is None:
+            handle = handles[args] = Handle(args)
+        return handle.ptr
+
+    return get
+
+
+def _bind_deflate(lib):
+    """``compress(data, level)`` over libdeflate's one-shot raw deflate:
+    one compressor per thread and level; the output buffer is sized per
+    call from the compressor's bound and not kept."""
     alloc = lib.libdeflate_alloc_compressor
     alloc.restype = ctypes.c_void_p
     alloc.argtypes = [ctypes.c_int]
@@ -91,34 +121,50 @@ def _bind_deflate(lib):
     run.restype = ctypes.c_size_t
     run.argtypes = [ctypes.c_void_p, ctypes.c_char_p, ctypes.c_size_t,
                     ctypes.c_char_p, ctypes.c_size_t]
-
-    class Compressor:
-        def __init__(self, level: int):
-            self.ptr = alloc(level)
-            if not self.ptr:
-                raise MemoryError(f"libdeflate_alloc_compressor({level}) failed")
-
-        def __del__(self):
-            free(self.ptr)
-
-    tls = threading.local()
+    compressor = _thread_handles(alloc, free)
 
     def compress(data, level: int) -> bytes:
-        per_level = getattr(tls, "compressors", None)
-        if per_level is None:
-            per_level = tls.compressors = {}
-        comp = per_level.get(level)
-        if comp is None:
-            comp = per_level[level] = Compressor(level)
+        comp = compressor(level)
         src = data if isinstance(data, bytes) else bytes(data)
-        cap = bound(comp.ptr, len(src))
+        cap = bound(comp, len(src))
         out = ctypes.create_string_buffer(cap)
-        n = run(comp.ptr, src, len(src), out, cap)
+        n = run(comp, src, len(src), out, cap)
         if n == 0:  # cannot happen at the bound; never emit a broken block
             raise ValueError("libdeflate: output exceeded its own bound")
         return ctypes.string_at(out, n)
 
     return compress
+
+
+def _bind_inflate(lib):
+    """``(call, size)`` over libdeflate's one-shot raw inflate, for
+    ``_c_decoder``: one decompressor per thread. libdeflate tells corrupt
+    data (``call`` raises ValueError) from an output larger than the
+    buffer (``call`` returns -1), so the retry is one MAX_BLOCK try.
+    Like stdlib zlib it ignores bytes after the final deflate block."""
+    alloc = lib.libdeflate_alloc_decompressor
+    alloc.restype = ctypes.c_void_p
+    alloc.argtypes = []
+    free = lib.libdeflate_free_decompressor
+    free.restype = None
+    free.argtypes = [ctypes.c_void_p]
+    run = lib.libdeflate_deflate_decompress
+    run.restype = ctypes.c_int
+    run.argtypes = [ctypes.c_void_p, ctypes.c_char_p, ctypes.c_size_t, ctypes.c_void_p,
+                    ctypes.c_size_t, ctypes.POINTER(ctypes.c_size_t)]
+    decompressor = _thread_handles(alloc, free)
+
+    def call(src, dst, cap):
+        n = ctypes.c_size_t()
+        rc = run(decompressor(), src, len(src), dst, cap, ctypes.byref(n))
+        if rc == 0:
+            return n.value
+        if rc == 3:  # LIBDEFLATE_INSUFFICIENT_SPACE
+            return -1
+        # LIBDEFLATE_SHORT_OUTPUT (2) needs a NULL size pointer
+        raise ValueError(f"libdeflate: bad data (result {rc})")
+
+    return call, lambda src: MAX_BLOCK
 
 
 def _inflate(data: bytes) -> bytes:
@@ -203,14 +249,14 @@ def lz4_block_size(data: bytes) -> int:
 def _bind_lz4(lib):
     f = lib.LZ4_decompress_safe
     f.restype = ctypes.c_int
-    f.argtypes = [ctypes.c_char_p, ctypes.c_char_p, ctypes.c_int, ctypes.c_int]
+    f.argtypes = [ctypes.c_char_p, ctypes.c_void_p, ctypes.c_int, ctypes.c_int]
     return (lambda src, dst, cap: f(src, dst, len(src), cap)), lz4_block_size
 
 
 def _bind_zstd(lib):
     f = lib.ZSTD_decompress
     f.restype = ctypes.c_size_t
-    f.argtypes = [ctypes.c_char_p, ctypes.c_size_t, ctypes.c_char_p, ctypes.c_size_t]
+    f.argtypes = [ctypes.c_void_p, ctypes.c_size_t, ctypes.c_char_p, ctypes.c_size_t]
     is_error = lib.ZSTD_isError
     is_error.restype = ctypes.c_uint
     is_error.argtypes = [ctypes.c_size_t]
@@ -244,39 +290,48 @@ def _system_lib(name: str, bind):
         return None
 
 
-def _c_decoder(name: str, bind):
+def _c_decoder(name: str, bind, fallback=None):
     """Block decoder over a system library's one-shot decompress call.
 
-    ``bind(lib)`` returns ``(call, size)``: ``call(src, dst, cap)`` is the
-    output length or < 0 on failure; ``size(src)`` is the output length
-    without decoding. Output lands in a thread-local MAX_BLOCK buffer
-    (Spark's local mode decodes on many threads of one process). A
-    failure is EITHER corruption OR an output larger than that buffer (a
-    foreign writer may declare a bigger compressionBlockSize — the 23-bit
-    header caps only the COMPRESSED chunk), so ``size`` decides, and a
-    larger output is decoded once more into an exact-size buffer."""
-    tls = threading.local()
+    ``bind(lib)`` returns ``(call, size)``: ``call(src, dst, cap)`` writes
+    into the ``cap``-byte buffer at address ``dst`` and returns the output
+    length, or -1 on failure; ``size(src)`` is the capacity to retry at.
+    ORC framing carries only the COMPRESSED length, so the first try's
+    buffer is sized from it, per call, and no buffer outlives its call
+    (Spark's local mode decodes on many threads of one process; an 8 MiB
+    buffer kept per thread shows up in peak RSS). A failure may be
+    corruption OR an output larger than the buffer (a foreign writer may
+    declare a bigger compressionBlockSize — the 23-bit header caps only
+    the COMPRESSED chunk): liblz4 and libzstd cannot tell which, so their
+    ``size`` is the exact output size (or libzstd's bound) and a failure
+    within it is corruption; libdeflate can, so it raises on corrupt data
+    and retries at MAX_BLOCK. A block that fails at its retry size raises
+    ValueError, or goes to ``fallback`` when there is one (stdlib zlib's
+    inflate has no output cap). Without the library ``fallback`` decodes,
+    or OrcUnsupportedError names the library."""
 
     def decode(data: bytes) -> bytes:
         bound = _system_lib(name, bind)
         if bound is None:
+            if fallback is not None:
+                return fallback(data)
             raise _errors().OrcUnsupportedError(
                 f"decoding this codec needs the system library lib{name}, "
                 "which is not installed")
         call, size = bound
-        buf = getattr(tls, "buf", None)
-        if buf is None:
-            buf = tls.buf = ctypes.create_string_buffer(MAX_BLOCK)
-        n = call(data, buf, MAX_BLOCK)
+        cap = min(MAX_BLOCK, max(LZ_BLOCK, 4 * len(data)))
+        buf = np.empty(cap, dtype=np.uint8)  # untouched pages cost nothing
+        n = call(data, buf.ctypes.data, cap)
         if n < 0:
             need = size(data)
-            if need <= MAX_BLOCK:
-                raise ValueError(f"lib{name} rejected the block")
-            buf = ctypes.create_string_buffer(need)
-            n = call(data, buf, need)
+            if need > cap:
+                buf = np.empty(need, dtype=np.uint8)
+                n = call(data, buf.ctypes.data, need)
             if n < 0:
+                if fallback is not None:
+                    return fallback(data)
                 raise ValueError(f"lib{name} rejected the block")
-        return ctypes.string_at(buf, n)
+        return buf[:n].tobytes()
 
     return decode
 
@@ -290,7 +345,7 @@ _ENCODERS = {
     "lzo": lambda b, lv: lzo1x_compress(b),
 }
 _DECODERS = {
-    "zlib": _inflate,
+    "zlib": _c_decoder("deflate", _bind_inflate, fallback=_inflate),
     "snappy": _snappy_decompress,
     "lz4": _c_decoder("lz4", _bind_lz4),
     "zstd": _c_decoder("zstd", _bind_zstd),

@@ -462,8 +462,11 @@ def rlev2_decode(buf: bytes, count: int, signed: bool = True) -> np.ndarray:
     # direct frames are only recorded during the header walk and unpacked in
     # one batch per distinct width afterwards (same padding trick as the
     # encoder: each frame zero-padded to a multiple of 8 values stays
-    # byte-aligned and independent)
-    direct_frames: dict[int, list[tuple[int, int, int, int]]] = {}  # w -> (got, take, pos, n)
+    # byte-aligned and independent). Consecutive frames of one width and
+    # one multiple-of-8 length (the encoder's 512-value frames) merge into
+    # one run: their payloads sit a fixed stride apart, so one strided
+    # copy gathers them and one slice writes their values out
+    direct_frames: dict[int, list[list[int]]] = {}  # w -> [got, take, pos, n, frames]
     # variable-delta frames batch the same way: one bitunpack per width and
     # ONE global cumsum over all frames' deltas (per-frame values recover as
     # differences against each frame's running offset; int64 wraparound in
@@ -494,8 +497,16 @@ def rlev2_decode(buf: bytes, count: int, signed: bool = True) -> np.ndarray:
                 w = decode_direct_width((h0 >> 1) & 0x1F)
                 n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
                 pos += 2
-                direct_frames.setdefault(w, []).append((got, min(n, count - got), pos, n))
-                pos += packed_size(n, w)
+                nb = packed_size(n, w)
+                take = min(n, count - got)
+                runs = direct_frames.setdefault(w, [])
+                run = runs[-1] if runs else None
+                if run is not None and run[3] == n and not n & 7 and run[2] + run[4] * (nb + 2) == pos:
+                    run[1] += take
+                    run[4] += 1
+                else:
+                    runs.append([got, take, pos, n, 1])
+                pos += nb
             elif tag == 2:  # patched base
                 w = decode_direct_width((h0 >> 1) & 0x1F)
                 n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
@@ -564,19 +575,21 @@ def rlev2_decode(buf: bytes, count: int, signed: bool = True) -> np.ndarray:
         pos = blen + 1
     if got < count or pos > blen:  # a run (or its payload) is cut off
         raise ValueError(f"RLEv2 stream truncated at {got}/{count} values")
-    for w, frames in direct_frames.items():
-        padded_vals = sum((n + 7) // 8 * 8 for _, _, _, n in frames)
+    for w, runs in direct_frames.items():
+        padded_vals = sum((n + 7) // 8 * 8 * k for _, _, _, n, k in runs)
         packed = np.zeros(padded_vals * w // 8, dtype=np.uint8)
         off = 0
-        for _, _, p, n in frames:
+        for _, _, p, n, k in runs:
             nb = packed_size(n, w)
-            packed[off : off + nb] = b[p : p + nb]
-            off += (n + 7) // 8 * 8 * w // 8
+            # k payloads, each followed by the next frame's 2-byte header
+            packed[off : off + k * nb].reshape(k, nb)[...] = np.ndarray(
+                (k, nb), dtype=np.uint8, buffer=b, offset=p, strides=(nb + 2, 1))
+            off += (n + 7) // 8 * 8 * k * w // 8
         vals = _from_unsigned(bitunpack(packed, w, padded_vals), signed)
         voff = 0
-        for g, take, _, n in frames:
+        for g, take, _, n, k in runs:
             out[g : g + take] = vals[voff : voff + take]
-            voff += (n + 7) // 8 * 8
+            voff += (n + 7) // 8 * 8 * k
     for cw, jobs in patch_jobs.items():
         padded = sum((pll + 7) // 8 * 8 for _, _, pll, _ in jobs)
         packed = np.zeros(padded * cw // 8, dtype=np.uint8)

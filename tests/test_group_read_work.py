@@ -10,11 +10,13 @@ lookup export (lm-corpus rows from ``perfbench/workloads.py``, read only;
 - the byte source serves no more than those stream ranges plus the gaps
   the reader's 64 KiB coalescing may bridge;
 - each stripe's row positions are parsed, and its string dictionaries
-  decoded, once, however often reads come back to it.
+  decoded, once, however often reads come back to it;
+- where libdeflate is installed, no block goes through stdlib inflate.
 """
 
 from __future__ import annotations
 
+import zlib
 from collections import Counter
 
 import numpy as np
@@ -142,6 +144,26 @@ def test_point_read_inflates_only_its_group(lm_file, inflated):
         batch = r.read_stripe(i, row_groups=[g])
         assert batch.num_rows == STRIDE
         assert inflated[0] == want, (i, g, inflated[0], want)
+
+
+@pytest.mark.skipif(blockcomp._system_lib("deflate", blockcomp._bind_inflate) is None,
+                    reason="the system has no libdeflate")
+def test_group_read_inflates_without_stdlib_zlib(lm_file, monkeypatch):
+    """Where libdeflate is installed it inflates every zlib block of a
+    group read, the file tail's included: with stdlib inflate refusing,
+    reads still return the written rows."""
+    table = lm_corpus(7).slice(0, ROWS).sort_by("doc_id")
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("stdlib zlib inflated a block")
+
+    monkeypatch.setattr(zlib, "decompress", refuse)
+    r = OrcFileReader(lm_file)
+    for i, g in _point_reads(r):
+        got = r.read_stripe(i, row_groups=[g])
+        want = table.slice(i * STRIPE_ROWS + g * STRIDE, STRIDE)
+        assert got.column("doc_id").to_pylist() == want.column("doc_id").to_pylist()
+        assert got.column("tokens").to_pylist() == want.column("tokens").to_pylist()
 
 
 def test_point_read_fetches_only_group_ranges(lm_file):

@@ -8,10 +8,13 @@ the block formats' structural rules; the C decoders' oversize retry,
 the lz4 size scan it relies on, and the framing decoder's error
 contract (truncation and corrupt blocks raise OrcFormatError naming the
 codec, a missing system library raises OrcUnsupportedError) are pinned
-here, as is the zlib encoder's libdeflate arm: every block it writes is
-raw deflate stdlib zlib inflates, without libdeflate the bytes are stdlib
-zlib's, compressors do not leak across threads, and the level contract
-holds on both paths. ORC-file-level interop with the JVM lives in
+here, as are the zlib codec's libdeflate arms. Encode: every block it
+writes is raw deflate stdlib zlib inflates, without libdeflate the bytes
+are stdlib zlib's, compressors do not leak across threads, and the level
+contract holds on both paths. Decode: libdeflate inflates what stdlib
+zlib inflates, retries an output larger than its first buffer, rejects
+cut and flipped blocks like stdlib, and hands over to stdlib without the
+library or beyond MAX_BLOCK. ORC-file-level interop with the JVM lives in
 tests/test_spark_roundtrip.py::test_jvm_reads_lz_codecs.
 """
 
@@ -534,8 +537,9 @@ def test_huffman_only_stays_on_stdlib():
 
 
 def test_zlib_threads_get_single_thread_bytes():
-    """8 threads compressing different inputs at several levels at once
-    get the single-thread outputs (compressors are per thread)."""
+    """8 threads compressing different inputs at several levels, and
+    inflating the blocks, at once get the single-thread outputs
+    (compressors and decompressors are per thread)."""
     rng = np.random.default_rng(3)
     inputs = [rng.integers(0, 50 * (k + 1), 60_000).astype("<u4").tobytes() for k in range(8)]
     levels = (1, 6, 7)
@@ -545,7 +549,11 @@ def test_zlib_threads_get_single_thread_bytes():
 
     def work(k):
         barrier.wait()
-        got[k] = [[block_compress(inputs[k], "zlib", lv) for lv in levels] for _ in range(5)]
+        runs = []
+        for _ in range(5):
+            framed = [block_compress(inputs[k], "zlib", lv) for lv in levels]
+            runs.append(framed + [block_decompress(f, "zlib") for f in framed])
+        got[k] = runs
 
     threads = [threading.Thread(target=work, args=(k,)) for k in range(8)]
     interval = sys.getswitchinterval()
@@ -559,7 +567,7 @@ def test_zlib_threads_get_single_thread_bytes():
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     for k in range(8):
-        assert got[k] == [want[k]] * 5
+        assert got[k] == [want[k] + [inputs[k]] * len(levels)] * 5
 
 
 @pytest.mark.parametrize("libdeflate", [True, False])
@@ -591,3 +599,82 @@ def test_libdeflate_shrinks_regime_mix_tokens(monkeypatch):
     assert len(with_lib["s_tokens"]) < len(stdlib["s_tokens"])
     assert block_decompress(with_lib["s_tokens"], "zlib") == block_decompress(
         stdlib["s_tokens"], "zlib")
+
+
+# ---------------------------------------------------------------------------
+# zlib blocks inflate through libdeflate where the system has it
+
+
+@settings(max_examples=80, deadline=None)
+@given(_ZLIB_DATA, st.integers(0, 9), st.booleans(), st.binary(max_size=8))
+def test_inflate_matches_stdlib(data, level, huffman_only, tail):
+    """Every block ``block_compress`` writes, at every level and both
+    deflate strategies, inflates to stdlib zlib's output; bytes after the
+    final deflate block are ignored by both."""
+    strategy = zlib.Z_HUFFMAN_ONLY if huffman_only else zlib.Z_DEFAULT_STRATEGY
+    framed = block_compress(data, "zlib", level, max_block=1000, strategy=strategy)
+    for original, payload in _zlib_blocks(framed):
+        if not original:
+            want = zlib.decompress(payload, -15)
+            assert _DECODERS["zlib"](payload) == want
+            assert _DECODERS["zlib"](payload + tail) == want
+    assert block_decompress(framed, "zlib") == data
+
+
+@pytest.mark.skipif(not HAVE_LIBDEFLATE, reason="the system has no libdeflate")
+def test_inflate_beyond_first_buffer_retries(monkeypatch):
+    """A block whose output exceeds the first try's buffer (sized from the
+    compressed length) decodes through the MAX_BLOCK retry without stdlib;
+    one that inflates beyond MAX_BLOCK (a foreign writer's larger block)
+    falls back to stdlib zlib."""
+    big = block_compress(bytes(MAX_BLOCK), "zlib")
+    assert len(big) * 4 < blockcomp.LZ_BLOCK
+    beyond = zlib.compressobj(6, zlib.DEFLATED, -15)
+    beyond = beyond.compress(bytes(MAX_BLOCK + 4096)) + beyond.flush()
+    assert len(beyond) * 4 < blockcomp.LZ_BLOCK
+    def refuse(*args, **kwargs):
+        raise AssertionError("stdlib zlib inflated a block")
+
+    with monkeypatch.context() as m:
+        m.setattr(zlib, "decompress", refuse)
+        assert block_decompress(big, "zlib") == bytes(MAX_BLOCK)
+        with pytest.raises(AssertionError, match="stdlib"):
+            _DECODERS["zlib"](beyond)
+    assert _DECODERS["zlib"](beyond) == bytes(MAX_BLOCK + 4096)
+
+
+@pytest.mark.parametrize("loop", sorted(_LOOPS))
+@pytest.mark.parametrize("libdeflate", [True, False])
+def test_cut_or_flipped_zlib_blocks_raise(monkeypatch, loop, libdeflate):
+    """Every proper prefix of a few deflate blocks, and blocks whose first
+    header bits are flipped (no final block, or the reserved block type),
+    raise OrcFormatError naming zlib with and without libdeflate."""
+    if not libdeflate:
+        _drop_libdeflate(monkeypatch)
+    decode = _LOOPS[loop]
+    rng = np.random.default_rng(5)
+    payloads = []
+    for data, strategy in ((TEXT, zlib.Z_DEFAULT_STRATEGY), (RUNS, zlib.Z_DEFAULT_STRATEGY),
+                           (rng.integers(0, 300, 600).astype("<u2").tobytes(), zlib.Z_HUFFMAN_ONLY)):
+        ((original, payload),) = _zlib_blocks(block_compress(data, "zlib", 6, strategy=strategy))
+        assert not original
+        payloads += [payload[:k] for k in range(len(payload))]
+        for bit in (0, 1, 2):
+            payloads.append(bytes([payload[0] ^ (1 << bit)]) + payload[1:])
+    for payload in payloads:
+        framed = (len(payload) << 1).to_bytes(3, "little") + payload
+        with pytest.raises(OrcFormatError, match="^zlib: corrupt"):
+            decode(framed, "zlib")
+
+
+def test_inflate_without_libdeflate_uses_stdlib(monkeypatch):
+    """Where the inflate binding cannot be loaded, stdlib zlib inflates."""
+    real = blockcomp._system_lib
+    monkeypatch.setattr(blockcomp, "_system_lib",
+                        lambda name, bind: None if bind is blockcomp._bind_inflate else real(name, bind))
+    calls = []
+    stdlib = zlib.decompress
+    monkeypatch.setattr(zlib, "decompress", lambda *a, **k: calls.append(1) or stdlib(*a, **k))
+    framed = block_compress(TEXT * 3, "zlib", max_block=len(TEXT))
+    assert block_decompress(framed, "zlib") == TEXT * 3
+    assert len(calls) == 3

@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from orc_rs_spark.kernels.bitpack import bitpack, bitunpack
+from orc_rs_spark.kernels.bitpack import bitpack, bitunpack, packed_size
 from orc_rs_spark.kernels.blockcomp import block_compress, block_decompress
 from orc_rs_spark.kernels.byte_rle import byte_rle_decode, byte_rle_encode
 from orc_rs_spark.kernels.fsst import fsst_decode, fsst_encode
@@ -224,6 +224,37 @@ def test_bitunpack_small_counts_match_array_path():
                 bitunpack(np.frombuffer(buf, dtype=np.uint8), width, count), v)
             with pytest.raises(ValueError, match="truncated"):
                 bitunpack(buf[:-1], width, count)
+
+
+def _bitunpack_reference(buf: bytes, width: int, count: int) -> list[int]:
+    """The big-endian bit string of ``buf`` cut into ``width``-bit values."""
+    bits = bin(int.from_bytes(buf, "big") | (1 << 8 * len(buf)))[3:]
+    return [int(bits[i * width : (i + 1) * width], 2) for i in range(count)]
+
+
+@pytest.mark.parametrize("width", range(1, 57))
+def test_bitunpack_windows_match_bigint_reference(width):
+    """The 64-bit-window path (widths up to 56, counts > 64) on buffers
+    exactly ``packed_size`` long — so the last lane's 8-byte window lies
+    past the caller's bytes — matches a pure-Python reference, for bytes
+    objects and for a view whose neighbouring bytes are all ones; a buffer
+    one byte short raises ValueError."""
+    rng = np.random.default_rng(width)
+    for count in (65, 71, 72, 512, 4097, 21000):
+        v = rng.integers(0, 1 << width, size=count, dtype=np.uint64)
+        v[:9] = (1 << width) - 1  # every bit set in the first group
+        buf = bitpack(v, width)
+        assert len(buf) == packed_size(count, width)
+        want = _bitunpack_reference(buf, width, count)
+        assert want == v.tolist()
+        got = bitunpack(buf, width, count)
+        assert got.dtype == np.uint64 and got.tolist() == want
+        fenced = np.full(len(buf) + 16, 0xFF, dtype=np.uint8)
+        fenced[8 : 8 + len(buf)] = np.frombuffer(buf, dtype=np.uint8)
+        fenced.flags.writeable = False
+        assert bitunpack(fenced[8 : 8 + len(buf)], width, count).tolist() == want
+        with pytest.raises(ValueError, match="truncated"):
+            bitunpack(buf[:-1], width, count)
 
 
 @settings(max_examples=150, deadline=None)

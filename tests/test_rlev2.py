@@ -162,6 +162,26 @@ def test_frame_boundary_splits():
         np.testing.assert_array_equal(rlev2_decode(rlev2_encode(v), n), v)
 
 
+def test_prefix_decode_across_merged_direct_frames():
+    """Consecutive 512-value direct frames of one width decode as one run;
+    a width change ends the run, and a later run of the first width does
+    not merge with the earlier one. Every prefix count, cut inside or at
+    the end of a merged frame, decodes the stream's first values; frames
+    whose length is not a multiple of 8 do not merge."""
+    rng = np.random.default_rng(9)
+    v = np.concatenate([rng.integers(0, 1 << 18, 2048), rng.integers(0, 32, 1024),
+                        rng.integers(0, 1 << 18, 1024)]).astype(np.int64)
+    buf = rlev2_encode(v, signed=False)
+    assert buf[0] >> 6 == 1  # direct
+    for count in (1, 511, 512, 513, 1500, 2047, 2048, 2049, 3072, 3100, 4095, 4096):
+        np.testing.assert_array_equal(rlev2_decode(buf, count, signed=False), v[:count])
+    # consecutive frames of one width and a length that is not a multiple
+    # of 8 (two streams back to back) each keep their own padding
+    a, b = rng.integers(0, 1 << 17, (2, 100))  # 100 x 17 bits ends mid-byte
+    two = rlev2_encode(a, signed=False) + rlev2_encode(b, signed=False)
+    np.testing.assert_array_equal(rlev2_decode(two, 200, signed=False), np.concatenate([a, b]))
+
+
 def test_run_modes_truncated_raises_valueerror():
     """A stream cut mid-header (or mid-payload) must raise the documented
     ValueError from rlev2_run_modes, never IndexError (round-6 ADVICE)."""
