@@ -60,21 +60,25 @@ def byte_rle_decode(buf: bytes | np.ndarray, count: int) -> np.ndarray:
     out = np.empty(count, dtype=np.uint8)
     pos = 0
     got = 0
-    while got < count:
-        if pos >= len(b):
-            raise ValueError(f"byte RLE stream truncated at {got}/{count}")
+    blen = len(b)
+    while got < count and pos < blen:
         h = int(b[pos])
         if h < 128:  # run
             n = h + 3
-            take = min(n, count - got)
-            out[got : got + take] = b[pos + 1]
+            if pos + 2 > blen:  # no value byte
+                break
+            out[got : got + n] = b[pos + 1]
             pos += 2
         else:  # literals
             n = 256 - h
             take = min(n, count - got)
+            if pos + 1 + take > blen:  # fewer bytes than the values read
+                break
             out[got : got + take] = b[pos + 1 : pos + 1 + take]
             pos += 1 + n
         got += n
+    if got < count:
+        raise ValueError(f"byte RLE stream truncated at {got}/{count}")
     return out
 
 

@@ -16,18 +16,10 @@ from __future__ import annotations
 import numpy as np
 
 from orc_rs_spark.kernels.varint import varint_decode, varint_encode
-from orc_rs_spark.kernels.zigzag import zigzag_decode, zigzag_encode
+from orc_rs_spark.kernels.zigzag import from_unsigned, to_unsigned
 
 MAX_RUN = 130
 MAX_LITERALS = 128
-
-
-def _to_u(v: np.ndarray, signed: bool) -> np.ndarray:
-    return zigzag_encode(v) if signed else np.asarray(v, dtype=np.int64).astype(np.uint64)
-
-
-def _from_u(u: np.ndarray, signed: bool) -> np.ndarray:
-    return zigzag_decode(u) if signed else u.astype(np.int64)
 
 
 def rlev1_encode(values: np.ndarray, signed: bool = True) -> bytes:
@@ -46,7 +38,7 @@ def rlev1_encode(values: np.ndarray, signed: bool = True) -> bytes:
             chunk = lit[:MAX_LITERALS]
             del lit[:MAX_LITERALS]
             out.append(bytes([256 - len(chunk)]))
-            out.append(varint_encode(_to_u(np.array(chunk, dtype=np.int64), signed)))
+            out.append(varint_encode(to_unsigned(np.array(chunk, dtype=np.int64), signed)))
 
     i = 0
     while i < n:
@@ -61,7 +53,7 @@ def rlev1_encode(values: np.ndarray, signed: bool = True) -> bytes:
             flush_literals()
             out.append(bytes([run_len - 3]))
             out.append(int(delta).to_bytes(1, "little", signed=True))
-            out.append(varint_encode(_to_u(v[i : i + 1], signed)))
+            out.append(varint_encode(to_unsigned(v[i : i + 1], signed)))
             i += run_len
         else:
             lit.append(vals[i])
@@ -86,7 +78,7 @@ def rlev1_decode(buf: bytes | np.ndarray, count: int, signed: bool = True) -> np
             pos += 1
             u, used = varint_decode(b[pos : pos + 10], 1)
             pos += used
-            base = int(_from_u(u, signed)[0])
+            base = int(from_unsigned(u, signed)[0])
             take = min(n, count - got)
             out[got : got + take] = base + delta * np.arange(take, dtype=np.int64)
             got += n
@@ -95,6 +87,6 @@ def rlev1_decode(buf: bytes | np.ndarray, count: int, signed: bool = True) -> np
             u, used = varint_decode(b[pos : pos + 10 * n], n)
             pos += used
             take = min(n, count - got)
-            out[got : got + take] = _from_u(u, signed)[:take]
+            out[got : got + take] = from_unsigned(u, signed)[:take]
             got += n
     return out

@@ -15,6 +15,10 @@ grid or row-aligned frames; ``rlev2_encode_runs`` makes every repeat run of
 >= 3 values its own frame, which the auto-selector picks only for run-dense
 chunks. All per-value math is NumPy-vectorized; Python loops run only over
 frames and, when decoding, over run headers.
+
+Decoding is one header walk (``_walk``) and one gather per width for
+direct, patched, patch-list and delta payloads (``_unpack_runs``, one
+``bitunpack`` each); ``rlev2_run_modes`` is that walk's tally.
 """
 
 from __future__ import annotations
@@ -34,28 +38,13 @@ from orc_rs_spark.kernels.bitpack import (
     packed_size,
 )
 from orc_rs_spark.kernels.varint import uvarint
-from orc_rs_spark.kernels.zigzag import zigzag_decode, zigzag_encode
+from orc_rs_spark.kernels.zigzag import from_unsigned, to_unsigned, zigzag_encode
 
 MAX_RUN = 512  # max values per RLEv2 run (9-bit length field, L-1)
 _U64_ONE = np.uint64(1)
 
 
 # ---------------------------------------------------------------- helpers
-
-
-def _as_unsigned(v: np.ndarray, signed: bool) -> np.ndarray:
-    """Value space used by short-repeat/direct: zigzag if signed."""
-    if signed:
-        return zigzag_encode(v)
-    return np.ascontiguousarray(v, dtype=np.int64).view(np.uint64)
-
-
-def _from_unsigned(u: np.ndarray, signed: bool) -> np.ndarray:
-    if signed:
-        return zigzag_decode(u)
-    # uint64 -> int64 wrap: a view is the same bits for free; astype only
-    # when the input is some other dtype
-    return u.view(np.int64) if u.dtype == np.uint64 else u.astype(np.int64)
 
 
 def _encode_base(base: int) -> tuple[bytes, int]:
@@ -100,7 +89,7 @@ def _emit_short_repeat(value: int, count: int, signed: bool, out: list) -> None:
 
 
 def _emit_direct(v: np.ndarray, signed: bool, out: list) -> None:
-    u = _as_unsigned(v, signed)
+    u = to_unsigned(v, signed)
     w = closest_direct_width(int(bit_lengths(u).max(initial=0)) or 1)
     n = len(v)
     out.append(bytes([(1 << 6) | (encode_direct_width(w) << 1) | ((n - 1) >> 8), (n - 1) & 0xFF]))
@@ -446,43 +435,40 @@ def _encode_frames(
 
 # ---------------------------------------------------------------- decoder
 
+_MODES = ("short_repeat", "direct", "patched", "delta")
 
-def rlev2_decode(buf: bytes, count: int, signed: bool = True) -> np.ndarray:
-    """Decode ``count`` values from an RLEv2 stream -> int64 array.
 
-    Handles arbitrary interleavings of all four sub-modes, like the
-    reference's dispatch (/root/reference/src/encoding/rlev2.rs:145-183)
-    plus the patched-base mode it left unimplemented.
-    """
-    b = np.frombuffer(buf, dtype=np.uint8)
-    mb = bytes(buf) if not isinstance(buf, bytes) else buf  # fast scalar reads
-    out = np.empty(count, dtype=np.int64)
-    pos = 0
-    got = 0
-    # direct frames are only recorded during the header walk and unpacked in
-    # one batch per distinct width afterwards (same padding trick as the
-    # encoder: each frame zero-padded to a multiple of 8 values stays
-    # byte-aligned and independent). Consecutive frames of one width and
-    # one multiple-of-8 length (the encoder's 512-value frames) merge into
-    # one run: their payloads sit a fixed stride apart, so one strided
-    # copy gathers them and one slice writes their values out
-    direct_frames: dict[int, list[list[int]]] = {}  # w -> [got, take, pos, n, frames]
-    # variable-delta frames batch the same way: one bitunpack per width and
-    # ONE global cumsum over all frames' deltas (per-frame values recover as
-    # differences against each frame's running offset; int64 wraparound in
-    # the global cumsum cancels in the difference, mod-2^64 arithmetic)
-    delta_frames: dict[int, list[tuple[int, int, int, int, int, int]]] = {}
-    # patched-base frames batch their DATA unpack the same way; their patch
-    # LISTS (<= 31 entries each) also batch — one bitunpack per distinct
-    # combined width instead of one per frame (patched-heavy streams spent
-    # more time in per-frame unpack setup than in actual bit work)
-    patched_frames: dict[int, list] = {}
-    patch_jobs: dict[int, list] = {}  # cw -> [(frame, patch_pos, pll, pw)]
+def _walk(buf, count: int, signed: bool, out: np.ndarray) -> tuple:
+    """One pass over a stream's run headers.
+
+    Short-repeat, fixed-delta and one-value delta runs are written straight
+    into ``out``. Every bit-packed payload is only recorded, by width, for
+    ``_unpack_runs``; each record starts with the payload's (pos, n, k):
+
+    - direct ``[pos, n, k, got, take]``: consecutive frames of one width and
+      one multiple-of-8 length (the encoder's 512-value frames) merge into
+      one record of k frames, since their payloads sit a fixed stride apart;
+    - patched-base DATA ``[pos, n, 1, got, take, base, patches]``, where the
+      finish step fills ``patches`` from the frame's patch list;
+    - patch lists ``(pos, pll, 1, frame, pw)``, by combined gap+patch width;
+    - delta magnitudes ``(pos, n - 2, 1, got, take, base, dbase)``.
+
+    Returns those four dicts and the tally of run headers per sub-mode (in
+    ``_MODES`` order). A run cut off by the end of the buffer raises
+    ValueError."""
+    mb = buf if isinstance(buf, bytes) else bytes(buf)  # plain-int indexing
+    direct: dict[int, list] = {}
+    patched: dict[int, list] = {}
+    patch_lists: dict[int, list] = {}
+    deltas: dict[int, list] = {}
+    tally = [0, 0, 0, 0]
+    pos = got = 0
     blen = len(mb)
     try:
         while got < count and pos < blen:
-            h0 = mb[pos]  # bytes indexing: plain int, no numpy-scalar boxing
+            h0 = mb[pos]
             tag = h0 >> 6
+            tally[tag] += 1
             if tag == 0:  # short repeat
                 w = ((h0 >> 3) & 0x7) + 1
                 n = (h0 & 0x7) + 3
@@ -493,36 +479,33 @@ def rlev2_decode(buf: bytes, count: int, signed: bool = True) -> np.ndarray:
                     val = u - (1 << 64) if u >= (1 << 63) else u
                 out[got : got + n] = val
                 pos += 1 + w
-            elif tag == 1:  # direct
+                got += n
+                continue
+            n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
+            take = min(n, count - got)
+            if tag == 1:  # direct
                 w = decode_direct_width((h0 >> 1) & 0x1F)
-                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
                 pos += 2
                 nb = packed_size(n, w)
-                take = min(n, count - got)
-                runs = direct_frames.setdefault(w, [])
+                runs = direct.setdefault(w, [])
                 run = runs[-1] if runs else None
-                if run is not None and run[3] == n and not n & 7 and run[2] + run[4] * (nb + 2) == pos:
-                    run[1] += take
-                    run[4] += 1
+                if run is not None and run[1] == n and not n & 7 and run[0] + run[2] * (nb + 2) == pos:
+                    run[2] += 1
+                    run[4] += take
                 else:
-                    runs.append([got, take, pos, n, 1])
+                    runs.append([pos, n, 1, got, take])
                 pos += nb
             elif tag == 2:  # patched base
                 w = decode_direct_width((h0 >> 1) & 0x1F)
-                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
                 h2, h3 = mb[pos + 2], mb[pos + 3]
-                bw = ((h2 >> 5) & 0x7) + 1
+                bw = (h2 >> 5) + 1
                 pw = decode_direct_width(h2 & 0x1F)
-                pgw = ((h3 >> 5) & 0x7) + 1
+                pgw = (h3 >> 5) + 1
                 pll = h3 & 0x1F
-                pos += 4
-                base = _decode_base(mb[pos : pos + bw], bw)
-                pos += bw
-                nbytes = packed_size(n, w)
-                data_pos = pos
-                pos += nbytes
-                frame = [got, min(n, count - got), n, data_pos, base, None, None]
-                patched_frames.setdefault(w, []).append(frame)
+                pos += 4 + bw
+                frame = [pos, n, 1, got, take, _decode_base(mb[pos - bw : pos], bw), None]
+                patched.setdefault(w, []).append(frame)
+                pos += packed_size(n, w)
                 if pll:
                     if pgw + pw > 64:
                         # width table has no entry past 64; a crafted header
@@ -530,11 +513,10 @@ def rlev2_decode(buf: bytes, count: int, signed: bool = True) -> np.ndarray:
                         # IndexError past the 32-entry table
                         raise ValueError("invalid patched-base header: pgw + pw > 64")
                     cw = closest_direct_width(pgw + pw)
-                    patch_jobs.setdefault(cw, []).append((frame, pos, pll, pw))
+                    patch_lists.setdefault(cw, []).append((pos, pll, 1, frame, pw))
                     pos += packed_size(pll, cw)
             else:  # delta
                 w = decode_delta_width((h0 >> 1) & 0x1F)
-                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
                 pos += 2
                 u = 0
                 shift = 0
@@ -562,100 +544,104 @@ def rlev2_decode(buf: bytes, count: int, signed: bool = True) -> np.ndarray:
                             break
                         shift += 7
                     dbase = (u >> 1) ^ -(u & 1)
-                    take = min(n, count - got)
                     if w == 0:  # fixed delta: closed form, no cumsum needed
                         out[got : got + take] = base + dbase * np.arange(take, dtype=np.int64)
                     else:
-                        # defer: unpack + cumsum happen once per width below
-                        nbytes = packed_size(n - 2, w)
-                        delta_frames.setdefault(w, []).append((got, take, n, base, dbase, pos))
-                        pos += nbytes
+                        deltas.setdefault(w, []).append((pos, n - 2, 1, got, take, base, dbase))
+                        pos += packed_size(n - 2, w)
             got += n
     except IndexError:  # a header or a varint cut off by the end of the buffer
         pos = blen + 1
     if got < count or pos > blen:  # a run (or its payload) is cut off
         raise ValueError(f"RLEv2 stream truncated at {got}/{count} values")
-    for w, runs in direct_frames.items():
-        padded_vals = sum((n + 7) // 8 * 8 * k for _, _, _, n, k in runs)
-        packed = np.zeros(padded_vals * w // 8, dtype=np.uint8)
-        off = 0
-        for _, _, p, n, k in runs:
-            nb = packed_size(n, w)
-            # k payloads, each followed by the next frame's 2-byte header
+    return direct, patched, patch_lists, deltas, tally
+
+
+def _unpack_runs(b: np.ndarray, w: int, runs: list) -> np.ndarray:
+    """Unpack the ``w``-bit payloads of ``runs`` with one bitunpack.
+
+    Each run starts with (pos, n, k): k payloads of n values, the first at
+    byte ``pos`` of ``b`` and each next one a 2-byte header further on
+    (merged direct frames; k is 1 for every other payload). Each payload is
+    zero-padded to a multiple of 8 values, so it stays byte-aligned and
+    independent; a run's values start at the sum of the earlier runs'
+    ``(n + 7) // 8 * 8 * k``."""
+    padded = 0
+    for r in runs:
+        padded += (r[1] + 7) // 8 * 8 * r[2]
+    packed = np.zeros(padded * w // 8, dtype=np.uint8)
+    off = 0
+    for r in runs:
+        p, n, k = r[0], r[1], r[2]
+        nb = packed_size(n, w)
+        if k == 1:  # a plain slice copy: the strided view costs more here
+            packed[off : off + nb] = b[p : p + nb]
+        else:  # k payloads of n % 8 == 0 values, each followed by a header
             packed[off : off + k * nb].reshape(k, nb)[...] = np.ndarray(
                 (k, nb), dtype=np.uint8, buffer=b, offset=p, strides=(nb + 2, 1))
-            off += (n + 7) // 8 * 8 * k * w // 8
-        vals = _from_unsigned(bitunpack(packed, w, padded_vals), signed)
+        off += (n + 7) // 8 * k * w
+    return bitunpack(packed, w, padded)
+
+
+def rlev2_decode(buf: bytes, count: int, signed: bool = True) -> np.ndarray:
+    """Decode ``count`` values from an RLEv2 stream -> int64 array.
+
+    Handles arbitrary interleavings of all four sub-modes, like the
+    reference's dispatch (its src/encoding/rlev2.rs:145-183)
+    plus the patched-base mode it left unimplemented: one header walk
+    (``_walk``), then one ``_unpack_runs`` per payload kind and width.
+    """
+    b = np.frombuffer(buf, dtype=np.uint8)
+    out = np.empty(count, dtype=np.int64)
+    direct, patched, patch_lists, deltas, _ = _walk(buf, count, signed, out)
+    for w, runs in direct.items():
+        vals = from_unsigned(_unpack_runs(b, w, runs), signed)
         voff = 0
-        for g, take, _, n, k in runs:
+        for _, n, k, g, take in runs:
             out[g : g + take] = vals[voff : voff + take]
             voff += (n + 7) // 8 * 8 * k
-    for cw, jobs in patch_jobs.items():
-        padded = sum((pll + 7) // 8 * 8 for _, _, pll, _ in jobs)
-        packed = np.zeros(padded * cw // 8, dtype=np.uint8)
-        off = 0
-        for _, p, pll, _ in jobs:
-            nb = packed_size(pll, cw)
-            packed[off : off + nb] = b[p : p + nb]
-            off += (pll + 7) // 8 * 8 * cw // 8
-        ents = bitunpack(packed, cw, padded)
+    # patch lists (<= 31 entries each) before the DATA they patch
+    for cw, lists in patch_lists.items():
+        ents = _unpack_runs(b, cw, lists)
         voff = 0
-        for frame, _, pll, pw in jobs:
+        for _, pll, _, frame, pw in lists:
             e = ents[voff : voff + pll]
-            frame[5] = np.cumsum((e >> np.uint64(pw)).astype(np.int64))  # idx
-            frame[6] = e & ((_U64_ONE << np.uint64(pw)) - _U64_ONE)  # patches
+            idx = np.cumsum((e >> np.uint64(pw)).astype(np.int64))  # gaps >= 0
+            if idx[-1] >= frame[1]:
+                raise ValueError(
+                    f"invalid patched-base patch: index {idx[-1]} in a {frame[1]}-value run")
+            frame[6] = idx, e & ((_U64_ONE << np.uint64(pw)) - _U64_ONE)
             voff += (pll + 7) // 8 * 8
-    for w, frames in patched_frames.items():
-        padded_vals = sum((n + 7) // 8 * 8 for _, _, n, _, _, _, _ in frames)
-        packed = np.zeros(padded_vals * w // 8, dtype=np.uint8)
-        off = 0
-        for _, _, n, p, _, _, _ in frames:
-            nb = packed_size(n, w)
-            packed[off : off + nb] = b[p : p + nb]
-            off += (n + 7) // 8 * 8 * w // 8
-        vals = bitunpack(packed, w, padded_vals)
+    for w, frames in patched.items():
+        vals = _unpack_runs(b, w, frames)
         voff = 0
-        for g, take, n, p, base, idx, patches in frames:
+        for _, n, _, g, take, base, patches in frames:
             seg = vals[voff : voff + n]
-            if idx is not None:
-                seg[idx] |= patches << np.uint64(w)
-            out[g : g + take] = (
-                np.uint64(np.int64(base).astype(np.uint64)) + seg
-            ).astype(np.int64)[:take]
+            if patches is not None:
+                seg[patches[0]] |= patches[1] << np.uint64(w)
+            out[g : g + take] = (seg[:take] + np.uint64(base & 0xFFFFFFFFFFFFFFFF)).view(np.int64)
             voff += (n + 7) // 8 * 8
-    for w, all_frames in delta_frames.items():
+    for w, frames in deltas.items():
         # tile into ~128K-value groups: amortizes the per-frame Python cost
         # ~250x while keeping every batched pass (gather, unpack, cumsum)
         # inside L2/L3 — a global pass re-streams DRAM and loses the win
         # back at high core counts where bandwidth is the budget
-        group: list = []
-        group_vals = 0
-        groups = []
-        for f in all_frames:
-            group.append(f)
-            group_vals += f[2]
-            if group_vals >= 131072:
-                groups.append(group)
-                group = []
-                group_vals = 0
-        if group:
-            groups.append(group)
-        for frames in groups:
-            _decode_delta_group(frames, w, b, out)
+        start = tile = 0
+        for i, f in enumerate(frames):
+            tile += f[1] + 2
+            if tile >= 131072 or i == len(frames) - 1:
+                _decode_delta_group(frames[start : i + 1], w, b, out)
+                start, tile = i + 1, 0
     return out
 
 
 def _decode_delta_group(frames: list, w: int, b: np.ndarray, out: np.ndarray) -> None:
-    m_counts = np.array([f[2] - 2 for f in frames], dtype=np.int64)
-    padded_counts = (m_counts + 7) // 8 * 8
-    total_padded = int(padded_counts.sum())
-    packed = np.zeros(total_padded * w // 8, dtype=np.uint8)
-    off = 0
-    for (_, _, n, _, _, p), pc in zip(frames, padded_counts.tolist()):
-        nb = packed_size(n - 2, w)
-        packed[off : off + nb] = b[p : p + nb]
-        off += pc * w // 8
-    mags_padded = bitunpack(packed, w, total_padded).view(np.int64)
+    """Variable-delta frames of one width: one unpack of their magnitudes and
+    ONE cumsum over all frames' deltas (per-frame values recover as
+    differences against each frame's running offset; int64 wraparound in
+    the cumsum cancels in the difference, mod-2^64 arithmetic)."""
+    m_counts = np.array([f[1] for f in frames], dtype=np.int64)
+    mags_padded = _unpack_runs(b, w, frames).view(np.int64)
     # one delta sequence per frame: [dbase, sign*mag, sign*mag, ...];
     # padding stripped by per-frame slice writes (frames are ~512 vals,
     # so this loop is 1/512th of the data volume)
@@ -665,10 +651,9 @@ def _decode_delta_group(frames: list, w: int, b: np.ndarray, out: np.ndarray) ->
     total_d = int(d_counts.sum())
     deltas = np.empty(total_d, dtype=np.int64)
     po = 0
-    for i, (_, _, n, _, dbase, _) in enumerate(frames):
+    for i, (_, m, _, _, _, _, dbase) in enumerate(frames):
         ds = d_starts[i]
         deltas[ds] = dbase
-        m = n - 2
         if m:
             if dbase < 0:
                 np.negative(mags_padded[po : po + m], out=deltas[ds + 1 : ds + 1 + m])
@@ -680,7 +665,7 @@ def _decode_delta_group(frames: list, w: int, b: np.ndarray, out: np.ndarray) ->
         frame_offs = np.concatenate(([0], csum[d_starts_np[1:] - 1])).tolist()
     else:
         frame_offs = [0]
-    for i, (g, take, n, base, dbase, p) in enumerate(frames):
+    for i, (_, _, _, g, take, base, _) in enumerate(frames):
         out[g] = base
         if take > 1:
             a = d_starts[i]
@@ -693,59 +678,10 @@ def _decode_delta_group(frames: list, w: int, b: np.ndarray, out: np.ndarray) ->
 def rlev2_run_modes(buf: bytes, count: int) -> dict[str, int]:
     """Tally sub-mode usage across a stream's run headers (diagnostic).
 
-    Walks headers only, skipping payloads — the gate query for patched-base
-    (C11, ``todo!()`` in the reference, rlev2.rs:185-187) uses this to
-    CERTIFY the encoder actually routed frames to patched-base rather than
-    merely producing decodable bytes."""
-    mb = bytes(buf)
-    modes = {"short_repeat": 0, "direct": 0, "patched": 0, "delta": 0}
-    pos, got, blen = 0, 0, len(mb)
-
-    def _skip_varint(p: int) -> int:
-        while mb[p] & 0x80:
-            p += 1
-        return p + 1
-
-    try:
-        while got < count and pos < blen:
-            h0 = mb[pos]
-            tag = h0 >> 6
-            if tag == 0:  # short repeat
-                w = ((h0 >> 3) & 0x7) + 1
-                n = (h0 & 0x7) + 3
-                pos += 1 + w
-                modes["short_repeat"] += 1
-            elif tag == 1:  # direct
-                w = decode_direct_width((h0 >> 1) & 0x1F)
-                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
-                pos += 2 + packed_size(n, w)
-                modes["direct"] += 1
-            elif tag == 2:  # patched base
-                w = decode_direct_width((h0 >> 1) & 0x1F)
-                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
-                h2, h3 = mb[pos + 2], mb[pos + 3]
-                bw = ((h2 >> 5) & 0x7) + 1
-                pw = decode_direct_width(h2 & 0x1F)
-                pgw = ((h3 >> 5) & 0x7) + 1
-                pll = h3 & 0x1F
-                pos += 4 + bw + packed_size(n, w)
-                if pll:
-                    if pgw + pw > 64:
-                        raise ValueError("invalid patched-base header: pgw + pw > 64")
-                    pos += packed_size(pll, closest_direct_width(pgw + pw))
-                modes["patched"] += 1
-            else:  # delta
-                w = decode_delta_width((h0 >> 1) & 0x1F)
-                n = (((h0 & 1) << 8) | mb[pos + 1]) + 1
-                pos = _skip_varint(pos + 2)  # base
-                if n >= 2:
-                    pos = _skip_varint(pos)  # delta base
-                    if n > 2 and w > 0:
-                        pos += packed_size(n - 2, w)
-                modes["delta"] += 1
-            got += n
-    except IndexError:  # a header or a varint cut off by the end of the buffer
-        pos = blen + 1
-    if got < count or pos > blen:  # a run (or its payload) is cut off
-        raise ValueError(f"RLEv2 stream truncated at {got}/{count} values")
-    return modes
+    This is the decoder's header walk, run into a scratch array with every
+    bit-packed payload left packed — the gate query for patched-base (C11,
+    ``todo!()`` in the reference, rlev2.rs:185-187) uses it to CERTIFY the
+    encoder actually routed frames to patched-base rather than merely
+    producing decodable bytes."""
+    tally = _walk(buf, count, False, np.empty(count, dtype=np.int64))[4]
+    return dict(zip(_MODES, tally))

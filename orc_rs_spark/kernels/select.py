@@ -131,9 +131,7 @@ def candidate_int_codecs(st: dict) -> list[str]:
     return cands
 
 
-def encode_ints_auto(
-    values: np.ndarray, probe_block: bool = True, boundaries: np.ndarray | None = None
-) -> tuple[str, bytes]:
+def encode_ints_auto(values: np.ndarray, boundaries: np.ndarray | None = None) -> tuple[str, bytes]:
     """Trial-based selection: encode a sample with each candidate codec,
     measure its post-block-compression size, encode the full chunk with the
     winner. Mirrors ORC's writer heuristics but with measured (not modeled)
@@ -158,7 +156,7 @@ def encode_ints_auto(
             enc = INT_CODECS[c][0](sample)
         except (ValueError, OverflowError):
             continue
-        sizes[c] = _zprobe(enc) if probe_block else len(enc)
+        sizes[c] = _zprobe(enc)
     codec = min(sizes, key=sizes.get)
     if codec == "rlev2" and boundaries is not None:
         enc = rlev2_encode(v, signed=True, boundaries=boundaries)

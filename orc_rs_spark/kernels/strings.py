@@ -81,10 +81,10 @@ def build_string_array(lengths: np.ndarray, payload: bytes) -> pa.Array:
     )
 
 
-def string_direct_encode(arr: pa.Array, use_fsst: bool = False, fsst_rounds: int = 2) -> bytes:
+def string_direct_encode(arr: pa.Array, use_fsst: bool = False) -> bytes:
     lengths, payload = arrow_string_parts(arr)
     if use_fsst:
-        payload = fsst_encode(payload, rounds=fsst_rounds)
+        payload = fsst_encode(payload, rounds=2)
     len_stream = rlev2_encode(lengths, signed=False)
     return uvarint(len(len_stream)) + len_stream + payload
 
@@ -100,7 +100,7 @@ def string_direct_decode(buf: bytes, count: int, use_fsst: bool = False) -> pa.A
     return build_string_array(lengths, payload)
 
 
-def string_dict_encode(arr: pa.Array, use_fsst: bool = False, fsst_rounds: int = 2) -> bytes:
+def string_dict_encode(arr: pa.Array, use_fsst: bool = False) -> bytes:
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     de = arr.dictionary_encode()
@@ -115,7 +115,7 @@ def string_dict_encode(arr: pa.Array, use_fsst: bool = False, fsst_rounds: int =
     sorted_idx = rank[indices]
     d_lengths, d_payload = arrow_string_parts(sorted_dict)
     if use_fsst:
-        d_payload = fsst_encode(d_payload, rounds=fsst_rounds)
+        d_payload = fsst_encode(d_payload, rounds=2)
     dl_stream = rlev2_encode(d_lengths, signed=False)
     idx_stream = rlev2_encode(sorted_idx, signed=False)
     return (

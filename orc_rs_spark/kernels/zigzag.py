@@ -26,3 +26,19 @@ def zigzag_decode(values: np.ndarray) -> np.ndarray:
     were the single hottest spot in wire decode (q7)."""
     v = np.asarray(values, dtype=np.uint64)
     return (v >> np.uint64(1)).view(np.int64) ^ -((v & np.uint64(1)).view(np.int64))
+
+
+def to_unsigned(values: np.ndarray, signed: bool) -> np.ndarray:
+    """The uint64 value space of the integer RLEs: zigzag when ``signed``,
+    else the int64 bits as they are (a view)."""
+    if signed:
+        return zigzag_encode(values)
+    return np.ascontiguousarray(values, dtype=np.int64).view(np.uint64)
+
+
+def from_unsigned(values: np.ndarray, signed: bool) -> np.ndarray:
+    """Inverse of ``to_unsigned``: uint64 -> int64, wrapping (a view for
+    uint64 input)."""
+    if signed:
+        return zigzag_decode(values)
+    return np.asarray(values, dtype=np.uint64).view(np.int64)

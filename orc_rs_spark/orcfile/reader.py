@@ -512,7 +512,10 @@ class _StripeColumnReader:
         byte_skip, bit_skip = self._skips(col, kind, groups)
         need = byte_skip + (bit_skip + n + 7) // 8
         buf = self._data(col, kind, groups, self._byte_rle_bound(need, groups))
-        bys = byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), need)
+        try:
+            bys = byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), need)
+        except ValueError as e:
+            raise self._corrupt(col, kind, str(e)) from e
         return np.unpackbits(bys[byte_skip:])[bit_skip : bit_skip + n].astype(bool)
 
     def _bytes(self, col: int, n: int, groups: range | None) -> np.ndarray:
@@ -520,7 +523,10 @@ class _StripeColumnReader:
         skip = self._skips(col, "DATA", groups)[0]
         need = skip + n
         buf = self._data(col, "DATA", groups, self._byte_rle_bound(need, groups))
-        return byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), need)[skip:]
+        try:
+            return byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), need)[skip:]
+        except ValueError as e:
+            raise self._corrupt(col, "DATA", str(e)) from e
 
     def _ints(self, col: int, kind: str, n: int, groups: range | None,
               signed: bool) -> np.ndarray:

@@ -91,6 +91,29 @@ def test_boolean_rle_roundtrip():
         np.testing.assert_array_equal(boolean_rle_decode(boolean_rle_encode(v), len(v)), v)
 
 
+def _byte_rle_prefix_streams():
+    """A byte stream of runs and literal runs of every length class, and a
+    boolean stream whose packed bytes mix both."""
+    rng = np.random.default_rng(21)
+    v = np.concatenate([np.full(200, 9), rng.integers(0, 256, 150), np.full(4, 1),
+                        rng.integers(0, 256, 190), np.full(6, 200)]).astype(np.uint8)
+    bits = np.repeat(rng.random(400) < 0.5, rng.integers(1, 20, 400))[:4000]
+    return [(byte_rle_decode, byte_rle_encode(v), v), (boolean_rle_decode, boolean_rle_encode(bits), bits)]
+
+
+def test_byte_rle_prefix_raises_valueerror():
+    """Every proper prefix of a byte or boolean RLE stream fails with the
+    codec's ValueError: never IndexError, a broadcast error, or a literal
+    run silently widened from the bytes that are left."""
+    for decode, buf, v in _byte_rle_prefix_streams():
+        np.testing.assert_array_equal(decode(buf, len(v)), v)
+        for cut in range(len(buf)):
+            with pytest.raises(ValueError, match="byte RLE stream truncated"):
+                decode(buf[:cut], len(v))
+    with pytest.raises(ValueError, match="byte RLE"):
+        byte_rle_decode(b"\xfc\x01", 4)  # a 4-byte literal run with one byte
+
+
 # ------------------------------------------------------------- RLEv1
 
 

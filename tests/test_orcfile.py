@@ -1943,6 +1943,35 @@ def test_group_data_shorter_than_claimed_raises(tmp_path, codec, name):
         r.read_stripe(0, columns=[name], row_groups=[1])
 
 
+@pytest.mark.parametrize("name,kind", [("x", "PRESENT"), ("b", "DATA"), ("t", "DATA")])
+def test_cut_byte_rle_stream_raises(tmp_path, name, kind):
+    """A PRESENT, boolean or byte stream cut short fails with OrcFormatError
+    naming the file, stripe, column and stream."""
+    import re
+
+    import pyarrow as pa
+
+    from orc_rs_spark.orcfile.writer import write_orc
+
+    n = 3000
+    rng = np.random.default_rng(4)
+    path = str(tmp_path / "cut.orc")
+    write_orc(pa.table({
+        "x": pa.array(np.arange(n), mask=rng.random(n) < 0.3),
+        "b": pa.array(rng.random(n) < 0.5),
+        "t": pa.array(rng.integers(-128, 128, n).astype(np.int8)),
+    }), path, compression="none", row_index_stride=0)
+    r = OrcFileReader(path)
+    root = r.tail.footer.types[0]
+    col = root.subtypes[root.field_names.index(name)]
+    sr, _ = r._open_stripe(0)
+    assert sr.read_column(col, n) is not None
+    sr.streams[(col, kind)] = sr.streams[(col, kind)][:-3]
+    with pytest.raises(OrcFormatError,
+                       match=re.escape(f"{path} stripe 0 column {col} stream {kind}: byte RLE")):
+        sr.read_column(col, n)
+
+
 def test_stats_overlap_type_mismatch_keeps_everything(indexed_orc):
     """A type-mismatched predicate (string range on an int column) must
     disable pruning, not abort the scan with a TypeError."""

@@ -223,6 +223,68 @@ def test_patched_header_width_overflow_is_valueerror():
         rlev2_decode(buf, 8, signed=True)
 
 
+def _patched_frame():
+    """One 512-value unsigned patched-base frame: 8-bit values with three
+    2^30 outliers."""
+    v = np.random.default_rng(1).integers(0, 256, 512)
+    v[[100, 300, 450]] = 2**30
+    buf = rlev2_encode(v, signed=False)
+    assert buf[0] >> 6 == 2 and buf[3] & 0x1F == 3  # patched base, 3 patches
+    return buf, v
+
+
+def test_patched_bit_flips_decode_or_raise_valueerror():
+    """Every single-bit flip of a patched-base frame either decodes or
+    raises ValueError; a patch index past the run (e.g. a flipped patch
+    width) names patched-base, never IndexError."""
+    buf, v = _patched_frame()
+    np.testing.assert_array_equal(rlev2_decode(buf, 512, signed=False), v)
+    for i in range(len(buf) * 8):
+        flipped = bytearray(buf)
+        flipped[i // 8] ^= 1 << (i % 8)
+        try:
+            rlev2_decode(bytes(flipped), 512, signed=False)
+        except ValueError:
+            pass
+    flipped = bytearray(buf)
+    flipped[2] ^= 1  # patch width 23 -> 22 bits: the gaps misread
+    with pytest.raises(ValueError, match="patched-base"):
+        rlev2_decode(bytes(flipped), 512, signed=False)
+
+
+def test_run_modes_tally_sums_over_parts():
+    """A stream built of known parts tallies, per sub-mode, the sum of its
+    parts' run headers (each header of a merged direct run counted), and
+    decodes to the concatenated values."""
+    from orc_rs_spark.kernels.rlev2 import _walk, rlev2_run_modes
+
+    wide = np.random.default_rng(5).integers(0, 1 << 18, 4 * MAX_RUN)
+    wide_buf = rlev2_encode(wide, signed=False)
+    # four 512 x 18-bit direct frames, back to back
+    assert len(wide_buf) == 4 * (2 + MAX_RUN * 18 // 8)
+    assert all(wide_buf[f * (2 + MAX_RUN * 18 // 8)] >> 6 == 1 for f in range(4))
+    patched_buf, patched_v = _patched_frame()
+    parts = [  # (stream, values, {mode: run headers})
+        (bytes([0x0A, 0x27, 0x10]), [10000] * 5, {"short_repeat": 1}),
+        (bytes([0x5E, 0x03, 0x5C, 0xA1, 0xAB, 0x1E, 0xDE, 0xAD, 0xBE, 0xEF]),
+         [23713, 43806, 57005, 48879], {"direct": 1}),
+        (bytes([0xC6, 0x09, 0x02, 0x02, 0x22, 0x42, 0x42, 0x46]),
+         [2, 3, 5, 7, 11, 13, 17, 19, 23, 29], {"delta": 1}),
+        (patched_buf, patched_v, {"patched": 1}),
+        (wide_buf, wide, {"direct": 4}),
+        (bytes([0x0A, 0x27, 0x10]), [10000] * 5, {"short_repeat": 1}),
+    ]
+    buf = b"".join(p[0] for p in parts)
+    v = np.concatenate([np.asarray(p[1], dtype=np.int64) for p in parts])
+    want = {m: sum(p[2].get(m, 0) for p in parts)
+            for m in ("short_repeat", "direct", "patched", "delta")}
+    assert rlev2_run_modes(buf, len(v)) == want
+    np.testing.assert_array_equal(rlev2_decode(buf, len(v), signed=False), v)
+    # the four wide frames are one strided run of the decoder
+    direct = _walk(buf, len(v), False, np.empty(len(v), dtype=np.int64))[0]
+    assert [r[2] for r in direct[18]] == [4]
+
+
 # ------------------------------------------------- run-aligned frames
 
 
