@@ -41,8 +41,8 @@ from orc_rs_spark.orcfile import proto
 from orc_rs_spark.orcfile.errors import OrcFormatError
 from orc_rs_spark.orcfile.reader import (
     OrcTail,
-    as_source,
     map_files,
+    opened_source,
     orc_stream_decompress,
     read_tail,
     schema_signature,
@@ -106,11 +106,11 @@ def _metadata_body(path: str, tail: OrcTail) -> bytes:
     ps = tail.postscript
     if ps.metadata_length == 0:
         return b""
-    src = as_source(path)
-    file_len = src.size()
-    ps_len = src.read_at(file_len - 1, 1)[0]
-    meta_off = file_len - ps_len - 1 - ps.footer_length - ps.metadata_length
-    raw = src.read_at(meta_off, ps.metadata_length)
+    with opened_source(path) as src:
+        file_len = src.size()
+        ps_len = src.read_at(file_len - 1, 1)[0]
+        meta_off = file_len - ps_len - 1 - ps.footer_length - ps.metadata_length
+        raw = src.read_at(meta_off, ps.metadata_length)
     return orc_stream_decompress(raw, ps.compression)
 
 
@@ -167,16 +167,16 @@ def _merge_orc_files_to(paths: list[str], out_path: str) -> int:
         out.write(b"ORC")
         pos = 3
         for p, tail in zip(paths, tails):
-            src = as_source(p)
-            for si in tail.footer.stripes:
-                length = si.index_length + si.data_length + si.footer_length
-                copied = 0
-                while copied < length:
-                    n = min(_COPY_CHUNK, length - copied)
-                    out.write(src.read_at(si.offset + copied, n))
-                    copied += n
-                stripe_infos.append(dataclasses.replace(si, offset=pos))
-                pos += length
+            with opened_source(p) as src:
+                for si in tail.footer.stripes:
+                    length = si.index_length + si.data_length + si.footer_length
+                    copied = 0
+                    while copied < length:
+                        n = min(_COPY_CHUNK, length - copied)
+                        out.write(src.read_at(si.offset + copied, n))
+                        copied += n
+                    stripe_infos.append(dataclasses.replace(si, offset=pos))
+                    pos += length
 
         # Metadata: concatenation of the sources' StripeStatistics lists
         # is valid protobuf for the merged Metadata message IF every input

@@ -22,8 +22,11 @@ whole-stream form under the reader's name.
 
 from __future__ import annotations
 
+import os
 import sys
+import threading
 from collections import OrderedDict
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -54,20 +57,44 @@ class FileSource:
     OrcFile/FileSource abstraction, src/source.rs:11-62). Every reader
     access is a bounded (offset, length) range read, so an object-store
     implementation (S3/GCS ranged GET) slots in with no reader changes:
-    anything with ``size()`` and ``read_at()`` works."""
+    anything with ``size()`` and ``read_at()`` works.
+
+    The file is opened on the first read and stays open until ``close()``;
+    a read after ``close()`` opens it again. Reads go through ``os.pread``,
+    which moves no shared offset, so threads may read one source at once
+    (but must not race ``close()``)."""
 
     def __init__(self, path: str):
         self.path = path
+        self._file = None
+        self._opening = threading.Lock()
 
     def size(self) -> int:
-        import os
-
         return os.path.getsize(self.path)
 
+    def _fileno(self) -> int:
+        f = self._file
+        if f is None:
+            with self._opening:
+                if self._file is None:
+                    self._file = open(self.path, "rb", buffering=0)
+                f = self._file
+        return f.fileno()
+
     def read_at(self, offset: int, length: int) -> bytes:
-        with open(self.path, "rb") as f:
-            f.seek(offset)
-            return f.read(length)
+        fd = self._fileno()
+        data = os.pread(fd, length, offset)
+        while 0 < len(data) < length:  # a short read before end of file
+            more = os.pread(fd, length - len(data), offset + len(data))
+            if not more:
+                break
+            data += more
+        return data
+
+    def close(self) -> None:
+        f, self._file = self._file, None
+        if f is not None:
+            f.close()
 
 
 class MemorySource:
@@ -83,6 +110,9 @@ class MemorySource:
     def read_at(self, offset: int, length: int) -> bytes:
         return self.data[offset : offset + length]
 
+    def close(self) -> None:
+        pass
+
 
 def as_source(src):
     """str path / bytes / any size()+read_at() object -> byte source."""
@@ -91,6 +121,18 @@ def as_source(src):
     if hasattr(src, "read_at") and hasattr(src, "size"):
         return src
     return FileSource(src)
+
+
+@contextmanager
+def opened_source(src):
+    """``as_source(src)`` for a with-block: a source made here from a path
+    or bytes is closed on exit, a source passed in is left open."""
+    source = as_source(src)
+    try:
+        yield source
+    finally:
+        if source is not src:
+            source.close()
 
 
 class RowIndexUnsupported(Exception):
@@ -138,23 +180,23 @@ def read_tail(path) -> OrcTail:
     """Parse the file tail from a path, bytes, or byte source — one
     speculative 16 KiB range read (reference src/tail.rs:38,52-59), plus a
     second ranged read only when the footer outgrows the speculation."""
-    src = as_source(path)
-    file_len = src.size()
-    read_pos = max(0, file_len - TAIL_BUFFER_SIZE)
-    buf = src.read_at(read_pos, file_len - read_pos)
-    if not buf:
-        raise OrcFormatError("empty ORC file")
-    ps_len = buf[-1]
-    ps = proto.PostScript.parse(buf[len(buf) - 1 - ps_len : len(buf) - 1])
-    if ps.magic != "ORC":
-        raise OrcFormatError(f"invalid postscript magic {ps.magic!r}")
-    tail_size = ps.footer_length + ps_len + 1
-    if tail_size >= file_len:
-        raise OrcFormatError(f"invalid tail size {tail_size} >= file size {file_len}")
-    if ps.footer_length <= len(buf) - 1 - ps_len:
-        footer_comp = buf[len(buf) - 1 - ps_len - ps.footer_length : len(buf) - 1 - ps_len]
-    else:
-        footer_comp = src.read_at(file_len - tail_size, ps.footer_length)
+    with opened_source(path) as src:
+        file_len = src.size()
+        read_pos = max(0, file_len - TAIL_BUFFER_SIZE)
+        buf = src.read_at(read_pos, file_len - read_pos)
+        if not buf:
+            raise OrcFormatError("empty ORC file")
+        ps_len = buf[-1]
+        ps = proto.PostScript.parse(buf[len(buf) - 1 - ps_len : len(buf) - 1])
+        if ps.magic != "ORC":
+            raise OrcFormatError(f"invalid postscript magic {ps.magic!r}")
+        tail_size = ps.footer_length + ps_len + 1
+        if tail_size >= file_len:
+            raise OrcFormatError(f"invalid tail size {tail_size} >= file size {file_len}")
+        if ps.footer_length <= len(buf) - 1 - ps_len:
+            footer_comp = buf[len(buf) - 1 - ps_len - ps.footer_length : len(buf) - 1 - ps_len]
+        else:
+            footer_comp = src.read_at(file_len - tail_size, ps.footer_length)
     footer = proto.Footer.parse(orc_stream_decompress(footer_comp, ps.compression))
     if footer.encrypted:
         raise OrcUnsupportedError(
@@ -180,16 +222,16 @@ def read_stripe_statistics(path, tail: OrcTail | None = None) -> list[list[proto
     the pruning index the reference parses but never uses
     (/root/reference/src/tail.rs:113-132, src/stripe.rs:171 TODO).
     Returns stats[stripe][column]; empty list when the section is absent."""
-    src = as_source(path)
-    if tail is None:
-        tail = read_tail(src)
-    ps = tail.postscript
-    if ps.metadata_length == 0:
-        return []
-    file_len = src.size()
-    ps_len = src.read_at(file_len - 1, 1)[0]
-    meta_off = file_len - ps_len - 1 - ps.footer_length - ps.metadata_length
-    raw = src.read_at(meta_off, ps.metadata_length)
+    with opened_source(path) as src:
+        if tail is None:
+            tail = read_tail(src)
+        ps = tail.postscript
+        if ps.metadata_length == 0:
+            return []
+        file_len = src.size()
+        ps_len = src.read_at(file_len - 1, 1)[0]
+        meta_off = file_len - ps_len - 1 - ps.footer_length - ps.metadata_length
+        raw = src.read_at(meta_off, ps.metadata_length)
     meta = proto.decode_fields(orc_stream_decompress(raw, ps.compression))
     out = []
     for ss in meta.get(1, []):  # repeated StripeStatistics
@@ -813,6 +855,7 @@ class OrcFileReader:
 
     def __init__(self, path):
         self.source = as_source(path)
+        self._owns_source = self.source is not path
         self.path = getattr(self.source, "path", "<source>")
         self.tail = read_tail(self.source)
         self.codec = self.tail.postscript.compression
@@ -823,6 +866,13 @@ class OrcFileReader:
         # read and parsed once while they fit _STRIPE_META_BYTES
         self._stripe_meta: OrderedDict[int, _StripeMeta] = OrderedDict()
         self._stripe_meta_bytes = 0
+
+    def close(self) -> None:
+        """Close the source if this reader opened it (a path or bytes); a
+        source passed in is the caller's to close. The parsed tail and
+        stripe metadata stay cached, and a later read reopens the file."""
+        if self._owns_source:
+            self.source.close()
 
     def _column_subtree(self, col: int, out: set[int]) -> None:
         out.add(col)

@@ -292,44 +292,53 @@ def scan_stripes(work, columns: list[str] | None = None, predicates=(), null_pre
     ``columns`` projects a strict scan, in that order; an evolved scan
     reads the target's columns that the file has."""
     readers: dict[str, OrcFileReader] = {}
-    for f, i in work:
-        r = readers.get(f)
-        if r is None:
-            r = readers[f] = OrcFileReader(f)
-        i = int(i)
-        groups = r.prune_row_groups_where(i, predicates, null_preds)
-        if groups == []:
-            continue  # every row group proven out of range
-        cols = columns
-        if target is not None:
-            have = set(r.tail.footer.types[0].field_names)
-            cols = [c for c in target.names if c in have]
-        if target is not None and not cols:
-            # the file predates EVERY requested column: typed all-null
-            # batches, one per batch_rows rows
-            n = r.tail.footer.stripes[i].number_of_rows
-            batches = (
-                pa.RecordBatch.from_arrays(
-                    [pa.nulls(min(batch_rows, n - m), type=fld.type) for fld in target],
-                    names=target.names,
-                )
-                for m in range(0, n, batch_rows)
-            )
-        else:
-            batches = (
-                _spark_friendly(b)
-                for b in r.read_stripe_batches(i, cols, batch_rows=batch_rows, row_groups=groups)
-                if b.num_rows
-            )
+    r = None
+    try:
+        for f, i in work:
+            prev, r = r, readers.get(f)
+            if r is None:
+                r = readers[f] = OrcFileReader(f)
+            if prev is not None and prev is not r:
+                prev.close()  # one open file per task; parsed tails stay cached
+            i = int(i)
+            groups = r.prune_row_groups_where(i, predicates, null_preds)
+            if groups == []:
+                continue  # every row group proven out of range
+            cols = columns
             if target is not None:
-                batches = (_adapt(b, target, r.path) for b in batches)
-        for batch in batches:
-            if target is None and columns is not None and batch.schema.names != columns:
-                batch = batch.select(columns)  # Spark takes columns by position
-            if residual or null_preds:
-                batch = _residual_filter(batch, residual, null_preds)
-            if batch.num_rows:
-                yield batch
+                have = set(r.tail.footer.types[0].field_names)
+                cols = [c for c in target.names if c in have]
+            if target is not None and not cols:
+                # the file predates EVERY requested column: typed all-null
+                # batches, one per batch_rows rows
+                n = r.tail.footer.stripes[i].number_of_rows
+                batches = (
+                    pa.RecordBatch.from_arrays(
+                        [pa.nulls(min(batch_rows, n - m), type=fld.type) for fld in target],
+                        names=target.names,
+                    )
+                    for m in range(0, n, batch_rows)
+                )
+            else:
+                batches = (
+                    _spark_friendly(b)
+                    for b in r.read_stripe_batches(
+                        i, cols, batch_rows=batch_rows, row_groups=groups
+                    )
+                    if b.num_rows
+                )
+                if target is not None:
+                    batches = (_adapt(b, target, r.path) for b in batches)
+            for batch in batches:
+                if target is None and columns is not None and batch.schema.names != columns:
+                    batch = batch.select(columns)  # Spark takes columns by position
+                if residual or null_preds:
+                    batch = _residual_filter(batch, residual, null_preds)
+                if batch.num_rows:
+                    yield batch
+    finally:
+        if r is not None:
+            r.close()
 
 
 def _read(spark: SparkSession, name: str, path, predicate, columns, batch_rows: int,

@@ -24,7 +24,13 @@ def _prewarm_workers(spark: SparkSession, cores: int) -> None:
     Workers started through ``_workerd`` no longer re-read Spark's zip
     directories on each task, so that cost is not what prewarm saves. What
     it still buys is the worker fork, the package import chain and the
-    heap's first-touch page zeroing. Without it the FIRST heavy task of every
+    heap's first-touch page zeroing. Because the warm task imports that
+    chain, ``_workerd`` collects and ``gc.freeze()``s each worker's heap
+    right after it, so the daemon's ``gc.collect()`` after every later task
+    walks only that task's objects, not the ~74 k imported ones (a lengths
+    pass's Python-worker CPU ~0.12 s -> ~0.01 s on a 4-vCPU host). Non-local
+    masters run the stock daemon and get neither the zip eviction nor the
+    freeze. Without it the FIRST heavy task of every
     worker pays those serially (32 fresh heaps faulting at once — the same
     effect the malloc tuning above addresses for steady state); measured on
     the bench box the first 32-task encode/ORC-write/read stage ran 3-5x its

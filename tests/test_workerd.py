@@ -3,7 +3,9 @@
 The eviction step runs in a subprocess per case: it edits ``sys.path`` and
 ``sys.path_importer_cache`` and must see a process where pyspark is not yet
 imported, as Spark's daemon does. Fake Spark zips in ``tmp_path`` stand in
-for ``pyspark.zip``, ``py4j-*-src.zip`` and the spark-core JAR.
+for ``pyspark.zip``, ``py4j-*-src.zip`` and the spark-core JAR. The freeze
+wrapper runs in a subprocess too, since ``gc.freeze()`` lasts for the life
+of the process.
 """
 
 import importlib.util
@@ -131,6 +133,157 @@ def test_main_runs_stock_daemon_either_way(tmp_path, same_version):
         assert zips["pyspark"] not in r["path"]
 
 
+# ------------------------------------------------------- the freeze wrapper
+
+FREEZE_SCRIPT = """
+import gc, json, sys, weakref
+from orc_rs_spark import _workerd
+
+gc.disable()  # only explicit collections, so a cycle dies exactly when one runs
+calls = []
+for name in ("collect", "freeze"):
+    real = getattr(gc, name)
+    setattr(gc, name, lambda *a, _real=real, _name=name: calls.append(_name) or _real(*a))
+
+
+class Node:
+    pass
+
+
+class Out:  # the worker's output stream
+    def flush(self):
+        calls.append("flush")
+
+
+class BrokenOut:  # the JVM went away
+    def flush(self):
+        calls.append("flush")
+        raise BrokenPipeError
+
+
+def task(infile, outfile):
+    module, exit_code = infile  # what the fake task is told to do
+    node = Node()
+    node.self = node  # a reference cycle: only the collector frees it
+    cycles.append(weakref.ref(node))
+    if module:
+        __import__(module)
+    if exit_code is not None:
+        sys.exit(exit_code)
+
+
+def step():
+    out = {"calls": calls[:], "frozen": gc.get_freeze_count(), "alive": cycles[-1]() is not None}
+    del calls[:]
+    return out
+
+
+cycles = []
+main = _workerd.freeze_after_imports(task)
+out = {"preloaded": [m for m in ("fractions", "colorsys", "graphlib") if m in sys.modules]}
+out["start"] = gc.get_freeze_count()
+main(("fractions", None), Out())
+out["importing"] = step()
+main((None, None), Out())
+out["plain"] = step()
+gc.collect()  # what the daemon runs after every task
+out["daemon_collect"] = step()
+try:
+    main(("colorsys", 3), Out())
+except SystemExit as e:
+    out["exit_code"] = e.code
+out["failed"] = step()
+main(("graphlib", None), BrokenOut())
+out["broken_pipe"] = step()
+print(json.dumps(out))
+"""
+
+
+def _freeze_trace(reuse: bool) -> dict:
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_REUSE_WORKER"}
+    if reuse:
+        env["SPARK_REUSE_WORKER"] = "1"  # what Spark sets when workers are reused
+    out = subprocess.run(
+        [sys.executable, "-c", FREEZE_SCRIPT],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    trace = json.loads(out.stdout.strip().splitlines()[-1])
+    assert trace["preloaded"] == [] and trace["start"] == 0
+    return trace
+
+
+@pytest.fixture(scope="module")
+def freeze_trace():
+    return _freeze_trace(reuse=True)
+
+
+def test_task_that_imports_freezes_the_heap(freeze_trace):
+    first = freeze_trace["importing"]
+    assert first["calls"] == ["flush", "collect", "freeze"]
+    assert first["frozen"] > 0
+    assert not first["alive"]  # the task's cycle was collected, not frozen
+
+
+def test_task_that_imports_nothing_does_not_freeze_again(freeze_trace):
+    plain = freeze_trace["plain"]
+    assert plain["calls"] == []
+    assert plain["frozen"] == freeze_trace["importing"]["frozen"]
+
+
+def test_later_task_garbage_is_reclaimed_by_the_daemon_collect(freeze_trace):
+    assert freeze_trace["plain"]["alive"]  # nothing collected it yet
+    assert freeze_trace["daemon_collect"]["calls"] == ["collect"]
+    assert not freeze_trace["daemon_collect"]["alive"]
+
+
+def test_system_exit_propagates_without_a_freeze(freeze_trace):
+    assert freeze_trace["exit_code"] == 3
+    failed = freeze_trace["failed"]
+    assert failed["calls"] == []
+    assert failed["frozen"] == freeze_trace["importing"]["frozen"]
+
+
+def test_failed_flush_skips_the_freeze(freeze_trace):
+    broken = freeze_trace["broken_pipe"]
+    assert broken["calls"] == ["flush"]  # the daemon's own flush reports the error
+    assert broken["frozen"] == freeze_trace["importing"]["frozen"]
+
+
+def test_worker_that_is_not_reused_never_freezes():
+    trace = _freeze_trace(reuse=False)
+    assert trace["importing"]["calls"] == []
+    assert trace["importing"]["frozen"] == 0
+
+
+MAIN_SCRIPT = """
+import json, runpy, sys
+from orc_rs_spark import _workerd
+
+
+def daemon(*args, **kwargs):  # reads the worker's main as pyspark.daemon does
+    from pyspark.worker import main
+
+    print(json.dumps([args, kwargs, main.__code__.co_filename == _workerd.__file__]))
+
+
+runpy.run_module = daemon
+_workerd.main()
+"""
+
+
+@pytest.mark.parametrize("argv", [[], ["pyspark.worker"]])
+def test_main_wraps_the_worker_main_before_the_daemon_reads_it(argv):
+    out = subprocess.run(
+        [sys.executable, "-c", MAIN_SCRIPT, *argv],
+        cwd=ROOT, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    args, kwargs, wrapped = json.loads(out.stdout.strip().splitlines()[-1])
+    assert args == ["pyspark.daemon"] and kwargs == {"run_name": "__main__", "alter_sys": True}
+    assert wrapped
+
+
 # ------------------------------------------------------- get_spark's guard
 
 DAEMON = {"spark.python.daemon.module": "orc_rs_spark._workerd"}
@@ -198,3 +351,23 @@ def test_workers_import_pyspark_unpacked(spark):
     row = spark.range(1, numPartitions=1).mapInArrow(probe, "file string, zips string").collect()[0]
     assert os.path.isfile(row["file"]), row["file"]
     assert json.loads(row["zips"]) == []
+
+
+@pytest.mark.spark
+def test_reused_worker_runs_on_a_frozen_heap(spark):
+    def probe(batches):
+        import gc
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist(
+            [{"frozen": gc.get_freeze_count(), "live": len(gc.get_objects())}]
+        )
+
+    df = spark.range(1, numPartitions=1).mapInArrow(probe, "frozen long, live long")
+    df.collect()  # the first job leaves a worker that has imported what the probe needs
+    row = df.collect()[0]
+    assert row["frozen"] > 0
+    assert row["live"] < row["frozen"] // 10, row
