@@ -212,6 +212,9 @@ def packed_size(count: int, width: int) -> int:
     return (count * width + 7) // 8
 
 
+_POW2 = np.array([1 << i for i in range(64)], dtype=np.uint64)
+
+
 def bit_lengths(values: np.ndarray) -> np.ndarray:
     """Per-element bit length of a uint64 array (0 for 0), vectorized.
 
@@ -220,6 +223,10 @@ def bit_lengths(values: np.ndarray) -> np.ndarray:
     next power of two — two array passes instead of a 6-step binary search.
     """
     v = np.asarray(values, dtype=np.uint64)
+    if v.size <= 1024:
+        # one binary search over the powers of two: ~15x cheaper than the
+        # passes below at this size, ~3x dearer at 7k values
+        return np.searchsorted(_POW2, v, side="right")
     s = v.view(np.int64)
     f = s.astype(np.float64)  # i64->f64 has the fast SIMD path; u64->f64 doesn't
     bits = f.view(np.uint64)

@@ -1,20 +1,22 @@
 """ORC RunLength-encoding v2: short-repeat, direct, patched-base, delta.
 
 Encode AND decode, per the public Apache ORC v1 spec. Parity targets in the
-reference (decode-only): /root/reference/src/encoding/rlev2.rs:12-58 (wire
-format doc comments), :145-183 (header parse), :231-282 (run state),
-:360-423 (emit). Patched-base is ``todo!()`` in the reference
-(/root/reference/src/encoding/rlev2.rs:185-187) — implemented here from the
+reference (decode-only): its src/encoding/rlev2.rs:12-58 (wire format doc
+comments), :145-183 (header parse), :231-282 (run state), :360-423 (emit).
+Patched-base is ``todo!()`` there (:185-187) — implemented here from the
 spec alone. Known reference bugs (direct reads num_values-2; ``& -8``
 bit-length rounding, SURVEY.md C9) are NOT reproduced; the ORC spec is the
 oracle.
 
-One frame pass (``_encode_frames``) picks every frame's sub-mode; the two
-encoders differ only in where frames start. ``rlev2_encode`` cuts a 512
-grid or row-aligned frames; ``rlev2_encode_runs`` makes every repeat run of
->= 3 values its own frame, which the auto-selector picks only for run-dense
-chunks. All per-value math is NumPy-vectorized; Python loops run only over
-frames and, when decoding, over run headers.
+Encoding is one pricing pass and one pack. ``_encode_frames`` picks every
+frame's sub-mode with whole-array operations (``_patched_plans`` prices
+patched-base for all frames at once), and its per-frame loop writes only
+headers, base values and varints. Then one ``_pack_payloads`` per payload
+kind and width packs the direct, patched, patch-list and delta payloads:
+the encoder's only ``bitpack`` call. The two encoders differ only in where
+frames start: ``rlev2_encode`` cuts a 512 grid or row-aligned frames;
+``rlev2_encode_runs`` makes every repeat run of >= 3 values its own frame,
+which the auto-selector picks only for run-dense chunks.
 
 Decoding is one header walk (``_walk``) and one gather per width for
 direct, patched, patch-list and delta payloads (``_unpack_runs``, one
@@ -26,36 +28,24 @@ from __future__ import annotations
 import numpy as np
 
 from orc_rs_spark.kernels.bitpack import (
+    DIRECT_WIDTH_TABLE,
     bit_lengths,
     bitpack,
     bitunpack,
-    closest_delta_width,
     closest_direct_width,
     decode_delta_width,
     decode_direct_width,
-    encode_delta_width,
-    encode_direct_width,
     packed_size,
 )
 from orc_rs_spark.kernels.varint import uvarint
-from orc_rs_spark.kernels.zigzag import from_unsigned, to_unsigned, zigzag_encode
+from orc_rs_spark.kernels.zigzag import from_unsigned, zigzag_encode
 
 MAX_RUN = 512  # max values per RLEv2 run (9-bit length field, L-1)
 _U64_ONE = np.uint64(1)
+_INT64_MIN = np.iinfo(np.int64).min
 
 
 # ---------------------------------------------------------------- helpers
-
-
-def _encode_base(base: int) -> tuple[bytes, int]:
-    """Patched-base base value: sign-magnitude, 1-8 big-endian bytes."""
-    mag = abs(int(base))
-    bits = mag.bit_length() + 1  # +1 sign bit
-    bw = min(8, max(1, (bits + 7) // 8))
-    u = mag
-    if base < 0:
-        u |= 1 << (bw * 8 - 1)
-    return u.to_bytes(bw, "big"), bw
 
 
 def _decode_base(raw: bytes, bw: int) -> int:
@@ -78,101 +68,16 @@ def _unsigned_varint(x: int) -> bytes:
     return uvarint(x & 0xFFFFFFFFFFFFFFFF)
 
 
+def _table_width(bits: np.ndarray) -> np.ndarray:
+    """Bit widths rounded up to the 5-bit width table (0 rounds to 1)."""
+    return DIRECT_WIDTH_TABLE[np.searchsorted(DIRECT_WIDTH_TABLE, np.maximum(bits, 1))]
+
+
+def _packed(count: np.ndarray, width: np.ndarray) -> np.ndarray:
+    return (count * width + 7) // 8
+
+
 # ---------------------------------------------------------------- encoders
-
-
-def _emit_short_repeat(value: int, count: int, signed: bool, out: list) -> None:
-    u = ((value << 1) ^ (value >> 63)) if signed else (value & 0xFFFFFFFFFFFFFFFF)
-    w = max(1, (u.bit_length() + 7) // 8)
-    out.append(bytes([((w - 1) << 3) | (count - 3)]))
-    out.append(u.to_bytes(w, "big"))
-
-
-def _emit_direct(v: np.ndarray, signed: bool, out: list) -> None:
-    u = to_unsigned(v, signed)
-    w = closest_direct_width(int(bit_lengths(u).max(initial=0)) or 1)
-    n = len(v)
-    out.append(bytes([(1 << 6) | (encode_direct_width(w) << 1) | ((n - 1) >> 8), (n - 1) & 0xFF]))
-    out.append(bitpack(u, w))
-
-
-def _emit_fixed_delta(value: int, count: int, signed: bool, out: list) -> None:
-    """Constant run (count >= 2) as a delta run of width 0: base + delta 0."""
-    out.append(bytes([(3 << 6) | ((count - 1) >> 8), (count - 1) & 0xFF]))
-    out.append(_signed_varint(value) if signed else _unsigned_varint(value))
-    out.append(b"\x00")
-
-
-def _emit_delta(
-    v: np.ndarray, diffs: np.ndarray, signed: bool, out: list, max_mag_width: int
-) -> None:
-    """Monotonic run of >= 3 values: base + delta-base varints + bit-packed
-    |deltas| (``max_mag_width``: bit length of the largest |delta| after the
-    first)."""
-    n = len(v)
-    w = closest_delta_width(max_mag_width)
-    if w == 0 and not np.all(diffs == diffs[0]):
-        w = 2  # all |deltas| after first are 0/1 but not fixed -> min packed width
-    out.append(
-        bytes([(3 << 6) | (encode_delta_width(w) << 1) | ((n - 1) >> 8), (n - 1) & 0xFF])
-    )
-    out.append(_signed_varint(int(v[0])) if signed else _unsigned_varint(int(v[0])))
-    out.append(_signed_varint(int(diffs[0])))
-    if w > 0:
-        out.append(bitpack(np.abs(diffs[1:]).astype(np.uint64), w))
-
-
-def _patched_plan(
-    n: int, base: int, adj: np.ndarray, bls: np.ndarray, w: int, min_pll: int
-) -> tuple[int, tuple] | None:
-    """Size a patched-base run at main width ``w`` WITHOUT bit-packing.
-
-    Returns (total_bytes, plan) or None when the patch constraints (PLL<=31,
-    gap width<=8 bits, w+pw<=64) can't be met. The frame pass sizes a
-    frame's candidate widths this way and writes only the winner's header
-    and patch list; its DATA joins the per-width batch pack.
-    """
-    patch_idx = np.flatnonzero(bls > w)
-    if len(patch_idx) > 31:
-        return None
-    if len(patch_idx) == 0:
-        # pure frame-of-reference: zero patches is wire-legal (PLL=0)
-        gaps = np.empty(0, dtype=np.uint64)
-        patches = np.empty(0, dtype=np.uint64)
-    else:
-        gaps = np.diff(patch_idx, prepend=0).astype(np.uint64)
-        patches = (adj[patch_idx] >> np.uint64(w)).astype(np.uint64)
-        if gaps.max(initial=0) > 255:
-            # expand gaps > 255 with zero-patch filler entries
-            eg, ep = [], []
-            for g, p in zip(gaps.tolist(), patches.tolist()):
-                while g > 255:
-                    eg.append(255)
-                    ep.append(0)
-                    g -= 255
-                eg.append(g)
-                ep.append(p)
-            gaps = np.array(eg, dtype=np.uint64)
-            patches = np.array(ep, dtype=np.uint64)
-    pll = len(gaps)
-    if pll > 31:
-        return None
-    if pll < min_pll:
-        # strict-ORC mode: the canonical Java reader crashes on PLL=0
-        # (ArrayIndexOutOfBounds in readPatchedBaseValues), so files written
-        # for interop never emit the zero-patch frame-of-reference form
-        return None
-    # patch/gap lists are <=31 entries: scalar bit_length beats array kernels
-    pw = closest_direct_width(max((int(x).bit_length() for x in patches.tolist()), default=1) or 1)
-    if w + pw > 64:
-        return None
-    pgw = max(1, max((int(x).bit_length() for x in gaps.tolist()), default=1))
-    if pgw > 8:
-        return None
-    bw = min(8, max(1, (abs(base).bit_length() + 1 + 7) // 8))
-    cw = closest_direct_width(pgw + pw)
-    size = 4 + bw + packed_size(n, w) + packed_size(pll, cw)
-    return size, (n, base, w, pw, pgw, pll, cw, gaps, patches)
 
 
 def _frame_spans(n: int, boundaries: np.ndarray | None) -> tuple[np.ndarray, np.ndarray]:
@@ -249,14 +154,17 @@ def _encode_frames(
     1-512 values, together covering ``v``), picking each frame's cheapest
     sub-mode.
 
-    Per-frame statistics (min/max, monotonicity, zigzag/FoR bit widths,
-    delta widths) come from a handful of whole-array NumPy passes using
-    ``ufunc.reduceat``; the per-frame Python loop only dispatches and emits.
-    This is the bulk-stats analogue of the SIMD work the reference left as a
-    TODO (its src/encoding/rlev2.rs:98).
+    Every choice is made for all frames at once: per-frame statistics
+    (min/max, monotonicity, zigzag/FoR bit widths, delta widths) come from
+    whole-array ``ufunc.reduceat`` passes, and ``_patched_plans`` prices
+    patched-base the same way. This is the bulk-stats analogue of the SIMD
+    work the reference left as a TODO (its src/encoding/rlev2.rs:98). The
+    per-frame loop writes only headers, base values and varints; then one
+    ``_pack_payloads`` per payload kind and width fills in every bit-packed
+    payload. Frame i owns ``out[3i:3i+3]``: header, payload (direct values,
+    patched DATA or delta magnitudes) and patch list.
     """
     n = len(v)
-    out: list = []
     k = len(starts)
     seg_lens = ends - starts
     mins = np.minimum.reduceat(v, starts)
@@ -266,8 +174,8 @@ def _encode_frames(
     d = np.diff(v) if n > 1 else np.empty(0, dtype=np.int64)
     if len(d):
         bpos = ends[:-1] - 1  # diffs that straddle frame boundaries
-        # zeroing boundary diffs in place is safe: the emit slices
-        # (d[s:e-1]) exclude them, and 0 is neutral for every per-frame
+        # zeroing boundary diffs in place is safe: the delta payloads
+        # (d[s+1:e-1]) exclude them, and 0 is neutral for every per-frame
         # reduction below — this lets min/max reduceat decide monotonicity
         # directly instead of materializing two boolean arrays + inverts
         first_d = d[np.minimum(starts, len(d) - 1)]
@@ -280,15 +188,16 @@ def _encode_frames(
         # VALUES per frame and bit-length the k-element result — one
         # whole-array pass (abs) instead of the full bit_lengths kernel
         dmag = np.abs(d).view(np.uint64)
-        dmag[np.minimum(starts, len(d) - 1)] = 0
-        delta_w = bit_lengths(np.maximum.reduceat(dmag, rstart))
+        dmag[rstart] = 0
+        delta_max = np.maximum.reduceat(dmag, rstart)
         single = seg_lens == 1
         inc[single] = True
         dec[single] = True
     else:
         inc = dec = np.ones(k, dtype=bool)
         first_d = np.zeros(k, dtype=np.int64)
-        delta_w = np.zeros(k, dtype=np.int64)
+        delta_max = np.zeros(k, dtype=np.uint64)
+        dmag = d.view(np.uint64)
     safe_range = (maxs.view(np.uint64) - mins.view(np.uint64)) < (
         np.uint64(1) << np.uint64(63)
     )
@@ -304,133 +213,178 @@ def _encode_frames(
     else:
         zz_frame_max = np.maximum.reduceat(v.view(np.uint64), starts)
     # same monotonicity trick: bit-length the per-frame MAX, not the array
-    zz_w = bit_lengths(zz_frame_max)
-    from orc_rs_spark.kernels.bitpack import DIRECT_WIDTH_TABLE
-
-    dir_w = DIRECT_WIDTH_TABLE[np.searchsorted(DIRECT_WIDTH_TABLE, np.maximum(zz_w, 1))]
-    # patched-base probe stats, computed ONLY if some frame can reach the
-    # probe branch (non-const, non-mono, >=8 values) — monotonic/constant
-    # columns (offsets, ids) skip three whole-array passes + a histogram
-    if bool(np.any(~const & ~mono & (seg_lens >= 8))):
-        adj_all = v.view(np.uint64) - np.repeat(mins, seg_lens).view(np.uint64)
-        abls = bit_lengths(adj_all)
-        fw = np.maximum.reduceat(abls, starts)
-        # FoR width rounded to the table, and the 90th-percentile bit-length
-        # order statistic for every frame in bulk: bit lengths are 0..64, so
-        # one bincount over the whole array + a k x 65 cumsum replaces a
-        # np.partition per frame (65*frame_id is fused into the repeat to
-        # avoid an extra n-sized multiply temp)
-        wfc_all = DIRECT_WIDTH_TABLE[np.searchsorted(DIRECT_WIDTH_TABLE, np.maximum(fw, 1))]
-        hist = np.bincount(
-            np.repeat(np.arange(k, dtype=np.int64) * 65, seg_lens) + abls,
-            minlength=k * 65,
-        ).reshape(k, 65)
-        rank = (9 * (seg_lens - 1)) // 10 + 1  # 1-based rank of the q90 statistic
-        w90_bl = np.argmax(np.cumsum(hist, axis=1) >= rank[:, None], axis=1)
-        w90_tab = DIRECT_WIDTH_TABLE[np.searchsorted(DIRECT_WIDTH_TABLE, np.maximum(w90_bl, 1))]
-        w90_all = np.where(wfc_all >= 4, w90_tab, wfc_all)
-    else:
-        adj_all = abls = wfc_all = w90_all = None
-    # direct frames are batched per width: padding every frame to a multiple
-    # of 8 values makes each frame's packed bytes byte-aligned and
-    # independent, so ONE bitpack call per distinct width replaces one call
-    # per frame (the per-call dispatch dominated encode time)
-    direct_groups: dict[int, list[tuple[int, int, int]]] = {}  # w -> [(out_idx, s, e)]
-    patched_groups: dict[int, list[tuple[int, int, int]]] = {}  # w -> [(out_idx, s, e)]
+    dir_w = _table_width(bit_lengths(zz_frame_max))
+    cost_direct = 2 + _packed(seg_lens, dir_w)
+    # patched-base candidates: neither constant nor monotonic, >= 8 values,
+    # and a base whose magnitude fits the 8-byte sign-magnitude field
+    cand = ~const & ~mono & (seg_lens >= 8) & (mins != _INT64_MIN)
+    patched, pat_w, h2, h3, cw, pll, ent_lo, adj, ents = _patched_plans(
+        v, starts, seg_lens, mins, cand, cost_direct, strict_orc
+    )
+    # constant frames of > 10 values are fixed-delta runs: delta 0, width 0
+    fixed = const & (seg_lens > 10)
+    delta = (mono & (seg_lens >= 3)) | fixed
+    # packed deltas take >= 2 bits: width 0 is the fixed-delta form
+    width = np.where(
+        fixed, 0, np.where(delta, _table_width(np.maximum(bit_lengths(delta_max), 2)),
+                           np.where(patched, pat_w, dir_w)))
+    mode = np.where(delta, 3, np.where(patched, 2, 1))  # header tag
+    mode[const & (seg_lens >= 3) & (seg_lens <= 10)] = 0
+    h0 = (mode << 6) | (np.searchsorted(DIRECT_WIDTH_TABLE, width) << 1) | ((seg_lens - 1) >> 8)
+    base_varint = _signed_varint if signed else _unsigned_varint
     # the loop reads Python lists: indexing NumPy arrays once per frame
     # boxes a scalar each time, which run-aligned spans (many tiny frames)
     # pay for on every run
-    for i, (s, e, is_const, is_mono, lo, w_direct) in enumerate(
-        zip(starts.tolist(), ends.tolist(), const.tolist(), mono.tolist(), mins.tolist(),
-            dir_w.tolist())
+    heads = []
+    for m, L, a, lo, first, d0, x, y in zip(
+        mode.tolist(), seg_lens.tolist(), h0.tolist(), mins.tolist(), v[starts].tolist(),
+        first_d.tolist(), h2.tolist(), h3.tolist()
     ):
-        L = e - s
-        if is_const:
-            if 3 <= L <= 10:
-                _emit_short_repeat(lo, L, signed, out)
-            elif L < 3:
-                _emit_direct(v[s:e], signed, out)
-            else:
-                _emit_fixed_delta(lo, L, signed, out)
-            continue
-        if is_mono and L >= 3:
-            _emit_delta(v[s:e], d[s : e - 1], signed, out, int(delta_w[i]))
-            continue
-        cost_direct = 2 + packed_size(L, w_direct)
-        # patched-base plausible when FoR alone shrinks width, or when the
-        # frame is big enough that trimming outliers can pay for the header
-        # (wfc_all is None only when NO frame can reach here — see above)
-        if wfc_all is not None and L >= 8 and abs(lo).bit_length() + 1 <= 64:
-            wfc = int(wfc_all[i])
-            seg_bls = abls[s:e]
-            w90c = int(w90_all[i])
-            est_patched = 4 + 9 + packed_size(L, min(w90c, wfc)) + (31 * 5 if w90c < wfc else 0)
-            if est_patched < cost_direct:
-                best_plan = None
-                best_size = cost_direct
-                for w in {w90c, wfc}:
-                    sized = _patched_plan(L, lo, adj_all[s:e], seg_bls, w, 1 if strict_orc else 0)
-                    if sized is not None and sized[0] < best_size:
-                        best_size, best_plan = sized
-                if best_plan is not None:
-                    # header + base + (small) patch entries now; the DATA
-                    # pack joins the per-width batch below
-                    (pn, pbase, pw_, ppw, ppgw, ppll, pcw, pgaps, ppatches) = best_plan
-                    base_bytes, pbw = _encode_base(pbase)
-                    out.append(
-                        bytes(
-                            [
-                                (2 << 6) | (encode_direct_width(pw_) << 1) | ((pn - 1) >> 8),
-                                (pn - 1) & 0xFF,
-                                ((pbw - 1) << 5) | encode_direct_width(ppw),
-                                ((ppgw - 1) << 5) | ppll,
-                            ]
-                        )
-                    )
-                    out.append(base_bytes)
-                    out.append(b"")  # DATA placeholder (batched)
-                    patched_groups.setdefault(pw_, []).append((len(out) - 1, s, e))
-                    out.append(bitpack((pgaps << np.uint64(ppw)) | ppatches, pcw))
-                    continue
-        out.append(
-            bytes(
-                [
-                    (1 << 6) | (encode_direct_width(w_direct) << 1) | ((L - 1) >> 8),
-                    (L - 1) & 0xFF,
-                ]
-            )
-        )
-        out.append(b"")  # placeholder, filled by the per-width batch pack
-        direct_groups.setdefault(w_direct, []).append((len(out) - 1, s, e))
-    def _batch_pack(
-        groups: dict, source: np.ndarray, mask_to_w: bool, zigzag: bool = False
-    ) -> None:
-        for w, frames in groups.items():
-            padded_total = sum((e - s + 7) // 8 * 8 for _, s, e in frames)
-            buf = np.zeros(padded_total, dtype=np.uint64)
-            pos = 0
-            for _, s, e in frames:
-                buf[pos : pos + (e - s)] = source[s:e]
-                pos += (e - s + 7) // 8 * 8
-            if zigzag:
-                # zigzag only the gathered direct-frame values (padding
-                # zeros map to 0) instead of a whole-array pass up front
-                buf = zigzag_encode(buf.view(np.int64))
-            if mask_to_w and w < 64:
-                buf &= (_U64_ONE << np.uint64(w)) - _U64_ONE
-            packed = bitpack(buf, w)
-            off = 0
-            for out_idx, s, e in frames:
-                L = e - s
-                nb = packed_size(L, w)
-                out[out_idx] = packed[off : off + nb]
-                off += (L + 7) // 8 * 8 * w // 8
-
-    _batch_pack(direct_groups, v.view(np.uint64), mask_to_w=False, zigzag=signed)
-    # patched DATA keeps only the low w bits (outlier high bits ride the
-    # patch list)
-    _batch_pack(patched_groups, adj_all, mask_to_w=True)
+        if m == 0:  # short repeat: the value in 1-8 big-endian bytes
+            u = ((lo << 1) ^ (lo >> 63)) if signed else lo & 0xFFFFFFFFFFFFFFFF
+            w = max(1, (u.bit_length() + 7) // 8)
+            heads.append(bytes([((w - 1) << 3) | (L - 3)]) + u.to_bytes(w, "big"))
+        elif m == 1:
+            heads.append(bytes((a, (L - 1) & 0xFF)))
+        elif m == 2:  # + the base, sign-magnitude in bw big-endian bytes
+            bw = (x >> 5) + 1
+            u = (-lo | 1 << (8 * bw - 1)) if lo < 0 else lo
+            heads.append(bytes((a, (L - 1) & 0xFF, x, y)) + u.to_bytes(bw, "big"))
+        else:  # + the first value and the first delta
+            heads.append(bytes((a, (L - 1) & 0xFF)) + base_varint(first) + _signed_varint(d0))
+    out = [b""] * (3 * k)
+    out[0::3] = heads
+    for slot, sel, w, lo, hi, source, prep in (
+        (1, mode == 1, width, starts, ends, v.view(np.uint64), _zigzag if signed else None),
+        (1, patched, width, starts, ends, adj, _low_bits),
+        (2, pll > 0, cw, ent_lo, ent_lo + pll, ents, None),
+        (1, delta & (width > 0), width, starts + 1, ends - 1, dmag, None),
+    ):
+        f = np.flatnonzero(sel)
+        for wv in set(w[f].tolist()):
+            g = f[w[f] == wv]
+            _pack_payloads(out, (3 * g + slot).tolist(), lo[g].tolist(), hi[g].tolist(),
+                           source, wv, prep)
     return b"".join(out)
+
+
+def _patched_plans(
+    v: np.ndarray, starts: np.ndarray, seg_lens: np.ndarray, mins: np.ndarray,
+    cand: np.ndarray, cost_direct: np.ndarray, strict_orc: bool
+) -> tuple:
+    """Price patched-base for every candidate frame at once.
+
+    Each frame has two plans. At its q90 width (the 90th-percentile bit
+    length of its FoR offsets, table-rounded; the FoR width below 4 bits)
+    the wider values become patches: at most 31 list entries counting
+    fillers, and q90 + patch width <= 64. At its FoR width there are no
+    patches; canonical Java readers fail on an empty patch list, so
+    ``strict_orc`` rules that plan out. A frame takes the smaller legal plan
+    — the FoR width on a tie: same size, no patch list to apply — when it
+    is smaller than the frame's direct run.
+
+    Returns, per frame, whether patched-base wins, its DATA width, header
+    bytes 3 and 4, the patch-list width, length and first entry in
+    ``ents``; then the FoR offsets (the DATA source) and ``ents``, every
+    q90 plan's patch list in frame order.
+    """
+    k = len(starts)
+    zero = np.zeros(k, dtype=np.int64)
+    none = zero.astype(bool), zero, zero, zero, zero, zero, zero, None, None
+    if not cand.any():
+        return none
+    adj = v.view(np.uint64) - np.repeat(mins, seg_lens).view(np.uint64)
+    wfc = _table_width(bit_lengths(np.maximum.reduceat(adj, starts)))
+    # the gate below is at least 13 + packed(L, wfc), or 168 + packed(L, 1)
+    # when q90 < wfc: frames that miss both skip the histogram
+    cand = cand & (np.minimum(13 + _packed(seg_lens, wfc), 168 + _packed(seg_lens, 1)) < cost_direct)
+    if not cand.any():
+        return none
+    abls = bit_lengths(adj)
+    # the q90 bit length of every frame: bit lengths are 0..64, so one
+    # bincount over the whole array + a k x 65 cumsum replaces a
+    # np.partition per frame (65*frame_id is fused into the repeat to
+    # avoid an extra n-sized multiply temp)
+    hist = np.bincount(
+        np.repeat(np.arange(k, dtype=np.int64) * 65, seg_lens) + abls, minlength=k * 65
+    ).reshape(k, 65)
+    at_most = np.cumsum(hist, axis=1)  # [i, b]: values of frame i of <= b bits
+    rank = (9 * (seg_lens - 1)) // 10 + 1  # 1-based rank of the q90 statistic
+    w90 = np.where(wfc >= 4, _table_width(np.argmax(at_most >= rank[:, None], axis=1)), wfc)
+    # a bound on the q90 plan (9-byte base, 31 five-byte entries) gates both
+    cand &= (13 + _packed(seg_lens, w90) + np.where(w90 < wfc, 31 * 5, 0) < cost_direct)
+    if not cand.any():
+        return none
+    # q90 patches, only in frames where there can be <= 31 of them
+    thr = np.where(cand & (w90 < wfc) & (seg_lens - at_most[np.arange(k), w90] <= 31), w90, 64)
+    pidx = np.flatnonzero(abls > np.repeat(thr, seg_lens))
+    pf = np.searchsorted(starts, pidx, side="right") - 1
+    first = np.ones(len(pidx), dtype=bool)
+    first[1:] = pf[1:] != pf[:-1]
+    heads = np.flatnonzero(first)
+    hf = pf[heads]
+    # gap from the previous patch, or from the frame start for the first;
+    # a gap over 255 takes (gap - 1) // 255 filler entries (gap 255, patch 0)
+    gap = pidx - np.where(first, starts[pf], np.concatenate(([0], pidx[:-1])))
+    fill = np.maximum(gap - 1, 0) // 255
+    patch = adj[pidx] >> thr[pf].astype(np.uint64)
+    pll, gmax, pmax = zero.copy(), zero.copy(), np.zeros(k, dtype=np.uint64)
+    pll[hf] = np.add.reduceat(fill + 1, heads)
+    gmax[hf] = np.maximum.reduceat(gap, heads)
+    pmax[hf] = np.maximum.reduceat(patch, heads)
+    pw = _table_width(bit_lengths(pmax))
+    pgw = np.maximum(bit_lengths(np.minimum(gmax, 255)), 1)
+    cw = _table_width(np.minimum(pgw + pw, 64))  # past 64 only where w90 + pw > 64
+    bw = np.minimum((bit_lengths(np.abs(mins).view(np.uint64)) + 8) // 8, 8)
+    size90 = 4 + bw + _packed(seg_lens, w90) + _packed(pll, cw)
+    size_fc = 4 + bw + _packed(seg_lens, wfc)
+    ok90 = (thr < 64) & (pll <= 31) & (w90 + pw <= 64)
+    ok_fc = cand & (wfc < 64) & (not strict_orc)
+    use90 = ok90 & ~(ok_fc & (size_fc <= size90))
+    use = (use90 | ok_fc) & (np.where(use90, size90, size_fc) < cost_direct)
+    use90 &= use
+    # list entries (gap << pw) | patch, each patch after its fillers
+    cnt = fill + 1
+    last = np.cumsum(cnt) - 1
+    shift = np.repeat(pw[pf], cnt).view(np.uint64)
+    ents = np.uint64(255) << shift
+    ents[last] = ((gap - 255 * fill).view(np.uint64) << shift[last]) | patch
+    ent_lo = zero.copy()
+    ent_lo[hf] = (last + 1 - cnt)[heads]
+    pw, pgw, pll = np.where(use90, pw, 1), np.where(use90, pgw, 1), np.where(use90, pll, 0)
+    h2 = ((bw - 1) << 5) | np.searchsorted(DIRECT_WIDTH_TABLE, pw)
+    h3 = ((pgw - 1) << 5) | pll
+    return use, np.where(use90, w90, wfc), h2, h3, cw, pll, ent_lo, adj, ents
+
+
+def _zigzag(buf: np.ndarray, w: int) -> np.ndarray:
+    return zigzag_encode(buf.view(np.int64))
+
+
+def _low_bits(buf: np.ndarray, w: int) -> np.ndarray:
+    """Patched DATA keeps the low ``w`` bits; the high bits ride the patch
+    list."""
+    return buf & np.uint64((1 << w) - 1)
+
+
+def _pack_payloads(
+    out: list, slots: list, lo: list, hi: list, source: np.ndarray, w: int, prep
+) -> None:
+    """Bit-pack the payloads ``source[lo[j]:hi[j]]`` into ``out[slots[j]]``
+    with one ``bitpack`` at ``w`` bits (``prep(buf, w)`` maps the gathered
+    values first). Each payload is zero-padded to a multiple of 8 values,
+    so its packed bytes are byte-aligned and independent of the others'."""
+    offs = [0]
+    for a, b in zip(lo, hi):
+        offs.append(offs[-1] + (b - a + 7) // 8 * 8)
+    buf = np.zeros(offs[-1], dtype=np.uint64)
+    for a, b, p in zip(lo, hi, offs):
+        buf[p : p + b - a] = source[a:b]
+    if prep is not None:
+        buf = prep(buf, w)
+    packed = bitpack(buf, w)
+    for slot, a, b, p in zip(slots, lo, hi, offs):
+        out[slot] = packed[p * w // 8 : p * w // 8 + ((b - a) * w + 7) // 8]
 
 
 # ---------------------------------------------------------------- decoder

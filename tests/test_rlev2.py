@@ -5,6 +5,9 @@ the reference's doc comments (/root/reference/src/encoding/rlev2.rs:26-58);
 regimes follow FIXTURES.md F2.
 """
 
+import hashlib
+import zlib
+
 import numpy as np
 import pytest
 
@@ -58,44 +61,181 @@ def test_fixed_delta_signed_ramp():
 # ---------------------------------------------------------- round trips
 
 
-REGIMES = {
-    "const_runs": lambda n: np.repeat(
-        RNG.integers(0, 50, size=max(1, n // 40)), RNG.integers(3, 100, size=max(1, n // 40))
+REGIMES = {  # name -> (rng, n) -> int64 array
+    "const_runs": lambda rng, n: np.repeat(
+        rng.integers(0, 50, size=max(1, n // 40)), rng.integers(3, 100, size=max(1, n // 40))
     )[:n].astype(np.int64),
-    "monotone_inc": lambda n: np.cumsum(RNG.integers(0, 7, size=n)).astype(np.int64),
-    "monotone_dec": lambda n: (-np.cumsum(RNG.integers(1, 7, size=n))).astype(np.int64),
-    "fixed_ramp": lambda n: (100 + 3 * np.arange(n)).astype(np.int64),
-    "uniform_4bit": lambda n: RNG.integers(0, 16, size=n).astype(np.int64),
-    "uniform_16bit": lambda n: RNG.integers(0, 2**16, size=n).astype(np.int64),
-    "uniform_full": lambda n: RNG.integers(-(2**31), 2**31, size=n).astype(np.int64),
-    "clustered_offset": lambda n: (10**9 + RNG.integers(0, 256, size=n)).astype(np.int64),
-    "outlier_spiked": lambda n: _spiked(n),
-    "negatives": lambda n: RNG.integers(-100, 100, size=n).astype(np.int64),
-    "alternating": lambda n: np.where(np.arange(n) % 2 == 0, 2**30, -(2**30)).astype(np.int64),
+    "monotone_inc": lambda rng, n: np.cumsum(rng.integers(0, 7, size=n)).astype(np.int64),
+    "monotone_dec": lambda rng, n: (-np.cumsum(rng.integers(1, 7, size=n))).astype(np.int64),
+    "fixed_ramp": lambda rng, n: (100 + 3 * np.arange(n)).astype(np.int64),
+    "fixed_ramp_desc": lambda rng, n: (50 - 7 * np.arange(n)).astype(np.int64),
+    "uniform_4bit": lambda rng, n: rng.integers(0, 16, size=n).astype(np.int64),
+    "uniform_16bit": lambda rng, n: rng.integers(0, 2**16, size=n).astype(np.int64),
+    "uniform_full": lambda rng, n: rng.integers(-(2**31), 2**31, size=n).astype(np.int64),
+    "clustered_offset": lambda rng, n: (10**9 + rng.integers(0, 256, size=n)).astype(np.int64),
+    "outlier_spiked": lambda rng, n: _spiked(n, rng),
+    "sparse_outliers": lambda rng, n: _sparse_outliers(n, rng),
+    "negatives": lambda rng, n: rng.integers(-100, 100, size=n).astype(np.int64),
+    "alternating": lambda rng, n: np.where(np.arange(n) % 2 == 0, 2**30, -(2**30)).astype(np.int64),
 }
 
 
-def _spiked(n):
-    v = (5000 + RNG.integers(0, 64, size=n)).astype(np.int64)
+def _spiked(n, rng=RNG):
+    v = (5000 + rng.integers(0, 64, size=n)).astype(np.int64)
     k = max(1, n // 50)
-    idx = RNG.choice(n, size=k, replace=False)
-    v[idx] = RNG.integers(2**40, 2**50, size=k)
+    idx = rng.choice(n, size=k, replace=False)
+    v[idx] = rng.integers(2**40, 2**50, size=k)
+    return v
+
+
+def _sparse_outliers(n, rng):
+    """8-bit values with an outlier every 200-700 values: patch gaps past
+    255 take filler entries."""
+    v = (-300 + rng.integers(0, 256, size=n)).astype(np.int64)
+    idx = np.cumsum(rng.integers(200, 700, size=n // 200 + 1))
+    idx = idx[idx < n]
+    v[idx] = rng.integers(2**20, 2**30, size=len(idx))
     return v
 
 
 @pytest.mark.parametrize("regime", sorted(REGIMES))
 @pytest.mark.parametrize("n", [1, 2, 3, 7, 100, 511, 512, 513, 5000])
 def test_roundtrip_frame_encoder(regime, n):
-    v = REGIMES[regime](n)
+    v = REGIMES[regime](RNG, n)
     buf = rlev2_encode(v, signed=True)
     np.testing.assert_array_equal(rlev2_decode(buf, len(v), signed=True), v)
 
 
 @pytest.mark.parametrize("regime", sorted(REGIMES))
 def test_roundtrip_run_encoder(regime):
-    v = REGIMES[regime](4000)
+    v = REGIMES[regime](RNG, 4000)
     buf = rlev2_encode_runs(v, signed=True)
     np.testing.assert_array_equal(rlev2_decode(buf, len(v), signed=True), v)
+
+
+# sha1 of each regime's 5,000-value stream as (signed, unsigned, row-aligned
+# frames, strict ORC, run-aligned frames), taken before the frame pass
+# priced patched-base for all frames at once. The ramps moved when
+# constant-step frames became fixed-delta runs.
+ENCODER_PINS = {
+    "alternating": (
+        "f4648ad948e0d5c1a935511c9d4824a2ff1516c9",
+        "1e69bfd3d2b22d608e2fc7d9da19685e1fdb73d2",
+        "0fedce335ff736b142b87f1c604a20c3c6cc180e",
+        "f4648ad948e0d5c1a935511c9d4824a2ff1516c9",
+        "f4648ad948e0d5c1a935511c9d4824a2ff1516c9",
+    ),
+    "clustered_offset": (
+        "5f48495873c030b8be898e0c659fa53950d02ae4",
+        "5f48495873c030b8be898e0c659fa53950d02ae4",
+        "563cdad6aec332c26b10a04b3ecf4c0bb8f35eed",
+        "a49c09c24ae332c3940026c548b73e5a91db170c",
+        "5f48495873c030b8be898e0c659fa53950d02ae4",
+    ),
+    "const_runs": (
+        "e734934ae6454bd9440a6d856f187153df84da6c",
+        "4d7daeabe653039aa39879ea0a0b2cec2a0823b4",
+        "0cfedba909d92e1f2d5f692b302101ad273f88cb",
+        "67dca23b5a0ccc09dd8c16100cb4fe045c1d4149",
+        "b7a99fce183f1d69c9bef3ea376565d1774401d6",
+    ),
+    "fixed_ramp": (
+        "3e786270f43e55ad67d7e71f26e0ea4c10932b15",
+        "27f96fd47969882a8ab766618302db7e4f61f35b",
+        "e8f641daea55c1f9274db91e06e967d43a42be1b",
+        "3e786270f43e55ad67d7e71f26e0ea4c10932b15",
+        "3e786270f43e55ad67d7e71f26e0ea4c10932b15",
+    ),
+    "fixed_ramp_desc": (
+        "d2e75fcce63df7e4b1ac60568a9f5c357e3e6bf4",
+        "9c2ae58968eaddbe69fd1df125f2947df74ab997",
+        "10132c8399dfe801d2933e7475fbd14c05927f78",
+        "d2e75fcce63df7e4b1ac60568a9f5c357e3e6bf4",
+        "d2e75fcce63df7e4b1ac60568a9f5c357e3e6bf4",
+    ),
+    "monotone_dec": (
+        "fb839127e9a4dbbc3ed26417a21e7fb06dc63afe",
+        "a5983b165bf793eb27bb5a62f84c2c1a86ee047d",
+        "fd4ed6d8d83eb776e1930538b3b87a744db4e3f7",
+        "fb839127e9a4dbbc3ed26417a21e7fb06dc63afe",
+        "fb839127e9a4dbbc3ed26417a21e7fb06dc63afe",
+    ),
+    "monotone_inc": (
+        "d3f4a2d2133b7b950a6b1b7faab7db21d5c33f29",
+        "beb6f9e4e4590701d2ae55e03418b428f224ed49",
+        "922d21f1185ada6f1fbd0d57ed85025b40458c1b",
+        "d3f4a2d2133b7b950a6b1b7faab7db21d5c33f29",
+        "c95c51e57ce822d80199c80bf665dc8203f275e8",
+    ),
+    "negatives": (
+        "d97953d4b293d5003b7c812f3d8ae54b3af028ce",
+        "14a4f7e4bc8562dad913b80e2e03c51b486e76c4",
+        "d939e77a73b18e9d0047f74410faa92a2b59aa29",
+        "d97953d4b293d5003b7c812f3d8ae54b3af028ce",
+        "d97953d4b293d5003b7c812f3d8ae54b3af028ce",
+    ),
+    "outlier_spiked": (
+        "3961cb743bd71a0d6aa27f1247d5510c7bd02717",
+        "3961cb743bd71a0d6aa27f1247d5510c7bd02717",
+        "8219cd3dffff9b9ef29502e7fd517d0e155a9efb",
+        "3961cb743bd71a0d6aa27f1247d5510c7bd02717",
+        "2f97871ee0cbaf42204314e6cf8f4339808162d4",
+    ),
+    "sparse_outliers": (
+        "22cc53a346dad051093b08d73d8c8e700a76c987",
+        "22cc53a346dad051093b08d73d8c8e700a76c987",
+        "924f34a0619dc919bba28524f2d601c2123802f9",
+        "22cc53a346dad051093b08d73d8c8e700a76c987",
+        "22cc53a346dad051093b08d73d8c8e700a76c987",
+    ),
+    "uniform_16bit": (
+        "5a9794fdea242bdf7df59435a146c7dd55dc56eb",
+        "f87177150c2b1a1b00ef239e3f923708d8aa31cf",
+        "f2e9e91882456baf30f7da0c84110d05be629f7b",
+        "c4eb4488680c2b33a1171aba1ae97f56657770cc",
+        "5a9794fdea242bdf7df59435a146c7dd55dc56eb",
+    ),
+    "uniform_4bit": (
+        "5e10534cd775310a189e8ec9f7894823aecb4152",
+        "e324f06fffff5691b6a4abf0ad7e7f39d2a8c3be",
+        "021dcbdc3f5c5d86d2590728d6d13f8da67b1bc1",
+        "5f0b16116d19b2d9a3903c671160e7a621f434dd",
+        "8043f49db72b9242fa7b170836a15c6d4a1d9fb4",
+    ),
+    "uniform_full": (
+        "5aaa77f2d8207c1a5b8600f2a09a098a50e833aa",
+        "08ac598fc19cc93776fe5c8c854a5b9e3e5abe5b",
+        "7dc6c39d16598fe7b4651bc3a9f52258d8220322",
+        "5aaa77f2d8207c1a5b8600f2a09a098a50e833aa",
+        "5aaa77f2d8207c1a5b8600f2a09a098a50e833aa",
+    ),
+}
+
+
+def _pin_input(regime):
+    rng = np.random.default_rng(zlib.crc32(regime.encode()))
+    v = REGIMES[regime](rng, 5000)
+    rows = np.cumsum(rng.integers(1, 900, size=40))  # some rows span > MAX_RUN
+    return v, rows[rows < len(v)]
+
+
+def _pin_outputs(regime):
+    v, rows = _pin_input(regime)
+    return v, (
+        rlev2_encode(v),
+        rlev2_encode(v, signed=False),
+        rlev2_encode(v, boundaries=rows),
+        rlev2_encode(v, strict_orc=True),
+        rlev2_encode_runs(v),
+    )
+
+
+@pytest.mark.parametrize("regime", sorted(REGIMES))
+def test_encoder_bytes_pinned(regime):
+    v, outs = _pin_outputs(regime)
+    for signed, buf in zip((True, False, True, True, True), outs):
+        np.testing.assert_array_equal(rlev2_decode(buf, len(v), signed=signed), v)
+    assert tuple(hashlib.sha1(b).hexdigest() for b in outs) == ENCODER_PINS[regime]
 
 
 def test_roundtrip_unsigned():
@@ -143,7 +283,7 @@ def test_compression_wins():
     n = 8192
     raw = n * 8
     for regime in ("const_runs", "monotone_inc", "fixed_ramp", "uniform_4bit", "clustered_offset"):
-        v = REGIMES[regime](n)
+        v = REGIMES[regime](RNG, n)
         assert len(rlev2_encode(v)) < raw / 3, regime
 
 
@@ -231,6 +371,31 @@ def _patched_frame():
     buf = rlev2_encode(v, signed=False)
     assert buf[0] >> 6 == 2 and buf[3] & 0x1F == 3  # patched base, 3 patches
     return buf, v
+
+
+def test_patched_tie_takes_for_width():
+    """A frame that prices the same at its q90 width and at its FoR width
+    takes the FoR width: same size, and no patch list to apply on decode.
+
+    24 values over a base of -2^62 (an 8-byte base; direct needs 64 bits,
+    194 B): 4-bit offsets but for three 5-bit ones at 0, 2 and 20. At q90
+    width 4 that is 12 B of data plus three patches (gap <= 18: 5 bits, patch
+    1 bit -> 6-bit entries, 3 B); at FoR width 5 it is 15 B: both 27 B.
+    ``strict_orc`` rules out the empty patch list, so it takes the q90 plan
+    at the same size."""
+    from orc_rs_spark.kernels.bitpack import decode_direct_width
+
+    adj = np.full(24, 9)
+    adj[[0, 2, 20]] = [17, 30, 16]
+    adj[5] = 0
+    v = (-(1 << 62) + adj).astype(np.int64)
+    for strict, width, pll in ((False, 5, 0), (True, 4, 3)):
+        buf = rlev2_encode(v, strict_orc=strict)
+        assert len(buf) == 4 + 8 + 15
+        assert buf[0] >> 6 == 2  # patched base
+        assert decode_direct_width((buf[0] >> 1) & 0x1F) == width
+        assert buf[3] & 0x1F == pll
+        np.testing.assert_array_equal(rlev2_decode(buf, len(v)), v)
 
 
 def test_patched_bit_flips_decode_or_raise_valueerror():
