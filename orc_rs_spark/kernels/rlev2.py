@@ -221,8 +221,15 @@ def _encode_frames(
     patched, pat_w, h2, h3, cw, pll, ent_lo, adj, ents = _patched_plans(
         v, starts, seg_lens, mins, cand, cost_direct, strict_orc
     )
-    # constant frames of > 10 values are fixed-delta runs: delta 0, width 0
-    fixed = const & (seg_lens > 10)
+    # fixed-delta runs (width 0): constant frames of > 10 values, and
+    # monotonic frames whose deltas all equal the first: each |delta| is at
+    # most |first| and together they span the frame's range
+    step = np.abs(first_d).view(np.uint64)
+    gaps = np.maximum(seg_lens - 1, 1).astype(np.uint64)
+    span = maxs.view(np.uint64) - mins.view(np.uint64)
+    fixed = (const & (seg_lens > 10)) | (
+        mono & (seg_lens >= 3) & (delta_max == step) & (span % gaps == 0) & (span // gaps == step)
+    )
     delta = (mono & (seg_lens >= 3)) | fixed
     # packed deltas take >= 2 bits: width 0 is the fixed-delta form
     width = np.where(

@@ -511,6 +511,29 @@ def test_writer_dictionary_read_by_spark(spark, tmp_path):
     assert got.column("src").combine_chunks().equals(tbl.column("src").combine_chunks())
 
 
+@pytest.mark.spark
+def test_writer_fixed_delta_read_by_spark(spark, tmp_path):
+    """Constant-step long columns go out as fixed-delta runs (delta width
+    0), and Spark's JVM ORC reader reads them back."""
+    import pyarrow as pa
+
+    from orc_rs_spark.kernels.rlev2 import rlev2_run_modes
+    from orc_rs_spark.orcfile.writer import write_orc
+
+    n = 5000
+    tbl = pa.table({"up": pa.array(np.arange(n)), "down": pa.array(7 - 3 * np.arange(n))})
+    path = str(tmp_path / "ramps.orc")
+    write_orc(tbl, path, compression="none", row_index_stride=1000)
+    streams = OrcFileReader(path)._open_stripe(0)[0].streams
+    for col in (1, 2):  # one delta run per 512 values of each row group
+        data = bytes(streams[(col, "DATA")])
+        assert rlev2_run_modes(data, n) == {
+            "short_repeat": 0, "direct": 0, "patched": 0, "delta": 10}
+        assert len(data) <= 10 * 6  # header, base varint <= 3 B, step
+    got = spark.read.orc(path).toArrow()
+    assert got.cast(tbl.schema).equals(tbl)
+
+
 def test_stripe_pruning_metadata_stats():
     """demo-11 has 385 stripes + a Metadata section; a narrow _col0 range
     must prune most stripes while keeping every matching row."""

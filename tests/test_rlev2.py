@@ -140,18 +140,18 @@ ENCODER_PINS = {
         "b7a99fce183f1d69c9bef3ea376565d1774401d6",
     ),
     "fixed_ramp": (
-        "3e786270f43e55ad67d7e71f26e0ea4c10932b15",
-        "27f96fd47969882a8ab766618302db7e4f61f35b",
-        "e8f641daea55c1f9274db91e06e967d43a42be1b",
-        "3e786270f43e55ad67d7e71f26e0ea4c10932b15",
-        "3e786270f43e55ad67d7e71f26e0ea4c10932b15",
+        "b93215e94ca6ad1ac06b7e758aca75e1630f06c3",
+        "85eed68f7b10307183e3eafeba728a3dd4765da2",
+        "3c11683ac99d6fdd574203e7ec0faff81a00be9b",
+        "b93215e94ca6ad1ac06b7e758aca75e1630f06c3",
+        "b93215e94ca6ad1ac06b7e758aca75e1630f06c3",
     ),
     "fixed_ramp_desc": (
-        "d2e75fcce63df7e4b1ac60568a9f5c357e3e6bf4",
-        "9c2ae58968eaddbe69fd1df125f2947df74ab997",
-        "10132c8399dfe801d2933e7475fbd14c05927f78",
-        "d2e75fcce63df7e4b1ac60568a9f5c357e3e6bf4",
-        "d2e75fcce63df7e4b1ac60568a9f5c357e3e6bf4",
+        "2875b5648ce696450d1ecafb29e448a55ff63c52",
+        "de47f2a7c5cd8a01fd9737f4245299aec88cb13d",
+        "51c1280e8df7342bab9d2bab516bc69ea87f25fb",
+        "2875b5648ce696450d1ecafb29e448a55ff63c52",
+        "2875b5648ce696450d1ecafb29e448a55ff63c52",
     ),
     "monotone_dec": (
         "fb839127e9a4dbbc3ed26417a21e7fb06dc63afe",
@@ -276,6 +276,27 @@ def test_long_constant_run():
     buf = rlev2_encode_runs(v)
     assert len(buf) < 100  # ~20 fixed-delta blocks of 512
     np.testing.assert_array_equal(rlev2_decode(buf, len(v)), v)
+
+
+@pytest.mark.parametrize("signed", [True, False])
+@pytest.mark.parametrize("kind", ["arange", "descending"])
+def test_constant_step_is_fixed_delta(kind, signed):
+    """A frame whose deltas all equal the first is one fixed-delta run
+    (delta width 0: header, base and step), not packed deltas; a frame with
+    one step off keeps its packed deltas."""
+    from orc_rs_spark.kernels.rlev2 import rlev2_run_modes
+
+    v = np.arange(512) if kind == "arange" else 1000 - 3 * np.arange(512)
+    buf = rlev2_encode(v, signed=signed)
+    assert len(buf) <= 5
+    assert buf[0] >> 6 == 3 and (buf[0] >> 1) & 0x1F == 0  # delta, width 0
+    assert rlev2_run_modes(buf, len(v)) == {
+        "short_repeat": 0, "direct": 0, "patched": 0, "delta": 1}
+    np.testing.assert_array_equal(rlev2_decode(buf, len(v), signed=signed), v)
+    v[300] += 1 if kind == "arange" else -1  # still monotonic
+    buf = rlev2_encode(v, signed=signed)
+    assert buf[0] >> 6 == 3 and (buf[0] >> 1) & 0x1F != 0
+    np.testing.assert_array_equal(rlev2_decode(buf, len(v), signed=signed), v)
 
 
 def test_compression_wins():
