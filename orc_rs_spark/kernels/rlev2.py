@@ -191,17 +191,14 @@ def _encode_frames(
         dmag[rstart] = 0
         delta_max = np.maximum.reduceat(dmag, rstart)
         single = seg_lens == 1
-        inc[single] = True
-        dec[single] = True
+        inc[single] = dec[single] = True
     else:
         inc = dec = np.ones(k, dtype=bool)
         first_d = np.zeros(k, dtype=np.int64)
         delta_max = np.zeros(k, dtype=np.uint64)
         dmag = d.view(np.uint64)
-    safe_range = (maxs.view(np.uint64) - mins.view(np.uint64)) < (
-        np.uint64(1) << np.uint64(63)
-    )
-    mono = (inc | (dec & (first_d != 0))) & safe_range & ~const
+    span = maxs.view(np.uint64) - mins.view(np.uint64)
+    mono = (inc | (dec & (first_d != 0))) & (span < np.uint64(1 << 63)) & ~const
     # per-frame max ZIGZAG value without a whole-array zigzag pass:
     # zigzag(x) grows with x for x >= 0 and with |x| for x < 0, so the
     # frame's max zigzag is at one of its extremes — k-sized math on the
@@ -221,16 +218,13 @@ def _encode_frames(
     patched, pat_w, h2, h3, cw, pll, ent_lo, adj, ents = _patched_plans(
         v, starts, seg_lens, mins, cand, cost_direct, strict_orc
     )
-    # fixed-delta runs (width 0): constant frames of > 10 values, and
-    # monotonic frames whose deltas all equal the first: each |delta| is at
-    # most |first| and together they span the frame's range
+    delta = (mono & (seg_lens >= 3)) | (const & (seg_lens > 10))
+    # fixed-delta runs (width 0): delta frames whose deltas all equal the
+    # first (constant frames among them), as each |delta| is at most
+    # |first| and together they span the frame's range
     step = np.abs(first_d).view(np.uint64)
     gaps = np.maximum(seg_lens - 1, 1).astype(np.uint64)
-    span = maxs.view(np.uint64) - mins.view(np.uint64)
-    fixed = (const & (seg_lens > 10)) | (
-        mono & (seg_lens >= 3) & (delta_max == step) & (span % gaps == 0) & (span // gaps == step)
-    )
-    delta = (mono & (seg_lens >= 3)) | fixed
+    fixed = delta & (delta_max == step) & (span % gaps == 0) & (span // gaps == step)
     # packed deltas take >= 2 bits: width 0 is the fixed-delta form
     width = np.where(
         fixed, 0, np.where(delta, _table_width(np.maximum(bit_lengths(delta_max), 2)),
@@ -262,8 +256,10 @@ def _encode_frames(
     out = [b""] * (3 * k)
     out[0::3] = heads
     for slot, sel, w, lo, hi, source, prep in (
-        (1, mode == 1, width, starts, ends, v.view(np.uint64), _zigzag if signed else None),
-        (1, patched, width, starts, ends, adj, _low_bits),
+        (1, mode == 1, width, starts, ends, v.view(np.uint64),
+         (lambda buf, w: zigzag_encode(buf.view(np.int64))) if signed else None),
+        # patched DATA keeps the low w bits; the high bits ride the patch list
+        (1, patched, width, starts, ends, adj, lambda buf, w: buf & np.uint64((1 << w) - 1)),
         (2, pll > 0, cw, ent_lo, ent_lo + pll, ents, None),
         (1, delta & (width > 0), width, starts + 1, ends - 1, dmag, None),
     ):
@@ -326,17 +322,17 @@ def _patched_plans(
     thr = np.where(cand & (w90 < wfc) & (seg_lens - at_most[np.arange(k), w90] <= 31), w90, 64)
     pidx = np.flatnonzero(abls > np.repeat(thr, seg_lens))
     pf = np.searchsorted(starts, pidx, side="right") - 1
-    first = np.ones(len(pidx), dtype=bool)
-    first[1:] = pf[1:] != pf[:-1]
+    first = np.diff(pf, prepend=-1) != 0
     heads = np.flatnonzero(first)
     hf = pf[heads]
     # gap from the previous patch, or from the frame start for the first;
     # a gap over 255 takes (gap - 1) // 255 filler entries (gap 255, patch 0)
     gap = pidx - np.where(first, starts[pf], np.concatenate(([0], pidx[:-1])))
     fill = np.maximum(gap - 1, 0) // 255
+    cnt = fill + 1
     patch = adj[pidx] >> thr[pf].astype(np.uint64)
     pll, gmax, pmax = zero.copy(), zero.copy(), np.zeros(k, dtype=np.uint64)
-    pll[hf] = np.add.reduceat(fill + 1, heads)
+    pll[hf] = np.add.reduceat(cnt, heads)
     gmax[hf] = np.maximum.reduceat(gap, heads)
     pmax[hf] = np.maximum.reduceat(patch, heads)
     pw = _table_width(bit_lengths(pmax))
@@ -351,7 +347,6 @@ def _patched_plans(
     use = (use90 | ok_fc) & (np.where(use90, size90, size_fc) < cost_direct)
     use90 &= use
     # list entries (gap << pw) | patch, each patch after its fillers
-    cnt = fill + 1
     last = np.cumsum(cnt) - 1
     shift = np.repeat(pw[pf], cnt).view(np.uint64)
     ents = np.uint64(255) << shift
@@ -362,16 +357,6 @@ def _patched_plans(
     h2 = ((bw - 1) << 5) | np.searchsorted(DIRECT_WIDTH_TABLE, pw)
     h3 = ((pgw - 1) << 5) | pll
     return use, np.where(use90, w90, wfc), h2, h3, cw, pll, ent_lo, adj, ents
-
-
-def _zigzag(buf: np.ndarray, w: int) -> np.ndarray:
-    return zigzag_encode(buf.view(np.int64))
-
-
-def _low_bits(buf: np.ndarray, w: int) -> np.ndarray:
-    """Patched DATA keeps the low ``w`` bits; the high bits ride the patch
-    list."""
-    return buf & np.uint64((1 << w) - 1)
 
 
 def _pack_payloads(

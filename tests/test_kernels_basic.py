@@ -88,6 +88,11 @@ def test_bitpack_big_endian_order():
 def test_bit_lengths():
     v = np.array([0, 1, 2, 3, 255, 256, 2**32, 2**64 - 1], dtype=np.uint64)
     assert bit_lengths(v).tolist() == [0, 1, 2, 2, 8, 9, 33, 64]
+    # every power-of-two edge, through the small- and large-array paths
+    edges = [x for k in range(65) for x in ((1 << k) - 1, 1 << k, (1 << k) + 1) if x < 2**64]
+    for reps in (1, 20):
+        big = np.array(edges * reps, dtype=np.uint64)
+        assert bit_lengths(big).tolist() == [x.bit_length() for x in edges] * reps
 
 
 def test_width_tables():

@@ -419,6 +419,85 @@ def test_patched_tie_takes_for_width():
         np.testing.assert_array_equal(rlev2_decode(buf, len(v)), v)
 
 
+def _patched_plan_reference(f, strict):
+    """One frame's patched-base plan by the rules, value by value (the loop
+    the bulk pricing replaced): (DATA width, patch width, gap width, list
+    length, base bytes) of the smaller legal plan, the FoR width on a tie,
+    or None when it is not smaller than the direct run."""
+    from orc_rs_spark.kernels.bitpack import closest_direct_width, packed_size
+
+    n, base = len(f), min(f)
+    adj = [x - base for x in f]
+    bits = sorted(a.bit_length() for a in adj)
+    wfc = closest_direct_width(bits[-1])
+    w90 = closest_direct_width(bits[(9 * (n - 1)) // 10]) if wfc >= 4 else wfc
+    zigzag_bits = max((2 * x if x >= 0 else -2 * x - 1).bit_length() for x in f)
+    direct = 2 + packed_size(n, closest_direct_width(zigzag_bits))
+    bw = min(8, (abs(base).bit_length() + 8) // 8)
+    if 13 + packed_size(n, w90) + (31 * 5 if w90 < wfc else 0) >= direct:
+        return None
+    plans = []  # (size, 0 for FoR / 1 for q90, plan)
+    if not strict and wfc < 64:
+        plans.append((4 + bw + packed_size(n, wfc), 0, (wfc, 1, 1, 0, bw)))
+    if w90 < wfc:
+        entries, prev = [], 0  # (gap, patch); the first gap is from the frame start
+        for i, a in enumerate(adj):
+            if a >> w90:
+                gap, prev = i - prev, i
+                while gap > 255:
+                    entries.append((255, 0))
+                    gap -= 255
+                entries.append((gap, a >> w90))
+        pw = closest_direct_width(max(p for _, p in entries).bit_length())
+        pgw = max(g for g, _ in entries).bit_length() or 1
+        if len(entries) <= 31 and w90 + pw <= 64:
+            size = 4 + bw + packed_size(n, w90) + packed_size(
+                len(entries), closest_direct_width(pgw + pw))
+            plans.append((size, 1, (w90, pw, pgw, len(entries), bw)))
+    best = min(plans, default=None)
+    return None if best is None or best[0] >= direct else best[2]
+
+
+@pytest.mark.parametrize("strict", [False, True])
+def test_patched_plans_match_reference_loop(strict):
+    """The whole-array pricing of every frame equals the per-frame loop."""
+    from orc_rs_spark.kernels.bitpack import DIRECT_WIDTH_TABLE, bit_lengths
+    from orc_rs_spark.kernels.rlev2 import _patched_plans, _table_width
+    from orc_rs_spark.kernels.zigzag import zigzag_encode
+
+    rng = np.random.default_rng(17)
+    frames = []
+    for _ in range(300):
+        n = int(rng.choice([8, 9, 24, 100, 300, 511, 512]))
+        f = rng.integers(0, 1 << int(rng.integers(1, 20)), n)
+        f[:2] = [5, 0]  # never monotonic
+        k = int(rng.integers(0, 40))
+        f[rng.integers(0, n, k)] = rng.integers(0, 1 << int(rng.integers(1, 62)), k)
+        frames.append(f + int(rng.choice([0, -(1 << 62), 1 << 40, -77])))
+    f = rng.integers(0, 16, 512)  # 31 patches, the last after a filler: 32 entries
+    f[:2] = [5, 0]
+    f[list(range(2, 32)) + [300]] = 1 << 40
+    frames.append(f)
+    v = np.concatenate(frames).astype(np.int64)
+    seg_lens = np.array([len(f) for f in frames])
+    starts = np.cumsum(seg_lens) - seg_lens
+    mins = np.minimum.reduceat(v, starts)
+    zz = np.maximum(zigzag_encode(mins), zigzag_encode(np.maximum.reduceat(v, starts)))
+    cost_direct = 2 + (seg_lens * _table_width(bit_lengths(zz)) + 7) // 8
+    use, w, h2, h3 = _patched_plans(
+        v, starts, seg_lens, mins, np.ones(len(frames), dtype=bool), cost_direct, strict)[:4]
+    got = [
+        (int(w[i]), int(DIRECT_WIDTH_TABLE[h2[i] & 0x1F]), (h3[i] >> 5) + 1, h3[i] & 0x1F,
+         (h2[i] >> 5) + 1) if use[i] else None
+        for i in range(len(frames))
+    ]
+    want = [_patched_plan_reference(f.tolist(), strict) for f in frames]
+    assert got == want
+    assert sum(p is not None for p in want) > 100
+    assert any(p is not None and p[3] == 0 for p in want) != strict  # FoR plans
+    assert any(p is not None and p[3] > 0 for p in want)  # q90 plans
+
+
 def test_patched_bit_flips_decode_or_raise_valueerror():
     """Every single-bit flip of a patched-base frame either decodes or
     raises ValueError; a patch index past the run (e.g. a flipped patch
