@@ -30,8 +30,8 @@ import numpy as np
 import pyarrow as pa
 
 from orc_rs_spark.kernels.blockcomp import block_compress, block_decompress
-from orc_rs_spark.kernels.bloom import bloom_build
 from orc_rs_spark.kernels.byte_rle import boolean_rle_decode, boolean_rle_encode
+from orc_rs_spark.kernels.intcodecs import DICTIONARY_CODECS, read_dictionary
 from orc_rs_spark.kernels.select import INT_CODECS, STR_CODECS, encode_ints_auto, encode_strings_auto
 from orc_rs_spark.kernels.varint import uvarint, varint_decode
 
@@ -76,20 +76,6 @@ CHUNK_ARROW_SCHEMA = pa.schema(
         ("max_val", pa.int64()),
     ]
 )
-
-
-def _maybe_bloom(flat: np.ndarray, max_distinct: int = 1 << 16) -> bytes:
-    """Bloom filters pay only on low-distinct chunks: at ~10 bits per
-    distinct value a mostly-unique 1M-token chunk would spend >30% of its
-    encoded size on the filter (Spark's ORC writer also defaults bloom
-    off). Empty bytes = no filter = 'must decode unless min/max prunes'."""
-    if len(flat) == 0:
-        return b""
-    sample = flat[:: max(1, len(flat) // 4096)][:4096]
-    if len(np.unique(sample)) / len(sample) > 0.5 and len(flat) > max_distinct:
-        return b""
-    u = np.unique(flat)
-    return bloom_build(u) if len(u) <= max_distinct else b""
 
 
 def _list_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -181,9 +167,7 @@ def _maybe_block(data: bytes, block_codec: str) -> tuple[bytes, str]:
     return data, "none"
 
 
-def encode_chunk(
-    batch: pa.RecordBatch, part_id: int, block_codec: str = "zlib", build_bloom: bool = False
-) -> dict:
+def encode_chunk(batch: pa.RecordBatch, part_id: int, block_codec: str = "zlib") -> dict:
     """One RecordBatch of (doc_id, tokens, n_tok, source) -> one chunk row."""
     doc_id = batch.column("doc_id")
     tokens = batch.column("tokens")
@@ -260,7 +244,7 @@ def encode_chunk(
         "s_n_tok": streams[1],
         "s_tokens": streams[2],
         "s_source": streams[3],
-        "bloom": _maybe_bloom(flat) if build_bloom else b"",
+        "bloom": b"",  # unused; the column stays so older chunk tables still read
         "orig_bytes": int(orig_bytes),
         "enc_bytes": sum(len(s) for s in streams),
         "min_val": min_val,
@@ -304,6 +288,25 @@ def _decoder(table: dict, tag: str, stream: str):
         ) from None
 
 
+def _stream_tags(row: dict) -> tuple[list[str], list[str]]:
+    """(codec tag, block codec tag) of each of a chunk row's streams."""
+    codecs = row["codec"].split(",")
+    block_tags = row["block_codec"].split(",")
+    if len(codecs) != len(STREAM_COLS) or len(block_tags) != len(STREAM_COLS):
+        raise ValueError(
+            f"chunk codec tags {row['codec']!r} / {row['block_codec']!r} do not "
+            f"name one codec per stream of {STREAM_COLS}"
+        )
+    return codecs, block_tags
+
+
+def _inflate(row: dict, block_tags: list[str], i: int) -> bytes:
+    """Stream ``i`` of a chunk row with its block compression undone
+    (PRESENT prefix and codec payload)."""
+    part = row[STREAM_COLS[i]]
+    return block_decompress(part, block_tags[i]) if block_tags[i] != "none" else part
+
+
 def decode_chunk(row: dict, columns: tuple[str, ...] | None = None) -> pa.RecordBatch:
     """Chunk row -> RecordBatch (doc_id, tokens, n_tok, source).
 
@@ -312,33 +315,22 @@ def decode_chunk(row: dict, columns: tuple[str, ...] | None = None) -> pa.Record
     DataFrame (``chunk_columns_for``), their bytes are never even read.
     """
     cols = tuple(columns) if columns else STREAMS
-    codecs = row["codec"].split(",")
-    block_tags = row["block_codec"].split(",")
-    if len(codecs) != len(STREAM_COLS) or len(block_tags) != len(STREAM_COLS):
-        raise ValueError(
-            f"chunk codec tags {row['codec']!r} / {row['block_codec']!r} do not "
-            f"name one codec per stream of {STREAM_COLS}"
-        )
+    codecs, block_tags = _stream_tags(row)
     n_rows = int(row["n_rows"])
     n_values = int(row["n_values"])
-
-    def stream(i: int, name: str):
-        part = row[name]
-        raw = block_decompress(part, block_tags[i]) if block_tags[i] != "none" else part
-        return _unwrap_present(raw, n_rows)
 
     out_arrays = []
     out_names = []
     if "tokens" in cols or "n_tok" in cols:
-        tok_present, len_payload = stream(1, "s_n_tok")
+        tok_present, len_payload = _unwrap_present(_inflate(row, block_tags, 1), n_rows)
         n_dense = int(tok_present.sum()) if tok_present is not None else n_rows
         lengths = _decoder(INT_CODECS, codecs[1], "s_n_tok")(len_payload, n_dense)
     if "doc_id" in cols:
-        _, payload = stream(0, "s_doc_id")
+        _, payload = _unwrap_present(_inflate(row, block_tags, 0), n_rows)
         out_arrays.append(_decoder(STR_CODECS, codecs[0], "s_doc_id")(payload, n_rows))
         out_names.append("doc_id")
     if "tokens" in cols:
-        _, payload = stream(2, "s_tokens")
+        _, payload = _unwrap_present(_inflate(row, block_tags, 2), n_rows)
         flat = _decoder(INT_CODECS, codecs[2], "s_tokens")(payload, n_values)
         offsets64 = np.concatenate(([0], np.cumsum(lengths)))
         dense_tokens = pa.ListArray.from_arrays(
@@ -350,9 +342,43 @@ def decode_chunk(row: dict, columns: tuple[str, ...] | None = None) -> pa.Record
         out_arrays.append(_scatter(pa.array(lengths.astype(np.int32)), tok_present))
         out_names.append("n_tok")
     if "source" in cols:
-        src_present, payload = stream(3, "s_source")
+        src_present, payload = _unwrap_present(_inflate(row, block_tags, 3), n_rows)
         n_src = int(src_present.sum()) if src_present is not None else n_rows
         decode_src = _decoder(STR_CODECS, codecs[3], "s_source")
         out_arrays.append(_scatter(decode_src(payload, n_src), src_present))
         out_names.append("source")
     return pa.RecordBatch.from_arrays(out_arrays, names=out_names)
+
+
+def search_chunk(row: dict, token: int) -> pa.RecordBatch | None:
+    """The rows of one chunk whose tokens contain ``token`` (as
+    ``decode_chunk`` gives them), or None when there are none.
+
+    A token stream coded with a dictionary (``DICTIONARY_CODECS``) opens
+    with every distinct token of the chunk: the chunk is skipped after
+    reading that dictionary alone when ``token`` is not in it, with no
+    index or rank decode. Other codecs, and chunks that hold the token,
+    decode in full and keep the rows that contain it.
+    """
+    if int(row["n_values"]) == 0:
+        return None
+    codecs, block_tags = _stream_tags(row)
+    if codecs[2] in DICTIONARY_CODECS:
+        raw = _inflate(row, block_tags, 2)
+        _, payload = _unwrap_present(raw, int(row["n_rows"]))
+        b = np.frombuffer(payload, dtype=np.uint8)
+        values, _ = read_dictionary(b, int(row["n_values"]), codecs[2])
+        if not (values == token).any():
+            return None
+        # a hit decodes the stream just inflated: stored uncompressed, a
+        # stream's block tag is "none"
+        block_tags[2] = "none"
+        row = {**row, "s_tokens": raw, "block_codec": ",".join(block_tags)}
+    rb = decode_chunk(row)
+    tok = rb.column("tokens")
+    lengths = np.diff(tok.offsets.to_numpy(zero_copy_only=False).astype(np.int64))
+    flat = tok.flatten().to_numpy(zero_copy_only=False)
+    hit_rows = np.unique(
+        np.searchsorted(np.cumsum(lengths), np.flatnonzero(flat == token), side="right")
+    )
+    return rb.take(pa.array(hit_rows)) if len(hit_rows) else None

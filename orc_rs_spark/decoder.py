@@ -54,38 +54,27 @@ def decode_table(chunks: DataFrame, columns: tuple[str, ...] | None = None) -> D
 def search_token(chunks: DataFrame, token: int) -> DataFrame:
     """Find rows whose tokens contain ``token``, decoding as few chunks as
     possible: (1) min/max chunk stats prune JVM-side (predicate reaches the
-    parquet scan of the chunk table), (2) per-chunk Bloom filters prune
-    before decode, (3) survivors decode and row-filter vectorized.
+    parquet scan of the chunk table), (2) ``search_chunk`` skips a chunk
+    whose token dictionary (codecs ``dict``, ``rankdict``, ``rankplanes``)
+    lacks the token before decoding its indices or ranks, (3) the other
+    chunks decode and row-filter vectorized.
 
     This is the index-based pruning the reference parsed but left unused
-    (/root/reference/src/stripe.rs:171 TODO).
+    (/root/reference/src/stripe.rs:171 TODO). The chunk table's ``bloom``
+    column is not read: a filter in an older chunk table prunes nothing.
     """
-    from collections.abc import Iterator
-
-    import numpy as np
-
-    from orc_rs_spark.chunk import chunk_columns_for, decode_chunk
-    from orc_rs_spark.kernels.bloom import bloom_might_contain
+    from orc_rs_spark.chunk import chunk_columns_for, search_chunk
 
     pruned = chunks.where((F.col("min_val") <= token) & (F.col("max_val") >= token)).select(
-        "bloom", *chunk_columns_for(None)
+        *chunk_columns_for(None)
     )
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        probe = np.array([token], dtype=np.int64)
         for batch in batches:
             for row in batch.to_pylist():
-                if row["bloom"] and not bloom_might_contain(row["bloom"], probe)[0]:
-                    continue
-                rb = decode_chunk(row)
-                tok = rb.column("tokens")
-                lengths = np.diff(tok.offsets.to_numpy(zero_copy_only=False).astype(np.int64))
-                flat = tok.flatten().to_numpy(zero_copy_only=False)
-                hit_rows = np.unique(
-                    np.searchsorted(np.cumsum(lengths), np.flatnonzero(flat == token), side="right")
-                )
-                if len(hit_rows):
-                    yield rb.take(pa.array(hit_rows))
+                hits = search_chunk(row, token)
+                if hits is not None:
+                    yield hits
 
     return pruned.mapInArrow(scan, TOKEN_DDL)
 

@@ -62,7 +62,6 @@ def encode_table(
     repartition: bool = True,
     partitions: int | None = None,
     partition_mode: str = "range",
-    build_bloom: bool = False,
     chunk_rows: int = CHUNK_ROWS,
 ) -> DataFrame:
     """(doc_id, tokens, n_tok, source) -> chunk table (CHUNK_DDL schema).
@@ -97,12 +96,7 @@ def encode_table(
             lo = n * i // n_chunks
             hi = n * (i + 1) // n_chunks
             piece = segment.slice(lo, hi - lo).combine_chunks()
-            row = encode_chunk(
-                piece.to_batches()[0],
-                pid,
-                block_codec=block_codec,
-                build_bloom=build_bloom,
-            )
+            row = encode_chunk(piece.to_batches()[0], pid, block_codec=block_codec)
             yield pa.RecordBatch.from_pylist([row], schema=CHUNK_ARROW_SCHEMA)
 
     def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

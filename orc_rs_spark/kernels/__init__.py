@@ -7,7 +7,7 @@ operating on whole chunks at once — the "SIMD" the reference left as a TODO
 
 from orc_rs_spark.kernels.zigzag import zigzag_encode, zigzag_decode
 from orc_rs_spark.kernels.varint import varint_encode, varint_decode
-from orc_rs_spark.kernels.bitpack import bitpack, bitunpack, bit_width, closest_direct_width, closest_delta_width
+from orc_rs_spark.kernels.bitpack import bitpack, bitunpack, closest_direct_width
 
 __all__ = [
     "zigzag_encode",
@@ -16,7 +16,5 @@ __all__ = [
     "varint_decode",
     "bitpack",
     "bitunpack",
-    "bit_width",
     "closest_direct_width",
-    "closest_delta_width",
 ]

@@ -26,19 +26,6 @@ DIRECT_WIDTH_TABLE = np.array(
 DELTA_WIDTH_TABLE = DIRECT_WIDTH_TABLE.copy()
 DELTA_WIDTH_TABLE[0] = 0  # encoded 0 = fixed-delta run (no packed deltas)
 
-_DIRECT_ENC = {int(w): i for i, w in enumerate(DIRECT_WIDTH_TABLE)}
-_DELTA_ENC = {int(w): i for i, w in enumerate(DELTA_WIDTH_TABLE)}
-
-
-def bit_width(values: np.ndarray) -> int:
-    """Minimum bits needed for the max of a uint64 array (>=1 even for 0)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return 1
-    m = int(v.max())
-    return max(1, m.bit_length())
-
-
 # plain-tuple mirror of DIRECT_WIDTH_TABLE: the scalar lookups below run
 # once per frame/candidate in the rlev2 encoder hot loop, where
 # bisect on a tuple is ~10x cheaper than np.searchsorted dispatch
@@ -48,21 +35,6 @@ _DIRECT_WIDTHS = tuple(int(w) for w in DIRECT_WIDTH_TABLE)
 def closest_direct_width(width: int) -> int:
     """Round a bit width up to the nearest entry in the direct table."""
     return _DIRECT_WIDTHS[bisect_left(_DIRECT_WIDTHS, width if width > 1 else 1)]
-
-
-def closest_delta_width(width: int) -> int:
-    """Round a delta bit width up (min usable packed width is 2; 0 = fixed)."""
-    if width == 0:
-        return 0
-    return _DIRECT_WIDTHS[bisect_left(_DIRECT_WIDTHS, width if width > 2 else 2)]
-
-
-def encode_direct_width(width: int) -> int:
-    return _DIRECT_ENC[width]
-
-
-def encode_delta_width(width: int) -> int:
-    return _DELTA_ENC[width]
 
 
 def decode_direct_width(enc: int) -> int:

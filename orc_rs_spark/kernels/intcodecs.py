@@ -103,6 +103,38 @@ def bitpack_decode(buf: bytes, count: int) -> np.ndarray:
 # ----------------------------------------------------------- dictionary
 
 
+# integer codecs whose streams open with the header and dictionary that
+# read_dictionary parses
+DICTIONARY_CODECS = ("dict", "rankdict", "rankplanes")
+
+
+def read_dictionary(b: np.ndarray, count: int, codec: str) -> tuple[np.ndarray, int]:
+    """(dictionary values, offset of the index or rank bytes): the header
+    and RLEv2 dictionary that every codec in ``DICTIONARY_CODECS`` opens
+    with. Every one of the stream's ``count`` values decodes to one of
+    these, so a value not among them is not in the stream. Corrupt input
+    raises ValueError naming ``codec``."""
+    try:
+        hdr, used = varint_decode(b, 2)
+    except ValueError as e:
+        raise ValueError(f"{codec}: header: {e}") from None
+    n_dict, dict_len = int(hdr[0]), int(hdr[1])
+    if n_dict == 0:
+        raise ValueError(f"{codec}: empty dictionary for {count} values")
+    if used + dict_len > len(b):
+        raise ValueError(f"{codec}: {dict_len}-byte dictionary runs past the {len(b)}-byte buffer")
+    try:
+        values = rlev2_decode(b[used : used + dict_len], n_dict, signed=True)
+    except ValueError as e:
+        raise ValueError(f"{codec}: {e}") from None
+    return values, used + dict_len
+
+
+def _check_ranks(ranks: np.ndarray, n_dict: int, codec: str) -> None:
+    if int(ranks.max()) >= n_dict:
+        raise ValueError(f"{codec}: rank {int(ranks.max())} outside the {n_dict}-entry dictionary")
+
+
 def dict_encode(values: np.ndarray) -> bytes:
     """Sorted symbol table (np.unique is sorted) + RLEv2 index stream.
 
@@ -122,10 +154,13 @@ def dict_decode(buf: bytes, count: int) -> np.ndarray:
     if count == 0:
         return np.empty(0, dtype=np.int64)
     b = np.frombuffer(buf, dtype=np.uint8)
-    hdr, used = varint_decode(b, 2)
-    n_dict, dict_len = int(hdr[0]), int(hdr[1])
-    uniq = rlev2_decode(b[used : used + dict_len], n_dict, signed=True)
-    idx = rlev2_decode(b[used + dict_len :], count, signed=False)
+    uniq, pos = read_dictionary(b, count, "dict")
+    try:
+        idx = rlev2_decode(b[pos:], count, signed=False)
+    except ValueError as e:
+        raise ValueError(f"dict: {e}") from None
+    # as unsigned, an index that wrapped negative fails the bound check too
+    _check_ranks(idx.view(np.uint64), len(uniq), "dict")
     return uniq[idx]
 
 
@@ -175,36 +210,11 @@ def rankplanes_encode(values: np.ndarray) -> bytes:
     )
 
 
-def _rank_dictionary(b: np.ndarray, count: int, codec: str) -> tuple[np.ndarray, int]:
-    """(values by rank, offset of the rank bytes): the header and RLEv2
-    dictionary that ``rankdict`` and ``rankplanes`` share. Corrupt input
-    raises ValueError naming ``codec``."""
-    try:
-        hdr, used = varint_decode(b, 2)
-    except ValueError as e:
-        raise ValueError(f"{codec}: header: {e}") from None
-    n_dict, dict_len = int(hdr[0]), int(hdr[1])
-    if n_dict == 0:
-        raise ValueError(f"{codec}: empty dictionary for {count} values")
-    if used + dict_len > len(b):
-        raise ValueError(f"{codec}: {dict_len}-byte dictionary runs past the {len(b)}-byte buffer")
-    try:
-        by_rank = rlev2_decode(b[used : used + dict_len], n_dict, signed=True)
-    except ValueError as e:
-        raise ValueError(f"{codec}: {e}") from None
-    return by_rank, used + dict_len
-
-
-def _check_ranks(ranks: np.ndarray, n_dict: int, codec: str) -> None:
-    if int(ranks.max()) >= n_dict:
-        raise ValueError(f"{codec}: rank {int(ranks.max())} outside the {n_dict}-entry dictionary")
-
-
 def rankplanes_decode(buf: bytes, count: int) -> np.ndarray:
     if count == 0:
         return np.empty(0, dtype=np.int64)
     b = np.frombuffer(buf, dtype=np.uint8)
-    by_rank, pos = _rank_dictionary(b, count, "rankplanes")
+    by_rank, pos = read_dictionary(b, count, "rankplanes")
     n_dict = len(by_rank)
     # a rank below n_dict has at most this many bytes
     max_planes = max(1, ((n_dict - 1).bit_length() + 6) // 7)
@@ -239,7 +249,7 @@ def rankdict_decode(buf: bytes, count: int) -> np.ndarray:
     if count == 0:
         return np.empty(0, dtype=np.int64)
     b = np.frombuffer(buf, dtype=np.uint8)
-    by_rank, pos = _rank_dictionary(b, count, "rankdict")
+    by_rank, pos = read_dictionary(b, count, "rankdict")
     try:
         ranks, _ = varint_decode(b[pos:], count)
     except ValueError as e:

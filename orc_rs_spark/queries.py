@@ -949,12 +949,13 @@ def rt_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SELECT doc_id, n_tok FROM (" + TOKEN_TABLE_SQL + ") t WHERE list_contains(tokens, 4242)",
 )
 def q_token_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunk-pruned point lookup: min/max stats + Bloom filter skip chunks
-    before any decode (the reference's unused-index TODO, made real)."""
+    """Chunk-pruned point lookup: min/max stats, then each chunk's own token
+    dictionary, skip chunks before any rank or index decode (the
+    reference's unused-index TODO, made real)."""
     from orc_rs_spark.decoder import search_token
 
     df = token_table_from_events(spark, sf_dir)
-    chunks = encode_table(df, partitions=4, build_bloom=True)
+    chunks = encode_table(df, partitions=4)
     return search_token(chunks, 4242).select("doc_id", "n_tok")
 
 

@@ -1,31 +1,11 @@
-"""Bloom filter and float codec kernels + chunk-pruning behavior."""
+"""Float codec kernels + chunk-pruning behavior."""
 
 import numpy as np
 import pytest
 
-from orc_rs_spark.kernels.bloom import bloom_build, bloom_might_contain
 from orc_rs_spark.kernels.floats import float_decode, float_encode
 
 RNG = np.random.default_rng(42)
-
-
-def test_bloom_no_false_negatives():
-    v = RNG.integers(-(2**31), 2**31, 50_000).astype(np.int64)
-    f = bloom_build(v)
-    assert bloom_might_contain(f, v).all()
-
-
-def test_bloom_false_positive_rate():
-    v = RNG.integers(0, 2**31, 50_000).astype(np.int64)
-    f = bloom_build(v)
-    absent = RNG.integers(2**32, 2**40, 20_000).astype(np.int64)
-    assert bloom_might_contain(f, absent).mean() < 0.02
-
-
-def test_bloom_tiny_and_empty():
-    f = bloom_build(np.array([7], dtype=np.int64))
-    assert bloom_might_contain(f, np.array([7], dtype=np.int64))[0]
-    assert not bloom_might_contain(f, np.arange(100, 200, dtype=np.int64)).all()
 
 
 @pytest.mark.parametrize("mode", [0, 1, None])
@@ -51,8 +31,9 @@ def test_float_empty():
 
 @pytest.mark.spark
 def test_search_token_prunes_chunks(spark):
-    """The min/max + bloom gates must skip chunks that can't contain the
-    probe; correctness checked against a plain explode-filter."""
+    """The min/max stats and each chunk's token dictionary must skip
+    chunks that can't contain the probe; correctness checked against a
+    plain explode-filter."""
     from pyspark.sql import functions as F
 
     from orc_rs_spark.decoder import search_token
@@ -60,7 +41,7 @@ def test_search_token_prunes_chunks(spark):
     from orc_rs_spark.fixtures import token_df
 
     df = token_df(spark, 1000, seed=2, partitions=4).cache()
-    chunks = encode_table(df, partitions=4, build_bloom=True).cache()
+    chunks = encode_table(df, partitions=4).cache()
     probe = int(
         df.select(F.explode("tokens").alias("t")).where(F.col("t") > 0).first()["t"]
     )
@@ -70,7 +51,7 @@ def test_search_token_prunes_chunks(spark):
         for r in df.where(F.array_contains("tokens", probe)).select("doc_id").collect()
     }
     assert got == want and len(want) > 0
-    # absent token: stats/bloom prune everything, nothing decodes
+    # absent token: stats prune everything, nothing decodes
     assert search_token(chunks, 2**31 - 7).count() == 0
     df.unpersist()
     chunks.unpersist()

@@ -207,6 +207,13 @@ def test_int_codec_truncated_stream_raises(codec, cut):
         dec(buf[:at], len(TRUNCATION_VALUES))
 
 
+def _dict_parts(dict_values, indices, dict_len=None):
+    dict_stream = rlev2_encode(np.array(dict_values, dtype=np.int64), signed=True)
+    dict_len = len(dict_stream) if dict_len is None else dict_len
+    idx_stream = rlev2_encode(np.array(indices, dtype=np.int64), signed=False)
+    return uvarint(len(dict_values)) + uvarint(dict_len) + dict_stream + idx_stream
+
+
 @pytest.mark.parametrize(
     "dec,buf,count,match",
     [
@@ -219,9 +226,12 @@ def test_int_codec_truncated_stream_raises(codec, cut):
         (bitpack_decode, b"", 3, "bitpack: empty stream"),
         (bitpack_decode, bitpack_encode(np.arange(100))[:-1], 100,
          "bitpack: bitpacked stream truncated"),
+        (dict_decode, _dict_parts([10, 20], [0, 2, 1]), 3, r"dict: rank 2 outside the 2-entry"),
+        (dict_decode, _dict_parts([10, 20], [0, 1, 0], dict_len=100), 3,
+         "dict: 100-byte dictionary runs past"),
     ],
     ids=["raw-short", "raw-empty", "raw-size", "for-empty", "for-no-width", "for-short",
-         "bitpack-empty", "bitpack-short"],
+         "bitpack-empty", "bitpack-short", "dict-index-too-big", "dict-past-end"],
 )
 def test_header_codecs_name_themselves_on_bad_input(dec, buf, count, match):
     with pytest.raises(ValueError, match=match):

@@ -11,7 +11,6 @@ from orc_rs_spark.kernels.bitpack import (
     bit_lengths,
     bitpack,
     bitunpack,
-    closest_delta_width,
     closest_direct_width,
 )
 from orc_rs_spark.kernels.varint import uvarint, varint_decode, varint_encode
@@ -101,9 +100,6 @@ def test_width_tables():
     assert closest_direct_width(25) == 26
     assert closest_direct_width(33) == 40
     assert closest_direct_width(57) == 64
-    assert closest_delta_width(0) == 0
-    assert closest_delta_width(1) == 2
-    assert closest_delta_width(25) == 26
 
 
 def test_murmur3_hash64_many_matches_scalar():

@@ -239,6 +239,67 @@ def test_decode_chunk_unknown_codec_names_stream(codec, match):
         decode_chunk(row)
 
 
+def _rows_with(rb: pa.RecordBatch, token: int) -> pa.RecordBatch:
+    """decode_chunk's batch filtered to the rows whose tokens hold ``token``."""
+    keep = [i for i, t in enumerate(rb.column("tokens").to_pylist()) if t and token in t]
+    return rb.take(pa.array(keep, type=pa.int64()))
+
+
+def _spy_decoder(monkeypatch, tag: str) -> list:
+    """Count calls to the token decoder of ``tag``."""
+    enc, dec = chunk_mod.INT_CODECS[tag]
+    calls = []
+
+    def spy(buf, count):
+        calls.append(count)
+        return dec(buf, count)
+
+    monkeypatch.setitem(chunk_mod.INT_CODECS, tag, (enc, spy))
+    return calls
+
+
+def test_search_skips_rankplanes_chunk_by_its_dictionary(monkeypatch):
+    """A token absent from a chunk but inside its [min_val, max_val] is
+    found absent in the rank dictionary: no rank plane is decoded, even
+    with more distinct tokens than a Bloom filter was ever built for."""
+    batch = _zipf_batch(4000, seed=5)
+    row = encode_chunk(batch, 0)
+    assert row["codec"].split(",")[2] == "rankplanes"
+    flat = batch.column("tokens").flatten().to_numpy()
+    present = np.unique(flat)
+    assert len(present) > 65_536
+    absent = int(np.setdiff1d(np.arange(row["min_val"], row["max_val"] + 1), present)[0])
+    rb = decode_chunk(row)
+    calls = _spy_decoder(monkeypatch, "rankplanes")
+    assert chunk_mod.search_chunk(row, absent) is None
+    assert calls == []
+    for token in (int(flat[0]), int(present[-1])):
+        assert chunk_mod.search_chunk(row, token).to_pydict() == _rows_with(rb, token).to_pydict()
+    assert len(calls) == 2
+
+
+@pytest.mark.parametrize(
+    "path,i,tag",
+    [(V2_CHUNKS, 2, "dict"), (V3_CHUNKS, 0, "rankdict"), (V3_CHUNKS, 1, "rankdict"),
+     (V2_CHUNKS, 3, "rlev2")],
+    ids=["v2-dict", "v3-rankdict0", "v3-rankdict1", "v2-rlev2"],
+)
+def test_search_chunk_equals_decode_then_filter(monkeypatch, path, i, tag):
+    """Every token of a pinned chunk finds exactly the rows decode plus a
+    row filter finds; an absent token finds none, and a dictionary codec
+    tells so without decoding its indices or ranks."""
+    row, _ = list(_pinned_rows(path))[i]
+    assert row["codec"].split(",")[2] == tag
+    rb = decode_chunk(row)
+    tokens = sorted({t for ts in rb.column("tokens").to_pylist() if ts for t in ts})
+    for token in tokens:
+        assert chunk_mod.search_chunk(row, token).to_pydict() == _rows_with(rb, token).to_pydict()
+    calls = _spy_decoder(monkeypatch, tag)
+    assert chunk_mod.search_chunk(row, max(tokens) + 1) is None
+    assert chunk_mod.search_chunk(row, min(tokens) - 1) is None
+    assert len(calls) == (0 if tag in chunk_mod.DICTIONARY_CODECS else 2)
+
+
 # ------------------------------------------------------- distributed
 
 
