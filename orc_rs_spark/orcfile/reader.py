@@ -415,8 +415,10 @@ def prune_stripes_stats(tail: OrcTail, stats: list, predicates: list[tuple]) -> 
     """Stripe indices that MAY satisfy every predicate — ``(column, lo,
     hi)`` ranges and ``(column, values)`` IN-lists — from pre-parsed
     stripe statistics: the Metadata section is read and parsed ONCE per
-    file however many predicates the scan carries. Falls back to all
-    stripes when statistics are missing or malformed."""
+    file however many predicates the scan carries. A predicate that the
+    file's own column statistics (footer) exclude prunes every stripe
+    without a look at theirs. Falls back to all stripes when statistics
+    are missing or malformed."""
     n = len(tail.footer.stripes)
     if not stats or len(stats) != n:
         return list(range(n))
@@ -440,6 +442,9 @@ def prune_stripes_stats(tail: OrcTail, stats: list, predicates: list[tuple]) -> 
             def hit(st):
                 return any(_stats_overlap(st, v, v) for v in vals)
 
+        file_stats = tail.footer.statistics
+        if col_id < len(file_stats) and not hit(file_stats[col_id]):
+            return []
         keep = {
             i for i in keep
             if col_id >= len(stats[i]) or hit(stats[i][col_id])

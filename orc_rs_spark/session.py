@@ -18,29 +18,41 @@ _MALLOC_TUNING = {
 
 
 def _prewarm_workers(spark: SparkSession, cores: int) -> None:
-    """One-time executor warm-up: fork every Python worker slot, import the
-    package's kernel/orcfile module surface, and grow each worker's heap once.
+    """One-time executor warm-up: fork every Python worker slot and import
+    the package's kernel/orcfile module surface.
 
     Workers started through ``_workerd`` no longer re-read Spark's zip
     directories on each task, so that cost is not what prewarm saves. What
-    it still buys is the worker fork, the package import chain and the
-    heap's first-touch page zeroing. Because the warm task imports that
-    chain, ``_workerd`` collects and ``gc.freeze()``s each worker's heap
-    right after it, so the daemon's ``gc.collect()`` after every later task
-    walks only that task's objects, not the ~74 k imported ones (a lengths
-    pass's Python-worker CPU ~0.12 s -> ~0.01 s on a 4-vCPU host). Non-local
-    masters run the stock daemon and get neither the zip eviction nor the
-    freeze. Without it the FIRST heavy task of every
-    worker pays those serially (32 fresh heaps faulting at once — the same
-    effect the malloc tuning above addresses for steady state); measured on
-    the bench box the first 32-task encode/ORC-write/read stage ran 3-5x its
-    steady-state time (event-log task medians 4.4 s vs 0.85 s). This is
-    provisioning work, equivalent to executor spin-up on a cluster: it runs
-    one ``spark.range`` job, touches no input data, and computes nothing that
-    any later query reuses. It warms the executors that exist when the
-    session starts; executors added later by dynamic allocation are never
-    warmed. The session is marked warm only when the job succeeds, so a
-    failed warm-up is retried on the next call.
+    it still buys is the worker fork and the package import chain, and,
+    because the warm task imports that chain, ``_workerd`` collects and
+    ``gc.freeze()``s each worker's heap right after it, so the daemon's
+    ``gc.collect()`` after every later task walks only that task's objects,
+    not the ~74 k imported ones (a lengths pass's Python-worker CPU ~0.12 s
+    -> ~0.01 s on a 4-vCPU host). Non-local masters run the stock daemon
+    and get neither the zip eviction nor the freeze.
+
+    It touches no heap. A 64 MB first touch stayed resident for the
+    worker's life (the trim threshold above never gives it back) and the
+    worker's tasks grew on top of it: in perfbench's 4-worker session each
+    worker peaked at ~190-208 MB with the touch and ~155 MB without it
+    and with the tiled RLEv2 encoder (~72 MB imports, ~119 MB after an ORC
+    export task, ~155 MB after encode; dropping the touch alone saves
+    nothing, as the untiled encoder's ~54 MB of temporaries rose as high).
+    Together they took ``peak_rss_mb`` (driver + daemon + workers) from
+    ~1,045 to ~896 MB on regime-mix and from ~979 to ~876 MB on lm-corpus.
+    First-touch page faults now land in each worker's first real task.
+    That cost is the 32-worker finding of OPTIMIZATION_r07.md: 32 fresh
+    heaps faulting at once (the same effect the malloc tuning above
+    addresses for steady state), together with the fork and imports, made
+    the first 32-task encode/ORC-write/read stage run 3-5x its
+    steady-state time (event-log task medians 4.4 s vs 0.85 s).
+
+    This is provisioning work, equivalent to executor spin-up on a
+    cluster: it runs one ``spark.range`` job, touches no input data, and
+    computes nothing that any later query reuses. It warms the executors
+    that exist when the session starts; executors added later by dynamic
+    allocation are never warmed. The session is marked warm only when the
+    job succeeds, so a failed warm-up is retried on the next call.
 
     Opt out with ORC_RS_PREWARM=0 (e.g. single-query scripts where session
     startup dominates)."""
@@ -50,13 +62,8 @@ def _prewarm_workers(spark: SparkSession, cores: int) -> None:
         return
 
     def warm(batches):
-        import numpy as np
-
         import orc_rs_spark.chunk  # noqa: F401  (kernels chain)
         import orc_rs_spark.orcfile.spark_source  # noqa: F401 (writer+reader)
-
-        a = np.ones(64 << 20, dtype=np.uint8)  # first-touch ~64 MB of heap
-        del a
         import time
 
         time.sleep(0.05)  # hold the slot so every core forks its own worker

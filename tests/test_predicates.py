@@ -48,6 +48,31 @@ def test_in_list_prunes_stripes(tmp_path):
     assert prune_stripes_stats(tail, stats, [("zzz", [1])]) == list(range(4))
 
 
+def test_file_statistics_prune_before_stripe_statistics(tmp_path, monkeypatch):
+    """A range the file's footer statistics exclude is pruned by one check
+    of those: no stripe's statistics are looked at."""
+    from orc_rs_spark.orcfile import reader
+
+    p, _ = _sorted_file(tmp_path)
+    tail = read_tail(p)
+    stats = read_stripe_statistics(p)
+    seen = []
+    overlap = reader._stats_overlap
+    monkeypatch.setattr(reader, "_stats_overlap", lambda st, lo, hi: seen.append(st) or overlap(st, lo, hi))
+    assert prune_stripes_stats(tail, stats, [("k", 9000, 9500)]) == []
+    assert seen == [tail.footer.statistics[1]]
+    seen.clear()
+    assert prune_stripes_stats(tail, stats, [("k", 4100, 4200)]) == [2]
+    assert len(seen) == 1 + 4  # the file's, then each stripe's
+    # without file statistics, or with ones that hold no bounds, the
+    # stripes' statistics still decide
+    tail.footer.statistics = []
+    assert prune_stripes_stats(tail, stats, [("k", 4100, 4200)]) == [2]
+    tail.footer.statistics = [reader.proto.ColumnStatistics.parse(b"")] * 3
+    assert prune_stripes_stats(tail, stats, [("k", 9000, 9500)]) == []
+    assert prune_stripes_stats(tail, [], [("k", 9000, 9500)]) == list(range(4))
+
+
 def test_in_list_prunes_row_groups_with_blooms(tmp_path):
     p, t = _sorted_file(tmp_path)
     r = OrcFileReader(p)

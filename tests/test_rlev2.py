@@ -656,6 +656,9 @@ TRUNCATION_INPUTS = {
         np.random.default_rng(16).integers(1, 40, 200),
     ).astype(np.int64),
     "short_repeat": np.full(5, 300, dtype=np.int64),
+    # one direct run each: no proper prefix holds a complete run
+    "three_values": np.array([0, 1, 0], dtype=np.int64),
+    "direct_429": np.random.default_rng(17).integers(0, 2**30, 429).astype(np.int64),
 }
 
 
@@ -663,10 +666,117 @@ TRUNCATION_INPUTS = {
 @pytest.mark.parametrize("kind", sorted(TRUNCATION_INPUTS))
 def test_truncated_stream_raises_valueerror(kind, encoder):
     """Every proper prefix of a stream must fail with the documented
-    ValueError: never a silent short decode, never IndexError."""
+    ValueError: never a silent short decode, never IndexError. The error
+    counts the values of the prefix's complete runs, which decode."""
+    import re
+
     v = TRUNCATION_INPUTS[kind]
     buf = (rlev2_encode if encoder == "frames" else rlev2_encode_runs)(v)
     np.testing.assert_array_equal(rlev2_decode(buf, len(v)), v)
     for cut in range(len(buf)):
-        with pytest.raises(ValueError, match="RLEv2 stream truncated"):
+        with pytest.raises(ValueError, match=f"RLEv2 stream truncated at \\d+/{len(v)} values") as e:
             rlev2_decode(buf[:cut], len(v))
+        got = int(re.search(r"at (\d+)/", str(e.value)).group(1))
+        assert got < len(v)
+        np.testing.assert_array_equal(rlev2_decode(buf[:cut], got), v[:got])
+        if kind in ("three_values", "direct_429"):
+            assert got == 0
+    # the unsigned stream of [0, 1, 0] without its last byte
+    with pytest.raises(ValueError, match="truncated at 0/3 values"):
+        rlev2_decode(rlev2_encode([0, 1, 0], signed=False)[:-1], 3, signed=False)
+
+
+# ------------------------------------------------------ encoder tiles
+
+
+def _mixed_rows(n_rows, rng, max_len=1000):
+    """Rows of every regime in turn, 1 to ``max_len - 1`` values each: the
+    values and the row boundaries."""
+    names = sorted(REGIMES)
+    lens = rng.integers(1, max_len, n_rows)
+    v = np.concatenate([REGIMES[names[i % len(names)]](rng, int(ln)) for i, ln in enumerate(lens)])
+    return v, np.cumsum(lens)[:-1]
+
+
+def _tiled_and_whole(monkeypatch, tile, encode, v, **kw):
+    """``encode(v, **kw)`` in tiles of at most ``tile`` values and in one
+    tile, plus the number of values in each tile of the first."""
+    from orc_rs_spark.kernels import rlev2
+
+    seen = []
+    encode_tile = rlev2._encode_tile
+    monkeypatch.setattr(rlev2, "_encode_tile", lambda t, *a: seen.append(len(t)) or encode_tile(t, *a))
+    monkeypatch.setattr(rlev2, "_TILE", tile)
+    tiled = encode(v, **kw)
+    monkeypatch.setattr(rlev2, "_encode_tile", encode_tile)
+    monkeypatch.setattr(rlev2, "_TILE", len(v))
+    return tiled, encode(v, **kw), seen
+
+
+@pytest.mark.parametrize("delta", [-1, 0, 1])
+def test_tiles_write_the_bytes_of_one_tile(monkeypatch, delta):
+    """Lengths around the real tile size: the tiles' bytes concatenate to
+    the one-tile stream, and every tile holds whole frames."""
+    from orc_rs_spark.kernels.rlev2 import _TILE
+
+    v, rows = _mixed_rows(700, np.random.default_rng(20))
+    v = v[: _TILE + delta]
+    for kw in ({}, {"signed": False}, {"boundaries": rows[rows < len(v)]}):
+        tiled, whole, seen = _tiled_and_whole(monkeypatch, _TILE, rlev2_encode, v, **kw)
+        assert tiled == whole
+        assert sum(seen) == len(v) and max(seen) <= _TILE
+        assert len(seen) == (1 if delta <= 0 else 2)
+    np.testing.assert_array_equal(rlev2_decode(tiled, len(v)), v)
+
+
+def test_tile_cut_at_a_row_aligned_frame_end(monkeypatch):
+    """256-value rows give 512-value frames, so a frame ends exactly at
+    each 4,096-value tile cut; irregular rows put the cuts before."""
+    rng = np.random.default_rng(21)
+    v, irregular = _mixed_rows(40, rng, max_len=700)
+    for rows in (np.arange(256, len(v), 256), irregular):
+        tiled, whole, seen = _tiled_and_whole(monkeypatch, 4096, rlev2_encode, v, boundaries=rows)
+        assert tiled == whole
+        assert sum(seen) == len(v) and len(seen) > 2 and max(seen) <= 4096
+        if rows is not irregular:
+            assert seen[:-1] == [4096] * (len(seen) - 1)
+
+
+def test_tiles_keep_strict_orc_patched_base(monkeypatch):
+    from orc_rs_spark.kernels.rlev2 import rlev2_run_modes
+
+    v = _spiked(20_000, np.random.default_rng(22))
+    tiled, whole, seen = _tiled_and_whole(monkeypatch, 3000, rlev2_encode, v, strict_orc=True)
+    assert tiled == whole and len(seen) == 8
+    assert rlev2_run_modes(tiled, len(v))["patched"] > 0
+
+
+def test_run_encoder_tiles_cut_inside_repeat_runs(monkeypatch):
+    """Repeat runs of 1,000-3,000 values straddle the 2,048-value tile
+    cuts; each tile still ends at one of the run's 512-value frames."""
+    rng = np.random.default_rng(23)
+    parts = []
+    for j in range(12):
+        parts.append(rng.integers(0, 1 << 20, int(rng.integers(1, 400))))
+        parts.append(np.full(int(rng.integers(1000, 3000)), j))
+    v = np.concatenate(parts).astype(np.int64)
+    tiled, whole, seen = _tiled_and_whole(monkeypatch, 2048, rlev2_encode_runs, v)
+    assert tiled == whole and len(seen) > 5
+    np.testing.assert_array_equal(rlev2_decode(tiled, len(v)), v)
+
+
+@pytest.mark.parametrize("rows", [False, True])
+def test_encoder_peak_memory_is_tile_bounded(rows):
+    """~1 M mixed-regime values: the encoder's temporaries stay those of
+    one tile (~16 MB), not ~54 MB of whole-array passes."""
+    import tracemalloc
+
+    v, bounds = _mixed_rows(2000, np.random.default_rng(5))
+    assert len(v) > 950_000
+    tracemalloc.start()
+    try:
+        rlev2_encode(v, boundaries=bounds if rows else None)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 24 << 20
