@@ -20,10 +20,12 @@ frame's sub-mode depends only on its own values, so tiling leaves the
 bytes as they are; it caps the working set at ~60 B per tile value
 (~16 MB, where one 942 k-value token stream took 54 MB in one pass) at no
 measurable CPU cost. Smaller tiles are dearer: each pays ~2 ms for its own
-``_pack_payloads`` calls (64 Ki-value tiles: +19% CPU). The two encoders differ only in where frames start:
-``rlev2_encode`` cuts a 512 grid or row-aligned frames;
-``rlev2_encode_runs`` makes every repeat run of >= 3 values its own frame,
-which the auto-selector picks only for run-dense chunks.
+``_pack_payloads`` calls (64 Ki-value tiles: +19% CPU). The three encoders
+differ only in where frames start: ``rlev2_encode`` cuts a 512 grid or
+row-aligned frames; ``rlev2_encode_runs`` makes every repeat run of >= 3
+values its own frame, which the auto-selector picks only for run-dense
+chunks; ``rlev2_encode_groups`` restarts the 512 grid at every cut and
+returns one piece per group (an ORC stripe's row groups).
 
 Decoding is one header walk (``_walk``) and one gather per width for
 direct, patched, patch-list and delta payloads (``_unpack_runs``, one
@@ -147,12 +149,40 @@ def rlev2_encode_runs(values: np.ndarray, signed: bool = True) -> bytes:
     is_long = np.diff(run_starts, append=n) >= 3
     # a span starts at every long run and at the first short run after one
     span_starts = run_starts[is_long | np.concatenate(([True], is_long[:-1]))]
+    starts, _ = _span_grid(span_starts, n)
+    return _encode_frames(v, starts, np.append(starts[1:], n), signed, False)
+
+
+def rlev2_encode_groups(values: np.ndarray, cuts, signed: bool) -> list[bytes]:
+    """Strict-ORC RLEv2 of each group ``values[cuts[g]:cuts[g + 1]]``, in
+    one frame pass.
+
+    ``cuts`` are ascending offsets from 0 to ``len(values)``; a group may
+    be empty. Frames restart on a 512 grid at every cut, and a frame's
+    bytes depend only on its own values, so piece g equals
+    ``rlev2_encode(values[cuts[g]:cuts[g + 1]], signed, strict_orc=True)``
+    (an ORC writer's row groups, whose streams restart at each group)."""
+    v = np.ascontiguousarray(values, dtype=np.int64)
+    cuts = np.asarray(cuts, dtype=np.int64)
+    n = len(v)
+    if n == 0:
+        return [b""] * (len(cuts) - 1)
+    starts, counts = _span_grid(cuts[:-1], n)
+    out = _frame_parts(v, starts, np.append(starts[1:], n), signed, True)
+    bounds = (3 * np.concatenate(([0], np.cumsum(counts)))).tolist()
+    return [b"".join(out[a:b]) for a, b in zip(bounds, bounds[1:])]
+
+
+def _span_grid(span_starts: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Frame starts that cut each span ``[span_starts[i], span_starts[i +
+    1])`` (the last one ending at ``n``) on a 512 grid from the span's own
+    start, and the number of frames of each span (0 for an empty one)."""
     counts = (np.diff(span_starts, append=n) + MAX_RUN - 1) // MAX_RUN
     first = np.cumsum(counts) - counts  # index of each span's first frame
     starts = np.repeat(span_starts, counts) + MAX_RUN * (
         np.arange(int(counts.sum())) - np.repeat(first, counts)
     )
-    return _encode_frames(v, starts, np.append(starts[1:], n), signed, False)
+    return starts, counts
 
 
 def _encode_frames(
@@ -160,7 +190,14 @@ def _encode_frames(
 ) -> bytes:
     """Encode contiguous frames ``[starts[i], ends[i])`` of ``v`` (each of
     1-512 values, together covering ``v``), picking each frame's cheapest
-    sub-mode.
+    sub-mode."""
+    return b"".join(_frame_parts(v, starts, ends, signed, strict_orc))
+
+
+def _frame_parts(
+    v: np.ndarray, starts: np.ndarray, ends: np.ndarray, signed: bool, strict_orc: bool
+) -> list:
+    """``_encode_frames`` as the stream's parts: frame i owns ``[3i:3i+3]``.
 
     Tiles of whole frames, each of at most ``_TILE`` values, go through
     ``_encode_tile`` one at a time, so its temporaries stay tile-sized; a
@@ -174,7 +211,7 @@ def _encode_frames(
         b = int(ends[hi - 1])
         out += _encode_tile(v[a:b], starts[lo:hi] - a, ends[lo:hi] - a, signed, strict_orc)
         lo = hi
-    return b"".join(out)
+    return out
 
 
 def _encode_tile(

@@ -48,23 +48,16 @@ def arrow_string_views(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarra
 
 
 def arrow_string_parts(arr: pa.Array) -> tuple[np.ndarray, bytes]:
-    """(lengths int64 array, concatenated utf8 bytes) from a string array."""
+    """(lengths int64 array, concatenated utf8 bytes) from a string array;
+    copies only the array's own slice of the payload."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    t = arr.type
-    if pa.types.is_large_string(t) or pa.types.is_large_binary(t):
-        odt = np.int64
-    elif pa.types.is_string(t) or pa.types.is_binary(t):
-        odt = np.int32
-    else:
-        raise TypeError(f"not a string/binary array: {t}")
+    starts, lengths, data = arrow_string_views(arr)
     if arr.null_count:
         raise ValueError("null strings not supported in encode path")
-    offsets = np.frombuffer(arr.buffers()[1], dtype=odt)[arr.offset : arr.offset + len(arr) + 1]
-    data = arr.buffers()[2]
-    payload = data.to_pybytes()[offsets[0] : offsets[-1]] if len(arr) else b""
-    lengths = np.diff(offsets).astype(np.int64)
-    return lengths, payload
+    if not len(arr):
+        return lengths, b""
+    return lengths, data[starts[0] : starts[-1] + lengths[-1]].tobytes()
 
 
 def build_string_array(lengths: np.ndarray, payload: bytes) -> pa.Array:

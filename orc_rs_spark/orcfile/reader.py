@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 import numpy as np
 import pyarrow as pa
 
+from orc_rs_spark.chunk import _scatter
 from orc_rs_spark.kernels.blockcomp import block_decompress as orc_stream_decompress
 from orc_rs_spark.kernels.blockcomp import iter_blocks
 from orc_rs_spark.kernels.byte_rle import byte_rle_decode
@@ -459,14 +460,6 @@ def prune_stripes(path: str, column: str, lo, hi, tail: OrcTail | None = None) -
         tail = read_tail(path)
     stats = read_stripe_statistics(path, tail)
     return prune_stripes_stats(tail, stats, [(column, lo, hi)])
-
-
-def _scatter(dense: pa.Array, present: np.ndarray | None) -> pa.Array:
-    if present is None:
-        return dense
-    idx = np.full(len(present), -1, dtype=np.int64)
-    idx[present] = np.arange(len(dense))
-    return dense.take(pa.array(idx, mask=~present))
 
 
 def _parse_nanos(v: np.ndarray) -> np.ndarray:

@@ -11,14 +11,16 @@ Encoding choices (all DIRECT_V2-era): ints/dates through RLEv2, strings
 and binary direct (RLEv2 LENGTH + payload) or sorted DICTIONARY_V2,
 boolean/byte RLE, raw-LE floats, timestamps as base-2015 seconds + nano
 SECONDARY with ORC's trailing-zero suppression, decimals as unbounded
-zigzag varints + RLEv2 scale stream. Every stripe is encoded one way, as
-row groups (default stride 10000) whose value streams restart at group
-boundaries; ROW_INDEX streams record each group's positions + statistics
-at every nesting level, with optional per-group bloom filters.
-row_index_stride=0 makes the whole stripe one group and writes no
-ROW_INDEX. Files carry a Metadata section of per-stripe statistics and
-footer min/max/sum; ``write_file_tail`` writes that tail for this writer
-and for merge.py. Streams are individually block-framed when compressed.
+zigzag varints + RLEv2 scale stream. Every stripe is encoded one way:
+each column once, over all the stripe's rows, with its row groups
+(default stride 10000) as cuts where every stream restarts (RLEv2 value
+streams through one ``rlev2_encode_groups`` frame pass each); ROW_INDEX
+streams record each group's positions + statistics at every nesting
+level, with optional per-group bloom filters. row_index_stride=0 makes
+the whole stripe one group and writes no ROW_INDEX. Files carry a
+Metadata section of per-stripe statistics and footer min/max/sum;
+``write_file_tail`` writes that tail for this writer and for merge.py.
+Streams are individually block-framed when compressed.
 """
 
 from __future__ import annotations
@@ -34,7 +36,8 @@ import pyarrow.compute as pc
 
 from orc_rs_spark.kernels.blockcomp import LZ_BLOCK, block_compress
 from orc_rs_spark.kernels.byte_rle import byte_rle_encode
-from orc_rs_spark.kernels.rlev2 import rlev2_encode
+from orc_rs_spark.kernels.rlev2 import rlev2_encode, rlev2_encode_groups
+from orc_rs_spark.kernels.strings import arrow_string_parts, arrow_string_views
 from orc_rs_spark.kernels.varint import uvarint
 from orc_rs_spark.orcfile import proto
 from orc_rs_spark.orcfile.errors import OrcFormatError
@@ -297,31 +300,6 @@ def _format_nanos(nanos: np.ndarray) -> np.ndarray:
     return np.where(n == 0, 0, enc)
 
 
-def _walk_dense(types: list[proto.OrcType], col: int, arr, out: dict[int, pa.Array]) -> None:
-    """Collect each column id's array (nested children reached by the same
-    recursion write_column uses) — pass 1 of the stripe encode."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    out[col] = arr
-    node = types[col]
-    kind = node.kind
-    dense = arr.drop_null() if arr.null_count else arr
-    if kind == "struct":
-        for i, sub in enumerate(node.subtypes):
-            _walk_dense(types, sub, dense.field(i), out)
-    elif kind == "list":
-        _walk_dense(types, node.subtypes[0], dense.flatten(), out)
-    elif kind == "map":
-        _walk_dense(types, node.subtypes[0], dense.keys, out)
-        _walk_dense(types, node.subtypes[1], dense.items, out)
-    elif kind == "union":
-        tags = np.asarray(dense.type_codes)
-        offsets = np.asarray(dense.offsets)
-        for ci, sub in enumerate(node.subtypes):
-            child = dense.field(ci).take(pa.array(offsets[tags == ci]))
-            _walk_dense(types, sub, child, out)
-
-
 def _dictionary_streams(sorted_dict: pa.Array) -> list[tuple[int, bytes]]:
     """DICTIONARY_DATA + symbol LENGTH raw streams for a sorted dictionary."""
     obuf = np.frombuffer(sorted_dict.buffers()[1], dtype=np.int32).astype(np.int64)
@@ -333,150 +311,153 @@ def _dictionary_streams(sorted_dict: pa.Array) -> list[tuple[int, bytes]]:
     ]
 
 
+def _string_dictionary(dense: pa.Array) -> pa.Array | None:
+    """The sorted stripe dictionary of a string column's non-null values,
+    or None when it should be written direct."""
+    if not len(dense):
+        return None
+    uniq = pc.unique(dense)
+    # ORC writer heuristic: dictionary pays when the distinct ratio is low
+    # (Java default threshold 0.8)
+    if len(uniq) / len(dense) > 0.5:
+        return None
+    return uniq.take(pc.array_sort_indices(uniq))
+
+
 class _StripeWriter:
-    """Encodes one row group: every stream's raw (uncompressed) bytes, with
-    boolean streams kept as unpacked bits so the stripe assembler can pack
-    them continuously across groups. The stripe-wide choices come from
-    pass 1: each string column's sorted dictionary (None = direct) in
-    ``forced_strings``, and the columns that need a PRESENT stream."""
+    """Encodes one stripe, each column once over all its rows, with the
+    row groups as cuts: every stream comes out as a list of raw
+    (uncompressed) pieces, one per group, that restart at the group's
+    first value. Boolean streams keep their pieces as unpacked bits, so the
+    stripe assembler can pack them continuously across groups.
 
-    def __init__(self, types: list[proto.OrcType],
-                 forced_strings: dict[int, pa.Array | None],
-                 force_present: frozenset | set):
+    The stripe-wide choices are made inline: a column gets a PRESENT
+    stream when the stripe has a null in it, and a string column a sorted
+    dictionary (``dictionaries``, written after the data streams) when its
+    distinct ratio is low."""
+
+    def __init__(self, types: list[proto.OrcType]):
         self.types = types
-        self.forced_strings = forced_strings
-        self.force_present = force_present
-        # (column, kind_enum, raw bytes | bool ndarray of bits)
-        self.streams: list[tuple[int, int, bytes | np.ndarray]] = []
+        # (column, kind_enum, one raw piece per group: bytes | bool bits)
+        self.streams: list[tuple[int, int, list]] = []
         self.encodings: dict[int, tuple[int, int]] = {}  # col -> (kind_enum, dict_size)
-        self.stats: dict[int, tuple[int, bool]] = {}  # col -> (n_values, has_null)
-        # col -> (min, max) captured during encode: ints as ints, dates as
-        # epoch days, timestamps as UTC millis, strings as str — EVERY
-        # level of nesting, so list children prune too
-        self.minmax: dict[int, tuple] = {}
-        # col -> exact non-null sum (Python int for int kinds — never
-        # wraps; float for float/double; true count for boolean), feeding
-        # IntegerStatistics/DoubleStatistics sum and BucketStatistics —
-        # what metadata-only SUM/COUNT_IF pushdown reads back
-        self.sums: dict[int, int | float] = {}
+        self.dictionaries: list[tuple[int, pa.Array]] = []  # (col, sorted dictionary)
+        # col -> per group (n_values, has_null, min, max, sum), as
+        # combine_stats takes, at EVERY level of nesting, so list children
+        # prune too. min/max: ints as ints, dates as epoch days, timestamps
+        # as UTC millis, strings as str; sum: the exact non-null sum (Python
+        # int for int kinds, never wraps; float for float/double; true count
+        # for boolean), which metadata-only SUM/COUNT_IF pushdown reads back
+        self.stats: dict[int, list[tuple]] = {}
 
-    def col_stats(self, col: int) -> tuple:
-        """``(n_values, has_null, min, max, sum)``, as combine_stats takes."""
-        return (*self.stats[col], *self.minmax.get(col, (None, None)),
-                self.sums.get(col))
+    def _emit(self, col: int, kind_enum: int, pieces: list):
+        self.streams.append((col, kind_enum, pieces))
 
-    def _emit(self, col: int, kind_enum: int, raw: bytes | np.ndarray):
-        self.streams.append((col, kind_enum, raw))
-
-    def write_column(self, col: int, arr: pa.Array):
+    def write_column(self, col: int, arr, cuts: np.ndarray) -> None:
+        """Encode ``arr``, column ``col`` of the stripe, cut into row groups
+        at the row offsets ``cuts`` (``[0, len(arr)]`` for one group).
+        Nested columns pass their children the cuts that fall out of the
+        PRESENT counts, the list/map offsets or each union tag's counts."""
         node = self.types[col]
         kind = node.kind
         if isinstance(arr, pa.ChunkedArray):
             arr = arr.combine_chunks()
-        has_null = arr.null_count > 0
-        self.stats[col] = (len(arr) - arr.null_count, has_null)
         self.encodings[col] = (_DIRECT, 0)
-        if has_null or col in self.force_present:
+        row_cuts = cuts
+        dense = arr
+        if arr.null_count:
             present = ~np.asarray(arr.is_null().to_numpy(zero_copy_only=False))
-            self._emit(col, _PRESENT, present.astype(bool))
+            self._emit(col, _PRESENT, np.split(present, row_cuts[1:-1]))
             dense = arr.drop_null()
-        else:
-            dense = arr
+            cuts = np.concatenate(([0], np.cumsum(present)))[row_cuts]
+        groups = list(zip(cuts[:-1].tolist(), cuts[1:].tolist()))
+        bounds: list[tuple | None] = [None] * len(groups)
+        sums: list[int | float | None] = [None] * len(groups)
 
         if kind == "struct":
             for i, sub in enumerate(node.subtypes):
-                self.write_column(sub, dense.field(i))
-            return
-        if kind == "union":
+                self.write_column(sub, dense.field(i), cuts)
+        elif kind == "union":
             # ORC union (R13): TAG byte-RLE stream; child c carries only
             # rows with tag == c, in row order
-            if has_null:
+            if arr.null_count:
                 raise TypeError("nullable union columns not supported (reader matches)")
-            tags = np.asarray(dense.type_codes)
-            self._emit(col, _DATA, byte_rle_encode(tags.astype(np.uint8)))
+            tags = np.asarray(dense.type_codes).astype(np.uint8)
+            self._emit(col, _DATA, [byte_rle_encode(tags[a:b]) for a, b in groups])
             offsets = np.asarray(dense.offsets)
             for ci, sub in enumerate(node.subtypes):
                 sel = tags == ci
-                child_rows = dense.field(ci).take(pa.array(offsets[sel]))
-                self.write_column(sub, child_rows)
-            return
-        if kind in ("list", "map"):
+                child = dense.field(ci).take(pa.array(offsets[sel]))
+                self.write_column(sub, child, np.concatenate(([0], np.cumsum(sel)))[cuts])
+        elif kind in ("list", "map"):
             self.encodings[col] = (_DIRECT_V2, 0)
             offsets = dense.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            lengths = np.diff(offsets)
-            self._emit(col, _LENGTH, rlev2_encode(lengths, signed=False, strict_orc=True))
+            self._emit(col, _LENGTH, rlev2_encode_groups(np.diff(offsets), cuts, signed=False))
+            child_cuts = offsets[cuts] - offsets[0]
             if kind == "list":
-                self.write_column(node.subtypes[0], dense.flatten())
+                self.write_column(node.subtypes[0], dense.flatten(), child_cuts)
             else:
-                self.write_column(node.subtypes[0], dense.keys)
-                self.write_column(node.subtypes[1], dense.items)
-            return
-        if kind == "boolean":
+                self.write_column(node.subtypes[0], dense.keys, child_cuts)
+                self.write_column(node.subtypes[1], dense.items, child_cuts)
+        elif kind == "boolean":
             v = dense.to_numpy(zero_copy_only=False).astype(bool)
-            if len(v):
-                self.sums[col] = int(v.sum())
-            self._emit(col, _DATA, v)
-            return
-        if kind == "byte":
+            sums = [int(v[a:b].sum()) if b > a else None for a, b in groups]
+            self._emit(col, _DATA, np.split(v, cuts[1:-1]))
+        elif kind == "byte":
             v = dense.to_numpy(zero_copy_only=False).astype(np.uint8)
-            self._emit(col, _DATA, byte_rle_encode(v))
-            return
-        if kind in ("short", "int", "long", "date"):
+            self._emit(col, _DATA, [byte_rle_encode(v[a:b]) for a, b in groups])
+        elif kind in ("short", "int", "long", "date"):
             self.encodings[col] = (_DIRECT_V2, 0)
             if kind == "date":
                 v = dense.cast(pa.int32()).to_numpy(zero_copy_only=False).astype(np.int64)
             else:
                 v = dense.to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(v):
-                mn, mx = int(v.min()), int(v.max())
-                self.minmax[col] = (mn, mx)
-                if kind != "date":  # ORC DateStatistics carries no sum
-                    # int64 accumulate is exact when n*|bound| cannot reach
-                    # 2^63; otherwise fall back to Python-int summation
-                    if max(abs(mn), abs(mx)) < (1 << 62) // max(len(v), 1):
-                        self.sums[col] = int(v.sum())
-                    else:
-                        self.sums[col] = int(sum(v.tolist()))
-            self._emit(col, _DATA, rlev2_encode(v, signed=True, strict_orc=True))
-            return
-        if kind in ("float", "double"):
+            for g, (a, b) in enumerate(groups):
+                if b > a:
+                    gv = v[a:b]
+                    mn, mx = int(gv.min()), int(gv.max())
+                    bounds[g] = (mn, mx)
+                    if kind != "date":  # ORC DateStatistics carries no sum
+                        # int64 accumulate is exact when n*|bound| cannot
+                        # reach 2^63; otherwise fall back to Python ints
+                        if max(abs(mn), abs(mx)) < (1 << 62) // (b - a):
+                            sums[g] = int(gv.sum())
+                        else:
+                            sums[g] = int(sum(gv.tolist()))
+            self._emit(col, _DATA, rlev2_encode_groups(v, cuts, signed=True))
+        elif kind in ("float", "double"):
             v = dense.to_numpy(zero_copy_only=False)
-            if len(v):
-                self.minmax[col] = (float(v.min()), float(v.max()))
-                self.sums[col] = float(v.astype(np.float64).sum())
-            self._emit(col, _DATA, v.astype("<f4" if kind == "float" else "<f8").tobytes())
-            return
-        if kind in ("string", "varchar", "char", "binary"):
+            for g, (a, b) in enumerate(groups):
+                if b > a:
+                    gv = v[a:b]
+                    bounds[g] = (float(gv.min()), float(gv.max()))
+                    sums[g] = float(gv.astype(np.float64).sum())
+            raw = v.astype("<f4" if kind == "float" else "<f8")
+            self._emit(col, _DATA, [raw[a:b].tobytes() for a, b in groups])
+        elif kind in ("string", "varchar", "char", "binary"):
             if pa.types.is_large_string(dense.type):
                 dense = dense.cast(pa.string())
             if pa.types.is_large_binary(dense.type):
                 dense = dense.cast(pa.binary())
-            if kind != "binary" and len(dense):
-                mm = pc.min_max(dense)
-                self.minmax[col] = (mm["min"].as_py(), mm["max"].as_py())
-            sorted_dict = self.forced_strings.get(col)
+            if kind != "binary":
+                for g, (a, b) in enumerate(groups):
+                    if b > a:
+                        mm = pc.min_max(dense.slice(a, b - a))
+                        bounds[g] = (mm["min"].as_py(), mm["max"].as_py())
+            sorted_dict = _string_dictionary(dense) if kind in _STR_STAT_KINDS else None
             if sorted_dict is not None:
                 idx = pc.index_in(dense, value_set=sorted_dict)
                 idx_np = idx.to_numpy(zero_copy_only=False).astype(np.int64)
                 self.encodings[col] = (_DICTIONARY_V2, len(sorted_dict))
-                self._emit(col, _DATA, rlev2_encode(idx_np, signed=False, strict_orc=True))
-                return
-            self.encodings[col] = (_DIRECT_V2, 0)
-            obuf = dense.buffers()[1]
-            offsets = np.frombuffer(obuf, dtype=np.int32)[
-                dense.offset : dense.offset + len(dense) + 1
-            ].astype(np.int64)
-            lengths = np.diff(offsets)
-            payload = dense.buffers()[2]
-            body = (
-                payload.to_pybytes()[int(offsets[0]) : int(offsets[-1])]
-                if payload is not None and len(dense)
-                else b""
-            )
-            self._emit(col, _DATA, body)
-            self._emit(col, _LENGTH, rlev2_encode(lengths, signed=False, strict_orc=True))
-            return
-        if kind == "timestamp":
+                self.dictionaries.append((col, sorted_dict))
+                self._emit(col, _DATA, rlev2_encode_groups(idx_np, cuts, signed=False))
+            else:
+                self.encodings[col] = (_DIRECT_V2, 0)
+                lengths, body = arrow_string_parts(dense)
+                ends = np.concatenate(([0], np.cumsum(lengths)))[cuts].tolist()
+                self._emit(col, _DATA, [body[a:b] for a, b in zip(ends, ends[1:])])
+                self._emit(col, _LENGTH, rlev2_encode_groups(lengths, cuts, signed=False))
+        elif kind == "timestamp":
             self.encodings[col] = (_DIRECT_V2, 0)
             ns = dense.cast(pa.timestamp("ns")).cast(pa.int64()).to_numpy(zero_copy_only=False)
             # JVM convention, byte-calibrated against Spark's ORC writer:
@@ -487,27 +468,33 @@ class _StripeWriter:
             millis = np.floor_divide(ns, 1_000_000)
             secs_tz = np.where(millis >= 0, millis // 1000, -((-millis) // 1000))
             rel = secs_tz - TS_BASE_SECONDS
-            if len(ns):
-                # UTC millis, widened outward (floor min / ceil max) so the
-                # statistics stay a superset of the nanosecond data
-                self.minmax[col] = (
-                    int(ns.min()) // 1_000_000, -((-int(ns.max())) // 1_000_000)
-                )
-            self._emit(col, _DATA, rlev2_encode(rel, signed=True, strict_orc=True))
-            self._emit(col, _SECONDARY, rlev2_encode(_format_nanos(nanos), signed=False, strict_orc=True))
-            return
-        if kind == "decimal":
+            # UTC millis, widened outward (floor min / ceil max) so the
+            # statistics stay a superset of the nanosecond data
+            bounds = [
+                (int(ns[a:b].min()) // 1_000_000, -((-int(ns[a:b].max())) // 1_000_000))
+                if b > a else None
+                for a, b in groups
+            ]
+            self._emit(col, _DATA, rlev2_encode_groups(rel, cuts, signed=True))
+            self._emit(col, _SECONDARY, rlev2_encode_groups(_format_nanos(nanos), cuts, signed=False))
+        elif kind == "decimal":
             self.encodings[col] = (_DIRECT_V2, 0)
             t = dense.type
             words = np.frombuffer(dense.buffers()[1], dtype=np.int64).reshape(-1, 2)
             words = words[dense.offset : dense.offset + len(dense)]
             mantissas = [int(hi) << 64 | (int(lo) & 0xFFFFFFFFFFFFFFFF) for lo, hi in words]
             mantissas = [m - (1 << 128) if m >= (1 << 127) else m for m in mantissas]
-            self._emit(col, _DATA, _zigzag_varints(mantissas))
+            self._emit(col, _DATA, [_zigzag_varints(mantissas[a:b]) for a, b in groups])
             scales = np.full(len(dense), t.scale, dtype=np.int64)
-            self._emit(col, _SECONDARY, rlev2_encode(scales, signed=True, strict_orc=True))
-            return
-        raise TypeError(f"ORC writer: unsupported kind {kind!r}")
+            self._emit(col, _SECONDARY, rlev2_encode_groups(scales, cuts, signed=True))
+        else:
+            raise TypeError(f"ORC writer: unsupported kind {kind!r}")
+        n_values = np.diff(cuts).tolist()
+        has_null = (np.diff(row_cuts) > np.diff(cuts)).tolist()
+        self.stats[col] = [
+            (n, h, *(bd or (None, None)), sm)
+            for n, h, bd, sm in zip(n_values, has_null, bounds, sums)
+        ]
 
 
 # ------------------------------------------------------------- file tail
@@ -604,6 +591,10 @@ class OrcWriter:
         # kernels/lzo.py; the reference can't read kind 3 at all).
         if compression not in _CODEC_ENUM:
             raise ValueError(f"unknown ORC compression {compression!r}")
+        if stripe_rows < 1:
+            raise ValueError(f"stripe_rows must be at least 1, got {stripe_rows}")
+        if row_index_stride < 0:
+            raise ValueError(f"row_index_stride must be 0 or more, got {row_index_stride}")
         self.schema = schema
         self.compression = compression
         # None = the codec's default (blockcomp.DEFAULT_LEVELS: zlib 6,
@@ -704,74 +695,35 @@ class OrcWriter:
         return len(data)
 
     def _flush_stripe(self, tbl: pa.Table) -> None:
-        """Write one stripe as row groups of ``row_index_stride`` rows (one
-        group spanning the stripe when the stride is 0, with no ROW_INDEX).
-        Value streams restart their runs and compression blocks at group
-        boundaries, so a group's positions are plain offsets; bit-packed
-        boolean streams stay CONTINUOUS — group positions carry the in-byte
-        bit offset, exactly like the Java writer — so unindexed readers
-        decode the stripe unchanged."""
+        """Write one stripe, cut into row groups of ``row_index_stride``
+        rows (one group spanning the stripe when the stride is 0, with no
+        ROW_INDEX). ``_StripeWriter`` encodes each column once and hands
+        back every stream as one piece per group; this assembles them,
+        compresses and indexes the pieces, and writes the blooms and the
+        stripe footer. Value streams restart their runs and compression
+        blocks at group boundaries, so a group's positions are plain
+        offsets; bit-packed boolean streams stay CONTINUOUS — group
+        positions carry the in-byte bit offset, exactly like the Java
+        writer — so unindexed readers decode the stripe unchanged."""
         n = tbl.num_rows
         if n == 0:
             return
         indexed = self.row_index_stride > 0
-        stride = self.row_index_stride if indexed else n
         types = self.types
         comp = self.compression != "none"
-        groups = [(s, min(stride, n - s)) for s in range(0, n, stride)]
+        cuts = np.append(np.arange(0, n, self.row_index_stride if indexed else n), n)
+        n_groups = len(cuts) - 1
 
-        # ---- pass 1: stripe-wide facts that must not vary per group:
-        # which columns need a PRESENT stream, and each string column's
-        # dictionary-vs-direct decision (with its stripe-global dictionary)
-        dense_cols: dict[int, pa.Array] = {}
+        mw = _StripeWriter(types)
+        mw.stats[0] = [(ln, False, None, None, None) for ln in np.diff(cuts).tolist()]
         for i, sub in enumerate(types[0].subtypes):
-            _walk_dense(types, sub, tbl.column(i), dense_cols)
-        force_present = frozenset(c for c, a in dense_cols.items() if a.null_count > 0)
-        forced: dict[int, pa.Array | None] = {}
-        for c, a in dense_cols.items():
-            if types[c].kind in _STR_STAT_KINDS:
-                d = a.drop_null() if a.null_count else a
-                if pa.types.is_large_string(d.type):
-                    d = d.cast(pa.string())
-                forced[c] = None
-                if len(d):
-                    uniq = pc.unique(d)
-                    # ORC writer heuristic: dictionary pays when the
-                    # distinct ratio is low (Java default threshold 0.8)
-                    if len(uniq) / len(d) <= 0.5:
-                        forced[c] = uniq.take(pc.array_sort_indices(uniq))
-
-        # ---- pass 2: encode each row group with restarted runs; group
-        # statistics come from the encode, for every column at every
-        # nesting level (list children get real pruning statistics)
-        chunk_lists: dict[tuple[int, int], list] = {}
-        order: list[tuple[int, int]] = []
-        group_stats: list[list[tuple]] = [[] for _ in types]
-        encodings: dict[int, tuple[int, int]] = {}
-        for g, (s, ln) in enumerate(groups):
-            mw = _StripeWriter(types, forced, force_present)
-            mw.stats[0] = (ln, False)
-            gt = tbl.slice(s, ln)
-            for i, sub in enumerate(types[0].subtypes):
-                mw.write_column(sub, gt.column(i))
-            keys = [(c, k) for c, k, _ in mw.streams]
-            if g == 0:
-                order = keys
-                for key in order:
-                    chunk_lists[key] = []
-                encodings = dict(mw.encodings)
-            elif keys != order:  # deterministic by construction
-                raise AssertionError("row-group stream sets diverged")
-            for c, k, payload in mw.streams:
-                chunk_lists[(c, k)].append(payload)
-            for c in range(len(types)):
-                group_stats[c].append(mw.col_stats(c))
+            mw.write_column(sub, tbl.column(i), cuts)
 
         # ---- assemble data streams + each group's start position
         stream_bytes: dict[tuple[int, int], bytes] = {}
         stream_positions: dict[tuple[int, int], list[list[int]]] = {}
-        for key in order:
-            chunks = chunk_lists[key]
+        for col, kind_enum, chunks in mw.streams:
+            key = (col, kind_enum)
             bit_offsets = None
             if isinstance(chunks[0], np.ndarray):
                 # continuous bit stream; byte-RLE runs + compression blocks
@@ -800,7 +752,7 @@ class OrcWriter:
         # stripe-global dictionary streams (no positions)
         dict_streams = [
             (c, knum, self._compress(raw))
-            for c, d in forced.items() if d is not None
+            for c, d in mw.dictionaries
             for knum, raw in _dictionary_streams(d)
         ]
 
@@ -809,10 +761,10 @@ class OrcWriter:
         index_streams: list[tuple[int, bytes]] = []
         if indexed:
             for col in range(len(types)):
-                enc_name = proto.ENCODING_KINDS[encodings.get(col, (_DIRECT, 0))[0]]
+                enc_name = proto.ENCODING_KINDS[mw.encodings.get(col, (_DIRECT, 0))[0]]
                 layout = proto.stream_position_layout(types[col].kind, enc_name)
                 entries = b""
-                for g in range(len(groups)):
+                for g in range(n_groups):
                     slots: list[int] = []
                     for kindname, extra in layout:
                         key = (col, _STREAM_ENUM[kindname])
@@ -824,12 +776,12 @@ class OrcWriter:
                         if len(p) != want:
                             raise AssertionError(f"position width for col {col} {kindname}")
                         slots += p
-                    stats = _stats_body(types[col].kind, *group_stats[col][g])
+                    stats = _stats_body(types[col].kind, *mw.stats[col][g])
                     entry = (_field_packed(1, slots) if slots else b"") + _field_bytes(2, stats)
                     entries += _field_bytes(1, entry)
                 index_streams.append((col, self._compress(entries)))
 
-        bloom_streams = self._bloom_streams(tbl, groups)
+        bloom_streams = self._bloom_streams(tbl, cuts)
 
         # ---- physical layout: index region (ROW_INDEX then the column's
         # bloom, matching the Java writer's interleaving), data region
@@ -843,11 +795,11 @@ class OrcWriter:
                 index_len += self._write_stream(sfooter, col, _BLOOM_UTF8, bloom_streams[col])
         data_len = 0
         for col, kind_enum, data in (
-            [(c, k, stream_bytes[(c, k)]) for c, k in order] + dict_streams
+            [(c, k, data) for (c, k), data in stream_bytes.items()] + dict_streams
         ):
             data_len += self._write_stream(sfooter, col, kind_enum, data)
         for col in range(len(types)):
-            enc, dsize = encodings.get(col, (_DIRECT, 0))
+            enc, dsize = mw.encodings.get(col, (_DIRECT, 0))
             body = _field_varint(1, enc)
             if dsize:
                 body += _field_varint(2, dsize)
@@ -860,7 +812,7 @@ class OrcWriter:
         # stripe-level statistics (Metadata section) + the file-level fold
         stripe_stats = b""
         for col in range(len(types)):
-            st = combine_stats(group_stats[col])
+            st = combine_stats(mw.stats[col])
             self._file_stats[col] = combine_stats([self._file_stats[col], st])
             stripe_stats += _field_bytes(1, _stats_body(types[col].kind, *st))
         self._stripe_stats.append(stripe_stats)
@@ -868,7 +820,7 @@ class OrcWriter:
             offset, index_len, data_len, len(sfooter_comp), n))
         self.num_rows += n
 
-    def _bloom_streams(self, tbl: pa.Table, groups: list[tuple[int, int]]) -> dict[int, bytes]:
+    def _bloom_streams(self, tbl: pa.Table, cuts: np.ndarray) -> dict[int, bytes]:
         """Bloom filter streams (opt-in): one BLOOM_FILTER_UTF8 per chosen
         column, one filter per row group, Java hash contracts
         (bytecode-verified: signed-shift Thomas Wang for ints, Murmur3
@@ -876,7 +828,6 @@ class OrcWriter:
         if not self.bloom_cols:
             return {}
         from orc_rs_spark.kernels.orc_bloom import OrcBloom, optimal_bits, optimal_k
-        from orc_rs_spark.kernels.strings import arrow_string_views
 
         m = optimal_bits(self.row_index_stride)
         kh = optimal_k(self.row_index_stride, m)
@@ -884,8 +835,8 @@ class OrcWriter:
         for col, pos_i in self.bloom_cols.items():
             kind = self.types[col].kind
             body = b""
-            for (s, ln) in groups:
-                sl = tbl.column(pos_i).slice(s, ln)
+            for s, e in zip(cuts[:-1].tolist(), cuts[1:].tolist()):
+                sl = tbl.column(pos_i).slice(s, e - s)
                 if isinstance(sl, pa.ChunkedArray):
                     sl = sl.combine_chunks()
                 dense = sl.drop_null() if sl.null_count else sl

@@ -98,19 +98,6 @@ def band_signatures(
     )
 
 
-def band_query_signature(
-    query_vec: list[float], bands: int = 32, rows_per_band: int = 8, dim: int = 64, seed: int = 42
-) -> list[int]:
-    """Band values for one query vector (same planes as band_signatures)."""
-    total = bands * rows_per_band
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, total)).astype(np.float64)
-    q = np.asarray(query_vec, dtype=np.float64)
-    bits_m = ((q @ planes) > 0).astype(np.uint64).reshape(bands, rows_per_band)
-    weights = 1 << np.arange(rows_per_band, dtype=np.uint64)
-    return [int(x) for x in (bits_m * weights).sum(axis=1)]
-
-
 def default_bits(n: int) -> int:
     """Signature width for an n-vector corpus: ~log2(n/64). Finer signatures
     than the corpus size send every true neighbor to its own bucket and

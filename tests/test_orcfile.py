@@ -826,6 +826,21 @@ def test_orc_writer_streams_stripes(tmp_path):
     assert got.column("s")[12345].as_py() == f"s{12345 % 7}"
 
 
+@pytest.mark.parametrize("option,value", [("stripe_rows", 0), ("stripe_rows", -5),
+                                          ("row_index_stride", -1)])
+def test_writer_rejects_invalid_sizes_before_opening(option, value, tmp_path):
+    """A stripe of no rows never drains the buffer, and a negative stride
+    fails only in close(): both are refused up front, with no file made."""
+    import pyarrow as pa
+
+    from orc_rs_spark.orcfile.writer import OrcWriter
+
+    path = tmp_path / "bad.orc"
+    with pytest.raises(ValueError, match=option):
+        OrcWriter(str(path), pa.schema([("a", pa.int64())]), **{option: value})
+    assert not path.exists()
+
+
 # ----------------------------------------------------- ROW_INDEX row groups
 
 

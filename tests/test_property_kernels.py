@@ -27,7 +27,7 @@ from orc_rs_spark.kernels.intcodecs import (
     raw_encode,
 )
 from orc_rs_spark.kernels.rlev1 import rlev1_decode, rlev1_encode
-from orc_rs_spark.kernels.rlev2 import rlev2_decode, rlev2_encode, rlev2_encode_runs
+from orc_rs_spark.kernels.rlev2 import rlev2_decode, rlev2_encode, rlev2_encode_groups, rlev2_encode_runs
 from orc_rs_spark.kernels.varint import uvarint, varint_decode, varint_encode
 from orc_rs_spark.kernels.zigzag import zigzag_decode, zigzag_encode
 from tests.test_codecs import rankdict_encode
@@ -83,6 +83,17 @@ def test_rlev2_roundtrip(v):
 @given(run_arrays)
 def test_rlev2_runs_roundtrip(v):
     np.testing.assert_array_equal(rlev2_decode(rlev2_encode_runs(v), len(v)), v)
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.one_of(int_arrays, run_arrays),
+       st.lists(st.integers(min_value=0, max_value=1200), max_size=12), st.booleans())
+def test_rlev2_encode_groups_equals_per_group_calls(v, cut_points, signed):
+    """One frame pass over every group gives, piece by piece, the bytes of
+    a strict-ORC encode per group (empty groups included)."""
+    cuts = sorted([0, len(v)] + [min(c, len(v)) for c in cut_points])
+    pieces = rlev2_encode_groups(v, cuts, signed)
+    assert pieces == [rlev2_encode(v[a:b], signed, strict_orc=True) for a, b in zip(cuts, cuts[1:])]
 
 
 @settings(max_examples=40, deadline=None)

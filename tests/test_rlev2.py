@@ -11,7 +11,13 @@ import zlib
 import numpy as np
 import pytest
 
-from orc_rs_spark.kernels.rlev2 import MAX_RUN, rlev2_decode, rlev2_encode, rlev2_encode_runs
+from orc_rs_spark.kernels.rlev2 import (
+    MAX_RUN,
+    rlev2_decode,
+    rlev2_encode,
+    rlev2_encode_groups,
+    rlev2_encode_runs,
+)
 
 RNG = np.random.default_rng(42)
 
@@ -780,3 +786,47 @@ def test_encoder_peak_memory_is_tile_bounded(rows):
     finally:
         tracemalloc.stop()
     assert peak < 24 << 20
+
+
+# ------------------------------------------------- one pass, many groups
+
+
+def _per_group(v, cuts, signed):
+    return [rlev2_encode(v[a:b], signed, strict_orc=True) for a, b in zip(cuts, cuts[1:])]
+
+
+_I64 = np.iinfo(np.int64)
+_GRNG = np.random.default_rng(22)
+GROUP_CASES = {
+    # (values, cuts)
+    "empty_groups": (np.arange(700, dtype=np.int64) % 37, [0, 0, 0, 5, 5, 700, 700]),
+    "all_empty": (np.empty(0, dtype=np.int64), [0, 0, 0]),
+    "ones": (_GRNG.integers(-9, 9, 20), list(range(21))),
+    "over_512": (_spiked(2600, _GRNG), [0, 1300, 1301, 2600]),
+    "one_group": (np.cumsum(_GRNG.integers(0, 4, 1500)), [0, 1500]),
+    "extremes": (np.array([_I64.min, _I64.max, 0, -1, 1] * 120, dtype=np.int64), [0, 3, 300, 599, 600]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(GROUP_CASES))
+@pytest.mark.parametrize("signed", [True, False])
+def test_encode_groups_equals_per_group_calls(case, signed):
+    v, cuts = GROUP_CASES[case]
+    v = np.asarray(v, dtype=np.int64)
+    pieces = rlev2_encode_groups(v, cuts, signed)
+    assert pieces == _per_group(v, cuts, signed)
+    np.testing.assert_array_equal(rlev2_decode(b"".join(pieces), len(v), signed), v)
+
+
+@pytest.mark.parametrize("tile", [1000, 1 << 18])
+def test_encode_groups_straddling_a_tile(monkeypatch, tile):
+    """Groups that straddle a tile boundary, at a small tile and at the
+    real ``_TILE``: the pieces still equal the per-group calls."""
+    from orc_rs_spark.kernels import rlev2
+
+    monkeypatch.setattr(rlev2, "_TILE", tile)
+    v, _ = _mixed_rows(tile // 350 + 50, np.random.default_rng(21))
+    v = v[: tile + 2000]
+    cuts = [0, tile - 700, tile - 699, tile + 300, len(v)]
+    for signed in (True, False):
+        assert rlev2_encode_groups(v, cuts, signed) == _per_group(v, cuts, signed)
